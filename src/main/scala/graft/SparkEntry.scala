@@ -829,7 +829,21 @@ object SparkEntry {
   /** ppr restart set = vertices with id ≤ this (same predicate in the
     * Spark query and the oracle SQL, so S∩V agrees by construction). */
   private val pprSourceMax = 10L
-  private val textFixturePath = "/root/repo/src/test/resources/graphs/medium1.txt"
+  /** The sparse text-graph fixture of the checkout this code was built
+    * from: the first `src/test/resources/graphs/medium1.txt` above the
+    * compiled classes or above the working directory. Falls back to the
+    * relative path, so a missing fixture fails the query that reads it,
+    * not the whole object. */
+  private[graft] lazy val textFixturePath: String = {
+    import java.nio.file.{Files, Path, Paths}
+    val rel = "src/test/resources/graphs/medium1.txt"
+    val classes = Option(getClass.getProtectionDomain.getCodeSource)
+      .map(cs => Paths.get(cs.getLocation.toURI))
+    (classes.toSeq :+ Paths.get("").toAbsolutePath).iterator
+      .flatMap(Iterator.iterate[Path](_)(_.getParent).takeWhile(_ != null))
+      .map(_.resolve(rel)).find(Files.isRegularFile(_))
+      .getOrElse(Paths.get(rel)).toString
+  }
 
   // Shared SQL fragments for the DuckDB oracle (same parquet tables).
   private val supplierEdgesSql =

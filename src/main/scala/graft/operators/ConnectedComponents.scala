@@ -90,40 +90,26 @@ object ConnectedComponents {
         * taskMemory / ~70 B on real executors
         * (env override: SPARK_GRAFT_PRECONTRACT_CAP). */
       preContractCap: Int = graft.Env.int("SPARK_GRAFT_PRECONTRACT_CAP", 1000000),
-      /** Pointer-jump frontiers at or below this row count are resolved
-        * via a broadcast probe of the lookup map + driver-side fixups
-        * instead of a shuffle join: a 7-row tail frontier was paying a
-        * full shuffle of the multi-million-row label map (~3 s/jump at
-        * local[8] on the 16 M-edge suite; at 100 TB it would shuffle
-        * terabytes to resolve a handful of stragglers). 500k rows ≈
-        * 16 MB collected — the same driver-memory class as the sampled
-        * strategy's bounded collect. Raising this to 1.2 M (so the 16 M
-        * suite's 0.6–1.0 M jump-3 frontier takes the probe) was
-        * A/B-measured in round 5: t2 77.0→75.0 s, t8 35.5→35.7 s —
-        * the probe's O(frontier) driver map build cancels the saved
-        * |f| lookup shuffle once threads can absorb the shuffle, so the
-        * default stays 500k; the env knob remains for low-parallelism
-        * deployments where the trade measured positive.
-        * Env override: SPARK_GRAFT_CC_SMALL_FRONTIER. */
-      smallFrontierRows: Long = graft.Env.long("SPARK_GRAFT_CC_SMALL_FRONTIER",
-        500000L),
-      /** Pointer-jump frontiers at or below this row count (but above
-        * [[smallFrontierRows]]) pre-filter the lookup union with a
-        * broadcast LEFT SEMI join on the frontier's labels before the
-        * shuffle join: a jump only needs lookup rows whose id some
-        * frontier label references, so the shuffle moves O(|frontier|)
-        * matched rows instead of O(|f|) — the round-5 Amdahl
-        * decomposition's measured non-scaling floor (jump lookups
-        * re-shuffled ~8 M rows at identical ~4 s cost at 2 AND 8
-        * threads). Early jumps (frontier ≈ f) keep the plain shuffle
-        * join: the semi-join cannot shrink anything there and the
-        * broadcast would be |f|-sized. NOTE the filter must be on the
-        * FULL lookup union — restricting the lookup to the previous
-        * jump's output is semantically wrong (a frontier label can
-        * reference a segment resolved at ANY earlier jump: on a 9-chain,
-        * vertex 4's jump-3 label 8 lives in jump-1's done segment).
+      /** Pointer-jump frontiers at or below this row count never shuffle.
+        * The jump semi-filters the lookup union with a broadcast LEFT
+        * SEMI join on the frontier's labels (a jump only needs lookup
+        * rows whose id some frontier label references), then broadcasts
+        * that filtered lookup — at most |distinct frontier labels| rows,
+        * the same memory class as the label broadcast — as the build side
+        * of the frontier's LEFT join. The lookup shuffle was the round-5
+        * Amdahl decomposition's non-scaling floor (~8 M rows re-shuffled
+        * per jump at the same ~4 s at 2 AND 8 threads), and a 7-row tail
+        * frontier no longer pays a shuffle of a multi-million-row map.
+        * Frontiers above the threshold (early jumps, frontier ≈ f: the
+        * semi-join cannot shrink anything and the broadcast would be
+        * |f|-sized) take a plain shuffle-hash join. NOTE the filter must
+        * be on the FULL lookup union — restricting the lookup to the
+        * previous jump's output is semantically wrong (a frontier label
+        * can reference a segment resolved at ANY earlier jump: on a
+        * 9-chain, vertex 4's jump-3 label 8 lives in jump-1's done
+        * segment). 0 makes every jump shuffle.
         * Default 3 M rows: a hashed long-relation costs ~40 B/row, so
-        * the build side stays ≈120 MB — comfortably inside the 8 GiB
+        * each build side stays ≈120 MB — comfortably inside the 8 GiB
         * single-JVM heap AND typical executor task memory, where the
         * old 6 M default could spike to ~240 MB per concurrent build
         * near the threshold (ADVICE r06).
@@ -243,7 +229,9 @@ object ConnectedComponents {
         val (l, m) = randomizedHook(GraphIO.canonical(cleanedDs), mapping0, cfg)
         (l, m, None)
     }
-    cleaned.releaseLineage()
+    // the hook loop consumes its input (round 0 releases it); the other
+    // strategies re-materialize it and leave this barrier to run()
+    if (cfg.strategy != CCStrategy.HookAndContract) cleaned.releaseLineage()
     Result(labels.select($"id", $"label").as[VertexLabel], metrics, comps)
   }
 
@@ -280,6 +268,10 @@ object ConnectedComponents {
 
   // ---------------------------------------------------------------------
   // Strategy 1: hook-to-max + pointer jumping + contraction (reference).
+  // Consumes `edges0`: its barrier is released once round 0 (or, on an
+  // edge-free input, the final mapping) has read it. `mapping0` stays
+  // the caller's — it may be a lazy plan over the input or over
+  // caller-owned extra vertices, so the loop never releases it.
   // ---------------------------------------------------------------------
   private def hookAndContract(
       edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
@@ -407,7 +399,13 @@ object ConnectedComponents {
       //    LOGICAL plan (and the size-estimation BigInts) every jump —
       //    persist caches data but keeps lineage, and Catalyst's stats /
       //    plan-string work alone OOMs by jump ~19.
-      //  - no broadcast: each broadcast pins a copy of f until round end.
+      //  - never broadcast all of f (each broadcast pins its copy until
+      //    round end) and never route a jump through the driver: a
+      //    collected frontier re-enters as a LocalRelation whose rows
+      //    every later plan's optimizer rules walk again. Each jump is
+      //    one Catalyst join materialized by its barrier — broadcast
+      //    when the frontier is at most `broadcastRefsRows` rows
+      //    (build side = the semi-filtered lookup), shuffle-hash above.
       //  - frontier split: a row is `done` once its label is a root
       //    (roots have no entry in f — they never hook) or points at a
       //    done row. Each jump probes AND materializes only the shrinking
@@ -425,58 +423,28 @@ object ConnectedComponents {
         val lookup = (doneParts.map(_.withColumn("done", lit(true))) :+
             frontier.select($"id", $"label", lit(false).as("done")))
           .reduce(_ union _)
-        if (undone <= cfg.smallFrontierRows) {
-          // Tail fast path: the frontier fits on the driver, so probe the
-          // lookup map with a BROADCAST inner join (pure scan of the
-          // already-materialized barriers — no shuffle, no checkpoint
-          // write) and apply the one-hop rule locally. Every done row's
-          // label is already a final root (see induction note below), so
-          // the fixups here are exactly the join's semantics.
-          val fr = frontier.select($"id", $"label").collect()
-          val labelIds = fr.map(_.getLong(1)).distinct.toSeq
-          val probed = lookup
-            .join(broadcast(spark.createDataset(labelIds).toDF("lid")), $"id" === $"lid")
-            .select($"id", $"label", $"done").collect()
-          val target = probed.map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-          val resolved = fr.map { r =>
-            val (id, lbl) = (r.getLong(0), r.getLong(1))
-            target.get(lbl) match {
-              case None          => (id, lbl, true) // label is a root
-              case Some((l2, d)) => (id, l2, d)
-            }
-          }.toSeq
-          undone = resolved.count(!_._3)
-          val next = spark.createDataset(resolved).toDF("id", "label", "done")
-          // LocalRelation — nothing to barrier or release
-          doneParts ::= next.filter($"done").select($"id", $"label")
-          frontier = next.filter(!$"done").select($"id", $"label")
-        } else {
-          // Lookup-shuffle cut: when the frontier is broadcastable,
-          // semi-filter the lookup on the labels the frontier actually
-          // references — the shuffle side then carries O(|frontier|)
-          // rows, not O(|f|). No distinct on the build side: a semi
-          // join's hashed relation dedups keys itself, and the labels
-          // collect once (same O(frontier) class as the tail probe).
-          val lookupSide =
-            if (undone <= cfg.broadcastRefsRows)
-              lookup.join(broadcast(frontier.select($"label".as("_ref"))),
-                $"id" === $"_ref", "left_semi")
-            else lookup
-          val joined = frontier.as("a")
-            .join(lookupSide.as("b").hint("shuffle_hash"), $"a.label" === $"b.id", "left")
-            .select($"a.id".as("id"),
-              coalesce($"b.label", $"a.label").as("label"),
-              ($"b.id".isNull || $"b.done").as("done"))
-          val (next, m) = barrierObserved(joined,
-            sum(when(!$"done", 1L).otherwise(0L)).as("undone"))
-          undone = Option(m("undone")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          // next holds every frontier row (resolved + still-undone); the
-          // barriers of earlier jumps still back doneParts — release at
-          // round end, not here.
-          jumpBarriers += next
-          doneParts ::= next.filter($"done").select($"id", $"label")
-          frontier = next.filter(!$"done").select($"id", $"label")
-        }
+        // Broadcast build side: the lookup semi-filtered on the frontier's
+        // labels, O(|frontier|) rows instead of O(|f|) (no distinct: the
+        // semi join's hashed relation dedups the label keys itself).
+        val lookupSide =
+          if (undone <= cfg.broadcastRefsRows)
+            broadcast(lookup.join(broadcast(frontier.select($"label".as("_ref"))),
+              $"id" === $"_ref", "left_semi"))
+          else lookup.hint("shuffle_hash")
+        val joined = frontier.as("a")
+          .join(lookupSide.as("b"), $"a.label" === $"b.id", "left")
+          .select($"a.id".as("id"),
+            coalesce($"b.label", $"a.label").as("label"),
+            ($"b.id".isNull || $"b.done").as("done"))
+        val (next, m) = barrierObserved(joined,
+          sum(when(!$"done", 1L).otherwise(0L)).as("undone"))
+        undone = Option(m("undone")).map(_.asInstanceOf[Long]).getOrElse(0L)
+        // next holds every frontier row (resolved + still-undone); the
+        // barriers of earlier jumps still back doneParts — release at
+        // round end, not here.
+        jumpBarriers += next
+        doneParts ::= next.filter($"done").select($"id", $"label")
+        frontier = next.filter(!$"done").select($"id", $"label")
         jumps += 1
         if (cfg.verbose)
           System.err.println(s"[cc-hook] round=$round jump=$jumps undone=$undone at ${ms}ms")
@@ -555,7 +523,8 @@ object ConnectedComponents {
       lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
       if (cfg.verbose) System.err.println(s"[cc-hook] round=$round mapping done at ${ms}ms")
       jumpBarriers.foreach(_.releaseLineage())
-      prevEdges.releaseLineage(); prevMapping.releaseLineage()
+      prevEdges.releaseLineage()
+      if (round > startRound) prevMapping.releaseLineage()
       if (cfg.preContract) hookInput.releaseLineage() // last read: contraction join
 
       val stepMetric = SuperstepMetrics(cfg.runId, "cc-hook", round,
@@ -579,13 +548,13 @@ object ConnectedComponents {
     require(edgeCount == 0,
       s"CC did not converge in ${cfg.maxRounds} rounds ($edgeCount edges left)")
     // If the loop never ran (edge-free input) the mapping is still the
-    // LAZY identity over the caller's input barrier, which run() releases
-    // before the result is consumed — materialize it now (every vertex
-    // its own component: roots = row count).
+    // LAZY identity over the input barrier — materialize it now (every
+    // vertex its own component: roots = row count), then free the input.
     if (round == startRound) {
       val (md, mm) = barrierObserved(mapping, rootsMetric)
       mapping = md
       lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
+      edges.releaseLineage()
     }
     (mapping, metrics.toSeq, lastRoots)
   }

@@ -9,8 +9,7 @@ import org.apache.spark.sql.SparkSession
   * pass (maxHops probe via hopDistances) and the full operator. */
 object ProfileBetweenness {
   def main(args: Array[String]): Unit = {
-    val fixture = if (args.nonEmpty) args(0)
-      else "/root/repo/src/test/resources/graphs/medium1.txt"
+    val fixture = if (args.nonEmpty) args(0) else graft.SparkEntry.textFixturePath
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")

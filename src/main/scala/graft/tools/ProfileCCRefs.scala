@@ -7,10 +7,11 @@ import org.apache.spark.sql.GraftLineage
 import org.apache.spark.sql.GraftLineage._
 import org.apache.spark.sql.SparkSession
 
-/** A/B harness for the pointer-jump lookup semi-filter (round-5 verdict
-  * Next #3): arms = `refs` (lookup pre-filtered by a broadcast LEFT SEMI
-  * on the frontier's labels, `Config.broadcastRefsRows` = default) vs
-  * `plain` (filter disabled, the round-5 shape), interleaved in ONE JVM
+/** A/B harness for the two pointer-jump branches: arms = `refs` (a
+  * frontier of at most `Config.broadcastRefsRows` rows — the shipped
+  * default, or SPARK_GRAFT_CC_REFS_BROADCAST — semi-filters the lookup on
+  * its labels and joins it as a broadcast) vs `plain` (threshold 0: every
+  * jump shuffle-hash joins the whole lookup), interleaved in ONE JVM
   * on the synthetic 16 M-edge suite. Wall on this host is ±30-50% noise;
   * the decision signals are total shuffle WRITE bytes and job counts per
   * pass (plan-deterministic — see ProfileIterative's rationale).
@@ -53,9 +54,9 @@ object ProfileCCRefs {
       }
     })
 
-    // (name, broadcastRefsRows): 0 disables the semi-filter entirely
+    // (name, broadcastRefsRows): 0 sends every jump through the shuffle
     val arms = Seq(
-      "refs" -> Env.long("SPARK_GRAFT_CC_REFS_BROADCAST", 6000000L),
+      "refs" -> ConnectedComponents.Config().broadcastRefsRows,
       "plain" -> 0L)
     def ccPass(refsRows: Long): Int = {
       val res = ConnectedComponents.run(suite, None,

@@ -1,8 +1,9 @@
 package graft
 
-import graft.graph.{Edge, UnionFind}
+import graft.graph.{Edge, Generators, UnionFind}
 import graft.operators.ConnectedComponents
 import graft.operators.ConnectedComponents.{CCStrategy, Config}
+import org.apache.spark.sql.Dataset
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -35,13 +36,64 @@ class CCPropertySpec extends SparkSpec {
       Config(strategy = strategy))
       .labels.collect().map(l => l.id -> l.label).toMap
 
-  test("arbitrary dirty edge lists match the union-find oracle (hook strategy)") {
-    for (edges <- samples(8)) {
-      val oracle = UnionFind.components(edges).toMap
-      withClue(s"edges=$edges") {
-        run(edges, CCStrategy.HookAndContract) shouldBe oracle
+  private def edgeList(ds: Dataset[Edge]): Seq[(Long, Long)] =
+    ds.collect().map(e => (e.src, e.dst)).toSeq
+
+  private lazy val chain10k = edgeList(Generators.chain(spark, 10000L))
+
+  private lazy val generated: Seq[(String, Seq[(Long, Long)])] = Seq(
+    "chain(10k)" -> chain10k,
+    "star(10k)" -> edgeList(Generators.star(spark, 10000L)),
+    "forest(4 x random(2500))" -> edgeList(
+      Generators.forest(spark, 4, 2500L, (s, n) => Generators.random(s, n, 2 * n, 11L))))
+
+  /** Hook strategy vs the union-find oracle on the dirty samples and the
+    * generated graphs under `cfg`; asserts whether rounds after round 0
+    * ran distributed (they pointer-jump; a driver finish records none).
+    * The 10k chain also runs without pre-contraction: its hook forest is
+    * then one path-shaped tree, ~14 jumps deep, whose frontier labels
+    * point into segments finished at ANY earlier jump. A jump that
+    * looked them up in less than the full lookup union would leave
+    * labels short of the root — still correct after more rounds, so the
+    * check is that round 0 contracts the chain to no edge at all. */
+  private def checkHookBranches(cfg: Config): Unit = {
+    val inputs =
+      samples(8).zipWithIndex.map { case (e, i) => (s"dirty sample $i", e, cfg) } ++
+        generated.map { case (name, e) => (name, e, cfg) } :+
+        (("chain(10k), no pre-contraction", chain10k, cfg.copy(preContract = false)))
+    var tailRounds = 0
+    for ((graph, edges, c) <- inputs) {
+      val res = ConnectedComponents.run(
+        spark.createDataset(edges.map(e => Edge(e._1, e._2))), None, c)
+      withClue(s"$graph: ") {
+        res.labels.collect().map(l => l.id -> l.label).toMap shouldBe
+          UnionFind.components(edges).toMap
       }
+      if (!c.preContract) withClue(s"$graph: ") { res.metrics.head.edgesOut shouldBe 0L }
+      tailRounds += res.metrics.drop(1).count(_.pointerJumps > 0)
     }
+    if (cfg.driverFinishEdges == 0) tailRounds should be > 0
+    else tailRounds shouldBe 0
+  }
+
+  // The default thresholds send every jump of these small graphs through
+  // the broadcast build side and every tail round to the driver finish;
+  // broadcastRefsRows = 0 makes every jump a shuffle-hash join, and
+  // driverFinishEdges = 0 runs the tail rounds distributed.
+  test("arbitrary dirty edge lists match the union-find oracle (hook strategy)") {
+    checkHookBranches(Config())
+  }
+
+  test("hook strategy, broadcastRefsRows = 0: every pointer jump shuffles") {
+    checkHookBranches(Config(broadcastRefsRows = 0L))
+  }
+
+  test("hook strategy, driverFinishEdges = 0: tail rounds run distributed") {
+    checkHookBranches(Config(driverFinishEdges = 0L))
+  }
+
+  test("hook strategy, shuffle jumps and distributed tail rounds together") {
+    checkHookBranches(Config(broadcastRefsRows = 0L, driverFinishEdges = 0L))
   }
 
   test("edge order and orientation do not change the result") {
