@@ -52,8 +52,10 @@ object Corpus {
     * count, with the per-doc grams already distinct so the join-hit
     * count IS the distinct-overlap count. Ids must be unique non-null
     * per document (the corpus contract every gated consumer satisfies):
-    * the per-doc aggregation emits ONE row per id, where the
-    * pre-r07 formulation echoed duplicate input rows. */
+    * the per-doc aggregation emits ONE row per id, so a duplicate or
+    * null id would silently merge documents. Both are checked with
+    * metrics observed in the two materializations the call already
+    * makes (no extra job) and rejected with IllegalArgumentException. */
   def contamination(docs: DataFrame, id: Column, text: Column,
                     benchPred: Column, k: Int = 5): DataFrame =
     org.apache.spark.sql.GraftLineage.scopedBlocks(docs.sparkSession) {
@@ -62,10 +64,12 @@ object Corpus {
       // materialized pass instead of two full evaluations (the same rule
       // as Dedup.nearDuplicates' shingle base; measured 14.9 s → 4.0 s
       // at sf0.1). scopedBlocks releases it once the result is barrier'd.
-      val grams = org.apache.spark.sql.GraftLineage.barrier(docs
+      val (grams, gramsObs) = org.apache.spark.sql.GraftLineage.barrierObserved(docs
         .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
         .select(id.as("doc_id"), benchPred.as("is_bench"),
-          array_distinct(Dedup.shingles(text, k)).as("sh")))
+          array_distinct(Dedup.shingles(text, k)).as("sh")),
+        count(when(!col("is_bench"), 1)).as("corpus_rows"),
+        count(when(col("doc_id").isNull, 1)).as("null_ids"))
       val bench = broadcast(
         grams.filter(col("is_bench"))
           .select(explode(col("sh")).as("g")).distinct()
@@ -79,9 +83,22 @@ object Corpus {
         .select(col("doc_id"), explode_outer(col("sh")).as("g"))
         .join(bench, Seq("g"), "left")
         .groupBy("doc_id").agg(count(col("hit")).as("n_overlap"))
-      org.apache.spark.sql.GraftLineage.barrier(
+      val (out, outObs) = org.apache.spark.sql.GraftLineage.barrierObserved(
         hits.select(col("doc_id"), col("n_overlap"),
-          when(col("n_overlap") > 0, 1L).otherwise(0L).as("contaminated")))
+          when(col("n_overlap") > 0, 1L).otherwise(0L).as("contaminated")),
+        count(lit(1)).as("rows"))
+      val nullIds = gramsObs("null_ids").asInstanceOf[Long]
+      // one output row per distinct corpus id: fewer rows than corpus
+      // rows means ids repeated
+      val dupIds = gramsObs("corpus_rows").asInstanceOf[Long] - outObs("rows").asInstanceOf[Long]
+      if (nullIds > 0 || dupIds != 0) {
+        org.apache.spark.sql.GraftLineage.release(out)
+        org.apache.spark.sql.GraftLineage.release(grams)
+        throw new IllegalArgumentException(
+          s"contamination: doc ids must be unique and non-null; saw $nullIds null " +
+            s"and $dupIds duplicate ids")
+      }
+      out
     }
 
   /** Near-duplicate pairs that straddle a split boundary — the train/test

@@ -22,7 +22,7 @@ object Centrality {
 
   /** Iterations composed into one plan between lineage barriers for the
     * PINNED-iteration loops (katz/eigenvector/hits — loops with no
-    * data-dependent exit): each barrier job then executes `iterChunk`
+    * data-dependent exit): each barrier job then executes `IterChunk`
     * join+agg stages back-to-back inside Spark's scheduler instead of
     * paying one driver action + one localCheckpoint materialization per
     * iteration (guide §1.2: fix the distributed algorithm's pass count
@@ -30,14 +30,8 @@ object Centrality {
     * host, and at scale each skipped barrier is one fewer full
     * materialization of the score table). Chunks stay bounded so plan
     * size, size-estimation BigInts and (for the L∞-normalized loops)
-    * unnormalized value growth all stay small; the env knob mirrors the
-    * other scale-dependent settings. */
-  private val iterChunkDefault: Int =
-    math.max(1, graft.Env.int("SPARK_GRAFT_ITER_CHUNK", 4))
-  /** One-JVM A/B override (graft.tools.ProfileChunk); None = env/default. */
-  @volatile var iterChunkOverride: Option[Int] = None
-  private[operators] def iterChunk: Int =
-    iterChunkOverride.getOrElse(iterChunkDefault)
+    * unnormalized value growth all stay small. */
+  private[operators] val IterChunk = 4
 
   /** Seed-restricted harmonic centrality: h(v) = Σ_{s ∈ seeds, s ≠ v,
     * d(s,v) < ∞} 1 / d(s,v), rounded to 6 dp. Unreachable seed pairs
@@ -103,7 +97,12 @@ object Centrality {
     * one-row broadcast, so there is one job per iteration and one
     * compiled plan for all of them. Isolated vertices don't occur in an
     * edge-derived vertex set (every vertex has degree ≥ 1). */
-  def eigenvector(edges: Dataset[Edge], maxIter: Int = 20): DataFrame = {
+  def eigenvector(edges: Dataset[Edge], maxIter: Int = 20): DataFrame =
+    eigenvector(edges, maxIter, IterChunk)
+
+  /** [[eigenvector]] with `chunk` iterations per barrier job. */
+  private[graft] def eigenvector(edges: Dataset[Edge], maxIter: Int,
+                                 chunk: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(maxIter >= 1, "eigenvector: need at least one iteration")
@@ -129,17 +128,17 @@ object Centrality {
     }
     var m = 1.0
     var iter = 0
-    // Chunked unrolling: `iterChunk` update stages per barrier job. L∞
+    // Chunked unrolling: `chunk` update stages per barrier job. L∞
     // normalization commutes with the linear update (z/m is a pure
     // rescale), so dividing per term by the PREVIOUS CHUNK's observed max
     // — instead of every iteration's — leaves the final normalized output
     // z_T / max(z_T) mathematically unchanged; within a chunk values grow
-    // by at most λ_max^iterChunk, far inside double range. Oracle-gated
+    // by at most λ_max^chunk, far inside double range. Oracle-gated
     // equality re-verified after this change (the only float drift is the
     // removed per-iteration divisions, ~1e-13 relative, absorbed by the
     // 6 dp output round).
     while (iter < maxIter) {
-      val steps = math.min(iterChunk, maxIter - iter)
+      val steps = math.min(chunk, maxIter - iter)
       var cur: DataFrame = adj.as("e")
         .join(z.as("x"), $"e.src" === $"x.id")
         .crossJoin(broadcast(Seq(m).toDF("m")))
@@ -317,7 +316,12 @@ object Centrality {
     * partial-agg'd hash agg per iteration, previous state released
     * eagerly. */
   def katz(edges: Dataset[Edge], alpha: Double = 0.05,
-           maxIter: Int = 12): DataFrame = {
+           maxIter: Int = 12): DataFrame =
+    katz(edges, alpha, maxIter, IterChunk)
+
+  /** [[katz]] with `chunk` iterations per barrier job. */
+  private[graft] def katz(edges: Dataset[Edge], alpha: Double, maxIter: Int,
+                          chunk: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(maxIter >= 1, "katz: need at least one iteration")
@@ -339,11 +343,11 @@ object Centrality {
       return z.select($"id", $"v".as("katz")).limit(0)
     }
     var iter = 0
-    // Chunked unrolling (see [[iterChunk]]): the affine update needs no
+    // Chunked unrolling (see [[IterChunk]]): the affine update needs no
     // per-iteration scalar, so `steps` join+agg stages compose into ONE
     // barrier job — identical arithmetic per stage, 12 jobs → 2.
     while (iter < maxIter) {
-      val steps = math.min(iterChunk, maxIter - iter)
+      val steps = math.min(chunk, maxIter - iter)
       var cur: DataFrame = z
       var s = 0
       while (s < steps) {
@@ -406,13 +410,13 @@ object Centrality {
     }
     var mh = 1.0
     var iter = 0
-    // Chunked unrolling (see [[iterChunk]]): the alternating updates are
+    // Chunked unrolling (see [[IterChunk]]): the alternating updates are
     // linear, so the per-side L∞ normalizations are pure rescales that
     // commute with them — dividing the chunk's FIRST auth update per term
     // by the previous chunk's observed hub max (instead of normalizing
     // every half-step) leaves the final per-side normalized outputs
     // mathematically unchanged, and values grow by at most
-    // (λ_max²)^iterChunk within a chunk, far inside double range.
+    // (λ_max²)^IterChunk within a chunk, far inside double range.
     // Iterations 1..maxIter-1 run `steps` full (auth, hub) updates per
     // barrier job; the LAST iteration materializes auth and hub
     // separately because both are outputs. Unlike katz/eigenvector,

@@ -87,9 +87,8 @@ object ConnectedComponents {
         * and typical executor task memory. Raising 250k → 1M cut the
         * 16 M-edge suite from 3 supersteps to 2 and beat the old cap at
         * every parallelism measured (local[2/8/32]); size to
-        * taskMemory / ~70 B on real executors
-        * (env override: SPARK_GRAFT_PRECONTRACT_CAP). */
-      preContractCap: Int = graft.Env.int("SPARK_GRAFT_PRECONTRACT_CAP", 1000000),
+        * taskMemory / ~70 B on real executors. */
+      preContractCap: Int = 1000000,
       /** Pointer-jump frontiers at or below this row count never shuffle.
         * The jump semi-filters the lookup union with a broadcast LEFT
         * SEMI join on the frontier's labels (a jump only needs lookup
@@ -112,10 +111,8 @@ object ConnectedComponents {
         * each build side stays ≈120 MB — comfortably inside the 8 GiB
         * single-JVM heap AND typical executor task memory, where the
         * old 6 M default could spike to ~240 MB per concurrent build
-        * near the threshold (ADVICE r06).
-        * Env override: SPARK_GRAFT_CC_REFS_BROADCAST. */
-      broadcastRefsRows: Long = graft.Env.long("SPARK_GRAFT_CC_REFS_BROADCAST",
-        3000000L),
+        * near the threshold (ADVICE r06). */
+      broadcastRefsRows: Long = 3000000L,
       /** Tail rounds at or below this edge count finish on the driver:
         * collect the contracted edges, union-find them locally
         * (reference analogue: master-local prefix CC,
@@ -127,18 +124,8 @@ object ConnectedComponents {
         * the measured serial floor of the strong-scaling gate. Never
         * applied to the FIRST round (the distributed path must do the
         * heavy lifting; also keeps small-graph tests exercising the
-        * full machinery). 0 disables. Env: SPARK_GRAFT_CC_DRIVER_FINISH. */
-      driverFinishEdges: Long = graft.Env.long("SPARK_GRAFT_CC_DRIVER_FINISH",
-        2L * 1000 * 1000),
-      /** Run the per-round contraction and mapping-composition jobs
-        * concurrently (they share no dependency). Opt-in: on a single
-        * memory-constrained JVM the two jobs contend for the same heap
-        * and spill; on a real cluster with separate executor memory the
-        * overlap removes one serial driver job from the round.
-        * Env override: SPARK_GRAFT_CC_OVERLAP=1/0. */
-      overlapJobs: Boolean = sys.env.get("SPARK_GRAFT_CC_OVERLAP").contains("1"),
-      /** stderr progress lines per superstep/jump (diagnostics). */
-      verbose: Boolean = sys.env.get("SPARK_GRAFT_VERBOSE").contains("1"))
+        * full machinery). 0 disables. */
+      driverFinishEdges: Long = 2L * 1000 * 1000)
 
   /** `components`: the distinct-label count, observed for free inside the
     * FINAL mapping materialization when the strategy's labels are already
@@ -340,16 +327,12 @@ object ConnectedComponents {
           edgeCount, 0L, -1L, 0, (System.nanoTime() - t0) / 1000000)
         metrics += stepMetric
         ck.foreach(_.appendMetrics(Seq(stepMetric)))
-        if (cfg.verbose)
-          System.err.println(s"[cc-hook] round=$round driver-finish edgesIn=$edgeCount " +
-            s"ms=${(System.nanoTime() - t0) / 1000000}")
         edgeCount = 0
         round += 1
         ck.foreach(_.save(round, Map("edges" -> edges, "mapping" -> mapping),
           Map("algo" -> "cc-hook", "edgeCount" -> "0", "runId" -> cfg.runId)))
       } else {
       val t0 = System.nanoTime()
-      def ms: Long = (System.nanoTime() - t0) / 1000000
 
       // Per-partition pre-contraction: replace each partition's subgraph
       // by a spanning star forest toward the local component max. Pure
@@ -391,7 +374,6 @@ object ConnectedComponents {
       // at every use), which keeps f proportional to #srcs, not #vertices.
       val hooked = hookInput.groupBy($"src".as("id")).agg(max($"dst").as("label"))
         .cutLineage()
-      if (cfg.verbose) System.err.println(s"[cc-hook] round=$round hook done at ${ms}ms")
 
       // G3 pointer jumping with path doubling: f := f ∘ f until fixpoint.
       // Hard-won rules in this loop:
@@ -446,8 +428,6 @@ object ConnectedComponents {
         doneParts ::= next.filter($"done").select($"id", $"label")
         frontier = next.filter(!$"done").select($"id", $"label")
         jumps += 1
-        if (cfg.verbose)
-          System.err.println(s"[cc-hook] round=$round jump=$jumps undone=$undone at ${ms}ms")
       }
       // fixpoint: frontier is empty; f = disjoint union of the resolved
       // segments, materialized ONCE into a compact barrier — contraction
@@ -469,8 +449,6 @@ object ConnectedComponents {
           jumpBarriers += merged
           merged
       }
-
-      if (cfg.verbose) System.err.println(s"[cc-hook] round=$round jumps done at ${ms}ms")
 
       // G4 contraction: relabel endpoints through f, drop intra-component
       // edges (P2), normalize (P3), dedup (safe for CC). Contracts the
@@ -494,34 +472,12 @@ object ConnectedComponents {
 
       val prevEdges = edges
       val prevMapping = mapping
-      // The contraction and mapping-composition jobs share no dependency
-      // (both read only the materialized f/fB and barrier'd inputs), so
-      // they CAN run concurrently — cfg.overlapJobs. On a real cluster
-      // that removes one serial driver job per round; on this
-      // single-JVM 8g sandbox the two materializations contend for the
-      // same heap (measured: local[8] 16M-edge suite regressed ~2× with
-      // overlap on), so the default is sequential.
-      val (newEdges, cm, newMappingDf, mm) =
-        if (cfg.overlapJobs) {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.{Duration => SDuration}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val contractedF = Future(barrierObserved(contracted, count(lit(1)).as("n")))
-          val mappingF = Future(barrierObserved(newMapping, rootsMetric))
-          val (e, m) = Await.result(contractedF, SDuration.Inf)
-          val (md, mMet) = Await.result(mappingF, SDuration.Inf)
-          (e, m, md, mMet)
-        } else {
-          val (e, m) = barrierObserved(contracted, count(lit(1)).as("n"))
-          if (cfg.verbose) System.err.println(s"[cc-hook] round=$round contraction done at ${ms}ms")
-          val (md, mMet) = barrierObserved(newMapping, rootsMetric)
-          (e, m, md, mMet)
-        }
+      val (newEdges, cm) = barrierObserved(contracted, count(lit(1)).as("n"))
+      val (newMappingDf, mm) = barrierObserved(newMapping, rootsMetric)
       edges = newEdges
       val newCount = Option(cm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
       mapping = newMappingDf
       lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
-      if (cfg.verbose) System.err.println(s"[cc-hook] round=$round mapping done at ${ms}ms")
       jumpBarriers.foreach(_.releaseLineage())
       prevEdges.releaseLineage()
       if (round > startRound) prevMapping.releaseLineage()
@@ -531,9 +487,6 @@ object ConnectedComponents {
         edgeCount, newCount, -1L, jumps, (System.nanoTime() - t0) / 1000000)
       metrics += stepMetric
       ck.foreach(_.appendMetrics(Seq(stepMetric))) // durable per-superstep append (§4.5)
-      if (cfg.verbose)
-        System.err.println(s"[cc-hook] round=$round edgesIn=$edgeCount " +
-          s"edgesOut=$newCount jumps=$jumps ms=${(System.nanoTime() - t0) / 1000000}")
       edgeCount = newCount
       round += 1
 

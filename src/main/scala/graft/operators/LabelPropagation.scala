@@ -264,15 +264,13 @@ object LabelPropagation {
     var iter = startIter
     var changed = 1L
 
-    // Chunked iterations (guide §1.2; the Centrality.iterChunk rule,
+    // Chunked iterations (guide §1.2; the Centrality.IterChunk rule,
     // bounded at 2 because the exit is DATA-DEPENDENT): two synchronous
     // updates compose into one barrier job, convergence observed on the
     // chunk's LAST update — valid because a fixpoint is stable, so a
     // mid-chunk fixpoint just makes the final update a no-op with
     // changed = 0. Checkpointed runs keep one barrier per iteration.
-    val chunk =
-      if (ck.isDefined) 1
-      else math.max(1, graft.Env.int("SPARK_GRAFT_LPA_CHUNK", 2))
+    val chunk = if (ck.isDefined) 1 else 2
     while (iter < cfg.maxIter && changed > 0) {
       val t0 = System.nanoTime()
       val steps = math.min(chunk, cfg.maxIter - iter)

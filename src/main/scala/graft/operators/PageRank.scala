@@ -44,29 +44,9 @@ object PageRank {
         * written once, at the first snapshot. */
       checkpointEvery: Int = 8,
       checkpointDir: Option[String] = None,
-      runId: String = "pagerank",
-      /** A/B knob (see [[legacyDmassLiteral]]): bake the per-iteration
-        * dangling mass into the plan as a literal instead of the
-        * default one-row broadcast. `None` (the default) reads the
-        * process-wide [[legacyDmassLiteral]] ONCE at run start, so a
-        * run's arm can never flip mid-iteration even if a concurrent
-        * A/B harness rewrites the global between its passes. */
-      dmassLiteral: Option[Boolean] = None)
+      runId: String = "pagerank")
 
   final case class Result(ranks: DataFrame, iterations: Int, l1Delta: Double)
-
-  /** Measurement knob (A/B): bake the per-iteration dangling mass into
-    * the plan as a literal — the round-≤4 shape. A changing literal makes
-    * every iteration a NEW plan: Catalyst re-optimizes it and, because
-    * the literal is inlined into the generated Java, every whole-stage
-    * codegen fragment misses the compiled-class cache and pays a fresh
-    * Janino compile — per-iteration driver CPU that scales with driver
-    * contention, not with data. The default carries the scalar as a
-    * one-row broadcast so the generated code is identical across
-    * iterations and only iteration 1 compiles. Mutable so a one-JVM A/B
-    * harness can flip it between passes (graft.tools.ProfileIterative). */
-  @volatile var legacyDmassLiteral: Boolean =
-    sys.env.get("SPARK_GRAFT_PR_DMASS_LITERAL").contains("1")
 
   def run(edges: Dataset[Edge],
           extraVertices: Option[Dataset[Long]] = None,
@@ -233,7 +213,7 @@ object PageRank {
   }
 
   /** Pinned-iteration loop (tol = 0, zero dangling vertices, no durable
-    * checkpoints): `SPARK_GRAFT_ITER_CHUNK` join+agg iterations compose
+    * checkpoints): [[Centrality.IterChunk]] join+agg iterations compose
     * into ONE plan per lineage barrier — fewer driver actions and rank
     * materializations than one barrier per iteration, with the chunk
     * kept small so plan size and size-only estimates stay bounded.
@@ -251,9 +231,8 @@ object PageRank {
       if (personalized) ranks0.select($"id", $"rw") else null
     var ranks: DataFrame = ranks0
     var iter = 0
-    val chunk = math.max(1, graft.Env.int("SPARK_GRAFT_ITER_CHUNK", 4))
     while (iter < cfg.maxIter) {
-      val steps = math.min(chunk, cfg.maxIter - iter)
+      val steps = math.min(Centrality.IterChunk, cfg.maxIter - iter)
       var cur: DataFrame = ranks
       var s = 0
       while (s < steps) {
@@ -334,8 +313,6 @@ object PageRank {
     var danglingMass = dmass0
     var iter = startIter
     var delta = Double.MaxValue
-    // resolved ONCE per run: the plan-shape arm must be iteration-invariant
-    val dmassAsLiteral = cfg.dmassLiteral.getOrElse(legacyDmassLiteral)
 
     while (iter < cfg.maxIter && delta > cfg.tol) {
       val t0 = System.nanoTime()
@@ -349,22 +326,17 @@ object PageRank {
       // dangling flag in one pass. ONE job: materialize the new ranks
       // while observing the L1 delta and the next iteration's dangling
       // mass. The scalar dangling mass rides as a broadcast one-row
-      // frame (not a literal) so the iteration plan — and its compiled
-      // codegen — is IDENTICAL every iteration; arithmetic order is
-      // unchanged, so ranks are bit-identical to literal mode.
-      val base = ranks.as("r").join(contribs.as("c"), Seq("id"), "left")
-      val joined =
-        if (dmassAsLiteral)
-          base.select(Seq($"id",
-            (lit(1.0 - cfg.damping) * rw + lit(cfg.damping) *
-              (coalesce($"contrib", lit(0.0)) + lit(danglingMass) * rw)).as("rank"),
-            $"r.rank".as("prev")) ++ rwCols :+ $"dangling": _*)
-        else
-          base.crossJoin(broadcast(Seq(danglingMass).toDF("dmass")))
-            .select(Seq($"id",
-              (lit(1.0 - cfg.damping) * rw + lit(cfg.damping) *
-                (coalesce($"contrib", lit(0.0)) + $"dmass" * rw)).as("rank"),
-              $"r.rank".as("prev")) ++ rwCols :+ $"dangling": _*)
+      // frame, not a literal: a changing literal is inlined into the
+      // generated Java, so every iteration would be a new plan paying a
+      // fresh Catalyst optimization and Janino compile. With the
+      // broadcast the iteration plan — and its compiled codegen — is
+      // IDENTICAL every iteration and only iteration 1 compiles.
+      val joined = ranks.as("r").join(contribs.as("c"), Seq("id"), "left")
+        .crossJoin(broadcast(Seq(danglingMass).toDF("dmass")))
+        .select(Seq($"id",
+          (lit(1.0 - cfg.damping) * rw + lit(cfg.damping) *
+            (coalesce($"contrib", lit(0.0)) + $"dmass" * rw)).as("rank"),
+          $"r.rank".as("prev")) ++ rwCols :+ $"dangling": _*)
       val (next, m) = barrierObserved(joined,
         coalesce(sum(abs($"rank" - $"prev")), lit(0.0)).as("delta"),
         coalesce(sum(when($"dangling", $"rank")), lit(0.0)).as("dmass"))

@@ -136,16 +136,15 @@ object Traversal {
           .repartition(p, $"seed", $"walk"))
       var parts = List[DataFrame](state)
       var t = 0
-      // Chunked unrolling (guide §1.2; the Centrality.iterChunk rule):
-      // `chunk` walk steps compose into ONE barrier job holding the
+      // Chunked unrolling (guide §1.2): `Centrality.IterChunk` walk
+      // steps compose into ONE barrier job holding the
       // UNION of the chunk's per-step rows — the continuing state is the
       // last step's slice (a filter of the barrier, no recompute). Each
       // step's subtree feeds both the next step and the union, but the
       // steps end in an aggregation exchange, so ReuseExchange dedups
       // the double-consumed shuffle.
-      val chunk = math.max(1, graft.Env.int("SPARK_GRAFT_ITER_CHUNK", 4))
       while (t < steps) {
-        val nSteps = math.min(chunk, steps - t)
+        val nSteps = math.min(Centrality.IterChunk, steps - t)
         var cur: DataFrame = state
         var stepOut: DataFrame = null
         var s = 0
@@ -403,9 +402,7 @@ object Traversal {
     // graphs (dense co-occurrence: 2-3 rounds) a 4-chunk runs nearly 2×
     // the needed rounds (measured slower than per-round barriers), while
     // 2 still halves the job count on deep graphs.
-    val chunk =
-      if (ck.isDefined) 1
-      else math.max(1, graft.Env.int("SPARK_GRAFT_SSSP_CHUNK", 2))
+    val chunk = if (ck.isDefined) 1 else 2
     while (!converged && it < maxIter) {
       val t0 = System.nanoTime()
       val rounds = math.min(chunk, maxIter - it)

@@ -24,11 +24,9 @@ import org.apache.spark.sql.SparkSession
   * The target is row-based, not byte-based, because these loop rows are
   * fixed-width (8-24 B): 100k rows ≈ 1-2 MB per task keeps a stage's
   * task count proportional to its data while staying far above the
-  * per-task scheduling cost. Env override:
-  * SPARK_GRAFT_ROWS_PER_PARTITION. */
+  * per-task scheduling cost. */
 object Adaptive {
-  val rowsPerPartition: Long =
-    math.max(1L, graft.Env.long("SPARK_GRAFT_ROWS_PER_PARTITION", 100000L))
+  val rowsPerPartition: Long = 100000L
 
   /** Partition count for a loop table of `rows` rows: ceil(rows /
     * rowsPerPartition), clamped to [1, session shuffle partitions]. */

@@ -9,12 +9,13 @@ import org.apache.spark.sql.SparkSession
 
 /** A/B harness for the two pointer-jump branches: arms = `refs` (a
   * frontier of at most `Config.broadcastRefsRows` rows — the shipped
-  * default, or SPARK_GRAFT_CC_REFS_BROADCAST — semi-filters the lookup on
+  * default — semi-filters the lookup on
   * its labels and joins it as a broadcast) vs `plain` (threshold 0: every
   * jump shuffle-hash joins the whole lookup), interleaved in ONE JVM
   * on the synthetic 16 M-edge suite. Wall on this host is ±30-50% noise;
   * the decision signals are total shuffle WRITE bytes and job counts per
-  * pass (plan-deterministic — see ProfileIterative's rationale).
+  * pass (plan-deterministic: the same plan shuffles the same bytes and
+  * runs the same jobs whatever the host load).
   *
   * Env: SPARK_GRAFT_AB_REPS (default 3), SPARK_GRAFT_BENCH_SCALE
   * (default 2000000 → 16 M edges), SPARK_GRAFT_CPUS (default 8 — the
@@ -60,8 +61,7 @@ object ProfileCCRefs {
       "plain" -> 0L)
     def ccPass(refsRows: Long): Int = {
       val res = ConnectedComponents.run(suite, None,
-        ConnectedComponents.Config(broadcastRefsRows = refsRows,
-          verbose = sys.env.get("SPARK_GRAFT_VERBOSE").contains("1")))
+        ConnectedComponents.Config(broadcastRefsRows = refsRows))
       val n = res.metrics.size
       GraftLineage.release(res.labels, blocking = true)
       n

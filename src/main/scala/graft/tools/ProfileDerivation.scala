@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *             (called through it); for nation/weighted it is the
   *             REJECTED alternative, built inline.
   *
-  * Each candidate's output is fingerprinted (count + bit_xor of
-  * xxhash64(src, dst[, weight])) so the A/B itself proves set equality
-  * before any timing is trusted.
+  * Each candidate's output is fingerprinted (count + sum of
+  * xxhash64(src, dst[, weight])) so the A/B itself proves multiset
+  * equality before any timing is trusted.
   *
   * Usage: runMain graft.tools.ProfileDerivation [sfDir] [reps]
   */
@@ -102,11 +102,14 @@ object ProfileDerivation {
       "parts/group" -> (() => EdgeDerivation.partCooccurrence(spark, sfDir).toDF())
     )
 
-    // Equality first: fingerprint every variant's output.
+    // Equality first: fingerprint every variant's output. A sum, not an
+    // XOR fold, which cancels equal hashes and so misses a duplicated
+    // row pair; decimal so the sum cannot overflow under ANSI mode.
     variants.foreach { case (name, f) =>
       val out = f()
       val row = out.agg(count(lit(1)).as("n"),
-        expr(s"bit_xor(xxhash64(${out.columns.sorted.mkString(", ")}))").as("fp"))
+        expr(s"sum(cast(xxhash64(${out.columns.sorted.mkString(", ")}) AS DECIMAL(38, 0)))")
+          .as("fp"))
         .head()
       println(s"FINGERPRINT $name n=${row.getLong(0)} fp=${row.get(1)}")
     }

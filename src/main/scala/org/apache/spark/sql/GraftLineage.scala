@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpointed RDD immediately.
   *
   * Lives in `org.apache.spark.sql` to reach the `private[sql]`
-  * `internalCreateDataFrame`. Public Spark API only, no behavior patching.
+  * `Dataset.ofRows`. Public Spark API only, no behavior patching.
   */
 object GraftLineage {
   // Per-thread stack of open [[scopedBlocks]] scopes; [[barrier]]
@@ -51,13 +51,6 @@ object GraftLineage {
     case other => other
   }
 
-  /** Measurement knob: SPARK_GRAFT_BARRIER_LEGACY=1 restores the
-    * round-3 rewrap (UnknownPartitioning) so the cost of the silent
-    * per-iteration re-shuffle can be A/B'd inside one JVM. Mutable so a
-    * single-process A/B harness can flip it between passes. */
-  @volatile var legacyRewrap: Boolean =
-    sys.env.get("SPARK_GRAFT_BARRIER_LEGACY").contains("1")
-
   /** Eagerly materialize `df`, truncating RDD lineage, logical plan AND
     * statistics lineage. The returned frame's plan wraps the actual
     * checkpointed RDD so [[release]] can free its blocks later.
@@ -80,7 +73,7 @@ object GraftLineage {
     // cp's LogicalRDD; rewrap THAT node, not a derived toRdd, so release()
     // on the new frame reaches the real blocks.
     cp.queryExecution.analyzed match {
-      case l: LogicalRDD if !legacyRewrap =>
+      case l: LogicalRDD =>
         scopeStack.get() match {
           case head :: _ => head += l.rdd.id
           case Nil       => ()
@@ -118,17 +111,11 @@ object GraftLineage {
         val fresh = l.copy(outputPartitioning = part, outputOrdering = order)(
           spark, originStats = None, originConstraints = None)
         org.apache.spark.sql.classic.Dataset.ofRows(spark, fresh)
-      case other => // legacy knob or unknown checkpoint plan shape
-        // Rewrap the CHECKPOINT's block-holding RDD (the LogicalRDD's),
-        // never a derived toRdd — release()/scopedBlocks must reach the
-        // real storage blocks or every superseded barrier leaks.
-        val rdd = other.collectFirst { case l: LogicalRDD => l.rdd }
-          .getOrElse(cp.queryExecution.toRdd)
-        scopeStack.get() match {
-          case head :: _ => head += rdd.id
-          case Nil       => ()
-        }
-        spark.internalCreateDataFrame(rdd, cp.schema, isStreaming = false)
+      case other =>
+        // localCheckpoint always yields a bare LogicalRDD; anything else
+        // has no block-holding RDD that release() could reach
+        throw new IllegalStateException(
+          s"localCheckpoint produced ${other.nodeName}, expected LogicalRDD")
     }
   }
 

@@ -31,9 +31,11 @@ class CCPropertySpec extends SparkSpec {
     }
 
   private def run(edges: Seq[(Long, Long)], strategy: CCStrategy): Map[Long, Long] =
+    run(edges, Config(strategy = strategy))
+
+  private def run(edges: Seq[(Long, Long)], cfg: Config): Map[Long, Long] =
     ConnectedComponents.run(
-      spark.createDataset(edges.map(e => Edge(e._1, e._2))), None,
-      Config(strategy = strategy))
+      spark.createDataset(edges.map(e => Edge(e._1, e._2))), None, cfg)
       .labels.collect().map(l => l.id -> l.label).toMap
 
   private def edgeList(ds: Dataset[Edge]): Seq[(Long, Long)] =
@@ -41,11 +43,14 @@ class CCPropertySpec extends SparkSpec {
 
   private lazy val chain10k = edgeList(Generators.chain(spark, 10000L))
 
-  private lazy val generated: Seq[(String, Seq[(Long, Long)])] = Seq(
-    "chain(10k)" -> chain10k,
-    "star(10k)" -> edgeList(Generators.star(spark, 10000L)),
-    "forest(4 x random(2500))" -> edgeList(
-      Generators.forest(spark, 4, 2500L, (s, n) => Generators.random(s, n, 2 * n, 11L))))
+  /** A chain and a star of `n` vertices and four random graphs of n/4. */
+  private def generated(n: Long): Seq[(String, Seq[(Long, Long)])] = Seq(
+    s"chain($n)" -> edgeList(Generators.chain(spark, n)),
+    s"star($n)" -> edgeList(Generators.star(spark, n)),
+    s"forest(4 x random(${n / 4}))" -> edgeList(
+      Generators.forest(spark, 4, n / 4, (s, m) => Generators.random(s, m, 2 * m, 11L))))
+
+  private lazy val generated10k = generated(10000L)
 
   /** Hook strategy vs the union-find oracle on the dirty samples and the
     * generated graphs under `cfg`; asserts whether rounds after round 0
@@ -59,7 +64,7 @@ class CCPropertySpec extends SparkSpec {
   private def checkHookBranches(cfg: Config): Unit = {
     val inputs =
       samples(8).zipWithIndex.map { case (e, i) => (s"dirty sample $i", e, cfg) } ++
-        generated.map { case (name, e) => (name, e, cfg) } :+
+        generated10k.map { case (name, e) => (name, e, cfg) } :+
         (("chain(10k), no pre-contraction", chain10k, cfg.copy(preContract = false)))
     var tailRounds = 0
     for ((graph, edges, c) <- inputs) {
@@ -78,14 +83,16 @@ class CCPropertySpec extends SparkSpec {
 
   // The default thresholds send every jump of these small graphs through
   // the broadcast build side and every tail round to the driver finish;
-  // broadcastRefsRows = 0 makes every jump a shuffle-hash join, and
-  // driverFinishEdges = 0 runs the tail rounds distributed.
+  // broadcastRefsRows = 0 makes every jump a shuffle-hash join,
+  // driverFinishEdges = 0 runs the tail rounds distributed, and
+  // broadcastRows = 0 leaves the contraction and driver-finish relabel
+  // maps without a broadcast hint.
   test("arbitrary dirty edge lists match the union-find oracle (hook strategy)") {
     checkHookBranches(Config())
   }
 
   test("hook strategy, broadcastRefsRows = 0: every pointer jump shuffles") {
-    checkHookBranches(Config(broadcastRefsRows = 0L))
+    checkHookBranches(Config(broadcastRefsRows = 0L, broadcastRows = 0L))
   }
 
   test("hook strategy, driverFinishEdges = 0: tail rounds run distributed") {
@@ -93,7 +100,26 @@ class CCPropertySpec extends SparkSpec {
   }
 
   test("hook strategy, shuffle jumps and distributed tail rounds together") {
-    checkHookBranches(Config(broadcastRefsRows = 0L, driverFinishEdges = 0L))
+    checkHookBranches(Config(broadcastRefsRows = 0L, driverFinishEdges = 0L,
+      broadcastRows = 0L))
+  }
+
+  // Samples 0-3 already run these strategies in "strategies agree". The
+  // star and randomized strategies need O(log n) rounds of several jobs
+  // each, so the inputs are fewer and smaller than the hook tests'.
+  test("star, sampled and randomized strategies match the union-find oracle") {
+    val inputs =
+      samples(6).zipWithIndex.drop(4).map { case (e, i) => (s"dirty sample $i", e) } ++
+        generated(1000L)
+    val configs = Seq(
+      Config(strategy = CCStrategy.AlternatingStar),
+      Config(strategy = CCStrategy.SampledContraction),
+      Config(strategy = CCStrategy.RandomizedHook),
+      Config(strategy = CCStrategy.RandomizedHook, broadcastRows = 0L))
+    for ((graph, edges) <- inputs; cfg <- configs)
+      withClue(s"$graph, ${cfg.strategy}, broadcastRows = ${cfg.broadcastRows}: ") {
+        run(edges, cfg) shouldBe UnionFind.components(edges).toMap
+      }
   }
 
   test("edge order and orientation do not change the result") {

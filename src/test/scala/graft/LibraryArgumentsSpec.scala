@@ -1,0 +1,76 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.matchers.should.Matchers
+import scala.jdk.CollectionConverters._
+
+/** Library calls depend only on their arguments: outside the entry
+  * points (`Env`, `Bench`, `Verify`, `tools/`) no code under
+  * `src/main/scala` reads an environment variable or keeps a
+  * process-wide mutable switch (an object-level `@volatile var`). A knob
+  * belongs in a `Config` field or a parameter, where tests and callers
+  * can see and set it. */
+class LibraryArgumentsSpec extends AnyFunSuite with Matchers {
+
+  /** `src/main/scala` of the checkout these tests were built from: the
+    * first one above the compiled test classes or the working directory. */
+  private lazy val mainSources: Path = {
+    val codeSource = Option(getClass.getProtectionDomain.getCodeSource)
+      .map(cs => Paths.get(cs.getLocation.toURI))
+    (codeSource.toSeq :+ Paths.get("").toAbsolutePath).iterator
+      .flatMap(Iterator.iterate[Path](_)(_.getParent).takeWhile(_ != null))
+      .map(_.resolve("src/main/scala"))
+      .find(p => Files.isRegularFile(p.resolve("graft/SparkEntry.scala")))
+      .getOrElse(fail("src/main/scala not found above the test classes or the working directory"))
+  }
+
+  private val entryPoints = Seq("graft/Env.scala", "graft/Bench.scala",
+    "graft/Verify.scala", "graft/tools/")
+
+  private val envRead =
+    """sys\.env|System\.getenv|\bEnv\.(int|long|cpus)\s*\(""".r
+  private val volatileVar = """@volatile\b.*\bvar\b""".r
+  private val template = """\b(object|class|trait)\s""".r
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+  }
+  private def indent(line: String): Int = line.takeWhile(_ == ' ').length
+
+  /** Whether the definition on `lines(i)` sits directly in an `object`
+    * body: the nearest earlier code line indented less than it opens
+    * the enclosing template or method. */
+  private def inObjectBody(lines: IndexedSeq[String], i: Int): Boolean = {
+    val k = indent(lines(i))
+    (i - 1 to 0 by -1).iterator.map(lines)
+      .filter(l => l.trim.nonEmpty && !isComment(l) &&
+        !l.trim.startsWith("}") && !l.trim.startsWith(")") && !l.trim.startsWith("@"))
+      .find(indent(_) < k)
+      .exists(l => template.findFirstMatchIn(l).exists(_.group(1) == "object"))
+  }
+
+  /** "path:line: text" for every offending line of library code. */
+  private def offenders(matches: (IndexedSeq[String], Int) => Boolean): Seq[String] = {
+    val files = Files.walk(mainSources).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq.sorted
+    for {
+      f <- files
+      rel = mainSources.relativize(f).toString.replace('\\', '/')
+      if !entryPoints.exists(e => if (e.endsWith("/")) rel.startsWith(e) else rel == e)
+      lines = Files.readAllLines(f).asScala.toIndexedSeq
+      i <- lines.indices
+      if !isComment(lines(i)) && matches(lines, i)
+    } yield s"$rel:${i + 1}: ${lines(i).trim}"
+  }
+
+  test("library code reads no environment variables outside the entry points") {
+    offenders((lines, i) => envRead.findFirstIn(lines(i)).isDefined) shouldBe empty
+  }
+
+  test("library code keeps no object-level @volatile var switches") {
+    offenders((lines, i) =>
+      volatileVar.findFirstIn(lines(i)).isDefined && inObjectBody(lines, i)) shouldBe empty
+  }
+}

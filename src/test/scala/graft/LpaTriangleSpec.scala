@@ -564,14 +564,11 @@ class LpaTriangleSpec extends SparkSpec {
       (2L, 5L), (1L, 6L))
     val ds = spark.createDataset(g.map(e => Edge(e._1, e._2)))
     def run(chunk: Int) = {
-      Centrality.iterChunkOverride = Some(chunk)
-      try {
-        val e = Centrality.eigenvector(ds, maxIter = 7).collect()
-          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        val k = Centrality.katz(ds, alpha = 0.05, maxIter = 7).collect()
-          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        (e, k)
-      } finally Centrality.iterChunkOverride = None
+      val e = Centrality.eigenvector(ds, maxIter = 7, chunk = chunk).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val k = Centrality.katz(ds, alpha = 0.05, maxIter = 7, chunk = chunk).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      (e, k)
     }
     val (e1, k1) = run(1)
     val (e4, k4c) = run(4)

@@ -467,6 +467,18 @@ class PipelineSpec extends SparkSpec {
     res(9L) shouldBe (0L, 0L)
   }
 
+  test("contamination rejects duplicate and null doc ids") {
+    def contaminate(d: org.apache.spark.sql.DataFrame) =
+      Corpus.contamination(d, $"doc_id", $"text", $"doc_id" === 0L, k = 5)
+    val dup = docs.union(docs.filter($"doc_id" === 2L))
+    the[IllegalArgumentException] thrownBy contaminate(dup) should have message
+      "contamination: doc ids must be unique and non-null; saw 0 null and 1 duplicate ids"
+    val nullId = docs.union(docs.filter($"doc_id" === 9L)
+      .select(lit(null).cast("long").as("doc_id"), $"text"))
+    the[IllegalArgumentException] thrownBy contaminate(nullId) should have message
+      "contamination: doc ids must be unique and non-null; saw 1 null and 0 duplicate ids"
+  }
+
   test("cross-split leakage pairs are near-dups with differing splits") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val leaks = Corpus.crossSplitLeakage(d, "doc_id", "text", threshold = 0.8)

@@ -193,8 +193,9 @@ class PlanSpec extends SparkSpec {
   // wrong branch of GraftLineage.barrier: with AQE off the checkpoint's
   // LogicalRDD already carries the right partitioning and the recovery
   // code (the part that fixes production runs) never executes. These two
-  // tests run under the suite's DEFAULT config (AQE ON) and flip the
-  // legacy knob to prove they discriminate.
+  // tests run under the suite's DEFAULT config (AQE ON) and repeat each
+  // check with the round-3 rewrap (`Round3Barrier`) to prove they
+  // discriminate.
 
   /** All physical nodes including those hidden inside adaptive plans and
     * query stages (both are leaves to the plain TreeNode traversal). */
@@ -217,10 +218,11 @@ class PlanSpec extends SparkSpec {
 
   test("AQE ON: barrier recovers HashPartitioning from the finalized adaptive plan (legacy rewrap does not)") {
     import spark.implicits._
-    import org.apache.spark.sql.GraftLineage
+    import org.apache.spark.sql.{GraftLineage, Round3Barrier}
     spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true" // suite default
-    def barrierPartitioning(): org.apache.spark.sql.catalyst.plans.physical.Partitioning = {
-      val b = GraftLineage.barrier(
+    def barrierPartitioning(bar: DataFrame => DataFrame)
+        : org.apache.spark.sql.catalyst.plans.physical.Partitioning = {
+      val b = bar(
         spark.range(0, 1000).select($"id", ($"id" * 2).as("x")).repartition(4, $"id"))
       val part = b.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
         .queryExecution.analyzed.collect {
@@ -229,28 +231,24 @@ class PlanSpec extends SparkSpec {
       GraftLineage.release(b, blocking = true)
       part
     }
-    GraftLineage.legacyRewrap shouldBe false
-    barrierPartitioning() shouldBe a[
+    barrierPartitioning(GraftLineage.barrier) shouldBe a[
       org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
     // discriminating arm: the round-3 rewrap loses it under AQE
-    GraftLineage.legacyRewrap = true
-    try {
-      barrierPartitioning() should not be a[
-        org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
-    } finally GraftLineage.legacyRewrap = false
+    barrierPartitioning(Round3Barrier(_)) should not be a[
+      org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
   }
 
   test("AQE ON: executed pagerank-shaped iteration shuffles once with the recovery, more without") {
     import spark.implicits._
-    import org.apache.spark.sql.GraftLineage
+    import org.apache.spark.sql.{GraftLineage, Round3Barrier}
     import org.apache.spark.sql.functions.{lit, sum}
     spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true" // suite default
-    def iterationShuffles(): Int = {
-      val wEdges = GraftLineage.barrier(
+    def iterationShuffles(bar: DataFrame => DataFrame): Int = {
+      val wEdges = bar(
         spark.range(0, 2000)
           .select(($"id" % 100).as("src"), ($"id" % 97).as("dst"), lit(0.5).as("w"))
           .repartition(4, $"src"))
-      val ranks = GraftLineage.barrier(
+      val ranks = bar(
         spark.range(0, 100).select($"id", lit(0.01).as("rank")).repartition(4, $"id"))
       val iter = wEdges.as("e").join(ranks.as("r"), $"e.src" === $"r.id")
         .groupBy($"e.dst".as("id")).agg(sum($"e.w" * $"r.rank").as("contrib"))
@@ -260,32 +258,29 @@ class PlanSpec extends SparkSpec {
       GraftLineage.release(ranks, blocking = true)
       n
     }
-    GraftLineage.legacyRewrap shouldBe false
     // exactly ONE shuffle: the aggregation's — the barrier'd inputs keep
     // their hash partitioning through the checkpoint under AQE
-    iterationShuffles() shouldBe 1
+    iterationShuffles(GraftLineage.barrier) shouldBe 1
     // legacy rewrap: UnknownPartitioning on both inputs → every iteration
     // re-shuffles them (the round-3 production defect)
-    GraftLineage.legacyRewrap = true
-    try iterationShuffles() should be > 1
-    finally GraftLineage.legacyRewrap = false
+    iterationShuffles(Round3Barrier(_)) should be > 1
   }
 
   test("AQE ON: coreness-shaped iteration never re-shuffles the barrier'd adjacency") {
     import spark.implicits._
-    import org.apache.spark.sql.GraftLineage
+    import org.apache.spark.sql.{GraftLineage, Round3Barrier}
     import org.apache.spark.sql.functions.{count => fcount, lit, sum => fsum, max => fmax, least}
     spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true" // suite default
     // one coreness iteration: adjacency (partitioned by the join key dst)
     // ⋈ state → (v, value) histogram → windowed h-index — with the
     // partitioning recovery, the ONLY shuffles are the state side + the
     // two re-keyings (hist agg, window), never the adjacency itself
-    def iterationShuffles(): Int = {
-      val bidir = GraftLineage.barrier(
+    def iterationShuffles(bar: DataFrame => DataFrame): Int = {
+      val bidir = bar(
         spark.range(0, 4000)
           .select(($"id" % 200).as("src"), ($"id" % 193).as("dst"))
           .repartition(4, $"dst"))
-      val state = GraftLineage.barrier(
+      val state = bar(
         spark.range(0, 193).select($"id", lit(3L).as("c")).repartition(4, $"id"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"v").orderBy($"c".desc)
@@ -300,14 +295,12 @@ class PlanSpec extends SparkSpec {
       GraftLineage.release(state, blocking = true)
       n
     }
-    GraftLineage.legacyRewrap shouldBe false
-    val withRecovery = iterationShuffles()
+    val withRecovery = iterationShuffles(GraftLineage.barrier)
     // with recovery BOTH barrier'd inputs keep their partitioning (the
     // state rename rewrites through the projection), so only the two
     // re-keyings (histogram agg, window) can shuffle
     withRecovery should be <= 2
-    GraftLineage.legacyRewrap = true
-    val without = try iterationShuffles() finally GraftLineage.legacyRewrap = false
+    val without = iterationShuffles(Round3Barrier(_))
     // legacy rewrap loses both inputs' partitioning → extra shuffles of
     // the adjacency and state sides every iteration
     without should be > withRecovery
