@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.GraftLineage._
 import graft.graph.{Edge, GraphIO, SuperstepMetrics, UnionFind, VertexLabel}
 import graft.plans.CheckpointManager
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
@@ -76,8 +76,12 @@ object ConnectedComponents {
         * Replaces each partition's subgraph by its spanning star forest —
         * connectivity-preserving, collapses local path depth to 1, so
         * pointer jumping needs O(1) jumps instead of O(log diameter).
-        * Memory: one LongMap over the partition's vertex ids (bounded by
-        * `spark.sql.files.maxPartitionBytes` / shuffle partition sizing). */
+        * Its output has a row for every vertex, so a fresh run reads its
+        * input once: round 0 pre-contracts the lazy range-partitioned
+        * input (counting it in the same job) and its label map is the
+        * first mapping. `false` materializes the cleaned input first and
+        * composes an identity mapping every round.
+        * Memory: one LongMap per chunk, bounded by `preContractCap`. */
       preContract: Boolean = true,
       /** Per-partition vertex cap for pre-contraction: bounds each task's
         * union-find memory deterministically (~40 MB at 250k); edges past
@@ -90,23 +94,20 @@ object ConnectedComponents {
         * taskMemory / ~70 B on real executors. */
       preContractCap: Int = 1000000,
       /** Pointer-jump frontiers at or below this row count never shuffle.
-        * The jump semi-filters the lookup union with a broadcast LEFT
-        * SEMI join on the frontier's labels (a jump only needs lookup
-        * rows whose id some frontier label references), then broadcasts
-        * that filtered lookup — at most |distinct frontier labels| rows,
-        * the same memory class as the label broadcast — as the build side
-        * of the frontier's LEFT join. The lookup shuffle was the round-5
-        * Amdahl decomposition's non-scaling floor (~8 M rows re-shuffled
-        * per jump at the same ~4 s at 2 AND 8 threads), and a 7-row tail
-        * frontier no longer pays a shuffle of a multi-million-row map.
-        * Frontiers above the threshold (early jumps, frontier ≈ f: the
-        * semi-join cannot shrink anything and the broadcast would be
-        * |f|-sized) take a plain shuffle-hash join. NOTE the filter must
-        * be on the FULL lookup union — restricting the lookup to the
-        * previous jump's output is semantically wrong (a frontier label
-        * can reference a segment resolved at ANY earlier jump: on a
-        * 9-chain, vertex 4's jump-3 label 8 lives in jump-1's done
-        * segment). 0 makes every jump shuffle.
+        * The label function f has a row for every label a frontier row can
+        * hold, so a jump is an INNER join: the frontier is the broadcast
+        * build side and the lookup union streams past it (one broadcast
+        * job per jump). The lookup shuffle was the round-5 Amdahl
+        * decomposition's non-scaling floor (~8 M rows re-shuffled per
+        * jump at the same ~4 s at 2 AND 8 threads), and a 7-row tail
+        * frontier never pays a shuffle of a multi-million-row map.
+        * Frontiers above the threshold (early jumps, frontier ≈ f) take a
+        * plain shuffle-hash join. NOTE the lookup must be the FULL union of resolved
+        * segments and frontier — restricting it to the previous jump's
+        * output is semantically wrong (a frontier label can reference a
+        * segment resolved at ANY earlier jump: on a 9-chain, vertex 4's
+        * jump-3 label 8 lives in jump-1's done segment). 0 makes every
+        * jump shuffle.
         * Default 3 M rows: a hashed long-relation costs ~40 B/row, so
         * each build side stays ≈120 MB — comfortably inside the 8 GiB
         * single-JVM heap AND typical executor task memory, where the
@@ -157,68 +158,40 @@ object ConnectedComponents {
     // them (hook pre-contraction and the per-step distinct()s dedup
     // structurally), and skipping the up-front distinct() saves a full
     // shuffle+materialization of the largest table in the whole job.
-    // The ONE materialization of the cleaned input is written directly in
-    // the layout its strategy wants: the hook path gets its CSR-style
-    // range layout here (materializing `cleaned` and then a ranged copy
-    // of it was two full passes over the largest table in the job —
-    // measured ~14 s of the 69 s local[8] 16 M-edge run).
     val cleanedLazy = GraphIO.normalize(edges)
-      .filter(col("src") =!= col("dst")).toDF()
-    val p = spark.sessionState.conf.numShufflePartitions
-    // The edge count is observed inside the SAME materialization job —
-    // the hook loop's entry count() was one more constant-time driver
-    // job per run (the strong-scaling serial floor is made of exactly
-    // such jobs).
-    val (cleaned1, cleanedMetrics) = barrierObserved(cfg.strategy match {
-      case CCStrategy.HookAndContract if cfg.preContract =>
-        // (src, dst) — not src alone — so a single-hub star spreads
-        // across partitions instead of forming one straggler task
-        cleanedLazy.repartitionByRange(p, $"src", $"dst")
-          .sortWithinPartitions($"src", $"dst")
-      case _ => cleanedLazy
-    }, count(lit(1)).as("n"))
-    val cleanedCount = Option(cleanedMetrics("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    // Small derived graphs (dedup pair graphs, co-activity buckets):
-    // re-range the materialized input at a data-proportional partition
-    // count (guide §2, graft.plans.Adaptive — substantial shrinks only)
-    // so round 0's pre-contraction and hook stages don't schedule one
-    // tiny task per session partition. At bench/cluster scale the
-    // condition never fires and the path is byte-identical to before.
-    // Labels are graph-determined (component max), so partitioning
-    // cannot change any gated output.
-    // floor of 2: round 0 must stay a genuinely distributed round (a
-    // 1-partition pre-contraction would union-find the whole graph in
-    // one task — the driver-finish philosophy without its bounds)
-    val pAd = math.max(2, graft.plans.Adaptive.forRows(spark, cleanedCount))
-    val cleaned =
-      if (cfg.strategy == CCStrategy.HookAndContract && cfg.preContract &&
-          cleanedCount > 0 && pAd * 4 <= p) {
-        val re = barrier(cleaned1.repartitionByRange(pAd, $"src", $"dst")
-          .sortWithinPartitions($"src", $"dst"))
-        cleaned1.releaseLineage()
-        re
-      } else cleaned1
-    val verts = GraphIO.vertices(cleaned.as[Edge]).toDF("id")
-      .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
-      .distinct()
-    val mapping0 = verts.select($"id", $"id".as("label"))
-
-    val cleanedDs = cleaned.as[Edge]
+      .filter(col("src") =!= col("dst")).as[Edge]
     val (labels, metrics, comps) = cfg.strategy match {
-      case CCStrategy.HookAndContract    =>
-        hookAndContract(cleanedDs, mapping0, cfg, preRanged = true,
-          initialCount = Some(cleanedCount))
-      case CCStrategy.AlternatingStar    =>
-        val (l, m) = alternatingStar(GraphIO.canonical(cleanedDs), mapping0, cfg)
-        (l, m, None)
-      case CCStrategy.SampledContraction => sampledContraction(GraphIO.canonical(cleanedDs), mapping0, cfg)
-      case CCStrategy.RandomizedHook     =>
-        val (l, m) = randomizedHook(GraphIO.canonical(cleanedDs), mapping0, cfg)
-        (l, m, None)
+      // The pre-contracted hook path never materializes the cleaned
+      // input: round 0's pre-contraction reads it lazily, in its range
+      // layout, and counts it in the same job.
+      case CCStrategy.HookAndContract if cfg.preContract =>
+        hookAndContract(cleanedLazy, None, cfg, extraVertices = extraVertices)
+      case strategy =>
+        // Every other path starts from ONE materialization of the cleaned
+        // input; its edge count is observed inside that job.
+        val (cleaned, cleanedMetrics) = barrierObserved(cleanedLazy.toDF(), count(lit(1)).as("n"))
+        val cleanedCount = Option(cleanedMetrics("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+        val verts = GraphIO.vertices(cleaned.as[Edge]).toDF("id")
+          .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
+          .distinct()
+        val mapping0 = verts.select($"id", $"id".as("label"))
+        val cleanedDs = cleaned.as[Edge]
+        val out = strategy match {
+          case CCStrategy.HookAndContract    =>
+            hookAndContract(cleanedDs, Some(mapping0), cfg, initialCount = Some(cleanedCount))
+          case CCStrategy.AlternatingStar    =>
+            val (l, m) = alternatingStar(GraphIO.canonical(cleanedDs), mapping0, cfg)
+            (l, m, None)
+          case CCStrategy.SampledContraction => sampledContraction(GraphIO.canonical(cleanedDs), mapping0, cfg)
+          case CCStrategy.RandomizedHook     =>
+            val (l, m) = randomizedHook(GraphIO.canonical(cleanedDs), mapping0, cfg)
+            (l, m, None)
+        }
+        // the hook loop consumes its input (round 0 releases it); the other
+        // strategies re-materialize it and leave this barrier to run()
+        if (strategy != CCStrategy.HookAndContract) cleaned.releaseLineage()
+        out
     }
-    // the hook loop consumes its input (round 0 releases it); the other
-    // strategies re-materialize it and leave this barrier to run()
-    if (cfg.strategy != CCStrategy.HookAndContract) cleaned.releaseLineage()
     Result(labels.select($"id", $"label").as[VertexLabel], metrics, comps)
   }
 
@@ -239,7 +212,7 @@ object ConnectedComponents {
     val mapping = ck.load(step, "mapping")
     val cfg2 = cfg.copy(checkpointDir = Some(checkpointDir))
     val (labels, metrics, comps) = algo match {
-      case "cc-hook" => hookAndContract(edges, mapping, cfg2, startRound = step + 1)
+      case "cc-hook" => hookAndContract(edges, Some(mapping), cfg2, startRound = step + 1)
       case "cc-sampled" => sampledContraction(edges, mapping, cfg2, startRound = step + 1)
       case "cc-random" =>
         val (l, m) = randomizedHook(edges, mapping, cfg2, startRound = step + 1)
@@ -255,44 +228,65 @@ object ConnectedComponents {
 
   // ---------------------------------------------------------------------
   // Strategy 1: hook-to-max + pointer jumping + contraction (reference).
-  // Consumes `edges0`: its barrier is released once round 0 (or, on an
-  // edge-free input, the final mapping) has read it. `mapping0` stays
-  // the caller's — it may be a lazy plan over the input or over
-  // caller-owned extra vertices, so the loop never releases it.
+  // Two entries:
+  //  - `mapping0 = Some(m)` (resume; fresh runs without pre-contraction):
+  //    the loop consumes `edges0`, a barrier released once round 0 has
+  //    read it, and every round composes the mapping with its label
+  //    function f. `m` stays the caller's — it may be a lazy plan over
+  //    the input or over caller-owned extra vertices, so the loop never
+  //    releases it.
+  //  - `mapping0 = None` (fresh run with pre-contraction): `edges0` is
+  //    the LAZY cleaned input. Round 0's pre-contraction reads it once,
+  //    in range layout, and counts it in the same job. Its f covers every
+  //    edge vertex with canonical max labels, so f (∪ `extraVertices`) IS
+  //    the first mapping: no vertex-set distinct, no composition join.
+  //    The input plan may reach the caller's own barriers (a release walks
+  //    every checkpointed RDD in a plan), so the loop never releases it.
   // ---------------------------------------------------------------------
   private def hookAndContract(
-      edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
-      startRound: Int = 0, preRanged: Boolean = false,
+      edges0: Dataset[Edge], mapping0: Option[DataFrame], cfg: Config,
+      startRound: Int = 0, extraVertices: Option[Dataset[Long]] = None,
       initialCount: Option[Long] = None)
       : (DataFrame, Seq[SuperstepMetrics], Option[Long]) = {
     val spark = edges0.sparkSession
     import spark.implicits._
     val metrics = ArrayBuffer.empty[SuperstepMetrics]
     val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
+    val fresh = mapping0.isEmpty
+    val start = System.nanoTime()
 
-    // Range-partition the edge table by src once (CSR-style adjacency
-    // layout, per the north star): graphs with id locality (chains, web
-    // graphs, co-occurrence ids) then contract well per-partition. The
-    // upstream dedup's hash shuffle scatters structure randomly — without
-    // this, round-0 pre-contraction finds only fragments and pointer
-    // jumping pays the full graph diameter (observed: 22 jumps vs 6).
-    // `preRanged`: run() already materialized the input in this layout
-    // (one pass instead of two); the resume path still ranges here.
+    // Range-partition the edge table by (src, dst) once (CSR-style
+    // adjacency layout, per the north star): graphs with id locality
+    // (chains, web graphs, co-occurrence ids) then contract well
+    // per-partition. The upstream dedup's hash shuffle scatters structure
+    // randomly — without this, round-0 pre-contraction finds only
+    // fragments and pointer jumping pays the full graph diameter
+    // (observed: 22 jumps vs 6). (src, dst), not src alone, so a
+    // single-hub star spreads across partitions instead of forming one
+    // straggler task. A fresh run leaves the ranged input lazy: round 0's
+    // pre-contraction is its only reader, and materializing it would cost
+    // one more full pass over the largest table in the job.
     val p = spark.sessionState.conf.numShufflePartitions
-    var edges = (if (cfg.preContract && !preRanged)
-        edges0.toDF().repartitionByRange(p, $"src", $"dst")
+    var edges =
+      if (!cfg.preContract) edges0.toDF()
+      else {
+        val ranged = edges0.toDF().repartitionByRange(p, $"src", $"dst")
           .sortWithinPartitions($"src", $"dst") // CSR layout: chunks see contiguous segments
-          .cutLineage()
-      else edges0.toDF())
-    // mapping0 is LAZY on purpose: for a fresh run it is the identity
-    // over the vertex set (a distinct over the cleaned edges) and its
-    // only round-0 consumer is the composition join — computing it
-    // inside that job saves one driver job + one materialization per
-    // run (the strong-scaling serial floor is made of exactly such
-    // jobs). Every subsequent `mapping` IS barrier'd in the loop.
+        if (fresh) ranged else ranged.cutLineage()
+      }
     var mapping = mapping0
     var round = startRound
-    var edgeCount = initialCount.getOrElse(edges.count())
+    // A fresh run counts its input edges under the pre-contraction kernel,
+    // inside round 0's pre-contraction job.
+    var preContracted: Option[DataFrame] = None
+    var edgeCount = initialCount.getOrElse {
+      if (!fresh) edges.count()
+      else {
+        val obs = Observation()
+        preContracted = Some(preContract(edges.observe(obs, count(lit(1)).as("n")), cfg))
+        obs.get("n").asInstanceOf[Long]
+      }
+    }
     // roots observed in each round's mapping materialization; at loop
     // exit the last value IS the component count (labels final there)
     var lastRoots: Option[Long] = None
@@ -314,12 +308,12 @@ object ConnectedComponents {
         // bypassing autoBroadcastJoinThreshold with a ~100 MB relation
         val mapDf = bcIfSmall(
           spark.createDataset(mapRows).toDF("old", "new"), mapRows.size.toLong, cfg)
-        val newMapping = mapping.as("m")
+        val prevMapping = mapping.get // round 0 has built it by now
+        val newMapping = prevMapping.as("m")
           .join(mapDf.as("f"), $"m.label" === $"f.old", "left")
           .select($"m.id".as("id"), coalesce($"f.new", $"m.label").as("label"))
-        val prevMapping = mapping
         val (mappedDf, mm) = barrierObserved(newMapping, rootsMetric)
-        mapping = mappedDf
+        mapping = Some(mappedDf)
         lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
         prevMapping.releaseLineage(); edges.releaseLineage()
         edges = spark.emptyDataset[Edge].toDF()
@@ -329,51 +323,31 @@ object ConnectedComponents {
         ck.foreach(_.appendMetrics(Seq(stepMetric)))
         edgeCount = 0
         round += 1
-        ck.foreach(_.save(round, Map("edges" -> edges, "mapping" -> mapping),
+        ck.foreach(_.save(round, Map("edges" -> edges, "mapping" -> mappedDf),
           Map("algo" -> "cc-hook", "edgeCount" -> "0", "runId" -> cfg.runId)))
       } else {
-      val t0 = System.nanoTime()
+      // a fresh run's round 0 also times its input pass
+      val t0 = if (round == startRound) start else System.nanoTime()
 
-      // Per-partition pre-contraction: replace each partition's subgraph
-      // by a spanning star forest toward the local component max. Pure
-      // narrow transformation (no shuffle); output edges (v, rep) are
-      // already normalized since rep = local max.
-      // Chunked so each union-find holds ≤ cap vertices (bounded task
-      // memory at any partition size): a block is contracted to its star
-      // forest, the maps reset, and the next block begins. Blocks glue via
-      // shared vertices in the global hook rounds.
-      // Materialized (barrier) because it has TWO consumers per round —
-      // the hook aggregation and the contraction relabel join; left lazy,
-      // the per-partition union-find pass ran twice per round (a measured
-      // ~6 s of the round-0 contraction's 12.7 s at local[8], 16 M edges).
-      val chunkEdges = math.max(1, cfg.preContractCap / 2)
-      val hookInput =
-        if (!cfg.preContract) edges
-        else barrier(edges.as[Edge].mapPartitions { it =>
-          it.grouped(chunkEdges).flatMap { chunk =>
-            val uf = new UnionFind
-            chunk.foreach { e => uf.touch(e.src); uf.touch(e.dst); uf.union(e.src, e.dst) }
-            val maxOf = scala.collection.mutable.LongMap.empty[Long]
-            val all = uf.ids.toArray
-            all.foreach { v =>
-              val r = uf.find(v)
-              maxOf(r) = math.max(maxOf.getOrElse(r, Long.MinValue), v)
-            }
-            all.iterator.flatMap { v =>
-              val rep = maxOf(uf.find(v))
-              if (v == rep) Iterator.empty else Iterator.single(Edge(v, rep))
-            }
-          }
-        }.toDF())
+      val hookInput = preContracted.getOrElse(
+        if (cfg.preContract) preContract(edges, cfg)
+        else edges.union(edges.select($"dst".as("src"), $"dst")))
+      preContracted = None
 
       // G2 hook-to-max: each src hooks to its largest (normalized) neighbor.
       // Partial+final hash aggregation reproduces local-hook + MPI_MAX
       // reduce; no salting needed (map-side combine absorbs src skew).
-      // Rows are only the non-identity part of the label function f:
-      // vertices absent from `f` map to themselves (left-join + coalesce
-      // at every use), which keeps f proportional to #srcs, not #vertices.
-      val hooked = hookInput.groupBy($"src".as("id")).agg(max($"dst").as("label"))
-        .cutLineage()
+      // f has a row for EVERY vertex of the round and a root is an
+      // identity row: pre-contraction emits (rep, rep) for each chunk max,
+      // and without it each dst gets a (dst, dst) row. Row and root counts
+      // ride the same job: |f| = |hooked| (each row resolves exactly once)
+      // and f's roots are hooked's identity rows (labels only grow along a
+      // path).
+      val (hooked, hm) = barrierObserved(
+        hookInput.groupBy($"src".as("id")).agg(max($"dst").as("label")),
+        count(lit(1)).as("n"), rootsMetric)
+      val fRows = Option(hm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val fRoots = Option(hm("roots")).map(_.asInstanceOf[Long]).getOrElse(0L)
 
       // G3 pointer jumping with path doubling: f := f ∘ f until fixpoint.
       // Hard-won rules in this loop:
@@ -387,100 +361,101 @@ object ConnectedComponents {
       //    every later plan's optimizer rules walk again. Each jump is
       //    one Catalyst join materialized by its barrier — broadcast
       //    when the frontier is at most `broadcastRefsRows` rows
-      //    (build side = the semi-filtered lookup), shuffle-hash above.
-      //  - frontier split: a row is `done` once its label is a root
-      //    (roots have no entry in f — they never hook) or points at a
-      //    done row. Each jump probes AND materializes only the shrinking
-      //    undone frontier; resolved rows stay behind in their jump's
-      //    barrier (per-jump checkpoint volume tracks the frontier, not
-      //    |f| — measured 13M vs 30M rows across a 16M-edge round 0).
+      //    (build side = the frontier), shuffle-hash above.
+      //  - frontier split: a row is `done` once its label is a root (an
+      //    identity row) or points at a done row. Each jump probes AND
+      //    materializes only the shrinking undone frontier; resolved rows
+      //    stay behind in their jump's barrier (per-jump checkpoint
+      //    volume tracks the frontier, not |f| — measured 13M vs 30M rows
+      //    across a 16M-edge round 0).
       //    The lookup side must remain ALL of f (frontier labels can
       //    point at any row): a union of the done segments + frontier.
-      var frontier = hooked
-      var doneParts = List.empty[DataFrame] // resolved (id, label) views
+      var frontier = hooked.filter($"label" =!= $"id")
+      var doneParts = List(hooked.filter($"label" === $"id")) // the roots
       val jumpBarriers = scala.collection.mutable.ArrayBuffer[DataFrame](hooked)
       var jumps = 0
-      var undone = edgeCount // |hooked| ≤ current edge count (upper bound)
+      var undone = fRows - fRoots
       while (undone > 0) {
         val lookup = (doneParts.map(_.withColumn("done", lit(true))) :+
             frontier.select($"id", $"label", lit(false).as("done")))
           .reduce(_ union _)
-        // Broadcast build side: the lookup semi-filtered on the frontier's
-        // labels, O(|frontier|) rows instead of O(|f|) (no distinct: the
-        // semi join's hashed relation dedups the label keys itself).
-        val lookupSide =
-          if (undone <= cfg.broadcastRefsRows)
-            broadcast(lookup.join(broadcast(frontier.select($"label".as("_ref"))),
-              $"id" === $"_ref", "left_semi"))
-          else lookup.hint("shuffle_hash")
-        val joined = frontier.as("a")
-          .join(lookupSide.as("b"), $"a.label" === $"b.id", "left")
-          .select($"a.id".as("id"),
-            coalesce($"b.label", $"a.label").as("label"),
-            ($"b.id".isNull || $"b.done").as("done"))
+        // f has a row for every label, so each frontier row finds exactly
+        // one lookup row (inner join). Small frontiers are the broadcast
+        // build side and the lookup streams past them — one broadcast per
+        // jump; coalesce keeps the growing union of done segments at ≤ p
+        // partitions. Large frontiers take a shuffle-hash join.
+        val (a, b) =
+          if (undone <= cfg.broadcastRefsRows) (broadcast(frontier), lookup.coalesce(p))
+          else (frontier, lookup.hint("shuffle_hash"))
+        val joined = a.as("a").join(b.as("b"), $"a.label" === $"b.id")
+          .select($"a.id".as("id"), $"b.label".as("label"), $"b.done".as("done"))
         val (next, m) = barrierObserved(joined,
           sum(when(!$"done", 1L).otherwise(0L)).as("undone"))
         undone = Option(m("undone")).map(_.asInstanceOf[Long]).getOrElse(0L)
         // next holds every frontier row (resolved + still-undone); the
-        // barriers of earlier jumps still back doneParts — release at
-        // round end, not here.
+        // barriers of earlier jumps still back doneParts until the merge
         jumpBarriers += next
         doneParts ::= next.filter($"done").select($"id", $"label")
         frontier = next.filter(!$"done").select($"id", $"label")
         jumps += 1
       }
-      // fixpoint: frontier is empty; f = disjoint union of the resolved
+      // fixpoint: frontier is empty (the round has edges, so at least one
+      // jump ran); f = disjoint union of the roots and the resolved
       // segments, materialized ONCE into a compact barrier — contraction
       // and mapping each scan f twice, and joining against the lazy
-      // union-of-filters was measured 3× slower than against one barrier
-      // (one extra |f| checkpoint/round still beats the old one-per-jump).
-      val f = doneParts match {
-        case Nil      => hooked.select($"id", $"label")
-        case p :: Nil => p
-        case ps       =>
-          val merged = barrier(ps.reduce(_ union _))
-          // every per-jump barrier is superseded by the merged map —
-          // free their blocks NOW, before the contraction joins need the
-          // memory (keeping them pinned through the sort-merge was a
-          // measured 2× contraction slowdown on the 8g heap); blocking:
-          // the point is that the memory is back before the join starts
-          jumpBarriers.foreach(_.releaseLineage(blocking = true))
-          jumpBarriers.clear()
-          jumpBarriers += merged
-          merged
-      }
+      // union-of-filters was measured 3× slower than against one barrier.
+      // Every per-jump barrier is superseded by it — free their blocks
+      // NOW, before the contraction joins need the memory (keeping them
+      // pinned through the sort-merge was a measured 2× contraction
+      // slowdown on the 8g heap); blocking: the point is that the memory
+      // is back before the join starts.
+      val f = barrier(doneParts.reduce(_ union _))
+      jumpBarriers.foreach(_.releaseLineage(blocking = true))
 
       // G4 contraction: relabel endpoints through f, drop intra-component
       // edges (P2), normalize (P3), dedup (safe for CC). Contracts the
       // (connectivity-equivalent, ≤min(m,n)-edge) pre-contracted forest,
       // not the full edge set — same components, O(n) relabel volume.
-      val fB = bcIfSmall(f, edgeCount, cfg)
-      val contracted = hookInput.as("e")
-        .join(fB.as("fs"), $"e.src" === $"fs.id", "left")
-        .join(fB.as("fd"), $"e.dst" === $"fd.id", "left")
-        .select(
-          coalesce($"fs.label", $"e.src").as("u"),
-          coalesce($"fd.label", $"e.dst").as("v"))
+      // f has a row for both endpoints of every edge: inner joins.
+      val fB = bcIfSmall(f, fRows, cfg)
+      val contracted = hookInput.filter($"src" =!= $"dst").as("e")
+        .join(fB.as("fs"), $"e.src" === $"fs.id")
+        .join(fB.as("fd"), $"e.dst" === $"fd.id")
+        .select($"fs.label".as("u"), $"fd.label".as("v"))
         .filter($"u" =!= $"v")
         .select(least($"u", $"v").as("src"), greatest($"u", $"v").as("dst"))
         .distinct()
-
-      // G6 forward map composition (no recursion stack): orig → new rep.
-      val newMapping = mapping.as("m")
-        .join(fB.as("f"), $"m.label" === $"f.id", "left")
-        .select($"m.id".as("id"), coalesce($"f.label", $"m.label").as("label"))
-
-      val prevEdges = edges
-      val prevMapping = mapping
       val (newEdges, cm) = barrierObserved(contracted, count(lit(1)).as("n"))
-      val (newMappingDf, mm) = barrierObserved(newMapping, rootsMetric)
+
+      val prevMapping = mapping
+      val (newMapping, roots) = (mapping, extraVertices) match {
+        // G6 forward map composition (no recursion stack): orig → new rep.
+        case (Some(m), _) =>
+          val (md, mm) = barrierObserved(m.as("m")
+            .join(fB.as("f"), $"m.label" === $"f.id", "left")
+            .select($"m.id".as("id"), coalesce($"f.label", $"m.label").as("label")),
+            rootsMetric)
+          (md, Option(mm("roots")).map(_.asInstanceOf[Long]))
+        // fresh round 0: f already maps every edge vertex to its
+        // component max among this round's edges — the first mapping
+        case (None, None) => (f, Some(fRoots))
+        // an extra vertex keeps its edge label if it has one (labels are
+        // maxima, so max picks it), else it labels itself
+        case (None, Some(x)) =>
+          val (md, mm) = barrierObserved(
+            f.union(x.toDF("id").select($"id", $"id".as("label")))
+              .groupBy($"id").agg(max($"label").as("label")),
+            rootsMetric)
+          (md, Option(mm("roots")).map(_.asInstanceOf[Long]))
+      }
+      val prevEdges = edges
       edges = newEdges
       val newCount = Option(cm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      mapping = newMappingDf
-      lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
-      jumpBarriers.foreach(_.releaseLineage())
-      prevEdges.releaseLineage()
-      if (round > startRound) prevMapping.releaseLineage()
+      mapping = Some(newMapping)
+      lastRoots = roots
+      if (!(newMapping eq f)) f.releaseLineage()
+      if (!fresh || round > startRound) prevEdges.releaseLineage()
+      if (round > startRound) prevMapping.foreach(_.releaseLineage())
       if (cfg.preContract) hookInput.releaseLineage() // last read: contraction join
 
       val stepMetric = SuperstepMetrics(cfg.runId, "cc-hook", round,
@@ -492,7 +467,7 @@ object ConnectedComponents {
 
       ck.foreach { c =>
         if (round % cfg.checkpointEvery == 0 || edgeCount == 0)
-          c.save(round, Map("edges" -> edges, "mapping" -> mapping),
+          c.save(round, Map("edges" -> edges, "mapping" -> newMapping),
             Map("algo" -> "cc-hook", "edgeCount" -> edgeCount.toString,
                 "runId" -> cfg.runId))
       }
@@ -500,16 +475,52 @@ object ConnectedComponents {
     }
     require(edgeCount == 0,
       s"CC did not converge in ${cfg.maxRounds} rounds ($edgeCount edges left)")
-    // If the loop never ran (edge-free input) the mapping is still the
-    // LAZY identity over the input barrier — materialize it now (every
-    // vertex its own component: roots = row count), then free the input.
-    if (round == startRound) {
-      val (md, mm) = barrierObserved(mapping, rootsMetric)
-      mapping = md
-      lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
-      edges.releaseLineage()
+    // Edge-free input: the loop never ran, every vertex is its own
+    // component. The mapping is the identity over the vertex set — still
+    // LAZY, so materialize it now — then free the round-0 input.
+    val finalMapping = mapping match {
+      case Some(m) if round > startRound => m
+      case _ =>
+        val identity = mapping.getOrElse(extraVertices.map(_.toDF("id").distinct())
+          .getOrElse(spark.emptyDataset[Long].toDF("id")).select($"id", $"id".as("label")))
+        val (md, mm) = barrierObserved(identity, rootsMetric)
+        lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
+        if (fresh) preContracted.foreach(_.releaseLineage()) else edges.releaseLineage()
+        md
     }
-    (mapping, metrics.toSeq, lastRoots)
+    (finalMapping, metrics.toSeq, lastRoots)
+  }
+
+  /** Per-partition union-find pre-contraction (reference analogue:
+    * master-local prefix CC, `SparseSampling.hpp:275-313`, run on every
+    * partition): each chunk's subgraph becomes its spanning star forest,
+    * one row (v, rep) per chunk vertex with rep = its local component max
+    * — (rep, rep) included, so a hook over the output covers every vertex.
+    * Pure narrow transformation (no shuffle); the non-identity rows are
+    * already normalized since rep = local max. Chunked so each union-find
+    * holds ≤ cap vertices (bounded task memory at any partition size):
+    * a block is contracted, the maps reset, and the next block begins.
+    * Blocks glue via shared vertices in the global hook rounds.
+    * Materialized (barrier) because it has TWO consumers per round — the
+    * hook aggregation and the contraction relabel join; left lazy, the
+    * per-partition union-find pass ran twice per round (a measured ~6 s
+    * of the round-0 contraction's 12.7 s at local[8], 16 M edges). */
+  private def preContract(edges: DataFrame, cfg: Config): DataFrame = {
+    import edges.sparkSession.implicits._
+    val chunkEdges = math.max(1, cfg.preContractCap / 2)
+    barrier(edges.as[Edge].mapPartitions { it =>
+      it.grouped(chunkEdges).flatMap { chunk =>
+        val uf = new UnionFind
+        chunk.foreach { e => uf.touch(e.src); uf.touch(e.dst); uf.union(e.src, e.dst) }
+        val maxOf = scala.collection.mutable.LongMap.empty[Long]
+        val all = uf.ids.toArray
+        all.foreach { v =>
+          val r = uf.find(v)
+          maxOf(r) = math.max(maxOf.getOrElse(r, Long.MinValue), v)
+        }
+        all.iterator.map(v => Edge(v, maxOf(uf.find(v))))
+      }
+    }.toDF())
   }
 
   // ---------------------------------------------------------------------
@@ -743,7 +754,7 @@ object ConnectedComponents {
         .groupBy($"a".as("id")).agg(max($"b").as("label"))
         .cutLineage()
 
-      val fB = bcIfSmall(f, edgeCount, cfg)
+      val fB = bcIfSmall(f, 2 * edgeCount, cfg)
       val contracted = edges.as("e")
         .join(fB.as("fs"), $"e.src" === $"fs.id", "left")
         .join(fB.as("fd"), $"e.dst" === $"fd.id", "left")
@@ -787,10 +798,13 @@ object ConnectedComponents {
     (out, metrics.toSeq)
   }
 
-  /** Broadcast hint for relabel maps once they are known-small. The map has
-    * at most as many rows as the current edge count, which we track. */
-  private def bcIfSmall(df: DataFrame, upperBound: Long, cfg: Config): DataFrame =
-    if (upperBound <= cfg.broadcastRows) broadcast(df) else df
+  /** Broadcast hint for relabel maps once they are known-small. `rows` is
+    * the map's row count or a bound on it: the hook loop passes f's
+    * observed count (a row per vertex of the round, up to 2·edgeCount),
+    * the driver finish its collected map's size, and the randomized
+    * strategy 2·edgeCount (at most one row per edge endpoint). */
+  private def bcIfSmall(df: DataFrame, rows: Long, cfg: Config): DataFrame =
+    if (rows <= cfg.broadcastRows) broadcast(df) else df
 
   /** Component count from a label table. */
   def componentCount(labels: Dataset[VertexLabel]): Long =

@@ -104,6 +104,32 @@ class CCPropertySpec extends SparkSpec {
       broadcastRows = 0L))
   }
 
+  // A fresh pre-contracted run builds its first mapping from round 0's
+  // label function, grouped with the extra vertices, and counts its input
+  // inside the pre-contraction job; an edge-free input never enters the
+  // loop and labels every extra vertex with itself.
+  test("hook strategy with extra vertices and edge-free inputs matches the union-find oracle") {
+    val dirty = samples(3)(2) ++ Seq((7L, 7L), (3L, 9L), (9L, 3L), (3L, 9L))
+    val inputs = Seq[(String, Seq[(Long, Long)], Seq[Long])](
+      ("extra vertices overlapping the edge vertices", dirty, Seq(0L, 3L, 9L, 9L, 17L)),
+      ("isolated extra vertices", dirty, Seq(1000L, 1001L, 1001L, 1002L)),
+      ("edge-free input with extra vertices", Seq((4L, 4L)), Seq(4L, 5L, 5L, 6L)),
+      ("edge-free input without extra vertices", Seq((4L, 4L)), Nil))
+    for ((name, edges, extras) <- inputs) withClue(s"$name: ") {
+      val cleaned = edges.filter { case (u, v) => u != v } // duplicates kept
+      val oracle = UnionFind.components(cleaned, extras).toMap
+      val res = ConnectedComponents.run(
+        spark.createDataset(edges.map(e => Edge(e._1, e._2))),
+        if (extras.isEmpty) None else Some(spark.createDataset(extras)), Config())
+      val labels = res.labels.collect()
+      labels.length shouldBe oracle.size // one row per vertex
+      labels.map(l => l.id -> l.label).toMap shouldBe oracle
+      res.components shouldBe Some(oracle.values.toSet.size.toLong)
+      if (cleaned.isEmpty) res.metrics shouldBe empty
+      else res.metrics.head.edgesIn shouldBe cleaned.size.toLong
+    }
+  }
+
   // Samples 0-3 already run these strategies in "strategies agree". The
   // star and randomized strategies need O(log n) rounds of several jobs
   // each, so the inputs are fewer and smaller than the hook tests'.
