@@ -28,7 +28,8 @@ import java.nio.file.{Files, Paths}
   *
   * Env knobs: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS
   * (default 32), SPARK_GRAFT_BENCH_SCALE (vertices per shape, default
-  * 400k → ~3.2M edges), SPARK_GRAFT_BENCH_STRATEGY (hook|star|sampled),
+  * 400k → ~3.2M edges), SPARK_GRAFT_BENCH_STRATEGY
+  * (hook|star|sampled|random, default hook; any other value throws),
   * SPARK_GRAFT_BENCH_REPS (headline repetitions, default 3),
   * SPARK_GRAFT_BENCH_QREPS (interleaved per-query sweeps, default 2),
   * SPARK_GRAFT_BENCH_OUT (JSON output file, default BENCH/last_bench.json).
@@ -39,6 +40,8 @@ object Bench {
     val (cpus, cores) = Env.cpus("SPARK_GRAFT_CPUS", 32)
     val scale = Env.long("SPARK_GRAFT_BENCH_SCALE", 400000L)
     val strategyName = sys.env.getOrElse("SPARK_GRAFT_BENCH_STRATEGY", "hook")
+    val strategy = CCStrategy.named(strategyName).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_BENCH_STRATEGY='$strategyName': expected ${CCStrategy.names}"))
     val reps = Env.int("SPARK_GRAFT_BENCH_REPS", 3)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "BENCH/last_bench.json") // relative to the working dir, not a hardcoded checkout path
@@ -60,13 +63,6 @@ object Bench {
       spark.sparkContext.getPersistentRDDs
         .filterNot { case (id, _) => keep(id) }
         .values.foreach(_.unpersist(blocking = true))
-
-    val strategy = strategyName match {
-      case "star"    => CCStrategy.AlternatingStar
-      case "sampled" => CCStrategy.SampledContraction
-      case "random"  => CCStrategy.RandomizedHook
-      case _         => CCStrategy.HookAndContract
-    }
 
     // Warm-up: JIT + codegen + shuffle machinery on a tiny run.
     ConnectedComponents.run(Generators.random(spark, 2000, 4000, 1L))

@@ -5,7 +5,6 @@ import graft.graph.{Edge, GraphIO, SuperstepMetrics, UnionFind, VertexLabel}
 import graft.plans.CheckpointManager
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
 /** Distributed connected components over a `Dataset[Edge]`.
@@ -14,7 +13,7 @@ import scala.collection.mutable.ArrayBuffer
   * component` — byte-exact vs the reference's deterministic hook-to-max
   * fixpoint (`CSE613-MPI/mpi_parallel_cc_utils.cpp:25-35`).
   *
-  * Three strategies, all producing identical canonical labels:
+  * Four strategies, all producing identical canonical labels:
   *
   *  - [[CCStrategy.HookAndContract]] — the reference algorithm re-expressed
   *    as Dataset relational ops: hook-to-max = groupBy(src).agg(max(dst))
@@ -32,6 +31,9 @@ import scala.collection.mutable.ArrayBuffer
   *    contraction (PPoPP 2018 semantics, `SparseSampling.hpp:53-93`):
   *    per round sample a bounded edge subset, union-find it on the driver,
   *    broadcast the contraction map.
+  *  - [[CCStrategy.RandomizedHook]] — coin-toss child hooking
+  *    (random-mate, `randomized_OPENMP_cc.cpp:164-201`): tails hook to a
+  *    heads neighbor, a depth-1 forest with no pointer jumping.
   *
   * Scale design: relabel maps after round 1 are orders of magnitude smaller
   * than the edge set, so relabel joins broadcast once the map fits
@@ -44,16 +46,25 @@ import scala.collection.mutable.ArrayBuffer
   */
 object ConnectedComponents {
 
-  sealed trait CCStrategy
+  /** `name` is the strategy's CLI name (`CCRun`, `Bench`); `tag` is the
+    * `algo` of its metrics rows and checkpoint manifests, which
+    * [[resume]] dispatches on. */
+  sealed abstract class CCStrategy(val name: String, val tag: String)
   object CCStrategy {
-    case object HookAndContract extends CCStrategy
-    case object AlternatingStar extends CCStrategy
-    case object SampledContraction extends CCStrategy
+    case object HookAndContract extends CCStrategy("hook", "cc-hook")
+    case object AlternatingStar extends CCStrategy("star", "cc-star")
+    case object SampledContraction extends CCStrategy("sampled", "cc-sampled")
     /** G5 — coin-toss child hooking (random-mate), the randomized OpenMP
       * variant (`randomized_OPENMP_cc.cpp:164-201`), derandomized: the
       * per-round "coin" is `xxhash64(seed, round, id)`, so runs are
       * reproducible at any parallelism. */
-    case object RandomizedHook extends CCStrategy
+    case object RandomizedHook extends CCStrategy("random", "cc-random")
+
+    val all: Seq[CCStrategy] =
+      Seq(HookAndContract, AlternatingStar, SampledContraction, RandomizedHook)
+    /** `hook|star|sampled|random`, for usage texts. */
+    val names: String = all.map(_.name).mkString("|")
+    def named(name: String): Option[CCStrategy] = all.find(_.name == name)
   }
 
   final case class Config(
@@ -72,26 +83,22 @@ object ConnectedComponents {
       seed: Long = 17L,
       /** Per-partition union-find pre-contraction before each hook round
         * (reference analogue: master-local prefix CC,
-        * `SparseSampling.hpp:275-313`, distributed to every partition).
-        * Replaces each partition's subgraph by its spanning star forest —
+        * `SparseSampling.hpp:275-313`, distributed to every partition)
+        * replaces each partition's subgraph by its spanning star forest —
         * connectivity-preserving, collapses local path depth to 1, so
         * pointer jumping needs O(1) jumps instead of O(log diameter).
-        * Its output has a row for every vertex, so a fresh run reads its
-        * input once: round 0 pre-contracts the lazy range-partitioned
-        * input (counting it in the same job) and its label map is the
-        * first mapping. `false` materializes the cleaned input first and
-        * composes an identity mapping every round.
-        * Memory: one LongMap per chunk, bounded by `preContractCap`. */
-      preContract: Boolean = true,
-      /** Per-partition vertex cap for pre-contraction: bounds each task's
-        * union-find memory deterministically (~40 MB at 250k); edges past
+        * It runs in chunks of `preContractCap / 2` edges, each chunk's
+        * union-find holding at most this many vertices: the cap bounds each
+        * task's memory deterministically (~40 MB at 250k); edges past
         * the cap pass through unchanged (still correct — just contracts
         * less). ~70 B/vertex of LongMap state → 1 M ≈ 70 MB per task,
         * ≈ 2.2 GB at 32 concurrent tasks — fits the 8 GiB sandbox heap
         * and typical executor task memory. Raising 250k → 1M cut the
         * 16 M-edge suite from 3 supersteps to 2 and beat the old cap at
         * every parallelism measured (local[2/8/32]); size to
-        * taskMemory / ~70 B on real executors. */
+        * taskMemory / ~70 B on real executors. 2 makes one-edge chunks:
+        * the hook then sees each edge plus a (dst, dst) row, i.e. plain
+        * hook-to-max with no contraction ahead of it. */
       preContractCap: Int = 1000000,
       /** Pointer-jump frontiers at or below this row count never shuffle.
         * The label function f has a row for every label a frontier row can
@@ -160,39 +167,25 @@ object ConnectedComponents {
     // shuffle+materialization of the largest table in the whole job.
     val cleanedLazy = GraphIO.normalize(edges)
       .filter(col("src") =!= col("dst")).as[Edge]
-    val (labels, metrics, comps) = cfg.strategy match {
-      // The pre-contracted hook path never materializes the cleaned
-      // input: round 0's pre-contraction reads it lazily, in its range
-      // layout, and counts it in the same job.
-      case CCStrategy.HookAndContract if cfg.preContract =>
+    cfg.strategy match {
+      // The hook path never materializes the cleaned input: round 0's
+      // pre-contraction reads it lazily, in its range layout, and counts
+      // it in the same job.
+      case CCStrategy.HookAndContract =>
         hookAndContract(cleanedLazy, None, cfg, extraVertices = extraVertices)
       case strategy =>
-        // Every other path starts from ONE materialization of the cleaned
-        // input; its edge count is observed inside that job.
-        val (cleaned, cleanedMetrics) = barrierObserved(cleanedLazy.toDF(), count(lit(1)).as("n"))
-        val cleanedCount = Option(cleanedMetrics("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val verts = GraphIO.vertices(cleaned.as[Edge]).toDF("id")
+        // Every other strategy starts from ONE materialization of the
+        // cleaned input, re-materializes it canonical and leaves this
+        // barrier to run().
+        val cleaned = barrier(cleanedLazy.toDF()).as[Edge]
+        val verts = GraphIO.vertices(cleaned).toDF("id")
           .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
           .distinct()
-        val mapping0 = verts.select($"id", $"id".as("label"))
-        val cleanedDs = cleaned.as[Edge]
-        val out = strategy match {
-          case CCStrategy.HookAndContract    =>
-            hookAndContract(cleanedDs, Some(mapping0), cfg, initialCount = Some(cleanedCount))
-          case CCStrategy.AlternatingStar    =>
-            val (l, m) = alternatingStar(GraphIO.canonical(cleanedDs), mapping0, cfg)
-            (l, m, None)
-          case CCStrategy.SampledContraction => sampledContraction(GraphIO.canonical(cleanedDs), mapping0, cfg)
-          case CCStrategy.RandomizedHook     =>
-            val (l, m) = randomizedHook(GraphIO.canonical(cleanedDs), mapping0, cfg)
-            (l, m, None)
-        }
-        // the hook loop consumes its input (round 0 releases it); the other
-        // strategies re-materialize it and leave this barrier to run()
-        if (strategy != CCStrategy.HookAndContract) cleaned.releaseLineage()
+        val out = from(strategy, GraphIO.canonical(cleaned),
+          verts.select($"id", $"id".as("label")), cfg, startRound = 0)
+        cleaned.releaseLineage()
         out
     }
-    Result(labels.select($"id", $"label").as[VertexLabel], metrics, comps)
   }
 
   /** Resume a run from its latest durable checkpoint. The manifest's
@@ -207,51 +200,76 @@ object ConnectedComponents {
     val ck = new CheckpointManager(spark, checkpointDir)
     val step = ck.latestStep().getOrElse(
       throw new IllegalStateException(s"no checkpoint under $checkpointDir"))
-    val algo = ck.meta(step).getOrElse("algo", "cc-hook")
-    val edges = ck.load(step, "edges").as[Edge]
-    val mapping = ck.load(step, "mapping")
-    val cfg2 = cfg.copy(checkpointDir = Some(checkpointDir))
-    val (labels, metrics, comps) = algo match {
-      case "cc-hook" => hookAndContract(edges, Some(mapping), cfg2, startRound = step + 1)
-      case "cc-sampled" => sampledContraction(edges, mapping, cfg2, startRound = step + 1)
-      case "cc-random" =>
-        val (l, m) = randomizedHook(edges, mapping, cfg2, startRound = step + 1)
-        (l, m, None)
-      case "cc-star" =>
-        val (l, m) = alternatingStar(edges, mapping, cfg2, startRound = step + 1)
-        (l, m, None)
-      case other =>
-        throw new IllegalStateException(s"unknown checkpoint algo '$other' under $checkpointDir")
+    val algo = ck.meta(step).getOrElse("algo", CCStrategy.HookAndContract.tag)
+    val strategy = CCStrategy.all.find(_.tag == algo).getOrElse(
+      throw new IllegalStateException(s"unknown checkpoint algo '$algo' under $checkpointDir"))
+    from(strategy, ck.load(step, "edges").as[Edge], ck.load(step, "mapping"),
+      cfg.copy(checkpointDir = Some(checkpointDir)), startRound = step + 1)
+  }
+
+  /** Runs `strategy` from an (edges, mapping) state: the canonical
+    * cleaned input and the identity mapping, or a checkpoint's. */
+  private def from(strategy: CCStrategy, edges: Dataset[Edge], mapping: DataFrame,
+                   cfg: Config, startRound: Int): Result = strategy match {
+    case CCStrategy.HookAndContract    => hookAndContract(edges, Some(mapping), cfg, startRound)
+    case CCStrategy.AlternatingStar    => alternatingStar(edges, mapping, cfg, startRound)
+    case CCStrategy.SampledContraction => sampledContraction(edges, mapping, cfg, startRound)
+    case CCStrategy.RandomizedHook     => randomizedHook(edges, mapping, cfg, startRound)
+  }
+
+  /** One run's round bookkeeping, shared by the four strategies: each
+    * closed round's metrics row, kept for the [[Result]] and appended to
+    * the durable metrics table (§4.5), and the (edges, mapping)
+    * checkpoint every `checkpointEvery` rounds and after the last. */
+  private final class Ledger(spark: SparkSession, strategy: CCStrategy, cfg: Config) {
+    private val metrics = ArrayBuffer.empty[SuperstepMetrics]
+    private val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
+
+    /** Closes `round`, begun at `t0` (`System.nanoTime`); `edges` and
+      * `mapping` are the state the next round starts from, `done` says
+      * the loop ends after this round. */
+    def close(round: Int, t0: Long, edgesIn: Long, edgesOut: Long,
+              edges: DataFrame, mapping: DataFrame, done: Boolean,
+              verticesActive: Long = -1L, pointerJumps: Int = 0): Unit = {
+      val m = SuperstepMetrics(cfg.runId, strategy.tag, round, edgesIn, edgesOut,
+        verticesActive, pointerJumps, (System.nanoTime() - t0) / 1000000)
+      metrics += m
+      ck.foreach { c =>
+        c.appendMetrics(Seq(m))
+        if ((round + 1) % cfg.checkpointEvery == 0 || done)
+          c.save(round + 1, Map("edges" -> edges, "mapping" -> mapping),
+            Map("algo" -> strategy.tag, "edgeCount" -> edgesOut.toString,
+                "runId" -> cfg.runId))
+      }
     }
-    Result(labels.select($"id", $"label").as[VertexLabel], metrics, comps)
+
+    def result(labels: DataFrame, components: Option[Long]): Result = {
+      import spark.implicits._
+      Result(labels.select($"id", $"label").as[VertexLabel], metrics.toSeq, components)
+    }
   }
 
   // ---------------------------------------------------------------------
   // Strategy 1: hook-to-max + pointer jumping + contraction (reference).
   // Two entries:
-  //  - `mapping0 = Some(m)` (resume; fresh runs without pre-contraction):
-  //    the loop consumes `edges0`, a barrier released once round 0 has
-  //    read it, and every round composes the mapping with its label
-  //    function f. `m` stays the caller's — it may be a lazy plan over
-  //    the input or over caller-owned extra vertices, so the loop never
-  //    releases it.
-  //  - `mapping0 = None` (fresh run with pre-contraction): `edges0` is
-  //    the LAZY cleaned input. Round 0's pre-contraction reads it once,
-  //    in range layout, and counts it in the same job. Its f covers every
-  //    edge vertex with canonical max labels, so f (∪ `extraVertices`) IS
-  //    the first mapping: no vertex-set distinct, no composition join.
-  //    The input plan may reach the caller's own barriers (a release walks
-  //    every checkpointed RDD in a plan), so the loop never releases it.
+  //  - `mapping0 = None` (fresh run): `edges0` is the LAZY cleaned input.
+  //    Round 0's pre-contraction reads it once, in range layout, and
+  //    counts it in the same job. Its f covers every edge vertex with
+  //    canonical max labels, so f (∪ `extraVertices`) IS the first
+  //    mapping: no vertex-set distinct, no composition join. The input
+  //    plan may reach the caller's own barriers (a release walks every
+  //    checkpointed RDD in a plan), so the loop never releases it.
+  //  - `mapping0 = Some(m)` (resume): the loop consumes `edges0`, a
+  //    barrier released once round 0 has read it, and every round
+  //    composes the mapping with its label function f. `m` stays the
+  //    caller's, so the loop never releases it.
   // ---------------------------------------------------------------------
   private def hookAndContract(
       edges0: Dataset[Edge], mapping0: Option[DataFrame], cfg: Config,
-      startRound: Int = 0, extraVertices: Option[Dataset[Long]] = None,
-      initialCount: Option[Long] = None)
-      : (DataFrame, Seq[SuperstepMetrics], Option[Long]) = {
+      startRound: Int = 0, extraVertices: Option[Dataset[Long]] = None): Result = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val metrics = ArrayBuffer.empty[SuperstepMetrics]
-    val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
+    val ledger = new Ledger(spark, CCStrategy.HookAndContract, cfg)
     val fresh = mapping0.isEmpty
     val start = System.nanoTime()
 
@@ -267,26 +285,21 @@ object ConnectedComponents {
     // pre-contraction is its only reader, and materializing it would cost
     // one more full pass over the largest table in the job.
     val p = spark.sessionState.conf.numShufflePartitions
-    var edges =
-      if (!cfg.preContract) edges0.toDF()
-      else {
-        val ranged = edges0.toDF().repartitionByRange(p, $"src", $"dst")
-          .sortWithinPartitions($"src", $"dst") // CSR layout: chunks see contiguous segments
-        if (fresh) ranged else ranged.cutLineage()
-      }
+    val ranged = edges0.toDF().repartitionByRange(p, $"src", $"dst")
+      .sortWithinPartitions($"src", $"dst") // CSR layout: chunks see contiguous segments
+    var edges = if (fresh) ranged else ranged.cutLineage()
     var mapping = mapping0
     var round = startRound
     // A fresh run counts its input edges under the pre-contraction kernel,
     // inside round 0's pre-contraction job.
     var preContracted: Option[DataFrame] = None
-    var edgeCount = initialCount.getOrElse {
+    var edgeCount =
       if (!fresh) edges.count()
       else {
         val obs = Observation()
         preContracted = Some(preContract(edges.observe(obs, count(lit(1)).as("n")), cfg))
         obs.get("n").asInstanceOf[Long]
       }
-    }
     // roots observed in each round's mapping materialization; at loop
     // exit the last value IS the component count (labels final there)
     var lastRoots: Option[Long] = None
@@ -317,32 +330,24 @@ object ConnectedComponents {
         lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
         prevMapping.releaseLineage(); edges.releaseLineage()
         edges = spark.emptyDataset[Edge].toDF()
-        val stepMetric = SuperstepMetrics(cfg.runId, "cc-hook", round,
-          edgeCount, 0L, -1L, 0, (System.nanoTime() - t0) / 1000000)
-        metrics += stepMetric
-        ck.foreach(_.appendMetrics(Seq(stepMetric)))
+        ledger.close(round, t0, edgeCount, 0L, edges, mappedDf, done = true)
         edgeCount = 0
         round += 1
-        ck.foreach(_.save(round, Map("edges" -> edges, "mapping" -> mappedDf),
-          Map("algo" -> "cc-hook", "edgeCount" -> "0", "runId" -> cfg.runId)))
       } else {
       // a fresh run's round 0 also times its input pass
       val t0 = if (round == startRound) start else System.nanoTime()
 
-      val hookInput = preContracted.getOrElse(
-        if (cfg.preContract) preContract(edges, cfg)
-        else edges.union(edges.select($"dst".as("src"), $"dst")))
+      val hookInput = preContracted.getOrElse(preContract(edges, cfg))
       preContracted = None
 
       // G2 hook-to-max: each src hooks to its largest (normalized) neighbor.
       // Partial+final hash aggregation reproduces local-hook + MPI_MAX
       // reduce; no salting needed (map-side combine absorbs src skew).
       // f has a row for EVERY vertex of the round and a root is an
-      // identity row: pre-contraction emits (rep, rep) for each chunk max,
-      // and without it each dst gets a (dst, dst) row. Row and root counts
-      // ride the same job: |f| = |hooked| (each row resolves exactly once)
-      // and f's roots are hooked's identity rows (labels only grow along a
-      // path).
+      // identity row: pre-contraction emits (rep, rep) for each chunk max.
+      // Row and root counts ride the same job: |f| = |hooked| (each row
+      // resolves exactly once) and f's roots are hooked's identity rows
+      // (labels only grow along a path).
       val (hooked, hm) = barrierObserved(
         hookInput.groupBy($"src".as("id")).agg(max($"dst").as("label")),
         count(lit(1)).as("n"), rootsMetric)
@@ -408,8 +413,10 @@ object ConnectedComponents {
       // NOW, before the contraction joins need the memory (keeping them
       // pinned through the sort-merge was a measured 2× contraction
       // slowdown on the 8g heap); blocking: the point is that the memory
-      // is back before the join starts.
-      val f = barrier(doneParts.reduce(_ union _))
+      // is back before the join starts. coalesce: the union has a
+      // partition set per jump segment, and a fresh run's f becomes the
+      // mapping every later round (and checkpoint) inherits.
+      val f = barrier(doneParts.reduce(_ union _).coalesce(p))
       jumpBarriers.foreach(_.releaseLineage(blocking = true))
 
       // G4 contraction: relabel endpoints through f, drop intra-component
@@ -456,21 +463,12 @@ object ConnectedComponents {
       if (!(newMapping eq f)) f.releaseLineage()
       if (!fresh || round > startRound) prevEdges.releaseLineage()
       if (round > startRound) prevMapping.foreach(_.releaseLineage())
-      if (cfg.preContract) hookInput.releaseLineage() // last read: contraction join
+      hookInput.releaseLineage() // last read: contraction join
 
-      val stepMetric = SuperstepMetrics(cfg.runId, "cc-hook", round,
-        edgeCount, newCount, -1L, jumps, (System.nanoTime() - t0) / 1000000)
-      metrics += stepMetric
-      ck.foreach(_.appendMetrics(Seq(stepMetric))) // durable per-superstep append (§4.5)
+      ledger.close(round, t0, edgeCount, newCount, edges, newMapping,
+        done = newCount == 0, pointerJumps = jumps)
       edgeCount = newCount
       round += 1
-
-      ck.foreach { c =>
-        if (round % cfg.checkpointEvery == 0 || edgeCount == 0)
-          c.save(round, Map("edges" -> edges, "mapping" -> newMapping),
-            Map("algo" -> "cc-hook", "edgeCount" -> edgeCount.toString,
-                "runId" -> cfg.runId))
-      }
       } // end distributed round (vs driver tail finish)
     }
     require(edgeCount == 0,
@@ -488,7 +486,7 @@ object ConnectedComponents {
         if (fresh) preContracted.foreach(_.releaseLineage()) else edges.releaseLineage()
         md
     }
-    (finalMapping, metrics.toSeq, lastRoots)
+    ledger.result(finalMapping, lastRoots)
   }
 
   /** Per-partition union-find pre-contraction (reference analogue:
@@ -528,12 +526,10 @@ object ConnectedComponents {
   // ---------------------------------------------------------------------
   private def alternatingStar(
       edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
-      startRound: Int = 0):
-      (DataFrame, Seq[SuperstepMetrics]) = {
+      startRound: Int = 0): Result = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val metrics = ArrayBuffer.empty[SuperstepMetrics]
-    val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
+    val ledger = new Ledger(spark, CCStrategy.AlternatingStar, cfg)
 
     // Edges kept canonical (src < dst) between steps. The loop state is
     // (edges, vertsAll); vertsAll never changes, so the checkpoint shape
@@ -582,17 +578,8 @@ object ConnectedComponents {
       edges.releaseLineage(); ls.releaseLineage()
       edges = ss
       sig = newSig
-      val stepMetric = SuperstepMetrics(cfg.runId, "cc-star", round,
-        cntIn, newSig._1, -1L, 0, (System.nanoTime() - t0) / 1000000)
-      metrics += stepMetric
-      ck.foreach(_.appendMetrics(Seq(stepMetric)))
+      ledger.close(round, t0, cntIn, newSig._1, edges, vertsAll, done = converged)
       round += 1
-      ck.foreach { c =>
-        if (round % cfg.checkpointEvery == 0 || converged)
-          c.save(round, Map("edges" -> edges, "mapping" -> vertsAll),
-            Map("algo" -> "cc-star", "edgeCount" -> sig._1.toString,
-                "runId" -> cfg.runId))
-      }
     }
     require(converged, s"alternating-star did not converge in ${cfg.maxRounds} rounds")
 
@@ -607,7 +594,7 @@ object ConnectedComponents {
     val rep = full.groupBy($"label").agg(max($"id").as("rep"))
     val out = full.as("l").join(rep.as("r"), $"l.label" === $"r.label")
       .select($"l.id".as("id"), $"r.rep".as("label"))
-    (out, metrics.toSeq)
+    ledger.result(out, None)
   }
 
   /** Cheap set signature for convergence detection: (count, hash-xor).
@@ -625,12 +612,10 @@ object ConnectedComponents {
   // ---------------------------------------------------------------------
   private def sampledContraction(
       edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
-      startRound: Int = 0):
-      (DataFrame, Seq[SuperstepMetrics], Option[Long]) = {
+      startRound: Int = 0): Result = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val metrics = ArrayBuffer.empty[SuperstepMetrics]
-    val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
+    val ledger = new Ledger(spark, CCStrategy.SampledContraction, cfg)
 
     // Round-6 fold: the edge count AND the round's active-vertex estimate
     // ride the edge materialization job itself as observed metrics —
@@ -698,26 +683,18 @@ object ConnectedComponents {
       val newCount = Option(cm("c")).map(_.asInstanceOf[Long]).getOrElse(0L)
       prevEdges.releaseLineage(); prevMapping.releaseLineage()
 
-      val stepMetric = SuperstepMetrics(cfg.runId, "cc-sampled", round,
-        edgeCount, newCount, nEst, 0, (System.nanoTime() - t0) / 1000000)
-      metrics += stepMetric
-      ck.foreach(_.appendMetrics(Seq(stepMetric)))
+      ledger.close(round, t0, edgeCount, newCount, edges, mapping,
+        done = newCount == 0, verticesActive = nEst)
       edgeCount = newCount
       nEst = Option(cm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
       round += 1
-      ck.foreach { c =>
-        if (round % cfg.checkpointEvery == 0 || edgeCount == 0)
-          c.save(round, Map("edges" -> edges, "mapping" -> mapping),
-            Map("algo" -> "cc-sampled", "edgeCount" -> edgeCount.toString,
-                "runId" -> cfg.runId))
-      }
     }
     require(edgeCount == 0,
       s"sampled CC did not converge in ${cfg.maxRounds} rounds")
     // edge-free input: the loop never ran — mapping is the identity,
     // every vertex its own component
     if (round == startRound) lastRoots = Some(mapping.count())
-    (mapping, metrics.toSeq, lastRoots)
+    ledger.result(mapping, lastRoots)
   }
 
   // ---------------------------------------------------------------------
@@ -725,12 +702,10 @@ object ConnectedComponents {
   // ---------------------------------------------------------------------
   private def randomizedHook(
       edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
-      startRound: Int = 0):
-      (DataFrame, Seq[SuperstepMetrics]) = {
+      startRound: Int = 0): Result = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val metrics = ArrayBuffer.empty[SuperstepMetrics]
-    val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
+    val ledger = new Ledger(spark, CCStrategy.RandomizedHook, cfg)
 
     var edges = edges0.toDF().cutLineage()
     var mapping = mapping0.cutLineage()
@@ -773,18 +748,9 @@ object ConnectedComponents {
       mapping = newMapping.cutLineage()
       val newCount = Option(cm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
       f.releaseLineage(); prevEdges.releaseLineage(); prevMapping.releaseLineage()
-      val stepMetric = SuperstepMetrics(cfg.runId, "cc-random", round,
-        edgeCount, newCount, -1L, 0, (System.nanoTime() - t0) / 1000000)
-      metrics += stepMetric
-      ck.foreach(_.appendMetrics(Seq(stepMetric)))
+      ledger.close(round, t0, edgeCount, newCount, edges, mapping, done = newCount == 0)
       edgeCount = newCount
       round += 1
-      ck.foreach { c =>
-        if (round % cfg.checkpointEvery == 0 || edgeCount == 0)
-          c.save(round, Map("edges" -> edges, "mapping" -> mapping),
-            Map("algo" -> "cc-random", "edgeCount" -> edgeCount.toString,
-                "runId" -> cfg.runId))
-      }
     }
     require(edgeCount == 0,
       s"randomized CC did not converge in ${cfg.maxRounds} rounds " +
@@ -795,7 +761,7 @@ object ConnectedComponents {
     val rep = mapping.groupBy($"label").agg(max($"id").as("rep"))
     val out = mapping.as("m").join(rep.as("r"), $"m.label" === $"r.label")
       .select($"m.id".as("id"), $"r.rep".as("label"))
-    (out, metrics.toSeq)
+    ledger.result(out, None)
   }
 
   /** Broadcast hint for relabel maps once they are known-small. `rows` is

@@ -22,15 +22,11 @@ import org.apache.spark.sql.SparkSession
   */
 object CCRun {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty,
-      "usage: CCRun INPUT_FILE [hook|star|sampled|random] (reference: serial_cc.cpp:18-25)")
+    val usage = s"usage: CCRun INPUT_FILE [${CCStrategy.names}] (reference: serial_cc.cpp:18-25)"
+    require(args.nonEmpty, usage)
     val path = args(0)
-    val strategy = args.lift(1).getOrElse("hook") match {
-      case "star"    => CCStrategy.AlternatingStar
-      case "sampled" => CCStrategy.SampledContraction
-      case "random"  => CCStrategy.RandomizedHook
-      case _         => CCStrategy.HookAndContract
-    }
+    val strategy = CCStrategy.named(args.lift(1).getOrElse("hook"))
+      .getOrElse(throw new IllegalArgumentException(s"unknown strategy '${args(1)}'; $usage"))
     val (cpus, cores) = Env.cpus("SPARK_GRAFT_CPUS", 8)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -55,17 +55,19 @@ class CCPropertySpec extends SparkSpec {
   /** Hook strategy vs the union-find oracle on the dirty samples and the
     * generated graphs under `cfg`; asserts whether rounds after round 0
     * ran distributed (they pointer-jump; a driver finish records none).
-    * The 10k chain also runs without pre-contraction: its hook forest is
-    * then one path-shaped tree, ~14 jumps deep, whose frontier labels
-    * point into segments finished at ANY earlier jump. A jump that
-    * looked them up in less than the full lookup union would leave
-    * labels short of the root — still correct after more rounds, so the
-    * check is that round 0 contracts the chain to no edge at all. */
+    * The 10k chain also runs with one-edge pre-contraction chunks
+    * (`preContractCap = 2`), so the hook sees each edge plus a (dst, dst)
+    * row and contracts nothing ahead of it: its hook forest is then one
+    * path-shaped tree, ~14 jumps deep, whose frontier labels point into
+    * segments finished at ANY earlier jump. A jump that looked them up
+    * in less than the full lookup union would leave labels short of the
+    * root — still correct after more rounds, so the check is that
+    * round 0 contracts the chain to no edge at all. */
   private def checkHookBranches(cfg: Config): Unit = {
     val inputs =
       samples(8).zipWithIndex.map { case (e, i) => (s"dirty sample $i", e, cfg) } ++
         generated10k.map { case (name, e) => (name, e, cfg) } :+
-        (("chain(10k), no pre-contraction", chain10k, cfg.copy(preContract = false)))
+        (("chain(10k), one-edge pre-contraction chunks", chain10k, cfg.copy(preContractCap = 2)))
     var tailRounds = 0
     for ((graph, edges, c) <- inputs) {
       val res = ConnectedComponents.run(
@@ -74,7 +76,10 @@ class CCPropertySpec extends SparkSpec {
         res.labels.collect().map(l => l.id -> l.label).toMap shouldBe
           UnionFind.components(edges).toMap
       }
-      if (!c.preContract) withClue(s"$graph: ") { res.metrics.head.edgesOut shouldBe 0L }
+      if (c.preContractCap == 2) withClue(s"$graph: ") {
+        res.metrics.head.pointerJumps should be >= 10
+        res.metrics.head.edgesOut shouldBe 0L
+      }
       tailRounds += res.metrics.drop(1).count(_.pointerJumps > 0)
     }
     if (cfg.driverFinishEdges == 0) tailRounds should be > 0
@@ -146,6 +151,45 @@ class CCPropertySpec extends SparkSpec {
       withClue(s"$graph, ${cfg.strategy}, broadcastRows = ${cfg.broadcastRows}: ") {
         run(edges, cfg) shouldBe UnionFind.components(edges).toMap
       }
+  }
+
+  // One sampled edge per round: on a forest each round contracts at most
+  // that edge (a forest stays duplicate-free under contraction), so the
+  // run takes at least one superstep per edge. The graph stays well under
+  // maxRounds. A round whose Bernoulli pre-sample comes up empty contracts
+  // nothing.
+  test("sampled strategy, sampleHardCap = 1: at most one edge contracted per superstep") {
+    val forest = (0L until 11L).map(i => (i, i + 1)) ++ (21L until 28L).map(i => (20L, i))
+    val res = ConnectedComponents.run(
+      spark.createDataset(forest.map(e => Edge(e._1, e._2))), None,
+      Config(strategy = CCStrategy.SampledContraction, sampleHardCap = 1L))
+    res.labels.collect().map(l => l.id -> l.label).toMap shouldBe
+      UnionFind.components(forest).toMap
+    res.metrics.head.edgesIn shouldBe forest.size.toLong
+    res.metrics.foreach(m => (m.edgesIn - m.edgesOut) should (be >= 0L and be <= 1L))
+    res.metrics.size should (be >= forest.size and be < Config().maxRounds)
+    res.metrics.last.edgesOut shouldBe 0L
+  }
+
+  // A sample bound n^(1 + eps/2) * (1 + delta) at or above the edge count
+  // collects the whole edge set: one superstep. Ten 10-cliques in a row,
+  // joined by 9 bridges, have 459 edges; the default eps bounds the sample
+  // at ≈ 290 of them (n estimated as distinct src + distinct dst, ≈ 190),
+  // which misses some bridge, so a second superstep follows.
+  test("sampled strategy, large sampleEps: the whole edge set in one superstep") {
+    val cliques = for (c <- 0L until 10L; u <- 0L until 10L; v <- (u + 1) until 10L)
+      yield (10 * c + u, 10 * c + v)
+    val edges = cliques ++ (0L until 9L).map(c => (10 * c + 9, 10 * c + 10))
+    val oracle = UnionFind.components(edges).toMap
+    def metrics(cfg: Config): Seq[(Long, Long)] = {
+      val res = ConnectedComponents.run(
+        spark.createDataset(edges.map(e => Edge(e._1, e._2))), None, cfg)
+      res.labels.collect().map(l => l.id -> l.label).toMap shouldBe oracle
+      res.metrics.map(m => (m.edgesIn, m.edgesOut))
+    }
+    val sampled = Config(strategy = CCStrategy.SampledContraction)
+    metrics(sampled).size should be >= 2
+    metrics(sampled.copy(sampleEps = 10.0)) shouldBe Seq((edges.size.toLong, 0L))
   }
 
   test("edge order and orientation do not change the result") {

@@ -155,6 +155,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     sizes.values.sum shouldBe 6L
   }
 
+  private def withAqeOff(body: => Unit): Unit = {
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+  }
+
   /** Runs `body` with AQE off (jobs ≈ actions) and a job counter;
     * `settled()` reads the count once the async listener bus is idle. */
   private def withJobCounter(body: (() => Int) => Unit): Unit = {
@@ -169,13 +175,10 @@ class ConnectedComponentsSpec extends SparkSpec {
       while (jobs.get() != prev && spins < 50) { prev = jobs.get(); Thread.sleep(100); spins += 1 }
       jobs.get()
     }
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    try body(() => settled())
-    finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    withAqeOff {
+      spark.sparkContext.addSparkListener(listener)
+      try body(() => settled())
+      finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -225,6 +228,53 @@ class ConnectedComponentsSpec extends SparkSpec {
       tailRounds.foreach(_.pointerJumps shouldBe 0) // driver finishes
       jobs should be <= 6 + 2 * res.metrics.head.pointerJumps + 3 * tailRounds.size
     }
+  }
+
+  test("a fresh hook run's labels keep at most the session's partition count") {
+    // Round 0's merged f unions the roots and one segment per pointer
+    // jump; it becomes the first mapping, and every later mapping (and
+    // checkpoint) keeps its partitions. With AQE off the hook's shuffle
+    // has the full partition count, so an uncoalesced union exceeds it.
+    withAqeOff {
+      val ds = spark.createDataset(random200.map { case (u, v) => Edge(u, v) })
+      val res = ConnectedComponents.run(ds, None, Config())
+      res.metrics.head.pointerJumps should be >= 1
+      res.labels.collect().map(l => l.id -> l.label).toMap shouldBe oracleOf(random200)
+      res.labels.rdd.getNumPartitions should be <=
+        spark.conf.get("spark.sql.shuffle.partitions").toInt
+    }
+  }
+
+  // Each strategy needs at least two rounds on this input (shown by the
+  // unconstrained run), so maxRounds = 1 must throw, not return partial
+  // labels. One-edge pre-contraction chunks make the hook's rounds
+  // independent of the sampled range layout.
+  test("every strategy fails loudly when maxRounds is too small") {
+    val ds = spark.createDataset(random200.map { case (u, v) => Edge(u, v) })
+    val configs = Seq(
+      Config(preContractCap = 2),
+      Config(strategy = CCStrategy.AlternatingStar),
+      Config(strategy = CCStrategy.SampledContraction, sampleHardCap = 60L),
+      Config(strategy = CCStrategy.RandomizedHook))
+    for (cfg <- configs) withClue(s"${cfg.strategy}: ") {
+      val full = ConnectedComponents.run(ds, None, cfg)
+      full.labels.collect().map(l => l.id -> l.label).toMap shouldBe oracleOf(random200)
+      full.metrics.size should be >= 2
+      val e = the[IllegalArgumentException] thrownBy
+        ConnectedComponents.run(ds, None, cfg.copy(maxRounds = 1))
+      e.getMessage should include("did not converge")
+    }
+  }
+
+  test("strategy names and checkpoint tags are defined once and unknown names fail") {
+    CCStrategy.all.map(_.name) shouldBe Seq("hook", "star", "sampled", "random")
+    CCStrategy.all.map(_.tag) shouldBe Seq("cc-hook", "cc-star", "cc-sampled", "cc-random")
+    for (s <- CCStrategy.all) CCStrategy.named(s.name) shouldBe Some(s)
+    CCStrategy.named("stra") shouldBe None
+    // CCRun parses its strategy before it starts a session
+    val e = the[IllegalArgumentException] thrownBy
+      graft.tools.CCRun.main(Array(resourcePath("graphs/small.txt"), "foo"))
+    e.getMessage should include("hook|star|sampled|random")
   }
 
   test("a hook run never frees the caller's barrier'd input") {

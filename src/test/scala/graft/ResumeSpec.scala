@@ -91,6 +91,21 @@ class ResumeSpec extends SparkSpec {
     }
   }
 
+  test("CC resume fails loudly without a checkpoint or with an unknown algo tag") {
+    val empty = Files.createTempDirectory("graft-ckpt-none").toString
+    val none = the[IllegalStateException] thrownBy
+      ConnectedComponents.resume(spark, empty, Config())
+    none.getMessage should include("no checkpoint")
+    val dir = Files.createTempDirectory("graft-ckpt-tag").toString
+    val state = Generators.random(spark, 20, 30, seed = 3L).toDF()
+    new CheckpointManager(spark, dir).save(1,
+      Map("edges" -> state, "mapping" -> state.select($"src".as("id"), $"dst".as("label"))),
+      Map("algo" -> "cc-bogus", "edgeCount" -> "30"))
+    val unknown = the[IllegalStateException] thrownBy
+      ConnectedComponents.resume(spark, dir, Config())
+    unknown.getMessage should include("'cc-bogus'")
+  }
+
   test("manifest metadata round-trips") {
     val dir = Files.createTempDirectory("graft-ckpt2").toString
     val ck = new CheckpointManager(spark, dir)
