@@ -5,7 +5,7 @@ import graft.operators.{ConnectedComponents, GraphMetrics, TriangleCount}
 import graft.operators.ConnectedComponents.{CCStrategy, Config}
 import graft.sources.EdgeDerivation
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.GraftLineage.GraftLineageOps
+import org.apache.spark.sql.GraftLineage.{GraftLineageOps, scopedBlocks}
 import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -141,7 +141,7 @@ object SparkEntry {
           readEvents(s, dir), "purchase"))),
     // multi-source weighted shortest paths (Bellman–Ford, exact longs)
     // over the weighted supplier graph, from the 8 lowest supplier ids
-    "sssp_weighted" -> ((s, dir) => {
+    "sssp_weighted" -> ((s, dir) => scopedBlocks(s) {
       val w = EdgeDerivation.supplierCooccurrenceWeightedByNation(s, dir)
         .cutLineage()
       import s.implicits._
@@ -235,7 +235,7 @@ object SparkEntry {
     // longest-path topological levels of the condensation DAG (schedule
     // depth per SCC; the iterative max-propagation also certifies
     // acyclicity — a cycle would never converge)
-    "condensation_levels" -> ((s, dir) => {
+    "condensation_levels" -> ((s, dir) => scopedBlocks(s) {
       val de = graft.operators.Temporal.coactivityDirectedEdges(
         readEvents(s, dir), "purchase").cutLineage()
       val dag = graft.operators.StronglyConnected.condensation(
@@ -359,7 +359,7 @@ object SparkEntry {
         .orderBy("id")),
     // personalized PageRank: restart uniform over the low-id source set,
     // same pinned-iteration protocol as `pagerank` (tol=0, 7 dp round)
-    "ppr" -> ((s, dir) => {
+    "ppr" -> ((s, dir) => scopedBlocks(s) {
       // the restart-source pick and the run share one materialized
       // derivation
       val edges = EdgeDerivation.supplierCooccurrenceByNation(s, dir).cutLineage()
@@ -383,7 +383,7 @@ object SparkEntry {
     // (id % 2); everyone else infers theirs by synchronous majority vote
     // among labeled neighbors — the semi-supervised label-inference
     // primitive (quality/spam class propagation through a link graph)
-    "lpa_seeded" -> ((s, dir) => {
+    "lpa_seeded" -> ((s, dir) => scopedBlocks(s) {
       import s.implicits._
       val edges = EdgeDerivation.supplierCooccurrenceByNation(s, dir).cutLineage()
       // same seed rule (and helper) as the sampled-centrality family
@@ -581,21 +581,18 @@ object SparkEntry {
     "corpus_final" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // the contamination scan and the survivor pipeline share no
-      // dependency until the final anti-join — submit contamination from
-      // a second thread so its jobs back-fill executors freed by the
+      // dependency until the final anti-join — the scan runs on a thread
+      // of its own so its jobs back-fill executors freed by the
       // near-dup/CC stages' task tails (guide §2.6 overlap; scopedBlocks
       // tracking is thread-local, so the concurrent library calls are
-      // safe by design)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val contamF = Future {
+      // safe by design). One-JVM A/B on a 4-core host, traced perfbench
+      // `queries`, seeds 1-4: q.corpus_final.s median 1.92 s overlapped,
+      // 2.39 s in turn.
+      val (contaminatedIds, surv) = overlapped(s, "corpus_final contamination") {
         graft.functions.Corpus.contamination(
             docs, col("doc_id"), col("text"), col("doc_id") % 25 === 0)
           .filter(col("contaminated") === 1L).select(col("doc_id"))
-      }
-      val surv = survivorDocs(s, dir)
-      val contaminatedIds =
-        Await.result(contamF, scala.concurrent.duration.Duration.Inf)
+      }(survivorDocs(s, dir))
       surv
         .withColumn("quality", graft.functions.TextAnalysis.qualityScore(col("text")))
         .withColumn("lang", graft.functions.TextAnalysis.langId(col("text")))
@@ -809,6 +806,27 @@ object SparkEntry {
 
   /** The k lowest vertex ids of an edge set — the deterministic seed set
     * for the sampled-centrality queries (bounded collect: k rows). */
+  /** Run `side` on a dedicated thread, in a Spark job group of its own,
+    * while `main` runs on the caller's; returns (side, main). The wait
+    * for `side` is bounded by [[overlapWait]]. If `main` throws, or
+    * `side` fails or overruns, the side's jobs are cancelled and the
+    * error is rethrown. */
+  private def overlapped[A, B](s: SparkSession, what: String)(side: => A)(main: => B): (A, B) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val group = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val f = Future {
+        s.sparkContext.setJobGroup(group, what, interruptOnCancel = true)
+        try side finally s.sparkContext.clearJobGroup()
+      }(ExecutionContext.fromExecutor(pool))
+      try { val b = main; (Await.result(f, overlapWait), b) }
+      catch { case e: Throwable => s.sparkContext.cancelJobGroup(group); throw e }
+    } finally pool.shutdown()
+  }
+  /** Upper bound on [[overlapped]]'s wait: far above any side scan of the
+    * driver's scale factors, so it only ends a hung one. */
+  private val overlapWait = scala.concurrent.duration.Duration(30, "minutes")
   private def lowestVertexIds(edges: org.apache.spark.sql.Dataset[graft.graph.Edge],
                               k: Int): Seq[Long] =
     graft.graph.GraphIO.vertices(edges).orderBy("id").limit(k)

@@ -105,6 +105,23 @@ object GraphIO {
       .as[Edge]
   }
 
+  /** Canonical WEIGHTED edge set of (src, dst, weight) rows in arbitrary
+    * orientation: normalized, self-loops dropped, duplicates summed. */
+  def canonicalWeighted(weighted: DataFrame): DataFrame =
+    weighted
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"), col("weight"))
+      .filter(col("src") =!= col("dst"))
+      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
+
+  /** Both directions of [[canonicalWeighted]], each carrying the weight
+    * (single-scan explode, like [[bidirectional]]). */
+  def bidirectionalWeighted(weighted: DataFrame): DataFrame =
+    canonicalWeighted(weighted).select(explode(array(
+        struct(col("src").as("src"), col("dst").as("dst"), col("weight")),
+        struct(col("dst").as("src"), col("src").as("dst"), col("weight")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.weight").as("weight"))
+
   /** Distinct endpoint set of an edge table (single scan via explode). */
   def vertices(edges: Dataset[Edge]): Dataset[Long] = {
     val spark = edges.sparkSession

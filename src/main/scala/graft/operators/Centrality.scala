@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.GraftLineage._
-import org.apache.spark.sql.GraftLineage
 import graft.graph.{Edge, GraphIO}
+import graft.plans.Adaptive
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -52,7 +52,7 @@ object Centrality {
       .groupBy($"id")
       .agg(round(sum(lit(1.0) / $"dist".cast("double")), 6).as("harmonic"))
     val res = barrier(out)
-    GraftLineage.release(d)
+    release(d)
     res
   }
 
@@ -75,7 +75,7 @@ object Centrality {
       .agg((count(lit(1)).cast("double") /
         sum($"dist").cast("double")).as("closeness"))
     val res = barrier(out)
-    GraftLineage.release(d)
+    release(d)
     res
   }
 
@@ -106,28 +106,6 @@ object Centrality {
     val spark = edges.sparkSession
     import spark.implicits._
     require(maxIter >= 1, "eigenvector: need at least one iteration")
-    // Loop-table partition count derived from the OBSERVED adjacency row
-    // count (guide §2: scale-adaptive partitioning; see
-    // [[graft.plans.Adaptive]]) — at scale this keeps the session
-    // setting and adds no extra pass; small graphs re-key once so every
-    // iteration's stages carry data-proportional task counts.
-    val (adj1, aObs) = barrierObserved(
-      GraphIO.bidirectional(GraphIO.canonical(edges))
-        .toDF("src", "dst")
-        .repartition(spark.sessionState.conf.numShufflePartitions, $"src"),
-      count(lit(1)).as("n"))
-    val (adj, p) = graft.plans.Adaptive.rekey(adj1,
-      Option(aObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
-    var z = barrier(
-      adj.select($"src".as("id")).distinct()
-        .select($"id", lit(1.0).as("v"))
-        .repartition(p, $"id"))
-    if (z.isEmpty) { // empty edge set → empty score table, not an NPE
-      GraftLineage.release(adj)
-      return z.select($"id", $"v".as("score")).limit(0)
-    }
-    var m = 1.0
-    var iter = 0
     // Chunked unrolling: `chunk` update stages per barrier job. L∞
     // normalization commutes with the linear update (z/m is a pure
     // rescale), so dividing per term by the PREVIOUS CHUNK's observed max
@@ -137,32 +115,52 @@ object Centrality {
     // equality re-verified after this change (the only float drift is the
     // removed per-iteration divisions, ~1e-13 relative, absorbed by the
     // 6 dp output round).
-    while (iter < maxIter) {
-      val steps = math.min(chunk, maxIter - iter)
-      var cur: DataFrame = adj.as("e")
-        .join(z.as("x"), $"e.src" === $"x.id")
-        .crossJoin(broadcast(Seq(m).toDF("m")))
-        .groupBy($"e.dst".as("id"))
-        .agg(sum($"x.v" / $"m").as("v"))
-      var s = 1
-      while (s < steps) {
-        cur = adj.as("e")
-          .join(cur.as("x"), $"e.src" === $"x.id")
-          .groupBy($"e.dst".as("id"))
-          .agg(sum($"x.v").as("v"))
-        s += 1
+    fromOnes(edges, "score") { (adj, z0) =>
+      val out = iterate(z0, 0, maxIter, chunk, metrics = Seq(max($"v").as("mx")),
+          obs0 = Map("mx" -> 1.0)) {
+        case (z, _, Some(obs)) => // a chunk's first update divides by m
+          adj.as("e")
+            .join(z.as("x"), $"e.src" === $"x.id")
+            .crossJoin(broadcast(Seq(obs("mx").asInstanceOf[Double]).toDF("m")))
+            .groupBy($"e.dst".as("id"))
+            .agg(sum($"x.v" / $"m").as("v"))
+        case (cur, _, None) =>
+          adj.as("e")
+            .join(cur.as("x"), $"e.src" === $"x.id")
+            .groupBy($"e.dst".as("id"))
+            .agg(sum($"x.v").as("v"))
       }
-      val (next, obs) = barrierObserved(cur, max($"v").as("mx"))
-      m = obs("mx").asInstanceOf[Double]
-      GraftLineage.release(z)
-      z = next
-      iter += steps
+      val res = barrier(
+        out.state.crossJoin(broadcast(Seq(out.obs("mx").asInstanceOf[Double]).toDF("m")))
+          .select($"id", round($"v" / $"m", 6).as("score")))
+      release(out.state)
+      res
     }
-    val out = barrier(
-      z.crossJoin(broadcast(Seq(m).toDF("m")))
-        .select($"id", round($"v" / $"m", 6).as("score")))
-    GraftLineage.release(z); GraftLineage.release(adj)
-    out
+  }
+
+  /** Shared set-up of the undirected score loops (eigenvector, katz):
+    * the symmetric adjacency as a loop table keyed by src (partition
+    * count adaptive from its OBSERVED row count, guide §2; see
+    * [[graft.plans.Adaptive]]), and the start vector z0 = 1 on every
+    * vertex keyed by id at that count. `loop(adj, z0)` returns the
+    * materialized output; an empty edge set yields an empty
+    * (id, `score`) table. */
+  private def fromOnes(edges: Dataset[Edge], score: String)(
+      loop: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val (adj, rows, p) = Adaptive.loopTable(
+      GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("src", "dst"),
+      Seq($"src"))
+    try {
+      if (rows == 0L)
+        spark.emptyDataFrame.select(lit(0L).as("id"), lit(0.0).as(score)).limit(0)
+      else
+        loop(adj, barrier(
+          adj.select($"src".as("id")).distinct()
+            .select($"id", lit(1.0).as("v"))
+            .repartition(p, $"id")))
+    } finally release(adj)
   }
 
   /** Seed-restricted betweenness centrality (Brandes '01, restricted to
@@ -191,13 +189,9 @@ object Centrality {
     // adaptive loop partitioning — same rule as [[eigenvector]]; on the
     // sparse fixtures this operator targets, the per-level jobs were
     // dominated by session-partition-count task overhead
-    val (adj1, aObs) = barrierObserved(
-      GraphIO.bidirectional(GraphIO.canonical(edges))
-        .toDF("v", "nbr")
-        .repartition(spark.sessionState.conf.numShufflePartitions, $"v"),
-      count(lit(1)).as("n"))
-    val (adj, p) = graft.plans.Adaptive.rekey(adj1,
-      Option(aObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"v"))
+    val (adj, _, p) = Adaptive.loopTable(
+      GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("v", "nbr"),
+      Seq($"v"))
     // ---- forward: per-level (source, id, sigma), sigma exact longs ----
     var frontier = barrier(
       spark.createDataset(seeds.distinct).toDF("source")
@@ -326,47 +320,22 @@ object Centrality {
     import spark.implicits._
     require(maxIter >= 1, "katz: need at least one iteration")
     require(alpha > 0 && alpha < 1, s"katz: alpha out of (0,1): $alpha")
-    // adaptive loop partitioning — same rule as [[eigenvector]]
-    val (adj1, aObs) = barrierObserved(
-      GraphIO.bidirectional(GraphIO.canonical(edges))
-        .toDF("src", "dst")
-        .repartition(spark.sessionState.conf.numShufflePartitions, $"src"),
-      count(lit(1)).as("n"))
-    val (adj, p) = graft.plans.Adaptive.rekey(adj1,
-      Option(aObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
-    var z = barrier(
-      adj.select($"src".as("id")).distinct()
-        .select($"id", lit(1.0).as("v"))
-        .repartition(p, $"id"))
-    if (z.isEmpty) { // empty edge set → empty score table, not an NPE
-      GraftLineage.release(adj)
-      return z.select($"id", $"v".as("katz")).limit(0)
-    }
-    var iter = 0
     // Chunked unrolling (see [[IterChunk]]): the affine update needs no
     // per-iteration scalar, so `steps` join+agg stages compose into ONE
     // barrier job — identical arithmetic per stage, 12 jobs → 2.
-    while (iter < maxIter) {
-      val steps = math.min(chunk, maxIter - iter)
-      var cur: DataFrame = z
-      var s = 0
-      while (s < steps) {
+    fromOnes(edges, "katz") { (adj, z0) =>
+      val out = iterate(z0, 0, maxIter, chunk) { (cur, _, _) =>
         // every vertex in an edge-derived set has degree ≥ 1, so the
         // inner join reaches all of them — no left-join fallback needed
-        cur = adj.as("e")
+        adj.as("e")
           .join(cur.as("x"), $"e.src" === $"x.id")
           .groupBy($"e.dst".as("id"))
           .agg((lit(1.0) + lit(alpha) * sum($"x.v")).as("v"))
-        s += 1
       }
-      val next = barrier(cur)
-      GraftLineage.release(z)
-      z = next
-      iter += steps
+      val res = barrier(out.state.select($"id", round($"v", 6).as("katz")))
+      release(out.state)
+      res
     }
-    val out = barrier(z.select($"id", round($"v", 6).as("katz")))
-    GraftLineage.release(z); GraftLineage.release(adj)
-    out
   }
 
   /** HITS hubs & authorities (Kleinberg '99) over a DIRECTED edge table
@@ -395,88 +364,64 @@ object Centrality {
     // keyed copies are then cheap re-shuffles of the barrier.
     val (dedup0, dObs) = barrierObserved(
       directed.select($"src", $"dst").distinct(), count(lit(1)).as("n"))
-    val p = graft.plans.Adaptive.forRows(spark,
-      Option(dObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L))
+    val rows = dObs("n").asInstanceOf[Long]
+    if (rows == 0L) { // empty edge set → empty score table
+      release(dedup0)
+      return spark.emptyDataFrame
+        .select(lit(0L).as("id"), lit("hub").as("kind"), lit(0.0).as("score"))
+        .limit(0)
+    }
+    val p = Adaptive.forRows(spark, rows)
     val eBySrc = barrier(dedup0.repartition(p, $"src"))
     val eByDst = barrier(dedup0.repartition(p, $"dst"))
-    GraftLineage.release(dedup0)
-    var hub = barrier(
+    release(dedup0)
+    val hub0 = barrier(
       eBySrc.select($"src".as("id")).distinct()
         .select($"id", lit(1.0).as("v"))
         .repartition(p, $"id"))
-    if (hub.isEmpty) { // empty edge set → empty score table
-      GraftLineage.release(eBySrc); GraftLineage.release(eByDst)
-      return hub.select($"id", lit("hub").as("kind"), $"v".as("score")).limit(0)
-    }
-    var mh = 1.0
-    var iter = 0
-    // Chunked unrolling (see [[IterChunk]]): the alternating updates are
-    // linear, so the per-side L∞ normalizations are pure rescales that
-    // commute with them — dividing the chunk's FIRST auth update per term
-    // by the previous chunk's observed hub max (instead of normalizing
-    // every half-step) leaves the final per-side normalized outputs
-    // mathematically unchanged, and values grow by at most
-    // (λ_max²)^IterChunk within a chunk, far inside double range.
-    // Iterations 1..maxIter-1 run `steps` full (auth, hub) updates per
-    // barrier job; the LAST iteration materializes auth and hub
-    // separately because both are outputs. Unlike katz/eigenvector,
-    // chunking PAST one full iteration measured slower here (ProfileChunk
-    // one-JVM A/B: 9.0 s at 1 vs 10.6 s at 4 — the two-agg update chain
-    // replans worse under AQE), so the chunk is the fused (auth, hub)
-    // pair: 2 jobs/iteration → 1.
-    val hitsChunk = 1
-    while (iter < maxIter - 1) {
-      val steps = math.min(hitsChunk, maxIter - 1 - iter)
-      var curH: DataFrame = null
-      var s = 0
-      while (s < steps) {
-        val aPlan =
-          if (s == 0)
-            eBySrc.as("e")
-              .join(hub.as("h"), $"e.src" === $"h.id")
-              .crossJoin(broadcast(Seq(mh).toDF("m")))
-              .groupBy($"e.dst".as("id"))
-              .agg(sum($"h.v" / $"m").as("v"))
-          else
-            eBySrc.as("e")
-              .join(curH.as("h"), $"e.src" === $"h.id")
-              .groupBy($"e.dst".as("id"))
-              .agg(sum($"h.v").as("v"))
-        curH = eByDst.as("e")
-          .join(aPlan.as("a"), $"e.dst" === $"a.id")
-          .groupBy($"e.src".as("id"))
-          .agg(sum($"a.v").as("v"))
-        s += 1
-      }
-      val (h2, obsH) = barrierObserved(curH, max($"v").as("mx"))
-      GraftLineage.release(hub)
-      hub = h2
-      mh = obsH("mx").asInstanceOf[Double]
-      iter += steps
-    }
-    val (auth, obsA) = barrierObserved(
+    // auth update a_t = Σ_{s→d} h(s)/mh, per TERM by the last observed
+    // hub max carried as a one-row broadcast
+    def authOf(hub: DataFrame, mh: Double): DataFrame =
       eBySrc.as("e")
         .join(hub.as("h"), $"e.src" === $"h.id")
         .crossJoin(broadcast(Seq(mh).toDF("m")))
         .groupBy($"e.dst".as("id"))
-        .agg(sum($"h.v" / $"m").as("v")),
-      max($"v").as("mx"))
-    val ma = obsA("mx").asInstanceOf[Double]
-    val (hubT, obsH) = barrierObserved(
+        .agg(sum($"h.v" / $"m").as("v"))
+    def hubOf(auth: DataFrame): DataFrame =
       eByDst.as("e")
         .join(auth.as("a"), $"e.dst" === $"a.id")
         .groupBy($"e.src".as("id"))
-        .agg(sum($"a.v").as("v")),
-      max($"v").as("mx"))
-    GraftLineage.release(hub)
+        .agg(sum($"a.v").as("v"))
+    // Iterations 1..maxIter-1 run one fused (auth, hub) update per
+    // barrier job; the LAST iteration materializes auth and hub
+    // separately because both are outputs. The auth half of the pair is
+    // divided per term by the previous pair's observed hub max — a pure
+    // rescale that commutes with the linear updates, so the final
+    // per-side normalized outputs are mathematically unchanged. Unlike
+    // katz/eigenvector, chunking PAST one full iteration measured slower
+    // here (ProfileChunk one-JVM A/B, tool since deleted; in git
+    // history: 9.0 s at 1 vs 10.6 s at 4 — the two-agg update chain
+    // replans worse under AQE), so the chunk is the fused (auth, hub)
+    // pair: 2 jobs/iteration → 1.
+    val looped = iterate(hub0, 0, maxIter - 1, chunk = 1,
+        metrics = Seq(max($"v").as("mx")), obs0 = Map("mx" -> 1.0)) {
+      (hub, _, obs) =>
+        hubOf(authOf(hub, obs.get("mx").asInstanceOf[Double]))
+    }
+    val hub = looped.state
+    val (auth, obsA) = barrierObserved(
+      authOf(hub, looped.obs("mx").asInstanceOf[Double]), max($"v").as("mx"))
+    val ma = obsA("mx").asInstanceOf[Double]
+    val (hubT, obsH) = barrierObserved(hubOf(auth), max($"v").as("mx"))
+    release(hub)
     val mhT = obsH("mx").asInstanceOf[Double]
     val out = barrier(
       hubT.crossJoin(broadcast(Seq(mhT).toDF("m")))
         .select($"id", lit("hub").as("kind"), round($"v" / $"m", 6).as("score"))
         .union(auth.crossJoin(broadcast(Seq(ma).toDF("m")))
           .select($"id", lit("auth").as("kind"), round($"v" / $"m", 6).as("score"))))
-    GraftLineage.release(hubT); GraftLineage.release(auth)
-    GraftLineage.release(eBySrc); GraftLineage.release(eByDst)
+    release(hubT); release(auth)
+    release(eBySrc); release(eByDst)
     out
   }
 }

@@ -644,11 +644,16 @@ object ConnectedComponents {
       val bound = math.min(cfg.sampleHardCap.toDouble,
         math.pow(nEst.toDouble.max(2.0), 1.0 + cfg.sampleEps / 2.0) * (1.0 + cfg.sampleDelta))
       val k = math.max(1L, math.min(edgeCount, bound.toLong))
+      def take(df: org.apache.spark.sql.DataFrame): Array[(Long, Long)] =
+        df.limit(k.toInt).select($"src", $"dst").as[(Long, Long)].collect()
+      // the Bernoulli pre-sample is often empty at small k; prefix CC is
+      // exact on any sample, so fall back to the first k edges rather
+      // than spend a superstep contracting nothing
       val sampled: Array[(Long, Long)] =
         if (k >= edgeCount) edges.select($"src", $"dst").as[(Long, Long)].collect()
-        else edges.sample(withReplacement = false,
-            math.min(1.0, k.toDouble * 1.2 / edgeCount), cfg.seed + round)
-          .limit(k.toInt).select($"src", $"dst").as[(Long, Long)].collect()
+        else Some(take(edges.sample(withReplacement = false,
+            math.min(1.0, k.toDouble * 1.2 / edgeCount), cfg.seed + round)))
+          .filter(_.nonEmpty).getOrElse(take(edges))
 
       // Driver-local prefix CC (≙ master-only union-find,
       // SparseSampling.hpp:275-313), canonical max labels.

@@ -181,12 +181,7 @@ object GraphMetrics {
     * duplicate rows summed, self-loops dropped. One hash aggregation
     * after a single-scan explode, like [[degrees]]. */
   def strength(weighted: DataFrame): DataFrame = {
-    val canonW = weighted
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"), col("weight"))
-      .filter(col("src") =!= col("dst"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
-    canonW.select(explode(array(
+    GraphIO.canonicalWeighted(weighted).select(explode(array(
         struct(col("src").as("id"), col("weight").as("w")),
         struct(col("dst").as("id"), col("weight").as("w")))).as("e"))
       .select(col("e.id").as("id"), col("e.w").as("w"))

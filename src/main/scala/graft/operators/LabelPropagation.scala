@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.GraftLineage._
 import org.apache.spark.sql.GraftLineage
-import graft.graph.{Edge, GraphIO, SuperstepMetrics}
-import graft.plans.CheckpointManager
+import graft.graph.{Edge, GraphIO}
+import graft.plans.{Adaptive, LoopCheckpoint}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -64,18 +64,9 @@ object LabelPropagation {
                        cfg: Config = Config()): Result = {
     val spark = weighted.sparkSession
     import spark.implicits._
-    val canonW = weighted
-      .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"),
-        $"weight")
-      .filter($"src" =!= $"dst")
-      .groupBy($"src", $"dst").agg(sum($"weight").as("weight"))
     // materialized once — the adjacency and vertex-set consumers each
     // re-ran the weighted derivation before
-    val bidirW = GraftLineage.barrier(
-      canonW.select(explode(array(
-          struct($"src".as("src"), $"dst".as("dst"), $"weight"),
-          struct($"dst".as("src"), $"src".as("dst"), $"weight"))).as("e"))
-        .select($"e.src".as("src"), $"e.dst".as("dst"), $"e.weight".as("weight")))
+    val bidirW = GraftLineage.barrier(GraphIO.bidirectionalWeighted(weighted))
     val res = propagate(bidirW, bidirW.select($"src".as("id")).distinct(),
       extraVertices, cfg)
     GraftLineage.release(bidirW)
@@ -94,23 +85,23 @@ object LabelPropagation {
     // upstream distinct's (src,dst) partitioning, which does NOT satisfy
     // the join's src clustering — one full edge shuffle per iteration.
     // Adaptive loop partitioning (guide §2: derive from input size —
-    // see graft.plans.Adaptive; at scale the rekey is a no-op): the row
-    // count rides the adjacency materialization as an observed metric.
-    val (bidir1, bObs) = barrierObserved(
-      bidirRaw.repartition(spark.sessionState.conf.numShufflePartitions,
-        $"src"),
-      count(lit(1)).as("n"))
-    val (bidir, _) = graft.plans.Adaptive.rekey(bidir1,
-      Option(bObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
+    // see graft.plans.Adaptive.loopTable).
+    val (bidir, _, _) = Adaptive.loopTable(bidirRaw, Seq($"src"))
     val verts = vertsRaw
       .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
       .distinct()
       .cutLineage()
 
     val labels0 = verts.select($"id", $"id".as("label")).cutLineage()
-    GraftLineage.release(verts)
-    loop(spark, bidir, labels0, startIter = 0, cfg, bidirStep0 = None)
+    release(verts)
+    loop(bidir, labels0, startIter = 0, cfg,
+      cfg.checkpointDir.map(checkpoint(spark, _, "lpa", cfg)), seeded = false)
   }
+
+  private def checkpoint(spark: org.apache.spark.sql.SparkSession, dir: String,
+                         algo: String, cfg: Config): LoopCheckpoint =
+    new LoopCheckpoint(spark, dir, algo, cfg.runId, cfg.checkpointEvery,
+      static = "bidir", state = "labels")
 
   /** Continue a run from durable state written by [[Config.checkpointDir]]
     * (`cfg.maxIter` counts TOTAL iterations across both runs, like the
@@ -118,24 +109,11 @@ object LabelPropagation {
   def resume(spark: org.apache.spark.sql.SparkSession,
              checkpointDir: String, cfg: Config = Config()): Result = {
     import spark.implicits._
-    val ck = new CheckpointManager(spark, checkpointDir)
-    val step = ck.latestStep().getOrElse(
-      throw new IllegalStateException(s"no checkpoint under $checkpointDir"))
-    val meta = ck.meta(step)
-    val algo = meta.getOrElse("algo", "")
-    if (algo != "lpa")
-      throw new IllegalStateException(
-        s"not an lpa checkpoint under $checkpointDir (algo='$algo')")
-    val p = spark.sessionState.conf.numShufflePartitions
-    val bidirStep = meta("bidirStep").toInt
-    val bidir = ck.load(bidirStep, "bidir").repartition(p, $"src").cutLineage()
-    val labels = GraftLineage.barrier(ck.load(step, "labels").repartition(p, $"id"))
-    loop(spark, bidir, labels, meta("iter").toInt,
-      cfg.copy(checkpointDir = Some(checkpointDir)), Some(bidirStep))
+    val ck = checkpoint(spark, checkpointDir, "lpa", cfg)
+    val (meta, bidir, labels) = ck.open(Seq($"src"), Seq($"id"))
+    loop(bidir, labels, meta("iter").toInt, cfg, Some(ck), seeded = false)
   }
 
-  /** The propagation loop proper, resumable at any iteration boundary:
-    * state is (label frame, iteration). */
   /** SEEDED (semi-supervised) label propagation: a small labeled seed
     * set (id, label) and an unlabeled majority; per iteration every
     * non-seed vertex adopts the most frequent label among its LABELED
@@ -157,12 +135,8 @@ object LabelPropagation {
     // canonical edges materialized once (adjacency + vertex set both
     // consume it); adaptive loop partitioning — same rule as [[propagate]]
     val canon = GraphIO.canonical(edges).cutLineage()
-    val (bidir1, bObs) = barrierObserved(
-      GraphIO.bidirectional(canon).toDF()
-        .repartition(spark.sessionState.conf.numShufflePartitions, $"src"),
-      count(lit(1)).as("n"))
-    val (bidir, _) = graft.plans.Adaptive.rekey(bidir1,
-      Option(bObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
+    val (bidir, _, _) =
+      Adaptive.loopTable(GraphIO.bidirectional(canon).toDF(), Seq($"src"))
     // duplicate seed rows would fan the vertex state out through the
     // left join — collapse to one deterministic label per id (smallest,
     // matching the tie rule); seeds not in the vertex set are ignored
@@ -174,7 +148,8 @@ object LabelPropagation {
         $"seed_label".isNotNull.as("seed"))
       .cutLineage()
     canon.releaseLineage() // both consumers materialized above
-    seededLoop(spark, bidir, labels0, startIter = 0, cfg, bidirStep0 = None)
+    loop(bidir, labels0, startIter = 0, cfg,
+      cfg.checkpointDir.map(checkpoint(spark, _, "lpa_seeded", cfg)), seeded = true)
   }
 
   /** Continue a [[runSeeded]] run from durable state written by
@@ -184,33 +159,23 @@ object LabelPropagation {
   def resumeSeeded(spark: org.apache.spark.sql.SparkSession,
                    checkpointDir: String, cfg: Config = Config()): Result = {
     import spark.implicits._
-    val ck = new CheckpointManager(spark, checkpointDir)
-    val step = ck.latestStep().getOrElse(
-      throw new IllegalStateException(s"no checkpoint under $checkpointDir"))
-    val meta = ck.meta(step)
-    val algo = meta.getOrElse("algo", "")
-    if (algo != "lpa_seeded")
-      throw new IllegalStateException(
-        s"not an lpa_seeded checkpoint under $checkpointDir (algo='$algo')")
-    val p = spark.sessionState.conf.numShufflePartitions
-    val bidirStep = meta("bidirStep").toInt
-    val bidir = ck.load(bidirStep, "bidir").repartition(p, $"src").cutLineage()
-    val labels = GraftLineage.barrier(ck.load(step, "labels").repartition(p, $"id"))
-    seededLoop(spark, bidir, labels, meta("iter").toInt,
-      cfg.copy(checkpointDir = Some(checkpointDir)), Some(bidirStep))
+    val ck = checkpoint(spark, checkpointDir, "lpa_seeded", cfg)
+    val (meta, bidir, labels) = ck.open(Seq($"src"), Seq($"id"))
+    loop(bidir, labels, meta("iter").toInt, cfg, Some(ck), seeded = true)
   }
 
-  private def seededLoop(spark: org.apache.spark.sql.SparkSession,
-                         bidir: DataFrame, labels0: DataFrame, startIter: Int,
-                         cfg: Config, bidirStep0: Option[Int]): Result = {
+  /** The propagation loop proper, resumable at any iteration boundary:
+    * state is (label frame, iteration); seeded runs also carry the seed
+    * flag (a snapshot holds the full state, unlabeled rows included).
+    * ONE job per round materializes the new labels while observing how
+    * many vertices changed (the convergence signal). */
+  private def loop(bidir: DataFrame, labels0: DataFrame, startIter: Int,
+                   cfg: Config, ck: Option[LoopCheckpoint], seeded: Boolean): Result = {
+    val spark = bidir.sparkSession
     import spark.implicits._
-    val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
-    var bidirStep = bidirStep0
-    var labels = labels0
-    var iter = startIter
-    var changed = 1L
-    while (iter < cfg.maxIter && changed > 0) {
-      val t0 = System.nanoTime()
+    val labelsOf = (df: DataFrame) =>
+      if (seeded) df.select($"id", $"label", $"seed") else df.select($"id", $"label")
+    val seededUpdate = (labels: DataFrame) => {
       val nbrCounts = bidir.as("e")
         .join(labels.filter($"label".isNotNull).as("l"), $"e.src" === $"l.id")
         .groupBy($"e.dst".as("id"), $"l.label".as("nl"))
@@ -219,7 +184,7 @@ object LabelPropagation {
         .groupBy($"id")
         .agg(max(struct($"c", (-$"nl").as("negl"))).as("m"))
         .select($"id", (-$"m.negl").as("newLabel"))
-      val newLabels = labels.as("l")
+      labels.as("l")
         .join(best.as("b"), Seq("id"), "left")
         .select($"id",
           when($"seed", $"label").otherwise(coalesce($"newLabel", $"label"))
@@ -227,100 +192,45 @@ object LabelPropagation {
           $"seed",
           (!$"seed" && $"newLabel".isNotNull &&
             ($"label".isNull || $"newLabel" =!= $"label")).as("ch"))
-      val (next, m) = barrierObserved(newLabels,
-        coalesce(sum(when($"ch", 1L).otherwise(0L)), lit(0L)).as("changed"))
-      changed = m("changed").asInstanceOf[Long]
-      GraftLineage.release(labels)
-      labels = next.select($"id", $"label", $"seed")
-      iter += 1
-      ck.foreach { c =>
-        c.appendMetrics(Seq(SuperstepMetrics(cfg.runId, "lpa_seeded", iter,
-          0L, 0L, changed, 0, (System.nanoTime() - t0) / 1000000)))
-        val willContinue = iter < cfg.maxIter && changed > 0
-        if (iter % cfg.checkpointEvery == 0 && willContinue) {
-          // full state (unlabeled rows + seed flags included); static
-          // adjacency written once, at the first snapshot
-          val tables = Map("labels" -> labels) ++
-            (if (bidirStep.isEmpty) Map("bidir" -> bidir) else Map.empty)
-          if (bidirStep.isEmpty) bidirStep = Some(iter)
-          c.save(iter, tables, Map(
-            "algo" -> "lpa_seeded", "runId" -> cfg.runId,
-            "iter" -> iter.toString, "bidirStep" -> bidirStep.get.toString))
-        }
-      }
     }
-    GraftLineage.release(bidir)
-    Result(labels.filter($"label".isNotNull).select($"id", $"label"),
-      iter, changed == 0)
-  }
-
-  private def loop(spark: org.apache.spark.sql.SparkSession,
-                   bidir: DataFrame, labels0: DataFrame, startIter: Int,
-                   cfg: Config, bidirStep0: Option[Int]): Result = {
-    import spark.implicits._
-    val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
-    var bidirStep = bidirStep0
-    var labels = labels0
-    var iter = startIter
-    var changed = 1L
-
+    val update = (cur: DataFrame) => {
+      // heaviest neighbor label (unweighted: weight ≡ 1 → most
+      // frequent); ties → smallest label. argmax as a single hash agg:
+      // max_by over (vote, -label).
+      val nbrCounts = bidir.as("e")
+        .join(cur.as("l"), $"e.src" === $"l.id")
+        .groupBy($"e.dst".as("id"), $"l.label".as("nl"))
+        .agg(sum($"e.weight").as("c"))
+      val best = nbrCounts
+        .groupBy($"id")
+        .agg(max(struct($"c", (-$"nl").as("negl"))).as("m"))
+        .select($"id", (-$"m.negl").as("newLabel"))
+      cur.as("l")
+        .join(best.as("b"), Seq("id"), "left")
+        .select($"id",
+          coalesce($"newLabel", $"label").as("label"),
+          ($"newLabel".isNotNull && $"newLabel" =!= $"label").as("ch"))
+    }
     // Chunked iterations (guide §1.2; the Centrality.IterChunk rule,
     // bounded at 2 because the exit is DATA-DEPENDENT): two synchronous
-    // updates compose into one barrier job, convergence observed on the
-    // chunk's LAST update — valid because a fixpoint is stable, so a
-    // mid-chunk fixpoint just makes the final update a no-op with
-    // changed = 0. Checkpointed runs keep one barrier per iteration.
-    val chunk = if (ck.isDefined) 1 else 2
-    while (iter < cfg.maxIter && changed > 0) {
-      val t0 = System.nanoTime()
-      val steps = math.min(chunk, cfg.maxIter - iter)
-      var cur = labels
-      var newLabels: DataFrame = null
-      var s = 0
-      while (s < steps) {
-        // heaviest neighbor label (unweighted: weight ≡ 1 → most
-        // frequent); ties → smallest label. argmax as a single hash agg:
-        // max_by over (vote, -label).
-        val nbrCounts = bidir.as("e")
-          .join(cur.as("l"), $"e.src" === $"l.id")
-          .groupBy($"e.dst".as("id"), $"l.label".as("nl"))
-          .agg(sum($"e.weight").as("c"))
-        val best = nbrCounts
-          .groupBy($"id")
-          .agg(max(struct($"c", (-$"nl").as("negl"))).as("m"))
-          .select($"id", (-$"m.negl").as("newLabel"))
-        newLabels = cur.as("l")
-          .join(best.as("b"), Seq("id"), "left")
-          .select($"id",
-            coalesce($"newLabel", $"label").as("label"),
-            ($"newLabel".isNotNull && $"newLabel" =!= $"label").as("ch"))
-        cur = newLabels.select($"id", $"label")
-        s += 1
-      }
-      // ONE job: materialize the new labels while observing how many
-      // vertices changed (the convergence signal).
-      val (next, m) = barrierObserved(newLabels,
-        coalesce(sum(when($"ch", 1L).otherwise(0L)), lit(0L)).as("changed"))
-      changed = m("changed").asInstanceOf[Long]
-      GraftLineage.release(labels)
-      labels = next.select($"id", $"label")
-      iter += steps
-      ck.foreach { c =>
-        c.appendMetrics(Seq(SuperstepMetrics(cfg.runId, "lpa", iter,
-          0L, 0L, changed, 0, (System.nanoTime() - t0) / 1000000)))
-        val willContinue = iter < cfg.maxIter && changed > 0
-        if (iter % cfg.checkpointEvery == 0 && willContinue) {
-          // static adjacency written once, at the first snapshot
-          val tables = Map("labels" -> labels) ++
-            (if (bidirStep.isEmpty) Map("bidir" -> bidir) else Map.empty)
-          if (bidirStep.isEmpty) bidirStep = Some(iter)
-          c.save(iter, tables, Map(
-            "algo" -> "lpa", "runId" -> cfg.runId,
-            "iter" -> iter.toString, "bidirStep" -> bidirStep.get.toString))
-        }
-      }
+    // unseeded updates compose into one barrier job, convergence
+    // observed on the chunk's LAST update — valid because a fixpoint is
+    // stable, so a mid-chunk fixpoint just makes the final update a
+    // no-op with changed = 0. Checkpointed runs keep one barrier per
+    // iteration.
+    val out = iterate(labels0, startIter, cfg.maxIter,
+        chunk = if (seeded || ck.isDefined) 1 else 2,
+        metrics = Seq(
+          coalesce(sum(when($"ch", 1L).otherwise(0L)), lit(0L)).as("changed")),
+        stop = (_, o) => o("changed").asInstanceOf[Long] == 0L,
+        onRound = r => ck.foreach(_.record(r, labelsOf(r.state), bidir,
+          Map("runId" -> cfg.runId),
+          verticesActive = r.obs("changed").asInstanceOf[Long]))) {
+      (state, _, _) => (if (seeded) seededUpdate else update)(labelsOf(state))
     }
-    GraftLineage.release(bidir)
-    Result(labels, iter, changed == 0)
+    release(bidir)
+    val labels = labelsOf(out.state)
+    Result(if (seeded) labels.filter($"label".isNotNull).select($"id", $"label") else labels,
+      out.iter, out.stopped)
   }
 }

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.GraftLineage._
 import org.apache.spark.sql.GraftLineage
-import graft.graph.{Edge, GraphIO, SuperstepMetrics}
-import graft.plans.CheckpointManager
+import graft.graph.{Edge, GraphIO}
+import graft.plans.{Adaptive, LoopCheckpoint}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -78,24 +78,15 @@ object PageRank {
                        cfg: Config = Config()): Result = {
     val spark = weighted.sparkSession
     import spark.implicits._
-    val canonW = weighted
-      .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"),
-        $"weight")
-      .filter($"src" =!= $"dst")
-      .groupBy($"src", $"dst").agg(sum($"weight").as("weight"))
     // materialized once — three consumers below (strength, the weighted
     // join, the vertex set) each re-ran the whole weighted derivation
-    val bidirW = GraftLineage.barrier(
-      canonW.select(explode(array(
-          struct($"src".as("src"), $"dst".as("dst"), $"weight"),
-          struct($"dst".as("src"), $"src".as("dst"), $"weight"))).as("e"))
-        .select($"e.src".as("src"), $"e.dst".as("dst"), $"e.weight".as("weight")))
+    val bidirW = GraftLineage.barrier(GraphIO.bidirectionalWeighted(weighted))
     val strength = bidirW.groupBy($"src").agg(sum($"weight").as("st"))
     val wEdgesRaw = bidirW.join(strength, "src")
       .select($"src", $"dst",
         ($"weight".cast("double") / $"st".cast("double")).as("w"))
     val vertsRaw = bidirW.select($"src".as("id")).distinct()
-    val res = iterate(spark, vertsRaw, wEdgesRaw, extraVertices, sources, cfg)
+    val res = powerIteration(spark, vertsRaw, wEdgesRaw, extraVertices, sources, cfg)
     GraftLineage.release(bidirW)
     res
   }
@@ -115,7 +106,7 @@ object PageRank {
     val outDegPre = directed.groupBy($"src").agg(count(lit(1)).as("outdeg"))
     val wEdgesRaw = directed.join(outDegPre, "src")
       .select($"src", $"dst", (lit(1.0) / $"outdeg").as("w"))
-    val res = iterate(spark, GraphIO.vertices(canon).toDF("id"), wEdgesRaw,
+    val res = powerIteration(spark, GraphIO.vertices(canon).toDF("id"), wEdgesRaw,
       extraVertices, restart, cfg)
     canon.releaseLineage()
     res
@@ -123,12 +114,12 @@ object PageRank {
 
   /** Shared power-iteration core over a prepared transition table
     * (src, dst, w) with Σ_dst w = 1 per non-dangling src. */
-  private def iterate(spark: org.apache.spark.sql.SparkSession,
-                      vertsRaw: DataFrame,
-                      wEdgesRaw: DataFrame,
-                      extraVertices: Option[Dataset[Long]],
-                      restart: Option[Dataset[Long]],
-                      cfg: Config): Result = {
+  private def powerIteration(spark: org.apache.spark.sql.SparkSession,
+                             vertsRaw: DataFrame,
+                             wEdgesRaw: DataFrame,
+                             extraVertices: Option[Dataset[Long]],
+                             restart: Option[Dataset[Long]],
+                             cfg: Config): Result = {
     import spark.implicits._
     val verts = vertsRaw
       .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
@@ -161,17 +152,10 @@ object PageRank {
     // Weighted adjacency: one row per directed edge with its transition
     // weight, hash-partitioned by src ONCE — the per-iteration join then
     // reuses this partitioning (no edge shuffle per iteration; the rank
-    // side is already partitioned by id from the previous groupBy).
-    // The row count is observed in the same materialization and drives
+    // side is already partitioned by id from the previous groupBy), at
     // the adaptive loop partition count (guide §2: derive partitioning
-    // from input size; at scale the rekey is a no-op, see
-    // [[graft.plans.Adaptive]]).
-    val (wEdges1, wObs) = barrierObserved(
-      wEdgesRaw.repartition(spark.sessionState.conf.numShufflePartitions,
-        $"src"),
-      count(lit(1)).as("n"))
-    val (wEdges, p) = graft.plans.Adaptive.rekey(wEdges1,
-      Option(wObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
+    // from input size; see [[graft.plans.Adaptive.loopTable]]).
+    val (wEdges, _, p) = Adaptive.loopTable(wEdgesRaw, Seq($"src"))
 
     // Dangling = vertices with no out-edges (isolated ones here). A flag
     // column on the rank table; dangling mass for iteration t+1 is
@@ -191,77 +175,27 @@ object PageRank {
         .repartition(p, $"id"),
       coalesce(sum(when($"dangling", $"rank")), lit(0.0)).as("dmass"),
       coalesce(sum(when($"dangling", 1L)), lit(0L)).as("dangn"))
-    GraftLineage.release(verts) // ranks0 is materialized; verts is done
+    release(verts) // ranks0 is materialized; verts is done
     val dangN = Option(m0("dangn")).map(_.asInstanceOf[Long]).getOrElse(0L)
     // Pinned-iteration fast path (guide §1.2: cut the pass count): with
     // tol = 0 there is no convergence read, and with ZERO dangling
     // vertices the dangling mass is identically 0.0, so its
-    // per-iteration observation is dead weight — every iterate() caller
+    // per-iteration observation is dead weight — every powerIteration() caller
     // builds a bidirectional graph, so dangN == 0 also means every
     // vertex has in-edges and the contribs aggregation alone reaches the
     // full vertex set. Arithmetic per iteration is unchanged: with
     // dmass = 0.0 the old rank expression d·(contrib + 0.0·rw) is
     // bit-identical to d·contrib. Checkpointed runs keep the observed
     // loop (resume needs the per-iteration dmass state).
-    if (cfg.tol == 0.0 && cfg.checkpointDir.isEmpty && dangN == 0L)
-      pinnedLoop(spark, wEdges, ranks0,
-        if (personalized) None else Some(1.0 / n), cfg)
-    else
-      loop(spark, wEdges, ranks0, m0("dmass").asInstanceOf[Double],
-        if (personalized) None else Some(1.0 / n), startIter = 0, cfg,
-        wedgesStep0 = None)
+    loop(wEdges, ranks0, m0, if (personalized) None else Some(1.0 / n),
+      startIter = 0, cfg, cfg.checkpointDir.map(checkpoint(spark, _, cfg)),
+      pinned = cfg.tol == 0.0 && cfg.checkpointDir.isEmpty && dangN == 0L)
   }
 
-  /** Pinned-iteration loop (tol = 0, zero dangling vertices, no durable
-    * checkpoints): [[Centrality.IterChunk]] join+agg iterations compose
-    * into ONE plan per lineage barrier — fewer driver actions and rank
-    * materializations than one barrier per iteration, with the chunk
-    * kept small so plan size and size-only estimates stay bounded.
-    * l1Delta is not computed on this path (reported as NaN). */
-  private def pinnedLoop(spark: org.apache.spark.sql.SparkSession,
-                         wEdges: DataFrame, ranks0: DataFrame,
-                         rwLit: Option[Double], cfg: Config): Result = {
-    import spark.implicits._
-    val personalized = rwLit.isEmpty
-    val rw: org.apache.spark.sql.Column = rwLit.map(lit(_)).getOrElse($"rw")
-    // personalized runs rebuild the (1-d)·rw term from the static
-    // restart-weight table each iteration — a co-partitioned id join
-    // against the ranks0 barrier, which therefore stays alive to the end
-    val vertsRw: DataFrame =
-      if (personalized) ranks0.select($"id", $"rw") else null
-    var ranks: DataFrame = ranks0
-    var iter = 0
-    while (iter < cfg.maxIter) {
-      val steps = math.min(Centrality.IterChunk, cfg.maxIter - iter)
-      var cur: DataFrame = ranks
-      var s = 0
-      while (s < steps) {
-        val contribs = wEdges.as("e")
-          .join(cur.as("r"), $"e.src" === $"r.id")
-          .groupBy($"e.dst".as("id"))
-          .agg(sum($"e.w" * $"r.rank").as("contrib"))
-        cur =
-          if (personalized)
-            contribs.join(vertsRw, Seq("id"))
-              .select($"id",
-                (lit(1.0 - cfg.damping) * rw +
-                  lit(cfg.damping) * $"contrib").as("rank"),
-                $"rw")
-          else
-            contribs.select($"id",
-              (lit(1.0 - cfg.damping) * rw +
-                lit(cfg.damping) * $"contrib").as("rank"))
-        s += 1
-      }
-      val next = barrier(cur)
-      if (!(ranks eq ranks0)) GraftLineage.release(ranks)
-      ranks = next
-      iter += steps
-    }
-    if (!(ranks eq ranks0)) GraftLineage.release(ranks0)
-    GraftLineage.release(wEdges)
-    Result(ranks.select($"id", $"rank"), iter, Double.NaN)
-  }
+  private def checkpoint(spark: org.apache.spark.sql.SparkSession,
+                         dir: String, cfg: Config): LoopCheckpoint =
+    new LoopCheckpoint(spark, dir, "pagerank", cfg.runId, cfg.checkpointEvery,
+      static = "wedges", state = "ranks")
 
   /** Continue a run from durable state written by [[Config.checkpointDir]]:
     * loads the latest rank snapshot + the once-written transition table
@@ -271,18 +205,8 @@ object PageRank {
   def resume(spark: org.apache.spark.sql.SparkSession,
              checkpointDir: String, cfg: Config = Config()): Result = {
     import spark.implicits._
-    val ck = new CheckpointManager(spark, checkpointDir)
-    val step = ck.latestStep().getOrElse(
-      throw new IllegalStateException(s"no checkpoint under $checkpointDir"))
-    val meta = ck.meta(step)
-    val algo = meta.getOrElse("algo", "")
-    if (algo != "pagerank")
-      throw new IllegalStateException(
-        s"not a pagerank checkpoint under $checkpointDir (algo='$algo')")
-    val p = spark.sessionState.conf.numShufflePartitions
-    val wedgesStep = meta("wedgesStep").toInt
-    val wEdges = ck.load(wedgesStep, "wedges").repartition(p, $"src").cutLineage()
-    val ranks = GraftLineage.barrier(ck.load(step, "ranks").repartition(p, $"id"))
+    val ck = checkpoint(spark, checkpointDir, cfg)
+    val (meta, wEdges, ranks) = ck.open(Seq($"src"), Seq($"id"))
     // Double.toString round-trips exactly, so the resumed STATE is
     // bit-identical; final ranks may differ from an uninterrupted run
     // in the last ulp because the parquet round-trip can permute rows
@@ -291,79 +215,91 @@ object PageRank {
     // the 6 dp rounds elsewhere) absorb. CC's resume is exact because
     // max over longs is order-independent.
     val rwLit = meta.get("rw").filter(_.nonEmpty).map(_.toDouble)
-    loop(spark, wEdges, ranks, meta("dmass").toDouble, rwLit,
-      startIter = meta("iter").toInt,
-      cfg.copy(checkpointDir = Some(checkpointDir)), Some(wedgesStep))
+    loop(wEdges, ranks, Map("dmass" -> meta("dmass").toDouble), rwLit,
+      startIter = meta("iter").toInt, cfg, Some(ck), pinned = false)
   }
 
   /** The power-iteration loop proper, resumable at any iteration
-    * boundary: state is (ranks frame, dangling mass, iteration). */
-  private def loop(spark: org.apache.spark.sql.SparkSession,
-                   wEdges: DataFrame, ranks0: DataFrame, dmass0: Double,
+    * boundary: state is (ranks frame, dangling mass, iteration).
+    *
+    * A `pinned` run (tol = 0, zero dangling vertices, no durable
+    * checkpoints) takes the pinned step instead: [[Centrality.IterChunk]]
+    * join+agg iterations compose into ONE plan per lineage barrier —
+    * fewer driver actions and rank materializations than one barrier
+    * per iteration, with the chunk kept small so plan size and size-only
+    * estimates stay bounded. l1Delta is not computed on that path
+    * (reported as NaN). */
+  private def loop(wEdges: DataFrame, ranks0: DataFrame, obs0: Map[String, Any],
                    rwLit: Option[Double], startIter: Int, cfg: Config,
-                   wedgesStep0: Option[Int]): Result = {
+                   ck: Option[LoopCheckpoint], pinned: Boolean): Result = {
+    val spark = wEdges.sparkSession
     import spark.implicits._
     val personalized = rwLit.isEmpty
     val rw: org.apache.spark.sql.Column =
       rwLit.map(lit(_)).getOrElse($"rw")
     val rwCols = if (personalized) Seq(col("rw")) else Seq.empty[org.apache.spark.sql.Column]
-    val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
-    var wedgesStep = wedgesStep0
-    var ranks = ranks0
-    var danglingMass = dmass0
-    var iter = startIter
-    var delta = Double.MaxValue
-
-    while (iter < cfg.maxIter && delta > cfg.tol) {
-      val t0 = System.nanoTime()
-      val contribs = wEdges.as("e")
+    val ranksOf = (df: DataFrame) =>
+      df.select(Seq($"id", $"rank") ++ rwCols :+ $"dangling": _*)
+    val contribsOf = (ranks: DataFrame) =>
+      wEdges.as("e")
         .join(ranks.as("r"), $"e.src" === $"r.id")
         .groupBy($"e.dst".as("id"))
         .agg(sum($"e.w" * $"r.rank").as("contrib"))
-
-      // ranks is the full vertex set → left join carries every vertex,
-      // the old rank (for the delta), the restart weight and the
-      // dangling flag in one pass. ONE job: materialize the new ranks
-      // while observing the L1 delta and the next iteration's dangling
-      // mass. The scalar dangling mass rides as a broadcast one-row
-      // frame, not a literal: a changing literal is inlined into the
-      // generated Java, so every iteration would be a new plan paying a
-      // fresh Catalyst optimization and Janino compile. With the
-      // broadcast the iteration plan — and its compiled codegen — is
-      // IDENTICAL every iteration and only iteration 1 compiles.
-      val joined = ranks.as("r").join(contribs.as("c"), Seq("id"), "left")
-        .crossJoin(broadcast(Seq(danglingMass).toDF("dmass")))
-        .select(Seq($"id",
-          (lit(1.0 - cfg.damping) * rw + lit(cfg.damping) *
-            (coalesce($"contrib", lit(0.0)) + $"dmass" * rw)).as("rank"),
-          $"r.rank".as("prev")) ++ rwCols :+ $"dangling": _*)
-      val (next, m) = barrierObserved(joined,
-        coalesce(sum(abs($"rank" - $"prev")), lit(0.0)).as("delta"),
-        coalesce(sum(when($"dangling", $"rank")), lit(0.0)).as("dmass"))
-      delta = m("delta").asInstanceOf[Double]
-      danglingMass = m("dmass").asInstanceOf[Double]
-      GraftLineage.release(ranks)
-      ranks = next.select(Seq($"id", $"rank") ++ rwCols :+ $"dangling": _*)
-      iter += 1
-      ck.foreach { c =>
-        c.appendMetrics(Seq(SuperstepMetrics(cfg.runId, "pagerank", iter,
-          0L, 0L, -1L, 0, (System.nanoTime() - t0) / 1000000)))
-        val willContinue = iter < cfg.maxIter && delta > cfg.tol
-        if (iter % cfg.checkpointEvery == 0 && willContinue) {
-          // the static transition table is written once, at the first
-          // snapshot; later snapshots only rewrite the small rank table
-          val tables = Map("ranks" -> ranks) ++
-            (if (wedgesStep.isEmpty) Map("wedges" -> wEdges) else Map.empty)
-          if (wedgesStep.isEmpty) wedgesStep = Some(iter)
-          c.save(iter, tables, Map(
-            "algo" -> "pagerank", "runId" -> cfg.runId,
-            "iter" -> iter.toString, "dmass" -> danglingMass.toString,
-            "rw" -> rwLit.map(_.toString).getOrElse(""),
-            "wedgesStep" -> wedgesStep.get.toString))
+    // personalized pinned runs rebuild the (1-d)·rw term from the static
+    // restart-weight table each iteration — a co-partitioned id join
+    // against the ranks0 barrier, which therefore stays alive to the end
+    val vertsRw: DataFrame =
+      if (pinned && personalized) ranks0.select($"id", $"rw") else null
+    val out =
+      if (pinned)
+        iterate(ranks0, startIter, cfg.maxIter, Centrality.IterChunk,
+            retain = Option(vertsRw).toSeq) { (cur, _, _) =>
+          if (personalized)
+            contribsOf(cur).join(vertsRw, Seq("id"))
+              .select($"id",
+                (lit(1.0 - cfg.damping) * rw +
+                  lit(cfg.damping) * $"contrib").as("rank"),
+                $"rw")
+          else
+            contribsOf(cur).select($"id",
+              (lit(1.0 - cfg.damping) * rw +
+                lit(cfg.damping) * $"contrib").as("rank"))
         }
-      }
-    }
-    GraftLineage.release(wEdges)
-    Result(ranks.select($"id", $"rank"), iter, delta)
+      else
+        iterate(ranks0, startIter, cfg.maxIter, chunk = 1,
+            metrics = Seq(
+              coalesce(sum(abs($"rank" - $"prev")), lit(0.0)).as("delta"),
+              coalesce(sum(when($"dangling", $"rank")), lit(0.0)).as("dmass")),
+            obs0 = obs0,
+            stop = (_, o) => !(o("delta").asInstanceOf[Double] > cfg.tol),
+            onRound = r => ck.foreach(_.record(r, ranksOf(r.state), wEdges, Map(
+              "runId" -> cfg.runId,
+              "dmass" -> r.obs("dmass").asInstanceOf[Double].toString,
+              "rw" -> rwLit.map(_.toString).getOrElse(""))))) { (state, _, obs) =>
+          val ranks = ranksOf(state)
+          val danglingMass = obs.get("dmass").asInstanceOf[Double]
+          // ranks is the full vertex set → left join carries every
+          // vertex, the old rank (for the delta), the restart weight and
+          // the dangling flag in one pass. ONE job: materialize the new
+          // ranks while observing the L1 delta and the next iteration's
+          // dangling mass. The scalar dangling mass rides as a broadcast
+          // one-row frame, not a literal: a changing literal is inlined
+          // into the generated Java, so every iteration would be a new
+          // plan paying a fresh Catalyst optimization and Janino
+          // compile. With the broadcast the iteration plan — and its
+          // compiled codegen — is IDENTICAL every iteration and only
+          // iteration 1 compiles.
+          ranks.as("r").join(contribsOf(ranks).as("c"), Seq("id"), "left")
+            .crossJoin(broadcast(Seq(danglingMass).toDF("dmass")))
+            .select(Seq($"id",
+              (lit(1.0 - cfg.damping) * rw + lit(cfg.damping) *
+                (coalesce($"contrib", lit(0.0)) + $"dmass" * rw)).as("rank"),
+              $"r.rank".as("prev")) ++ rwCols :+ $"dangling": _*)
+        }
+    if (vertsRw != null && !(out.state eq ranks0)) release(ranks0)
+    release(wEdges)
+    Result(out.state.select($"id", $"rank"), out.iter,
+      if (pinned) Double.NaN
+      else out.obs.get("delta").map(_.asInstanceOf[Double]).getOrElse(Double.MaxValue))
   }
 }

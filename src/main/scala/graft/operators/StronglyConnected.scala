@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.GraftLineage
 import org.apache.spark.sql.GraftLineage._
 import org.apache.spark.sql.DataFrame
+import graft.plans.Adaptive
 import org.apache.spark.sql.functions._
 
 /** Strongly connected components over a DIRECTED edge table (src, dst),
@@ -41,13 +42,10 @@ object StronglyConnected {
 
     // adaptive loop partitioning (guide §2; graft.plans.Adaptive): the
     // edge count rides the input materialization as an observed metric
-    val (edges1, eObs) = barrierObserved(
+    val (edges0, _, p) = Adaptive.loopTable(
       directed.select($"src".cast("long"), $"dst".cast("long"))
-        .filter($"src" =!= $"dst").distinct()
-        .repartition(spark.sessionState.conf.numShufflePartitions, $"src"),
-      count(lit(1)).as("n"))
-    val (edges0, p) = graft.plans.Adaptive.rekey(edges1,
-      Option(eObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
+        .filter($"src" =!= $"dst").distinct(),
+      Seq($"src"))
     var edges = edges0
     // vertex count observed inside the materialization job itself — a
     // separate count() is one more constant-time driver job per run
@@ -243,38 +241,27 @@ object StronglyConnected {
     import spark.implicits._
     scopedBlocks(spark) {
       // adaptive loop partitioning — same rule as [[scc]]
-      val (edges1, eObs) = barrierObserved(
+      val (edges, _, _) = Adaptive.loopTable(
         dag.select($"src".cast("long"), $"dst".cast("long"))
-          .filter($"src" =!= $"dst").distinct()
-          .repartition(spark.sessionState.conf.numShufflePartitions, $"src"),
-        count(lit(1)).as("n"))
-      val (edges, p) = graft.plans.Adaptive.rekey(edges1,
-        Option(eObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
-      val sumMetric = sum($"level").as("lsum")
-      var state = barrier(
+          .filter($"src" =!= $"dst").distinct(),
+        Seq($"src"))
+      val lsum = (o: Map[String, Any]) =>
+        Option(o("lsum")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val state0 = barrier(
         edges.select($"src".as("id")).union(edges.select($"dst".as("id")))
           .distinct().select($"id", lit(0L).as("level")))
-      var prevSum = 0L
-      var changed = true
-      var round = 0
-      while (changed && round < maxRounds) {
-        round += 1
+      val out = iterate(state0, 0, maxRounds, chunk = 1,
+          metrics = Seq(sum($"level").as("lsum")), obs0 = Map("lsum" -> 0L),
+          stop = (prev, o) => lsum(o) == lsum(prev)) { (state, _, _) =>
         val pushed = edges
           .join(state.select($"id".as("src"), $"level"), Seq("src"))
           .groupBy($"dst".as("id")).agg((max($"level") + 1L).as("nl"))
-        val (next, obs) = barrierObserved(
-          state.join(pushed.select($"id", $"nl"), Seq("id"), "left")
-            .select($"id", greatest($"level", coalesce($"nl", lit(0L))).as("level")),
-          sumMetric)
-        val s2 = Option(obs("lsum")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        release(state)
-        state = next
-        changed = s2 != prevSum
-        prevSum = s2
+        state.join(pushed.select($"id", $"nl"), Seq("id"), "left")
+          .select($"id", greatest($"level", coalesce($"nl", lit(0L))).as("level"))
       }
-      require(!changed,
+      require(out.stopped,
         s"dagLevels did not converge in $maxRounds rounds — cycle in input?")
-      state
+      out.state
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.GraftLineage._
 import graft.graph.{Edge, GraphIO}
+import graft.plans.{Adaptive, LoopCheckpoint}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -122,13 +123,9 @@ object Traversal {
     val (pP, a, b, c, d0) = (1000003L, 48271L, 16807L, 69621L, 40503L)
     scopedBlocks(spark) {
       // adaptive loop partitioning — same rule as multiSourceHopDistances
-      val (adj1, aObs) = barrierObserved(
-        GraphIO.bidirectional(GraphIO.canonical(edges))
-          .toDF("v", "nbr")
-          .repartition(spark.sessionState.conf.numShufflePartitions, $"v"),
-        count(lit(1)).as("n"))
-      val (adj, p) = graft.plans.Adaptive.rekey(adj1,
-        Option(aObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"v"))
+      val (adj, _, p) = Adaptive.loopTable(
+        GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("v", "nbr"),
+        Seq($"v"))
       var state = barrier(
         adj.select($"v".as("seed")).distinct()
           .crossJoin(spark.createDataset(0L until nWalks.toLong).toDF("walk"))
@@ -187,28 +184,35 @@ object Traversal {
     val spark = edges.sparkSession
     import spark.implicits._
     scopedBlocks(spark) {
-      var e = GraphIO.canonical(edges).toDF().cutLineage()
-      var m = e.count()
-      var changed = m > 0
-      var iter = 0
-      while (changed && iter < maxIter) {
-        iter += 1
+      val core = peel(GraphIO.canonical(edges).toDF(), count(lit(1)).as("n"),
+          maxIter, "k-core") { e =>
         val keep = e.select(explode(array($"src", $"dst")).as("id"))
           .groupBy($"id").agg(count(lit(1)).as("dg"))
           .filter($"dg" >= k).select($"id")
-        val (next, obs) = barrierObserved(
-          e.join(keep.as("ks"), $"src" === $"ks.id", "left_semi")
-            .join(keep.as("kd"), $"dst" === $"kd.id", "left_semi"),
-          count(lit(1)).as("n"))
-        val m2 = Option(obs("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        release(e)
-        e = next
-        changed = m2 != m
-        m = m2
+        e.join(keep.as("ks"), $"src" === $"ks.id", "left_semi")
+          .join(keep.as("kd"), $"dst" === $"kd.id", "left_semi")
       }
-      require(!changed, s"k-core did not converge in $maxIter iterations")
-      barrier(GraphIO.vertices(e.as[Edge]).toDF("id"))
+      barrier(GraphIO.vertices(core.as[Edge]).toDF("id"))
     }
+  }
+
+  /** The monotone peeling loops (k-core, k-truss, coreness): materialize
+    * `input`, then run `step` until the one long `metric` — observed on
+    * the input's and on every round's barrier — stops changing (values
+    * only shrink, so unchanged ⟺ fixpoint). A zero start value (no
+    * edges) runs no round; throws when `maxIter` rounds end first. */
+  private[operators] def peel(input: DataFrame, metric: org.apache.spark.sql.Column,
+                              maxIter: Int, what: String)(
+      step: DataFrame => DataFrame): DataFrame = {
+    val value = (o: Map[String, Any]) =>
+      Option(o.values.head).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val (state0, obs0) = barrierObserved(input, metric)
+    val empty = value(obs0) == 0L
+    val out = iterate(state0, 0, if (empty) 0 else maxIter, chunk = 1,
+        metrics = Seq(metric), obs0 = obs0,
+        stop = (prev, o) => value(o) == value(prev))((s, _, _) => step(s))
+    require(empty || out.stopped, s"$what did not converge in $maxIter iterations")
+    out.state
   }
 
   /** Skip-gram (center, context) pair counts from the deterministic walk
@@ -265,39 +269,20 @@ object Traversal {
       // exchanges on the edge side; the barrier claims the partitioning,
       // same rule as the PageRank/LPA iteration cores). Partition count
       // adaptive from the observed row count (graft.plans.Adaptive).
-      val (bidir1, bObs) = barrierObserved(
-        e.select($"src", $"dst").union(e.select($"dst".as("src"), $"src".as("dst")))
-          .repartition(spark.sessionState.conf.numShufflePartitions, $"dst"),
-        count(lit(1)).as("n"))
-      val (bidir, _) = graft.plans.Adaptive.rekey(bidir1,
-        Option(bObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"dst"))
-      val sumMetric = sum($"c").as("csum")
-      val (deg, obs0) = barrierObserved(
-        bidir.groupBy($"src".as("id")).agg(count(lit(1)).as("c")), sumMetric)
-      var state = deg
-      var prevSum = Option(obs0("csum")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      var changed = prevSum > 0
-      var iter = 0
+      val (bidir, _, _) = Adaptive.loopTable(
+        e.select($"src", $"dst").union(e.select($"dst".as("src"), $"src".as("dst"))),
+        Seq($"dst"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"v").orderBy($"c".desc)
-      while (changed && iter < maxIter) {
-        iter += 1
+      peel(bidir.groupBy($"src".as("id")).agg(count(lit(1)).as("c")),
+          sum($"c").as("csum"), maxIter, "coreness") { state =>
         val hist = bidir
           .join(state.select($"id".as("dst"), $"c"), Seq("dst"))
           .groupBy($"src".as("v"), $"c").agg(count(lit(1)).as("n"))
-        val (next, obs) = barrierObserved(
-          hist.withColumn("cum", sum($"n").over(w))
-            .groupBy($"v".as("id"))
-            .agg(max(least($"c", $"cum")).as("c")),
-          sumMetric)
-        val s2 = Option(obs("csum")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        release(state)
-        state = next
-        changed = s2 != prevSum
-        prevSum = s2
-      }
-      require(!changed, s"coreness did not converge in $maxIter iterations")
-      state.select($"id", $"c".cast("long").as("coreness"))
+        hist.withColumn("cum", sum($"n").over(w))
+          .groupBy($"v".as("id"))
+          .agg(max(least($"c", $"cum")).as("c"))
+      }.select($"id", $"c".cast("long").as("coreness"))
     }
   }
 
@@ -331,20 +316,22 @@ object Traversal {
     val dir = wedges.select($"src".cast("long"), $"dst".cast("long"),
       $"weight".cast("long"))
     // adaptive loop partitioning (guide §2; graft.plans.Adaptive)
-    val (adj1, aObs) = barrierObserved(
-      dir.union(dir.select($"dst".as("src"), $"src".as("dst"), $"weight"))
-        .repartition(spark.sessionState.conf.numShufflePartitions, $"src"),
-      count(lit(1)).as("n"))
-    val (adj, p) = graft.plans.Adaptive.rekey(adj1,
-      Option(aObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L), Seq($"src"))
+    val (adj, _, p) = Adaptive.loopTable(
+      dir.union(dir.select($"dst".as("src"), $"src".as("dst"), $"weight")),
+      Seq($"src"))
     val state0 = barrier(
       spark.createDataset(seeds.distinct).toDF("source")
         .select($"source", $"source".as("id"), lit(0L).as("dist"))
         .repartition(p, $"source", $"id"))
-    ssspLoop(spark, adj, state0, rows0 = -1L, total0 = -1L, startIter = 0,
-      maxIter, checkpointDir.map(new graft.plans.CheckpointManager(spark, _)),
-      checkpointEvery, adjStep0 = None, runId)
+    ssspLoop(adj, state0, rows0 = -1L, total0 = -1L, startIter = 0, maxIter,
+      checkpointDir.map(ssspCheckpoint(spark, _, runId, checkpointEvery)))
   }
+
+  private def ssspCheckpoint(spark: org.apache.spark.sql.SparkSession,
+                             dir: String, runId: String,
+                             every: Int): LoopCheckpoint =
+    new LoopCheckpoint(spark, dir, "sssp", runId, every,
+      static = "adj", state = "state")
 
   /** Continue a [[weightedDistances]] run from durable state written via
     * its `checkpointDir` (same contract as the CC/PageRank/LPA resumes:
@@ -356,38 +343,17 @@ object Traversal {
                               checkpointEvery: Int = 5,
                               runId: String = "sssp-resume"): DataFrame = {
     import spark.implicits._
-    val ck = new graft.plans.CheckpointManager(spark, checkpointDir)
-    val step = ck.latestStep().getOrElse(
-      throw new IllegalStateException(s"no checkpoint under $checkpointDir"))
-    val meta = ck.meta(step)
-    val algo = meta.getOrElse("algo", "")
-    if (algo != "sssp")
-      throw new IllegalStateException(
-        s"not an sssp checkpoint under $checkpointDir (algo='$algo')")
-    val p = spark.sessionState.conf.numShufflePartitions
-    val adjStep = meta("adjStep").toInt
-    val adj = ck.load(adjStep, "adj").repartition(p, $"src").cutLineage()
-    val state = barrier(
-      ck.load(step, "state").repartition(p, $"source", $"id"))
-    ssspLoop(spark, adj, state, meta("rows").toLong, meta("total").toLong,
-      meta("iter").toInt, maxIter, Some(ck), checkpointEvery, Some(adjStep),
-      runId)
+    val ck = ssspCheckpoint(spark, checkpointDir, runId, checkpointEvery)
+    val (meta, adj, state) = ck.open(Seq($"src"), Seq($"source", $"id"))
+    ssspLoop(adj, state, meta("rows").toLong, meta("total").toLong,
+      meta("iter").toInt, maxIter, Some(ck))
   }
 
-  private def ssspLoop(spark: org.apache.spark.sql.SparkSession,
-                       adj: DataFrame, state0: DataFrame,
+  private def ssspLoop(adj: DataFrame, state0: DataFrame,
                        rows0: Long, total0: Long, startIter: Int,
-                       maxIter: Int,
-                       ck: Option[graft.plans.CheckpointManager],
-                       checkpointEvery: Int,
-                       adjStep0: Option[Int],
-                       runId: String): DataFrame = {
+                       maxIter: Int, ck: Option[LoopCheckpoint]): DataFrame = {
+    val spark = adj.sparkSession
     import spark.implicits._
-    var state = state0
-    var (rows, total) = (rows0, total0)
-    var adjStep = adjStep0
-    var converged = false
-    var it = startIter
     // Chunked relaxation (guide §1.2): `chunk` Bellman–Ford rounds
     // compose into one barrier job. Valid because the state is MONOTONE
     // (rows only appear, per-pair dists only decrease): an unchanged
@@ -402,53 +368,31 @@ object Traversal {
     // graphs (dense co-occurrence: 2-3 rounds) a 4-chunk runs nearly 2×
     // the needed rounds (measured slower than per-round barriers), while
     // 2 still halves the job count on deep graphs.
-    val chunk = if (ck.isDefined) 1 else 2
-    while (!converged && it < maxIter) {
-      val t0 = System.nanoTime()
-      val rounds = math.min(chunk, maxIter - it)
-      it += rounds
-      var cur: DataFrame = state
-      var r = 0
-      while (r < rounds) {
-        cur = cur
-          .union(cur.join(adj, $"id" === $"src")
-            .select($"source", $"dst".as("id"), ($"dist" + $"weight").as("dist")))
-          .groupBy($"source", $"id")
-          .agg(min($"dist").as("dist"))
-        r += 1
-      }
-      val (next, m) = barrierObserved(cur,
-        count(lit(1)).as("n"), sum($"dist").as("s"))
-      val n = m("n").asInstanceOf[Long]
-      val s = Option(m("s")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      release(state)
-      state = next
-      converged = n == rows && s == total
-      rows = n; total = s
-      ck.foreach { c =>
-        c.appendMetrics(Seq(graft.graph.SuperstepMetrics(runId, "sssp", it,
-          rows, 0L, -1L, 0, (System.nanoTime() - t0) / 1000000)))
-        if (it % checkpointEvery == 0 && !converged && it < maxIter) {
-          // static weighted adjacency written once, at the first snapshot
-          val tables = Map("state" -> state) ++
-            (if (adjStep.isEmpty) Map("adj" -> adj) else Map.empty)
-          if (adjStep.isEmpty) adjStep = Some(it)
-          c.save(it, tables, Map(
-            "algo" -> "sssp", "iter" -> it.toString,
-            "rows" -> rows.toString, "total" -> total.toString,
-            "adjStep" -> adjStep.get.toString))
-        }
-      }
+    val rows = (o: Map[String, Any]) => o("n").asInstanceOf[Long]
+    val total = (o: Map[String, Any]) =>
+      Option(o("s")).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val out = iterate(state0, startIter, maxIter,
+        chunk = if (ck.isDefined) 1 else 2,
+        metrics = Seq(count(lit(1)).as("n"), sum($"dist").as("s")),
+        obs0 = Map("n" -> rows0, "s" -> total0),
+        stop = (prev, o) => rows(o) == rows(prev) && total(o) == total(prev),
+        onRound = r => ck.foreach(_.record(r, r.state, adj, Map(
+          "rows" -> rows(r.obs).toString, "total" -> total(r.obs).toString),
+          edgesIn = rows(r.obs)))) { (cur, _, _) =>
+      cur
+        .union(cur.join(adj, $"id" === $"src")
+          .select($"source", $"dst".as("id"), ($"dist" + $"weight").as("dist")))
+        .groupBy($"source", $"id")
+        .agg(min($"dist").as("dist"))
     }
-    if (!converged) { // release before throwing — a failed query must
-      release(state) //  not pin checkpoint blocks for the rest of the JVM
-      adj.releaseLineage()
+    adj.releaseLineage()
+    if (!out.stopped) { // release before throwing — a failed query must
+      release(out.state) // not pin checkpoint blocks for the rest of the JVM
       throw new IllegalStateException(
         s"weightedDistances: no fixpoint in $maxIter rounds " +
           "(negative weights, or raise maxIter)")
     }
-    adj.releaseLineage()
-    state
+    out.state
   }
 
   /** Seed-restricted distance statistics over seeds × reachable vertices

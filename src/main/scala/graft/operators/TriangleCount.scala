@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.graph.{Edge, GraphIO}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftLineage, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -177,26 +177,14 @@ object TriangleCount {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val spark = edges.sparkSession
     import spark.implicits._
-    org.apache.spark.sql.GraftLineage.scopedBlocks(spark) {
-      var e = org.apache.spark.sql.GraftLineage.barrier(GraphIO.canonical(edges).toDF())
-      var m = e.count()
-      var changed = m > 0
-      var iter = 0
-      while (changed && iter < maxIter) {
-        iter += 1
-        val support = commonNeighborsPerEdge(e.as[Edge]) // eager barrier
-        val (next, obs) = org.apache.spark.sql.GraftLineage.barrierObserved(
-          support.filter($"common_neighbors" >= k - 2).select($"src", $"dst"),
-          org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        val m2 = Option(obs("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        org.apache.spark.sql.GraftLineage.release(e)
-        org.apache.spark.sql.GraftLineage.release(support)
-        e = next
-        changed = m2 != m
-        m = m2
+    // the support table is the step's own barrier; the loop frees it
+    // once the round's edges have materialized
+    GraftLineage.scopedBlocks(spark) {
+      Traversal.peel(GraphIO.canonical(edges).toDF(), functions.count(lit(1)).as("n"),
+          maxIter, "k-truss") { e =>
+        commonNeighborsPerEdge(e.as[Edge]) // eager barrier
+          .filter($"common_neighbors" >= k - 2).select($"src", $"dst")
       }
-      require(!changed, s"k-truss did not converge in $maxIter iterations")
-      e
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, GraftLineage, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Scale-adaptive partition counts for the iterative operators' loop
   * tables (guide §2.2/§2.5: derive partitioning from input size instead
@@ -36,27 +37,28 @@ object Adaptive {
     math.max(1L, math.min(conf.toLong, want)).toInt
   }
 
-  /** Re-key an already-materialized (barrier'd) loop table down to the
-    * adaptive partition count when that is smaller than the session
-    * setting; at scale (adaptive == session) this returns the input
-    * untouched — no second pass. The superseded barrier's blocks are
-    * released. Returns the frame to use plus the effective count. */
-  def rekey(df: org.apache.spark.sql.DataFrame, rows: Long,
-            keys: Seq[org.apache.spark.sql.Column])
-      : (org.apache.spark.sql.DataFrame, Int) = {
+  /** The iterative operators' loop-table prelude: hash-partition `df`
+    * by `keys` at the session count in ONE barrier job that also
+    * observes its row count, then re-key it down to [[forRows]] when that
+    * is much smaller (at scale, adaptive == session, this adds no second
+    * pass). Returns the loop table, its row count and the partition
+    * count the loop should use for its state tables. */
+  def loopTable(df: DataFrame, keys: Seq[Column]): (DataFrame, Long, Int) = {
     val spark = df.sparkSession
     val conf = spark.sessionState.conf.numShufflePartitions
+    val (table, obs) = GraftLineage.barrierObserved(
+      df.repartition(conf, keys: _*), count(lit(1)).as("n"))
+    val rows = obs("n").asInstanceOf[Long]
     val p = forRows(spark, rows)
     // re-keying costs one extra pass over the table — only worth it when
     // the task-count reduction is substantial (≥4×); marginal shrinks
     // (e.g. 32 → 10 on a loop that converges in 3 rounds) measured as a
     // net loss on the bench host
-    if (p * 4 > conf) (df, conf)
+    if (p * 4 > conf) (table, rows, conf)
     else {
-      val re = org.apache.spark.sql.GraftLineage.barrier(
-        df.repartition(p, keys: _*))
-      org.apache.spark.sql.GraftLineage.release(df)
-      (re, p)
+      val re = GraftLineage.barrier(table.repartition(p, keys: _*))
+      GraftLineage.release(table)
+      (re, rows, p)
     }
   }
 }

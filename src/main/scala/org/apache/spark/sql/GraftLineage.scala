@@ -149,23 +149,109 @@ object GraftLineage {
     * the caller frees the result itself with `releaseLineage()` when
     * done. Tracking is thread-local (not a global block-store diff), so
     * concurrent calls on one session are safe; a nested scope's kept
-    * result is handed to the parent scope, which releases it in turn. */
+    * result is handed to the parent scope, which releases it in turn.
+    * When `body` throws, every barrier it created is released: a
+    * top-level scope has no parent that could free them later. */
   def scopedBlocks[T](spark: SparkSession)(body: => Dataset[T]): Dataset[T] = {
     val scope = scala.collection.mutable.Set.empty[Int]
     scopeStack.set(scope :: scopeStack.get())
+    var keep = Set.empty[Int]
     try {
       val out = body
-      val keep = plannedRddIds(out)
-      val persistent = spark.sparkContext.getPersistentRDDs
-      (scope.toSet -- keep).foreach(id =>
-        persistent.get(id).foreach(_.unpersist(blocking = false)))
+      keep = plannedRddIds(out)
       out
+    } finally {
+      unpersistIds(spark.sparkContext, scope.toSet -- keep)
+      val rest = scopeStack.get().tail
+      scopeStack.set(rest)
+      rest.headOption.foreach(_ ++= keep)
+    }
+  }
+
+  /** Unpersist those of `ids` that are still persisted (ids already
+    * freed are skipped, so no block is freed twice). */
+  private def unpersistIds(sc: org.apache.spark.SparkContext, ids: Iterable[Int]): Unit =
+    if (ids.nonEmpty) {
+      val persistent = sc.getPersistentRDDs
+      ids.foreach(id => persistent.get(id).foreach(_.unpersist(blocking = false)))
+    }
+
+  /** A finished round of [[iterate]]: the state barrier, the iteration
+    * count reached, the metrics observed on that barrier, whether `stop`
+    * fired, whether another round follows, and the round's wall time. */
+  final case class Round(state: DataFrame, iter: Int, obs: Map[String, Any],
+                         stopped: Boolean, continues: Boolean, ms: Long)
+
+  /** The fixpoint loop every iterative operator runs, with its block
+    * lifecycle owned here instead of hand-placed at each call site.
+    *
+    * Each round composes `min(chunk, maxIter - iter)` calls of `step`
+    * into one plan and materializes it with ONE [[barrierObserved]] job
+    * (a plain [[barrier]] when `metrics` is empty), so the convergence
+    * read rides the round's own job (README lessons 3 and 12). `step`
+    * gets the state, the iteration it computes, and the observation of
+    * the barrier its input came from: `Some(obs)` for a round's first
+    * step (`obs0` before the first round), `None` for a later step of
+    * the same chunk, whose input is the previous step's unmaterialized
+    * plan. After a round `stop(previous obs, obs)` may end the loop.
+    *
+    * Lifecycle: the loop owns `state0`. A superseded state is freed only
+    * once its successor has materialized; barriers a step makes for
+    * itself live for its round; frames in `retain` (static tables a
+    * step reads) are never freed. When `step`, `stop` or `onRound`
+    * throws, every barrier the loop holds is freed before the throw
+    * propagates. The returned state is the caller's to release (inside
+    * a [[scopedBlocks]] scope it is handed to that scope). Returns the
+    * last round (`state0` as round `startIter` when none ran).
+    *
+    * Checkpointed runs pass `chunk = 1`: a durable snapshot needs every
+    * iteration's state materialized. */
+  def iterate(state0: DataFrame, startIter: Int, maxIter: Int, chunk: Int,
+              metrics: Seq[Column] = Nil,
+              obs0: Map[String, Any] = Map.empty,
+              retain: Seq[Dataset[_]] = Nil,
+              stop: (Map[String, Any], Map[String, Any]) => Boolean = (_, _) => false,
+              onRound: Round => Unit = _ => ())(
+      step: (DataFrame, Int, Option[Map[String, Any]]) => DataFrame): Round = {
+    require(chunk >= 1, s"iterate: chunk must be >= 1, got $chunk")
+    val sc = state0.sparkSession.sparkContext
+    val retained = retain.flatMap(plannedRddIds).toSet
+    def free(ids: Iterable[Int]): Unit = unpersistIds(sc, ids.toSet -- retained)
+    // barriers made on this thread during a round (the state barrier and
+    // whatever a step materializes for itself)
+    val made = scala.collection.mutable.Set.empty[Int]
+    scopeStack.set(made :: scopeStack.get())
+    var last = Round(state0, startIter, obs0, stopped = false, continues = false, 0L)
+    var ok = false
+    try {
+      while (!last.stopped && last.iter < maxIter) {
+        val t0 = System.nanoTime()
+        val steps = math.min(chunk, maxIter - last.iter)
+        var cur = step(last.state, last.iter, Some(last.obs))
+        for (s <- 1 until steps) cur = step(cur, last.iter + s, None)
+        val (next, obs) =
+          if (metrics.isEmpty) (barrier(cur), Map.empty[String, Any])
+          else barrierObserved(cur, metrics: _*)
+        val prev = last
+        last = prev.copy(state = next, iter = prev.iter + steps)
+        val live = plannedRddIds(next)
+        free(plannedRddIds(prev.state) -- live)
+        val ms = (System.nanoTime() - t0) / 1000000
+        val stopped = stop(prev.obs, obs)
+        last = last.copy(obs = obs, stopped = stopped,
+          continues = !stopped && last.iter < maxIter, ms = ms)
+        onRound(last)
+        free(made -- live)
+        made.clear()
+      }
+      ok = true
+      last
     } finally {
       val rest = scopeStack.get().tail
       scopeStack.set(rest)
-      // the parent scope inherits everything (released ids are absent
-      // from getPersistentRDDs by then — double-release is a no-op)
-      rest.headOption.foreach(_ ++= scope)
+      val live = plannedRddIds(last.state)
+      if (ok) rest.headOption.foreach(_ ++= live -- retained)
+      else free(made ++ live)
     }
   }
 

@@ -156,8 +156,8 @@ class CCPropertySpec extends SparkSpec {
   // One sampled edge per round: on a forest each round contracts at most
   // that edge (a forest stays duplicate-free under contraction), so the
   // run takes at least one superstep per edge. The graph stays well under
-  // maxRounds. A round whose Bernoulli pre-sample comes up empty contracts
-  // nothing.
+  // maxRounds. A round whose Bernoulli pre-sample comes up empty takes
+  // the first edge instead, so every superstep contracts one edge.
   test("sampled strategy, sampleHardCap = 1: at most one edge contracted per superstep") {
     val forest = (0L until 11L).map(i => (i, i + 1)) ++ (21L until 28L).map(i => (20L, i))
     val res = ConnectedComponents.run(
@@ -167,6 +167,7 @@ class CCPropertySpec extends SparkSpec {
       UnionFind.components(forest).toMap
     res.metrics.head.edgesIn shouldBe forest.size.toLong
     res.metrics.foreach(m => (m.edgesIn - m.edgesOut) should (be >= 0L and be <= 1L))
+    res.metrics.foreach(m => m.edgesOut should be < m.edgesIn)
     res.metrics.size should (be >= forest.size and be < Config().maxRounds)
     res.metrics.last.edgesOut shouldBe 0L
   }

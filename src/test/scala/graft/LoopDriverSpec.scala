@@ -1,0 +1,176 @@
+package graft
+
+import graft.graph.Edge
+import graft.operators.{LabelPropagation, StronglyConnected, Traversal, TriangleCount}
+import graft.plans.{CheckpointManager, LoopCheckpoint}
+import org.apache.spark.sql.{DataFrame, GraftLineage}
+import org.apache.spark.sql.functions._
+import java.nio.file.Files
+
+/** The contract of the loop driver `GraftLineage.iterate`, the
+  * checkpoint helper `LoopCheckpoint`, and the failure cleanup of
+  * `GraftLineage.scopedBlocks`. */
+class LoopDriverSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** (id, v) with v = 0, barrier'd on 4 partitions by id. */
+  private def counter(n: Int): DataFrame =
+    GraftLineage.barrier(spark.range(n).select($"id", lit(0L).as("v")).repartition(4, $"id"))
+
+  /** v + 1 per row, through one shuffle. */
+  private def bump(df: DataFrame): DataFrame =
+    df.groupBy($"id").agg((sum($"v") + 1L).as("v"))
+
+  test("after each round only the live state and the caller's static tables are persisted") {
+    val before = persisted
+    val static = GraftLineage.barrier(spark.range(5).toDF("k"))
+    val staticIds = GraftLineage.plannedRddIds(static)
+    // (persisted, expected) as each round starts
+    val seen = scala.collection.mutable.Buffer.empty[(Set[Int], Set[Int])]
+    val out = GraftLineage.iterate(counter(8), 0, 4, chunk = 1) { (s, _, _) =>
+      seen += ((persisted -- before, GraftLineage.plannedRddIds(s) ++ staticIds))
+      // a step's own barrier lives for its round only
+      bump(GraftLineage.barrier(s))
+    }
+    seen.size shouldBe 4
+    seen.foreach { case (live, expect) => live shouldBe expect }
+    (persisted -- before) shouldBe (GraftLineage.plannedRddIds(out.state) ++ staticIds)
+    out.state.agg(max($"v")).head().getLong(0) shouldBe 4L
+    GraftLineage.release(out.state); GraftLineage.release(static)
+    persisted shouldBe before
+  }
+
+  test("a chunk = k round is one Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // with AQE off, jobs = driver actions (AQE runs each shuffle stage
+    // as its own job)
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val state0 = counter(16)
+      def settle(): Int = {
+        var prev = -1
+        var spins = 0
+        while (jobs.get() != prev && spins < 50) {
+          prev = jobs.get(); Thread.sleep(100); spins += 1
+        }
+        prev
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val out = GraftLineage.iterate(state0, 0, 6, chunk = 3,
+          metrics = Seq(max($"v").as("mx")))((s, _, _) => bump(s))
+      settle() shouldBe 2
+      out.iter shouldBe 6
+      out.obs("mx") shouldBe 6L
+      GraftLineage.release(out.state)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
+  }
+
+  test("stop and maxIter end the loop where they should") {
+    val steps = scala.collection.mutable.Buffer.empty[(Int, Boolean)]
+    def run(maxIter: Int, chunk: Int, stopAt: Long) = {
+      steps.clear()
+      val out = GraftLineage.iterate(counter(4), 0, maxIter, chunk,
+          metrics = Seq(max($"v").as("mx")), obs0 = Map("mx" -> 0L),
+          stop = (prev, o) => o("mx").asInstanceOf[Long] >= stopAt &&
+            prev("mx").asInstanceOf[Long] < stopAt) { (s, i, obs) =>
+        steps += ((i, obs.isDefined))
+        bump(s)
+      }
+      GraftLineage.release(out.state)
+      (out.iter, out.stopped, out.obs("mx"))
+    }
+    run(maxIter = 10, chunk = 1, stopAt = 3L) shouldBe ((3, true, 3L))
+    steps shouldBe Seq((0, true), (1, true), (2, true))
+    run(maxIter = 3, chunk = 1, stopAt = 100L) shouldBe ((3, false, 3L))
+    // chunks of 2 and a last chunk of 1; only a round's first step sees
+    // an observation
+    run(maxIter = 5, chunk = 2, stopAt = 100L) shouldBe ((5, false, 5L))
+    steps shouldBe Seq((0, true), (1, false), (2, true), (3, false), (4, true))
+    // stop is read per round, so a mid-chunk fixpoint ends at the chunk
+    run(maxIter = 10, chunk = 2, stopAt = 3L) shouldBe ((4, true, 4L))
+    // no round at all when startIter >= maxIter
+    val idle = GraftLineage.iterate(counter(2), 3, 3, 1)((s, _, _) => bump(s))
+    idle.iter shouldBe 3
+    idle.stopped shouldBe false
+    GraftLineage.release(idle.state)
+  }
+
+  test("a checkpointed run takes one step per barrier") {
+    val edges = graft.graph.Generators.random(spark, 300, 450, seed = 13L)
+    val dir = Files.createTempDirectory("graft-loop-ckpt").toString
+    val res = LabelPropagation.run(edges, cfg = LabelPropagation.Config(
+      maxIter = 7, checkpointEvery = 100, checkpointDir = Some(dir), runId = "ld"))
+    // one metrics row per barrier: the rows count 1, 2, 3, … (an
+    // unchecked run composes 2 updates per barrier)
+    val steps = new CheckpointManager(spark, dir).loadMetrics()
+      .filter($"runId" === "ld").select($"superstep").as[Int].collect().sorted
+    steps.toSeq shouldBe (1 to res.iterations)
+    GraftLineage.release(res.labels)
+  }
+
+  test("a step that throws on round 3 leaves no persisted RDD behind") {
+    val before = persisted
+    val e = intercept[IllegalStateException] {
+      GraftLineage.iterate(counter(8), 0, 10, chunk = 1,
+          metrics = Seq(max($"v").as("mx"))) { (s, i, _) =>
+        if (i == 2) throw new IllegalStateException("boom")
+        GraftLineage.barrier(s) // a step-owned barrier too
+        bump(s)
+      }
+    }
+    e.getMessage shouldBe "boom"
+    persisted shouldBe before
+    // a stop predicate that throws is cleaned up the same way
+    intercept[ArithmeticException] {
+      GraftLineage.iterate(counter(8), 0, 10, chunk = 2,
+        stop = (_, _) => throw new ArithmeticException("stop"))((s, _, _) => bump(s))
+    }
+    persisted shouldBe before
+  }
+
+  test("LoopCheckpoint.open throws on an empty directory and on the wrong algo tag") {
+    val empty = Files.createTempDirectory("graft-loop-none").toString
+    def ck(dir: String, algo: String) =
+      new LoopCheckpoint(spark, dir, algo, "t", 1, static = "adj", state = "state")
+    val none = the[IllegalStateException] thrownBy ck(empty, "sssp").open(Nil, Nil)
+    none.getMessage shouldBe s"no checkpoint under $empty"
+    val dir = Files.createTempDirectory("graft-loop-tag").toString
+    new CheckpointManager(spark, dir).save(1, Map("state" -> spark.range(2).toDF("id")),
+      Map("algo" -> "lpa", "iter" -> "1", "adjStep" -> "1"))
+    val wrong = the[IllegalStateException] thrownBy ck(dir, "sssp").open(Nil, Nil)
+    wrong.getMessage shouldBe s"not an sssp checkpoint under $dir (algo='lpa')"
+    val wrongPr = the[IllegalStateException] thrownBy ck(dir, "pagerank").open(Nil, Nil)
+    wrongPr.getMessage shouldBe s"not a pagerank checkpoint under $dir (algo='lpa')"
+  }
+
+  test("non-converging peeling loops free every block they made when they throw") {
+    // K4 plus a pendant path: every loop below needs a second round to
+    // see its fixpoint, so maxIter = 1 makes each of them throw from
+    // inside its block scope
+    val k4 = for (u <- 0L until 4L; v <- (u + 1) until 4L) yield Edge(u, v)
+    val edges = spark.createDataset(k4 ++ Seq(Edge(3L, 4L), Edge(4L, 5L)))
+    val dag = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val calls = Seq[(String, () => DataFrame)](
+      "kCoreVertices" -> (() => Traversal.kCoreVertices(edges, k = 3, maxIter = 1)),
+      "coreness" -> (() => Traversal.coreness(edges, maxIter = 1)),
+      "dagLevels" -> (() => StronglyConnected.dagLevels(dag, maxRounds = 1)),
+      "kTruss" -> (() => TriangleCount.kTruss(edges, k = 4, maxIter = 1)))
+    for ((name, call) <- calls) withClue(name) {
+      val before = persisted
+      val e = the[IllegalArgumentException] thrownBy call()
+      e.getMessage should include("did not converge")
+      persisted shouldBe before
+    }
+  }
+}
