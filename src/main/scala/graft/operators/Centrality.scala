@@ -90,12 +90,12 @@ object Centrality {
     * inside the sum (not on the sum) so an unrolled SQL oracle can
     * mirror the arithmetic exactly.
     *
-    * Scale: the plan is PageRank's (one join + one partial-agg'd hash
-    * agg per iteration, adjacency hash-partitioned by src once, rank
-    * side partitioned by id from its own groupBy); m_t is OBSERVED in
-    * iteration t's materialization job and enters iteration t+1 as a
-    * one-row broadcast, so there is one job per iteration and one
-    * compiled plan for all of them. Isolated vertices don't occur in an
+    * Scale: the plan is PageRank's (adjacency keyed by src and score
+    * keyed by id at one loop count, so the join needs no exchange; one
+    * exchange of the messages by dst and their sum, see [[sendSum]]);
+    * m_t is OBSERVED in iteration t's materialization job and enters
+    * iteration t+1 as a one-row broadcast, so there is one compiled plan
+    * for all of them. Isolated vertices don't occur in an
     * edge-derived vertex set (every vertex has degree ≥ 1). */
   def eigenvector(edges: Dataset[Edge], maxIter: Int = 20): DataFrame =
     eigenvector(edges, maxIter, IterChunk)
@@ -115,20 +115,18 @@ object Centrality {
     // equality re-verified after this change (the only float drift is the
     // removed per-iteration divisions, ~1e-13 relative, absorbed by the
     // 6 dp output round).
-    fromOnes(edges, "score") { (adj, z0) =>
+    fromOnes(edges, "score") { (adj, z0, p) =>
       val out = iterate(z0, 0, maxIter, chunk, metrics = Seq(max($"v").as("mx")),
           obs0 = Map("mx" -> 1.0)) {
         case (z, _, Some(obs)) => // a chunk's first update divides by m
-          adj.as("e")
-            .join(z.as("x"), $"e.src" === $"x.id")
+          sendSum(adj.as("e")
+            .join(z.hint("shuffle_hash").as("x"), $"e.src" === $"x.id")
             .crossJoin(broadcast(Seq(obs("mx").asInstanceOf[Double]).toDF("m")))
-            .groupBy($"e.dst".as("id"))
-            .agg(sum($"x.v" / $"m").as("v"))
+            .select($"e.dst".as("id"), ($"x.v" / $"m").as("c")), p)
         case (cur, _, None) =>
-          adj.as("e")
-            .join(cur.as("x"), $"e.src" === $"x.id")
-            .groupBy($"e.dst".as("id"))
-            .agg(sum($"x.v").as("v"))
+          sendSum(adj.as("e")
+            .join(cur.hint("shuffle_hash").as("x"), $"e.src" === $"x.id")
+            .select($"e.dst".as("id"), $"x.v".as("c")), p)
       }
       val res = barrier(
         out.state.crossJoin(broadcast(Seq(out.obs("mx").asInstanceOf[Double]).toDF("m")))
@@ -146,7 +144,7 @@ object Centrality {
     * materialized output; an empty edge set yields an empty
     * (id, `score`) table. */
   private def fromOnes(edges: Dataset[Edge], score: String)(
-      loop: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      loop: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val (adj, rows, p) = Adaptive.loopTable(
@@ -159,9 +157,20 @@ object Centrality {
         loop(adj, barrier(
           adj.select($"src".as("id")).distinct()
             .select($"id", lit(1.0).as("v"))
-            .repartition(p, $"id")))
+            .repartition(p, $"id")), p)
     } finally release(adj)
   }
+
+  /** The receiving side of a message step over a loop table (PageRank,
+    * eigenvector, katz): the messages (id, c), keyed by their receiver
+    * `id`, take ONE exchange at the loop count p and are summed per
+    * receiver on that partitioning, so the result (id, `out`) is
+    * partitioned like the state and the adjacency. The senders' join
+    * hints the state `shuffle_hash`: both sides are already partitioned
+    * alike, and unhinted, AQE turned a chunk's later steps into
+    * broadcast joins (one more job each). */
+  private[operators] def sendSum(msgs: DataFrame, p: Int, out: String = "v"): DataFrame =
+    msgs.repartition(p, col("id")).groupBy(col("id")).agg(sum(col("c")).as(out))
 
   /** Seed-restricted betweenness centrality (Brandes '01, restricted to
     * a deterministic source set — the standard scale substitute for the
@@ -323,14 +332,14 @@ object Centrality {
     // Chunked unrolling (see [[IterChunk]]): the affine update needs no
     // per-iteration scalar, so `steps` join+agg stages compose into ONE
     // barrier job — identical arithmetic per stage, 12 jobs → 2.
-    fromOnes(edges, "katz") { (adj, z0) =>
+    fromOnes(edges, "katz") { (adj, z0, p) =>
       val out = iterate(z0, 0, maxIter, chunk) { (cur, _, _) =>
         // every vertex in an edge-derived set has degree ≥ 1, so the
         // inner join reaches all of them — no left-join fallback needed
-        adj.as("e")
-          .join(cur.as("x"), $"e.src" === $"x.id")
-          .groupBy($"e.dst".as("id"))
-          .agg((lit(1.0) + lit(alpha) * sum($"x.v")).as("v"))
+        sendSum(adj.as("e")
+            .join(cur.hint("shuffle_hash").as("x"), $"e.src" === $"x.id")
+            .select($"e.dst".as("id"), $"x.v".as("c")), p)
+          .select($"id", (lit(1.0) + lit(alpha) * $"v").as("v"))
       }
       val res = barrier(out.state.select($"id", round($"v", 6).as("katz")))
       release(out.state)

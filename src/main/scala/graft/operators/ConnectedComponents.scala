@@ -620,13 +620,14 @@ object ConnectedComponents {
     // Round-6 fold: the edge count AND the round's active-vertex estimate
     // ride the edge materialization job itself as observed metrics —
     // round 5 paid one extra countDistinct aggregation (a full edge scan)
-    // plus one count() action per round on top of it. approx_count_distinct
-    // (HLL, ±2% typical) is sound for nEst: it only sizes the sample
-    // bound, which already carries (1+delta)=1.2 headroom, and prefix CC
-    // is exact on ANY sample — sample size affects round count, never
-    // correctness.
-    val vertEst =
-      (approx_count_distinct($"src") + approx_count_distinct($"dst")).as("n")
+    // plus one count() action per round on top of it. nEst is the
+    // distinct count of src ∪ dst: one HLL sketch per column, unioned, so
+    // a vertex seen in both columns counts once (±2% typical). It only
+    // sizes the sample bound, which already carries (1+delta)=1.2
+    // headroom, and prefix CC is exact on ANY sample — sample size
+    // affects round count, never correctness.
+    val vertEst = hll_sketch_estimate(
+      hll_union(hll_sketch_agg($"src"), hll_sketch_agg($"dst"))).as("n")
     val (edges00, m0) = barrierObserved(edges0.toDF(),
       count(lit(1)).as("c"), vertEst)
     var edges = edges00

@@ -13,15 +13,20 @@ import org.apache.spark.sql.functions._
   * the smallest label — no randomness, so results are reproducible across
   * runs and parallelism levels).
   *
-  * Scale: one iteration = join(bidirectional edges ⋈ labels on src) +
-  * two-level hash aggregation (groupBy (dst,label) count, then per-dst
-  * argmax via max_by) — the per-dst argmax uses `max_by(label-struct)`
-  * rather than a window sort, keeping it a pure hash agg with map-side
-  * partial aggregation (no per-key sort, skew-tolerant). The
-  * changed-vertex count is folded into the label materialization job via
-  * `Dataset.observe`, so each iteration is ONE Spark job (the separate
-  * count action was the dominant serial cost); superseded label
-  * snapshots release their checkpoint blocks eagerly.
+  * Scale: each iteration is one Pregel-style message step. The loop
+  * adjacency holds both directions of every edge plus one `(v, v, 0)`
+  * self row per vertex, hash-partitioned by src at the loop partition
+  * count, and the label state is hash-partitioned by id at that count.
+  * A step joins them with no exchange, so each vertex's own label (and
+  * seed flag) travels with the votes it sends. ONE exchange keyed by the
+  * receiving vertex follows; the (receiver, label) vote sum and the
+  * per-receiver argmax (`max(struct(vote, -label))`, an aggregate, no
+  * window) both run on that partitioning, and their output is
+  * already the next state, partitioned like the adjacency. The state is
+  * read once per step, so a chunk of steps composes linearly. The
+  * changed-vertex count is observed on the round's barrier
+  * (`Dataset.observe`), so there is no separate count action; under AQE
+  * each shuffle stage still runs as its own Spark job.
   */
 object LabelPropagation {
 
@@ -73,29 +78,34 @@ object LabelPropagation {
     res
   }
 
-  private def propagate(bidirRaw: DataFrame, vertsRaw: DataFrame,
+  private def propagate(bidir: DataFrame, vertsRaw: DataFrame,
                         extraVertices: Option[Dataset[Long]],
                         cfg: Config): Result = {
-    val spark = bidirRaw.sparkSession
+    val spark = bidir.sparkSession
     import spark.implicits._
-    // Hash-partition the bidirectional adjacency by src ONCE — the
-    // per-iteration labels join then reuses this partitioning (zero
-    // exchanges at the join; the barrier preserves outputPartitioning).
-    // Without the explicit repartition the barrier'd table keeps the
-    // upstream distinct's (src,dst) partitioning, which does NOT satisfy
-    // the join's src clustering — one full edge shuffle per iteration.
-    // Adaptive loop partitioning (guide §2: derive from input size —
-    // see graft.plans.Adaptive.loopTable).
-    val (bidir, _, _) = Adaptive.loopTable(bidirRaw, Seq($"src"))
     val verts = vertsRaw
       .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
       .distinct()
       .cutLineage()
-
-    val labels0 = verts.select($"id", $"id".as("label")).cutLineage()
+    val (adj, labels0, p) = loopTables(bidir, verts.select($"id", $"id".as("label")))
     release(verts)
-    loop(bidir, labels0, startIter = 0, cfg,
+    loop(adj, labels0, p, startIter = 0, cfg,
       cfg.checkpointDir.map(checkpoint(spark, _, "lpa", cfg)), seeded = false)
+  }
+
+  /** The loop's two tables at one partition count p: the adjacency
+    * (src, dst, weight) plus one `(v, v, 0)` self row per vertex of
+    * `state`, keyed by src (adaptive count, see
+    * [[graft.plans.Adaptive.loopTable]]), and `state` keyed by id. `bidir`
+    * has no self loops, so a row is a vote exactly when src ≠ dst. */
+  private def loopTables(bidir: DataFrame, state: DataFrame): (DataFrame, DataFrame, Int) = {
+    val spark = bidir.sparkSession
+    import spark.implicits._
+    val selfRows = state.select($"id".as("src"), $"id".as("dst"),
+      lit(0).cast(bidir.schema("weight").dataType).as("weight"))
+    val (adj, _, p) = Adaptive.loopTable(
+      bidir.select($"src", $"dst", $"weight").union(selfRows), Seq($"src"))
+    (adj, barrier(state.repartition(p, $"id")), p)
   }
 
   private def checkpoint(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -107,11 +117,20 @@ object LabelPropagation {
     * (`cfg.maxIter` counts TOTAL iterations across both runs, like the
     * CC/PageRank resumes). */
   def resume(spark: org.apache.spark.sql.SparkSession,
-             checkpointDir: String, cfg: Config = Config()): Result = {
+             checkpointDir: String, cfg: Config = Config()): Result =
+    reopen(spark, checkpoint(spark, checkpointDir, "lpa", cfg), cfg, seeded = false)
+
+  /** Resume header shared by [[resume]] and [[resumeSeeded]]. The
+    * snapshot's static table is the adjacency without self rows (its
+    * format before self rows existed, too), so they are rebuilt from the
+    * snapshot's state, which holds every vertex. */
+  private def reopen(spark: org.apache.spark.sql.SparkSession, ck: LoopCheckpoint,
+                     cfg: Config, seeded: Boolean): Result = {
     import spark.implicits._
-    val ck = checkpoint(spark, checkpointDir, "lpa", cfg)
     val (meta, bidir, labels) = ck.open(Seq($"src"), Seq($"id"))
-    loop(bidir, labels, meta("iter").toInt, cfg, Some(ck), seeded = false)
+    val (adj, state, p) = loopTables(bidir.filter($"src" =!= $"dst"), labels)
+    release(bidir); release(labels)
+    loop(adj, state, p, meta("iter").toInt, cfg, Some(ck), seeded)
   }
 
   /** SEEDED (semi-supervised) label propagation: a small labeled seed
@@ -125,30 +144,31 @@ object LabelPropagation {
     * pinned-iteration run is oracle-exact). Returns only the vertices
     * labeled after `cfg.maxIter` synchronous rounds (or convergence).
     *
-    * Scale shape = [[run]]: the adjacency is hash-partitioned by src
-    * once and every iteration is one co-partitioned join + two hash
-    * aggs, convergence observed in the round's own job. */
+    * Scale shape = [[run]]: one message step per iteration, the self
+    * row carrying the seed flag; votes from unlabeled neighbors are
+    * dropped before the exchange. */
   def runSeeded(edges: Dataset[Edge], seeds: DataFrame,
                 cfg: Config = Config()): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
     // canonical edges materialized once (adjacency + vertex set both
-    // consume it); adaptive loop partitioning — same rule as [[propagate]]
+    // consume it)
     val canon = GraphIO.canonical(edges).cutLineage()
-    val (bidir, _, _) =
-      Adaptive.loopTable(GraphIO.bidirectional(canon).toDF(), Seq($"src"))
     // duplicate seed rows would fan the vertex state out through the
     // left join — collapse to one deterministic label per id (smallest,
     // matching the tie rule); seeds not in the vertex set are ignored
     // (the graph defines the propagation domain)
     val seeds1 = seeds.groupBy($"id").agg(min($"label").as("seed_label"))
-    val labels0 = GraphIO.vertices(canon).toDF("id")
+    // materialized once: the self rows and the keyed state both read it
+    val labels = GraphIO.vertices(canon).toDF("id")
       .join(seeds1, Seq("id"), "left")
-      .select($"id", $"seed_label".as("label"),
-        $"seed_label".isNotNull.as("seed"))
+      .select($"id", $"seed_label".as("label"), $"seed_label".isNotNull.as("seed"))
       .cutLineage()
+    val (adj, labels0, p) = loopTables(
+      GraphIO.bidirectional(canon).toDF().withColumn("weight", lit(1L)), labels)
+    release(labels)
     canon.releaseLineage() // both consumers materialized above
-    loop(bidir, labels0, startIter = 0, cfg,
+    loop(adj, labels0, p, startIter = 0, cfg,
       cfg.checkpointDir.map(checkpoint(spark, _, "lpa_seeded", cfg)), seeded = true)
   }
 
@@ -157,78 +177,74 @@ object LabelPropagation {
     * `cfg.maxIter` counts TOTAL iterations). All-integer state → the
     * resumed trajectory is EXACTLY the uninterrupted one. */
   def resumeSeeded(spark: org.apache.spark.sql.SparkSession,
-                   checkpointDir: String, cfg: Config = Config()): Result = {
-    import spark.implicits._
-    val ck = checkpoint(spark, checkpointDir, "lpa_seeded", cfg)
-    val (meta, bidir, labels) = ck.open(Seq($"src"), Seq($"id"))
-    loop(bidir, labels, meta("iter").toInt, cfg, Some(ck), seeded = true)
-  }
+                   checkpointDir: String, cfg: Config = Config()): Result =
+    reopen(spark, checkpoint(spark, checkpointDir, "lpa_seeded", cfg), cfg, seeded = true)
 
   /** The propagation loop proper, resumable at any iteration boundary:
     * state is (label frame, iteration); seeded runs also carry the seed
     * flag (a snapshot holds the full state, unlabeled rows included).
-    * ONE job per round materializes the new labels while observing how
-    * many vertices changed (the convergence signal). */
-  private def loop(bidir: DataFrame, labels0: DataFrame, startIter: Int,
+    * `adj` is keyed by src and the state by id, both at `p`. */
+  private def loop(adj: DataFrame, labels0: DataFrame, p: Int, startIter: Int,
                    cfg: Config, ck: Option[LoopCheckpoint], seeded: Boolean): Result = {
-    val spark = bidir.sparkSession
+    val spark = adj.sparkSession
     import spark.implicits._
     val labelsOf = (df: DataFrame) =>
       if (seeded) df.select($"id", $"label", $"seed") else df.select($"id", $"label")
-    val seededUpdate = (labels: DataFrame) => {
-      val nbrCounts = bidir.as("e")
-        .join(labels.filter($"label".isNotNull).as("l"), $"e.src" === $"l.id")
-        .groupBy($"e.dst".as("id"), $"l.label".as("nl"))
-        .agg(count(lit(1)).as("c"))
-      val best = nbrCounts
-        .groupBy($"id")
-        .agg(max(struct($"c", (-$"nl").as("negl"))).as("m"))
-        .select($"id", (-$"m.negl").as("newLabel"))
-      labels.as("l")
-        .join(best.as("b"), Seq("id"), "left")
-        .select($"id",
-          when($"seed", $"label").otherwise(coalesce($"newLabel", $"label"))
-            .as("label"),
+    // One message step: every adjacency row sends its src's label to dst
+    // (the self row also the seed flag), one exchange by dst, then the
+    // (dst, label) vote sum and the per-dst argmax — heaviest vote (an
+    // unweighted row weighs 1, so most frequent), ties → smallest label —
+    // on that same partitioning. The self row is the receiver's own
+    // label, never a vote.
+    val seedOf = (c: org.apache.spark.sql.Column) =>
+      if (seeded) Seq(max(c).as("seed")) else Nil
+    // The state side is hinted `shuffle_hash`: both sides are already
+    // partitioned alike, so the join hashes each state partition in
+    // place. Unhinted, AQE turned a chunk's later steps, whose state is a
+    // small finished stage, into broadcast joins: one more job per step.
+    val step = (labels: DataFrame) => {
+      val msgs = adj.join(labels.hint("shuffle_hash"), $"src" === $"id")
+        .select(Seq($"dst", $"label", $"weight", ($"src" =!= $"dst").as("vote")) ++
+          (if (seeded) Seq($"seed") else Nil): _*)
+      // seeded runs count only labeled neighbors
+      val sent = if (seeded) msgs.filter(!$"vote" || $"label".isNotNull) else msgs
+      val perLabel = sent.repartition(p, $"dst")
+        .groupBy($"dst", $"label")
+        .agg(max($"vote").as("voted"), sum(when($"vote", $"weight")).as("c") +:
+          max(!$"vote").as("own") +: seedOf(when(!$"vote", $"seed")): _*)
+      val best = perLabel.groupBy($"dst".as("id"))
+        .agg(max(when($"voted", struct($"c", (-$"label").as("negl")))).as("m"),
+          max(when($"own", $"label")).as("old") +: seedOf($"seed"): _*)
+        .withColumn("newLabel", -$"m.negl")
+      if (seeded)
+        best.select($"id",
+          when($"seed", $"old").otherwise(coalesce($"newLabel", $"old")).as("label"),
           $"seed",
           (!$"seed" && $"newLabel".isNotNull &&
-            ($"label".isNull || $"newLabel" =!= $"label")).as("ch"))
-    }
-    val update = (cur: DataFrame) => {
-      // heaviest neighbor label (unweighted: weight ≡ 1 → most
-      // frequent); ties → smallest label. argmax as a single hash agg:
-      // max_by over (vote, -label).
-      val nbrCounts = bidir.as("e")
-        .join(cur.as("l"), $"e.src" === $"l.id")
-        .groupBy($"e.dst".as("id"), $"l.label".as("nl"))
-        .agg(sum($"e.weight").as("c"))
-      val best = nbrCounts
-        .groupBy($"id")
-        .agg(max(struct($"c", (-$"nl").as("negl"))).as("m"))
-        .select($"id", (-$"m.negl").as("newLabel"))
-      cur.as("l")
-        .join(best.as("b"), Seq("id"), "left")
-        .select($"id",
-          coalesce($"newLabel", $"label").as("label"),
-          ($"newLabel".isNotNull && $"newLabel" =!= $"label").as("ch"))
+            ($"old".isNull || $"newLabel" =!= $"old")).as("ch"))
+      else
+        best.select($"id",
+          coalesce($"newLabel", $"old").as("label"),
+          ($"newLabel".isNotNull && $"newLabel" =!= $"old").as("ch"))
     }
     // Chunked iterations (guide §1.2; the Centrality.IterChunk rule,
     // bounded at 2 because the exit is DATA-DEPENDENT): two synchronous
     // unseeded updates compose into one barrier job, convergence
     // observed on the chunk's LAST update — valid because a fixpoint is
-    // stable, so a mid-chunk fixpoint just makes the final update a
-    // no-op with changed = 0. Checkpointed runs keep one barrier per
-    // iteration.
+    // stable, so a mid-chunk fixpoint just makes the final update a no-op
+    // with changed = 0. Seeded runs report the exact fixpoint iteration
+    // and checkpointed runs keep one barrier per iteration.
     val out = iterate(labels0, startIter, cfg.maxIter,
         chunk = if (seeded || ck.isDefined) 1 else 2,
         metrics = Seq(
           coalesce(sum(when($"ch", 1L).otherwise(0L)), lit(0L)).as("changed")),
         stop = (_, o) => o("changed").asInstanceOf[Long] == 0L,
-        onRound = r => ck.foreach(_.record(r, labelsOf(r.state), bidir,
-          Map("runId" -> cfg.runId),
+        onRound = r => ck.foreach(_.record(r, labelsOf(r.state),
+          adj.filter($"src" =!= $"dst"), Map("runId" -> cfg.runId),
           verticesActive = r.obs("changed").asInstanceOf[Long]))) {
-      (state, _, _) => (if (seeded) seededUpdate else update)(labelsOf(state))
+      (state, _, _) => step(labelsOf(state))
     }
-    release(bidir)
+    release(adj)
     val labels = labelsOf(out.state)
     Result(if (seeded) labels.filter($"label".isNotNull).select($"id", $"label") else labels,
       out.iter, out.stopped)

@@ -16,15 +16,16 @@ import org.apache.spark.sql.functions._
   * vertices only arise from the optional isolated-vertex set.
   *
   * Scale design: the edge table is weighted once up-front
-  * (`1/outdeg(src)`) and persisted — each iteration is then exactly one
-  * shuffle-join (ranks ⋈ weighted edges on src) + one hash aggregation
-  * (groupBy dst, partial agg absorbs in-degree skew). Convergence delta
-  * AND next iteration's dangling mass are folded into the rank
-  * materialization job via `Dataset.observe`, so each iteration is ONE
-  * Spark job — at 100 iterations that removes ~200 driver round-trips
-  * versus separate agg actions (the measured serial floor of the
-  * iterative suite). Rank tables are hash-partitioned by id throughout;
-  * superseded rank snapshots release their checkpoint blocks eagerly.
+  * (`1/outdeg(src)`) and hash-partitioned by src at the loop partition
+  * count; the rank state is hash-partitioned by id at that same count.
+  * Each iteration is then one Pregel-style message step: ranks ⋈
+  * weighted edges on src with no exchange, ONE exchange of the
+  * contributions keyed by dst, and their sum on that partitioning,
+  * which is also the next state's. Convergence delta AND next
+  * iteration's dangling mass are observed on the rank barrier
+  * (`Dataset.observe`), so there is no separate aggregation action;
+  * under AQE each shuffle stage still runs as its own Spark job.
+  * Superseded rank snapshots release their checkpoint blocks eagerly.
   */
 object PageRank {
 
@@ -187,7 +188,7 @@ object PageRank {
     // dmass = 0.0 the old rank expression d·(contrib + 0.0·rw) is
     // bit-identical to d·contrib. Checkpointed runs keep the observed
     // loop (resume needs the per-iteration dmass state).
-    loop(wEdges, ranks0, m0, if (personalized) None else Some(1.0 / n),
+    loop(wEdges, ranks0, p, m0, if (personalized) None else Some(1.0 / n),
       startIter = 0, cfg, cfg.checkpointDir.map(checkpoint(spark, _, cfg)),
       pinned = cfg.tol == 0.0 && cfg.checkpointDir.isEmpty && dangN == 0L)
   }
@@ -215,7 +216,8 @@ object PageRank {
     // the 6 dp rounds elsewhere) absorb. CC's resume is exact because
     // max over longs is order-independent.
     val rwLit = meta.get("rw").filter(_.nonEmpty).map(_.toDouble)
-    loop(wEdges, ranks, Map("dmass" -> meta("dmass").toDouble), rwLit,
+    loop(wEdges, ranks, spark.sessionState.conf.numShufflePartitions,
+      Map("dmass" -> meta("dmass").toDouble), rwLit,
       startIter = meta("iter").toInt, cfg, Some(ck), pinned = false)
   }
 
@@ -229,7 +231,7 @@ object PageRank {
     * per iteration, with the chunk kept small so plan size and size-only
     * estimates stay bounded. l1Delta is not computed on that path
     * (reported as NaN). */
-  private def loop(wEdges: DataFrame, ranks0: DataFrame, obs0: Map[String, Any],
+  private def loop(wEdges: DataFrame, ranks0: DataFrame, p: Int, obs0: Map[String, Any],
                    rwLit: Option[Double], startIter: Int, cfg: Config,
                    ck: Option[LoopCheckpoint], pinned: Boolean): Result = {
     val spark = wEdges.sparkSession
@@ -240,11 +242,12 @@ object PageRank {
     val rwCols = if (personalized) Seq(col("rw")) else Seq.empty[org.apache.spark.sql.Column]
     val ranksOf = (df: DataFrame) =>
       df.select(Seq($"id", $"rank") ++ rwCols :+ $"dangling": _*)
+    // wEdges (by src) and ranks (by id) share partition count p, so the
+    // join needs no exchange; see [[Centrality.sendSum]] for the rest
     val contribsOf = (ranks: DataFrame) =>
-      wEdges.as("e")
-        .join(ranks.as("r"), $"e.src" === $"r.id")
-        .groupBy($"e.dst".as("id"))
-        .agg(sum($"e.w" * $"r.rank").as("contrib"))
+      Centrality.sendSum(wEdges.as("e")
+        .join(ranks.hint("shuffle_hash").as("r"), $"e.src" === $"r.id")
+        .select($"e.dst".as("id"), ($"e.w" * $"r.rank").as("c")), p, "contrib")
     // personalized pinned runs rebuild the (1-d)·rw term from the static
     // restart-weight table each iteration — a co-partitioned id join
     // against the ranks0 barrier, which therefore stays alive to the end
@@ -280,7 +283,7 @@ object PageRank {
           val danglingMass = obs.get("dmass").asInstanceOf[Double]
           // ranks is the full vertex set → left join carries every
           // vertex, the old rank (for the delta), the restart weight and
-          // the dangling flag in one pass. ONE job: materialize the new
+          // the dangling flag in one pass. ONE action: materialize the new
           // ranks while observing the L1 delta and the next iteration's
           // dangling mass. The scalar dangling mass rides as a broadcast
           // one-row frame, not a literal: a changing literal is inlined

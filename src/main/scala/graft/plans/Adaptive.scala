@@ -25,7 +25,12 @@ import org.apache.spark.sql.functions.{count, lit}
   * The target is row-based, not byte-based, because these loop rows are
   * fixed-width (8-24 B): 100k rows ≈ 1-2 MB per task keeps a stage's
   * task count proportional to its data while staying far above the
-  * per-task scheduling cost. */
+  * per-task scheduling cost.
+  *
+  * A loop table never has ONE partition unless the session does: a
+  * 1-partition table claims `SinglePartition`, which matches no
+  * hash-partitioned state, so every step re-shuffled both sides of its
+  * join to the session count. */
 object Adaptive {
   val rowsPerPartition: Long = 100000L
 
@@ -42,20 +47,24 @@ object Adaptive {
     * observes its row count, then re-key it down to [[forRows]] when that
     * is much smaller (at scale, adaptive == session, this adds no second
     * pass). Returns the loop table, its row count and the partition
-    * count the loop should use for its state tables. */
+    * count the loop should use for its state tables and its exchanges.
+    * A table [[forRows]] would put in one partition is re-keyed to 2,
+    * so the state, the adjacency and a step's message exchange share one
+    * hash partitioning. */
   def loopTable(df: DataFrame, keys: Seq[Column]): (DataFrame, Long, Int) = {
     val spark = df.sparkSession
     val conf = spark.sessionState.conf.numShufflePartitions
     val (table, obs) = GraftLineage.barrierObserved(
       df.repartition(conf, keys: _*), count(lit(1)).as("n"))
     val rows = obs("n").asInstanceOf[Long]
-    val p = forRows(spark, rows)
+    val want = forRows(spark, rows)
     // re-keying costs one extra pass over the table — only worth it when
     // the task-count reduction is substantial (≥4×); marginal shrinks
     // (e.g. 32 → 10 on a loop that converges in 3 rounds) measured as a
     // net loss on the bench host
-    if (p * 4 > conf) (table, rows, conf)
+    if (want * 4 > conf) (table, rows, conf)
     else {
+      val p = math.max(2, want)
       val re = GraftLineage.barrier(table.repartition(p, keys: _*))
       GraftLineage.release(table)
       (re, rows, p)

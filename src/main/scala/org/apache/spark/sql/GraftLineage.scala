@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage barrier for iterative Dataset algorithms.
@@ -39,16 +41,12 @@ object GraftLineage {
     override def initialValue(): List[scala.collection.mutable.Set[Int]] = Nil
   }
 
-  /** `PartitioningCollection` can't survive on a leaf whose join
-    * siblings are gone — keep its first (primary) partitioning, exactly
-    * like Spark's own `LogicalRDD.fromDataset`. */
-  @annotation.tailrec
-  private def firstLeafPartitioning(
-      p: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
-      : org.apache.spark.sql.catalyst.plans.physical.Partitioning = p match {
-    case c: org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection =>
-      firstLeafPartitioning(c.partitionings.head)
-    case other => other
+  /** The members of a partitioning claim, a `PartitioningCollection`
+    * flattened (a projected alias makes one: `select(id, id as label)`
+    * over a hash(id) exchange is partitioned by both columns). */
+  private def members(p: Partitioning): Seq[Partitioning] = p match {
+    case c: PartitioningCollection => c.partitionings.flatMap(members)
+    case other => Seq(other)
   }
 
   /** Eagerly materialize `df`, truncating RDD lineage, logical plan AND
@@ -86,26 +84,38 @@ object GraftLineage {
         // adaptive plan, so recover the REAL partitioning/ordering from
         // `a.executedPlan` — the physical plan whose output rows the
         // checkpointed RDD holds verbatim.
-        val (part0, order0) = (l.outputPartitioning, l.outputOrdering) match {
-          case (_: org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning, _) =>
+        // The finalized plan may name an output column by another exprId
+        // than the checkpoint's output (the optimizer drops the alias of
+        // `toDF("id")`), so its claims are renamed by output position.
+        val (part0, order0, rename) = l.outputPartitioning match {
+          case _: UnknownPartitioning =>
             val dfC = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
             dfC.queryExecution.executedPlan match {
               case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
                 val fp = a.executedPlan
-                (firstLeafPartitioning(fp.outputPartitioning), fp.outputOrdering)
-              case _ => (l.outputPartitioning, l.outputOrdering)
+                (fp.outputPartitioning, fp.outputOrdering, AttributeMap(fp.output.zip(l.output)))
+              case _ => (l.outputPartitioning, l.outputOrdering, AttributeMap.empty[Attribute])
             }
-          case other => other
+          case _ => (l.outputPartitioning, l.outputOrdering, AttributeMap.empty[Attribute])
         }
-        // Claims must be expressed over the rewrapped output attributes
-        // (same exprIds as the physical plan's); drop anything that isn't.
-        val outSet = org.apache.spark.sql.catalyst.expressions.AttributeSet(l.output)
-        val part = part0 match {
-          case e: org.apache.spark.sql.catalyst.expressions.Expression
-              if !e.references.subsetOf(outSet) => l.outputPartitioning
+        def onOutput[E <: Expression](e: E): E =
+          e.transform { case a: Attribute => rename.getOrElse(a, a) }.asInstanceOf[E]
+        // Claims must be expressed over the rewrapped output attributes;
+        // keep every member of a collection that is, drop the rest.
+        val outSet = AttributeSet(l.output)
+        val kept = members(part0).map {
+          case e: Expression => onOutput(e).asInstanceOf[Partitioning]
           case p => p
+        }.filter {
+          case e: Expression => e.references.subsetOf(outSet)
+          case _ => true
         }
-        val order = order0.takeWhile(_.references.subsetOf(outSet))
+        val part = kept match {
+          case Seq()    => l.outputPartitioning
+          case Seq(one) => one
+          case many     => PartitioningCollection(many)
+        }
+        val order = order0.map(onOutput(_)).takeWhile(_.references.subsetOf(outSet))
         // Same output attrs/rdd; recovered partitioning/ordering; fresh
         // default stats (conf.defaultSizeInBytes), no inherited constraints.
         val fresh = l.copy(outputPartitioning = part, outputOrdering = order)(

@@ -175,8 +175,8 @@ class CCPropertySpec extends SparkSpec {
   // A sample bound n^(1 + eps/2) * (1 + delta) at or above the edge count
   // collects the whole edge set: one superstep. Ten 10-cliques in a row,
   // joined by 9 bridges, have 459 edges; the default eps bounds the sample
-  // at ≈ 290 of them (n estimated as distinct src + distinct dst, ≈ 190),
-  // which misses some bridge, so a second superstep follows.
+  // at ≈ 148 of them (n estimated as the 100 distinct endpoints), which
+  // misses some bridge, so a second superstep follows.
   test("sampled strategy, large sampleEps: the whole edge set in one superstep") {
     val cliques = for (c <- 0L until 10L; u <- 0L until 10L; v <- (u + 1) until 10L)
       yield (10 * c + u, 10 * c + v)
@@ -191,6 +191,15 @@ class CCPropertySpec extends SparkSpec {
     val sampled = Config(strategy = CCStrategy.SampledContraction)
     metrics(sampled).size should be >= 2
     metrics(sampled.copy(sampleEps = 10.0)) shouldBe Seq((edges.size.toLong, 0L))
+  }
+
+  // The sample bound's n is the number of distinct endpoints: a chain's
+  // interior vertices sit in both columns and count once.
+  test("sampled strategy: the vertex estimate of a 300-vertex chain is within 5 % of 300") {
+    val chain = (0L until 299L).map(i => Edge(i, i + 1))
+    val res = ConnectedComponents.run(spark.createDataset(chain), None,
+      Config(strategy = CCStrategy.SampledContraction))
+    res.metrics.head.verticesActive.toDouble shouldBe 300.0 +- 15.0
   }
 
   test("edge order and orientation do not change the result") {

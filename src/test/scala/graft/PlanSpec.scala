@@ -1,5 +1,6 @@
 package graft
 
+import graft.graph.Edge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -304,6 +305,161 @@ class PlanSpec extends SparkSpec {
     // legacy rewrap loses both inputs' partitioning → extra shuffles of
     // the adjacency and state sides every iteration
     without should be > withRecovery
+  }
+
+  /** The partitioning a barrier recovered, flattened to the column
+    * names of each hash member (one Seq per member). */
+  private def recoveredHashKeys(b: DataFrame): (Seq[Seq[String]], Int) = {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, PartitioningCollection, Partitioning}
+    def members(p: Partitioning): Seq[Partitioning] = p match {
+      case c: PartitioningCollection => c.partitionings.flatMap(members)
+      case o => Seq(o)
+    }
+    val part = b.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.outputPartitioning
+      }.head
+    (members(part).collect { case h: HashPartitioning =>
+      h.expressions.flatMap(_.references.map(_.name)) }, part.numPartitions)
+  }
+
+  test("AQE ON: barrier keeps every member of a projected alias's partitioning") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftLineage
+    spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true" // suite default
+    // the alias above the exchange makes the plan partitioned by both
+    // id and label; keeping only the first member lost `id`
+    val b = GraftLineage.barrier(
+      spark.range(0, 100).repartition(4, $"id").select($"id", $"id".as("label")))
+    val (keys, n) = recoveredHashKeys(b)
+    keys should contain allOf (Seq("id"), Seq("label"))
+    n shouldBe 4
+    // a self-join re-instances the leaf's attributes, collection included
+    val self = b.as("x").join(b.as("y"), $"x.id" === $"y.label")
+    self.count() shouldBe 100L
+    shuffleNodeCount(self) shouldBe 0
+    GraftLineage.release(b, blocking = true)
+  }
+
+  test("AQE ON: barrier recovers the partitioning of a renamed range column") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftLineage
+    // toDF's alias is optimized away, so the finalized plan names the
+    // column by another exprId than the checkpoint's output
+    val b = GraftLineage.barrier(spark.range(0, 100).toDF("id").repartition(2, $"id"))
+    recoveredHashKeys(b) shouldBe ((Seq(Seq("id")), 2))
+    GraftLineage.release(b, blocking = true)
+  }
+
+  test("AQE ON: barrier recovers the partitioning of a renamed vertex set") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftLineage
+    val edges = spark.createDataset(Seq(Edge(1, 2), Edge(2, 3), Edge(5, 7)))
+    val b = GraftLineage.barrier(
+      graft.graph.GraphIO.vertices(edges).toDF("id").repartition(2, $"id"))
+    recoveredHashKeys(b) shouldBe ((Seq(Seq("id")), 2))
+    b.count() shouldBe 5L
+    GraftLineage.release(b, blocking = true)
+  }
+
+  test("AQE ON: a loop table below rowsPerPartition co-partitions with its state") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftLineage
+    import org.apache.spark.sql.functions.lit
+    val rows = 412L
+    rows should be < graft.plans.Adaptive.rowsPerPartition
+    val (adj, n, p) = graft.plans.Adaptive.loopTable(
+      spark.range(0, rows).select(($"id" % 50).as("src"), ($"id" % 47).as("dst")),
+      Seq($"src"))
+    n shouldBe rows
+    p should be >= 2 // a 1-partition table matches no hash-partitioned state
+    val state = GraftLineage.barrier(
+      spark.range(0, 50).select($"id", lit(1L).as("v")).repartition(p, $"id"))
+    val joined = adj.join(state, $"src" === $"id")
+    joined.count() shouldBe rows
+    shuffleNodeCount(joined) shouldBe 0
+    GraftLineage.release(adj, blocking = true)
+    GraftLineage.release(state, blocking = true)
+  }
+
+  /** Executed plans of the barrier jobs `body` runs that satisfy `round`,
+    * each flattened through its adaptive stages (the listener bus is
+    * async, hence the settle loop). */
+  private def roundPlans(round: String => Boolean)(body: => Unit)
+      : Seq[Seq[org.apache.spark.sql.execution.SparkPlan]] = {
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[org.apache.spark.sql.execution.SparkPlan]())
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      var prev = -1
+      while (plans.size() != prev) { prev = plans.size(); Thread.sleep(300) }
+    } finally spark.listenerManager.unregister(listener)
+    new java.util.ArrayList(plans).toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan])
+      .toSeq.filter(p => round(p.toString)).map(flatten)
+  }
+
+  /** Every round plan runs exactly `steps` shuffles (one per composed
+    * step: the receiver-keyed message exchange) and no broadcast. */
+  private def oneExchangePerStep(rounds: Seq[Seq[org.apache.spark.sql.execution.SparkPlan]],
+                                 steps: Int): Unit = {
+    rounds should not be empty
+    rounds.foreach { nodes =>
+      val shuffles = nodes.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+      withClue(nodes.head.toString.take(6000)) {
+        shuffles should have size steps
+        nodes.count(_.isInstanceOf[
+          org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]) shouldBe 0
+      }
+    }
+  }
+
+  /** A 41-vertex path plus 40 chords. */
+  private def loopEdges = {
+    import spark.implicits._
+    spark.createDataset((0L until 40L).flatMap(i => Seq(Edge(i, (i * 7 + 3) % 40), Edge(i, i + 1))))
+  }
+
+  test("AQE ON: every LPA step is one exchange (run, weighted, seeded)") {
+    import spark.implicits._
+    import graft.operators.LabelPropagation
+    spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true" // suite default
+    val edges = loopEdges
+    val cfg = LabelPropagation.Config(maxIter = 4)
+    val isRound = (p: String) => p.contains("CollectMetrics") && p.contains("AS changed")
+    // unseeded runs compose two steps per round
+    oneExchangePerStep(roundPlans(isRound) {
+      LabelPropagation.run(edges, cfg = cfg).labels.collect()
+    }, steps = 2)
+    oneExchangePerStep(roundPlans(isRound) {
+      LabelPropagation.runWeightedGraph(
+        edges.toDF().select($"src", $"dst", ($"src" % 3 + 1).as("weight")),
+        cfg = cfg).labels.collect()
+    }, steps = 2)
+    oneExchangePerStep(roundPlans(isRound) {
+      LabelPropagation.runSeeded(edges, Seq((0L, 7L), (20L, 5L)).toDF("id", "label"),
+        cfg = cfg).labels.collect()
+    }, steps = 1)
+  }
+
+  test("AQE ON: every pinned PageRank step is one exchange") {
+    import graft.operators.PageRank
+    spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true" // suite default
+    // a round's steps are its plan's only hinted shuffled-hash joins
+    val rounds = roundPlans(_.contains("ShuffledHashJoin")) {
+      PageRank.run(loopEdges, None, PageRank.Config(maxIter = 8, tol = 0.0)).ranks.collect()
+    }
+    rounds should have size 2 // two chunks of four composed steps
+    oneExchangePerStep(rounds, steps = 4)
   }
 
   test("triangle wedge enumeration is an equi-join on the apex (no cartesian/BNLJ)") {

@@ -218,6 +218,55 @@ class ResumeSpec extends SparkSpec {
       full
   }
 
+  test("LPA and seeded LPA resume from a snapshot whose adjacency has no self rows") {
+    // The snapshot format every LPA version writes: the label state of
+    // iteration k (seeded: every vertex, unlabeled ones too, with the
+    // seed flag) and the static both-directions adjacency with weight 1
+    // and no (v, v) self rows, under the same manifest keys. Resuming
+    // rebuilds the loop's self rows from the state.
+    import graft.operators.LabelPropagation
+    val edgeList = (0L until 12L).map(i => graft.graph.Edge(i, i + 1)) ++
+      Seq(graft.graph.Edge(3L, 9L), graft.graph.Edge(20L, 21L))
+    val edges = spark.createDataset(edgeList)
+    val bidir = edgeList.flatMap(e => Seq((e.src, e.dst, 1L), (e.dst, e.src, 1L)))
+      .toDF("src", "dst", "weight")
+    def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def writeOld(dir: String, algo: String, k: Int, state: org.apache.spark.sql.DataFrame): Unit =
+      new CheckpointManager(spark, dir).save(k, Map("labels" -> state, "bidir" -> bidir),
+        Map("runId" -> s"$algo-old", "algo" -> algo, "iter" -> k.toString,
+          "bidirStep" -> k.toString))
+
+    val full = LabelPropagation.run(edges, cfg = LabelPropagation.Config(maxIter = 20))
+    val dir = Files.createTempDirectory("graft-ckpt-lpa-old").toString
+    writeOld(dir, "lpa", 2, LabelPropagation.run(edges,
+      cfg = LabelPropagation.Config(maxIter = 2)).labels)
+    // (iteration counts may differ: the uninterrupted run composes two
+    // steps per barrier, a checkpointed one does not)
+    val resumed = LabelPropagation.resume(spark, dir, LabelPropagation.Config(maxIter = 20))
+    labelsOf(resumed.labels) shouldBe labelsOf(full.labels)
+
+    val seeds = Seq((0L, 7L), (12L, 5L)).toDF("id", "label")
+    val fullS = LabelPropagation.runSeeded(edges, seeds,
+      cfg = LabelPropagation.Config(maxIter = 30))
+    val at3 = LabelPropagation.runSeeded(edges, seeds,
+      cfg = LabelPropagation.Config(maxIter = 3)).labels
+    val verts = edgeList.flatMap(e => Seq(e.src, e.dst)).distinct.toDF("id")
+    val dirS = Files.createTempDirectory("graft-ckpt-slpa-old").toString
+    writeOld(dirS, "lpa_seeded", 3, verts.join(at3, Seq("id"), "left")
+      .join(seeds.select($"id", org.apache.spark.sql.functions.lit(true).as("seed")),
+        Seq("id"), "left")
+      .select($"id", $"label",
+        org.apache.spark.sql.functions.coalesce($"seed",
+          org.apache.spark.sql.functions.lit(false)).as("seed")))
+    val resumedS = LabelPropagation.resumeSeeded(spark, dirS,
+      LabelPropagation.Config(maxIter = 30))
+    resumedS.iterations shouldBe fullS.iterations
+    resumedS.converged shouldBe fullS.converged
+    labelsOf(resumedS.labels) shouldBe labelsOf(fullS.labels)
+    labelsOf(resumedS.labels).keySet should not contain 20L // unreached stays out
+  }
+
   test("weighted SSSP resumes from a mid-run snapshot to EXACTLY equal distances") {
     import graft.operators.Traversal
     val dir = Files.createTempDirectory("graft-ckpt-sssp").toString
