@@ -1699,7 +1699,9 @@ object SparkEntry {
          |SELECT id, CAST(count(*) AS DOUBLE) / CAST(sum(d) AS DOUBLE) AS closeness
          |FROM dist WHERE d > 0 GROUP BY id ORDER BY id""".stripMargin,
     // byd referenced twice (total + cumulative) → MATERIALIZED; the
-    // p90 compare stays in integers (cum·10 ≥ t·9) on both sides
+    // p90 compare stays in integers (cum·10 ≥ t·9) on both sides. An
+    // edge-free graph has no seeds and yields no row (the engine's empty
+    // seed rule), not one row of NULLs.
     "graph_diameter" ->
       s"""${multiSourceBfsCte(nationEdgesSql, centralitySeedK)},
          |pos AS (SELECT d FROM dist WHERE d > 0),
@@ -1710,7 +1712,7 @@ object SparkEntry {
          |  CAST(max(d) AS BIGINT) AS diameter,
          |  CAST(min(CASE WHEN c * 10 >= (SELECT t FROM tot) * 9 THEN d END)
          |    AS BIGINT) AS eff_d90
-         |FROM cum""".stripMargin,
+         |FROM cum HAVING count(*) > 0""".stripMargin,
     "digraph_stats" ->
       s"""WITH e AS MATERIALIZED ($coactivityDirectedEdgesSql),
          |outs AS MATERIALIZED (SELECT DISTINCT src AS id FROM e),

@@ -28,7 +28,9 @@ object QueryNet {
   val queries: Seq[String] = Seq(
     "eigencentrality", "sssp_weighted", "katz", "hits", "kcore3", "coreness",
     "ktruss4", "condensation_levels", "community_conductance", "modularity",
-    "pagerank", "pagerank_weighted", "ppr", "lpa", "lpa_weighted", "lpa_seeded")
+    "pagerank", "pagerank_weighted", "ppr", "lpa", "lpa_weighted", "lpa_seeded",
+    "bfs_hops", "harmonic_centrality", "closeness_centrality", "graph_diameter",
+    "betweenness", "random_walks", "walk_pairs", "scc_coactivity", "scc_condensation")
 
   val expectedResource = "expected/query_net.tsv"
 
