@@ -83,10 +83,10 @@ object SparkEntry {
         .orderBy("id")),
     // level-synchronous BFS from the smallest vertex (hop distances) —
     // over the CONNECTED supplier graph so the whole vertex set is gated
-    "bfs_hops" -> ((s, dir) => {
+    "bfs_hops" -> ((s, dir) => scopedBlocks(s) {
       // derivation materialized once: the source-pick aggregate and the
-      // BFS would otherwise each re-run the lineitem self-join (the
-      // harnesses sweep leftover blocks after every query)
+      // BFS would otherwise each re-run the lineitem self-join; the scope
+      // frees it once the BFS output is materialized
       val edges = EdgeDerivation.supplierCooccurrence(s, dir).cutLineage()
       val srcRow = edges.agg(min(least(col("src"), col("dst")))).head()
       if (srcRow.isNullAt(0)) // empty edge set → empty result, not an NPE
@@ -95,7 +95,7 @@ object SparkEntry {
     }),
     // seed-restricted harmonic centrality (one multi-source BFS from the
     // 8 lowest vertex ids; Σ 1/d, 6 dp)
-    "harmonic_centrality" -> ((s, dir) => {
+    "harmonic_centrality" -> ((s, dir) => scopedBlocks(s) {
       // seed pick + BFS share ONE materialized derivation (same rule as
       // bfs_hops)
       val edges = EdgeDerivation.supplierCooccurrenceByNation(s, dir).cutLineage()
@@ -103,7 +103,7 @@ object SparkEntry {
         .orderBy("id")
     }),
     // seed-restricted closeness (same BFS; reached/Σd — exact division)
-    "closeness_centrality" -> ((s, dir) => {
+    "closeness_centrality" -> ((s, dir) => scopedBlocks(s) {
       val edges = EdgeDerivation.supplierCooccurrenceByNation(s, dir).cutLineage()
       graft.operators.Centrality.closeness(edges, lowestVertexIds(edges, centralitySeedK))
         .orderBy("id")
@@ -128,7 +128,7 @@ object SparkEntry {
         .orderBy("id")),
     // seed-restricted diameter lower bound + exact integer-p90
     // effective diameter from one multi-source BFS
-    "graph_diameter" -> ((s, dir) => {
+    "graph_diameter" -> ((s, dir) => scopedBlocks(s) {
       val edges = EdgeDerivation.supplierCooccurrenceByNation(s, dir).cutLineage()
       graft.operators.Traversal.distanceStats(
         edges, lowestVertexIds(edges, centralitySeedK))

@@ -47,13 +47,12 @@ object Centrality {
     if (seeds.isEmpty) // empty graph ⇒ empty seed rule ⇒ empty table
       return spark.emptyDataFrame
         .select(lit(0L).as("id"), lit(0.0).as("harmonic")).limit(0)
-    val d = Traversal.multiSourceHopDistances(edges, seeds, maxHops)
-    val out = d.filter($"dist" > 0)
-      .groupBy($"id")
-      .agg(round(sum(lit(1.0) / $"dist".cast("double")), 6).as("harmonic"))
-    val res = barrier(out)
-    release(d)
-    res
+    scopedBlocks(spark) {
+      barrier(Traversal.multiSourceHopDistances(edges, seeds, maxHops)
+        .filter($"dist" > 0)
+        .groupBy($"id")
+        .agg(round(sum(lit(1.0) / $"dist".cast("double")), 6).as("harmonic")))
+    }
   }
 
   /** Seed-restricted closeness: c(v) = r(v) / Σ d(s,v) over the seeds
@@ -69,14 +68,13 @@ object Centrality {
     if (seeds.isEmpty) // empty graph ⇒ empty seed rule ⇒ empty table
       return spark.emptyDataFrame
         .select(lit(0L).as("id"), lit(0.0).as("closeness")).limit(0)
-    val d = Traversal.multiSourceHopDistances(edges, seeds, maxHops)
-    val out = d.filter($"dist" > 0)
-      .groupBy($"id")
-      .agg((count(lit(1)).cast("double") /
-        sum($"dist").cast("double")).as("closeness"))
-    val res = barrier(out)
-    release(d)
-    res
+    scopedBlocks(spark) {
+      barrier(Traversal.multiSourceHopDistances(edges, seeds, maxHops)
+        .filter($"dist" > 0)
+        .groupBy($"id")
+        .agg((count(lit(1)).cast("double") /
+          sum($"dist").cast("double")).as("closeness")))
+    }
   }
 
   /** Eigenvector centrality by power iteration with L∞ (max)
@@ -128,11 +126,9 @@ object Centrality {
             .join(cur.hint("shuffle_hash").as("x"), $"e.src" === $"x.id")
             .select($"e.dst".as("id"), $"x.v".as("c")), p)
       }
-      val res = barrier(
+      barrier(
         out.state.crossJoin(broadcast(Seq(out.obs("mx").asInstanceOf[Double]).toDF("m")))
           .select($"id", round($"v" / $"m", 6).as("score")))
-      release(out.state)
-      res
     }
   }
 
@@ -141,16 +137,16 @@ object Centrality {
     * count adaptive from its OBSERVED row count, guide §2; see
     * [[graft.plans.Adaptive]]), and the start vector z0 = 1 on every
     * vertex keyed by id at that count. `loop(adj, z0)` returns the
-    * materialized output; an empty edge set yields an empty
-    * (id, `score`) table. */
+    * materialized output, inside a block scope that frees every other
+    * barrier; an empty edge set yields an empty (id, `score`) table. */
   private def fromOnes(edges: Dataset[Edge], score: String)(
       loop: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val (adj, rows, p) = Adaptive.loopTable(
-      GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("src", "dst"),
-      Seq($"src"))
-    try {
+    scopedBlocks(spark) {
+      val (adj, rows, p) = Adaptive.loopTable(
+        GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("src", "dst"),
+        Seq($"src"))
       if (rows == 0L)
         spark.emptyDataFrame.select(lit(0L).as("id"), lit(0.0).as(score)).limit(0)
       else
@@ -158,7 +154,7 @@ object Centrality {
           adj.select($"src".as("id")).distinct()
             .select($"id", lit(1.0).as("v"))
             .repartition(p, $"id")), p)
-    } finally release(adj)
+    }
   }
 
   /** The receiving side of a message step over a loop table (PageRank,
@@ -183,11 +179,16 @@ object Centrality {
     * bit-for-bit) and only the final per-vertex sum rounds.
     *
     * Scale: the forward pass is ONE level-synchronous multi-source BFS
-    * (k seeds = one traversal with a k×-wide frontier) that also
-    * accumulates σ as a per-level hash agg; the backward pass walks the
-    * ≤diameter per-level barriers once, two key-partitioned joins + one
-    * hash agg per level. Nothing driver-side; levels are released as
-    * consumed. */
+    * ([[Traversal.levels]]; k seeds = one traversal with a k×-wide
+    * frontier) that also accumulates σ as a per-level hash agg. Level
+    * t+1 is N(L(t)) minus L(t−1) ∪ L(t) — on an undirected graph no
+    * other level can hold a neighbour of L(t) — so each level's
+    * anti-join reads two levels, not the visited set. A forward pass
+    * that has not reached an empty level by `maxHops` throws, since
+    * truncated levels give silently wrong δ. The backward pass walks
+    * the ≤diameter per-level barriers once, two key-partitioned joins
+    * + one hash agg and one barrier per level. Nothing driver-side; the
+    * block scope frees the levels once the output is materialized. */
   def betweenness(edges: Dataset[Edge], seeds: Seq[Long],
                   maxHops: Int = 32): DataFrame = {
     val spark = edges.sparkSession
@@ -195,112 +196,60 @@ object Centrality {
     if (seeds.isEmpty) // empty graph ⇒ empty seed rule ⇒ empty table
       return spark.emptyDataFrame
         .select(lit(0L).as("id"), lit(0.0).as("betweenness")).limit(0)
-    // adaptive loop partitioning — same rule as [[eigenvector]]; on the
-    // sparse fixtures this operator targets, the per-level jobs were
-    // dominated by session-partition-count task overhead
-    val (adj, _, p) = Adaptive.loopTable(
-      GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("v", "nbr"),
-      Seq($"v"))
-    // ---- forward: per-level (source, id, sigma), sigma exact longs ----
-    var frontier = barrier(
-      spark.createDataset(seeds.distinct).toDF("source")
-        .select($"source", $"source".as("id"), lit(1L).as("sigma"))
-        .repartition(p, $"source", $"id"))
-    var levels = Vector(frontier)
-    var visitedParts = List[DataFrame](frontier.select($"source", $"id"))
-    var t = 0
-    var frontierSize = 1L
-    while (frontierSize > 0 && t < maxHops) {
-      t += 1
-      val visited = visitedParts.reduce(_ union _)
-      val (next, m) = barrierObserved(
-        frontier.join(adj, $"id" === $"v")
-          .select($"source", $"nbr".as("id"), $"sigma")
-          .join(visited, Seq("source", "id"), "left_anti")
+    scopedBlocks(spark) {
+      // adaptive loop partitioning — same rule as [[eigenvector]]; on the
+      // sparse fixtures this operator targets, the per-level jobs were
+      // dominated by session-partition-count task overhead
+      val (adj, _, p) = Adaptive.loopTable(
+        GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("v", "nbr"),
+        Seq($"v"))
+      // ---- forward: per-level (source, id, sigma), sigma exact longs ----
+      val level0 = barrier(
+        spark.createDataset(seeds.distinct).toDF("source")
+          .select($"source", $"source".as("id"), lit(1L).as("sigma"))
+          .repartition(p, $"source", $"id"))
+      val (levels, converged) = Traversal.levels(level0, maxHops) { (frontier, _, unseen) =>
+        unseen(frontier.join(adj, $"id" === $"v").select($"source", $"nbr".as("id"), $"sigma"))
           .groupBy($"source", $"id")
-          .agg(sum($"sigma").as("sigma")),
-        count(lit(1)).as("n"))
-      frontierSize = Option(m("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (frontierSize > 0) {
-        levels :+= next
-        visitedParts ::= next.select($"source", $"id")
-        frontier = next
-        if (t % 8 == 0) {
-          // compact the visited union into ONE barrier so the anti-join
-          // probe side stays a short union (same rule as the BFS loop)
-          val merged = barrier(visitedParts.reduce(_ union _))
-          visitedParts = List(merged)
-        }
-      } else release(next)
-    }
-    if (frontierSize > 0) { // truncated BFS = silently wrong deltas
-      (levels ++ visitedParts).foreach(release(_))
-      adj.releaseLineage()
-      throw new IllegalStateException(
-        s"betweenness: BFS not converged within maxHops=$maxHops")
-    }
-    // ---- backward: δ per level, deepest first ----
-    // Unlike the forward pass (whose per-level job IS the loop-control
-    // read of the frontier size), the backward recurrence has a KNOWN
-    // level count — so no level needs its own driver action. Each δ_t is
-    // a LAZY persist (two consumers: δ_{t-1}'s wSide and the final sum;
-    // the cache makes the single final job compute each level once), and
-    // the ONE materialization is the output barrier. Round 5 paid one
-    // full barrier-job round-trip per level — the measured floor of the
-    // 29.7 s driver-bench betweenness on a 924-vertex fixture. The δ_0
-    // frame (Brandes' excluded endpoint terms) is never built at all;
-    // round 5 materialized it and then discarded it unread. Nested-plan
-    // stats stay bounded: ≤ maxHops join products is a short BigInt,
-    // nothing like the unbounded iterative-self-join explosion barrier
-    // exists to prevent.
-    val maxT = levels.size - 1
-    var delta = levels(maxT).select($"source", $"id", lit(0.0).as("delta"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var lazyDeltas = List(delta) // δ_maxT .. δ_1; all-zero δ_maxT sums to 0
-    var lvl = maxT - 1
-    while (lvl >= 1) {
-      val wSide = levels(lvl + 1).as("sw")
-        .join(delta.as("dw"), Seq("source", "id"))
-        .select($"source".as("wsource"), $"id".as("w"),
-          $"sw.sigma".as("sigw"), $"dw.delta".as("deltaw"))
-      val agg = levels(lvl).as("lv")
-        .join(adj, $"lv.id" === $"v")
-        .select($"lv.source".as("source"), $"lv.id".as("id"),
-          $"lv.sigma".as("sigv"), $"nbr")
-        .join(wSide, $"nbr" === $"w" && $"source" === $"wsource")
-        .groupBy($"source", $"id")
-        .agg(sum($"sigv".cast("double") / $"sigw".cast("double") *
-          (lit(1.0) + $"deltaw")).as("c"))
-      val deltaT = levels(lvl).select($"source", $"id")
-        .join(agg, Seq("source", "id"), "left")
-        .select($"source", $"id", coalesce($"c", lit(0.0)).as("delta"))
-        .repartition(p, $"source", $"id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      lazyDeltas ::= deltaT
-      delta = deltaT
-      lvl -= 1
-    }
-    // bc(v) = Σ over sources and dag levels ≥ 1 (a source's own dist-0
-    // row never contributes — Brandes excludes the endpoint s itself)
-    val verts = adj.select($"v".as("id")).distinct()
-    // release in a finally: if the output barrier throws, the per-level
-    // cached δ blocks (and the level/visited barriers) must not leak for
-    // the session lifetime (ADVICE r06)
-    try {
-      barrier(
-        if (maxT == 0)
-          verts.select($"id", lit(0.0).as("betweenness"))
-        else
-          verts.join(
-              lazyDeltas.reduce(_ union _).groupBy($"id")
-                .agg(sum($"delta").as("b")),
-              Seq("id"), "left")
-            .select($"id", round(coalesce($"b", lit(0.0)), 6).as("betweenness")))
-    } finally {
-      levels.foreach(release(_))
-      lazyDeltas.foreach(_.unpersist())
-      visitedParts.foreach(release(_))
-      adj.releaseLineage()
+          .agg(sum($"sigma").as("sigma"))
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"betweenness: BFS not converged within maxHops=$maxHops")
+      // ---- backward: δ per level, deepest first ----
+      // One barrier per level, not lazily persisted δ frames computed by
+      // the output job: nested caches re-plan per level and grew
+      // super-linearly in depth (924-vertex fixture, local[4]: 297 jobs
+      // and 12-15 s with caches, 114 jobs and 5-8 s with barriers; a
+      // 21-level path exhausted an 8 GB heap with caches). The δ_0 frame
+      // (Brandes' excluded endpoint terms) is never built.
+      val maxT = levels.size - 1
+      var deltas = List(levels(maxT).select($"source", $"id", lit(0.0).as("delta")))
+      for (lvl <- maxT - 1 to 1 by -1) {
+        val wSide = levels(lvl + 1).as("sw")
+          .join(deltas.head.as("dw"), Seq("source", "id"))
+          .select($"source".as("wsource"), $"id".as("w"),
+            $"sw.sigma".as("sigw"), $"dw.delta".as("deltaw"))
+        val agg = levels(lvl).as("lv")
+          .join(adj, $"lv.id" === $"v")
+          .select($"lv.source".as("source"), $"lv.id".as("id"),
+            $"lv.sigma".as("sigv"), $"nbr")
+          .join(wSide, $"nbr" === $"w" && $"source" === $"wsource")
+          .groupBy($"source", $"id")
+          .agg(sum($"sigv".cast("double") / $"sigw".cast("double") *
+            (lit(1.0) + $"deltaw")).as("c"))
+        deltas ::= barrier(levels(lvl).select($"source", $"id")
+          .join(agg, Seq("source", "id"), "left")
+          .select($"source", $"id", coalesce($"c", lit(0.0)).as("delta"))
+          .repartition(p, $"source", $"id"))
+      }
+      // bc(v) = Σ over sources and dag levels ≥ 1 (a source's own dist-0
+      // row never contributes — Brandes excludes the endpoint s itself;
+      // the all-zero δ_maxT, level 0 when nothing is reached, sums to 0)
+      barrier(adj.select($"v".as("id")).distinct()
+        .join(deltas.reduce(_ union _).groupBy($"id").agg(sum($"delta").as("b")),
+          Seq("id"), "left")
+        .select($"id", round(coalesce($"b", lit(0.0)), 6).as("betweenness")))
     }
   }
 
@@ -341,9 +290,7 @@ object Centrality {
             .select($"e.dst".as("id"), $"x.v".as("c")), p)
           .select($"id", (lit(1.0) + lit(alpha) * $"v").as("v"))
       }
-      val res = barrier(out.state.select($"id", round($"v", 6).as("katz")))
-      release(out.state)
-      res
+      barrier(out.state.select($"id", round($"v", 6).as("katz")))
     }
   }
 
@@ -367,23 +314,30 @@ object Centrality {
     val spark = directed.sparkSession
     import spark.implicits._
     require(maxIter >= 1, "hits: need at least one iteration")
-    // One materialization of the deduplicated edge table (the old code
-    // evaluated the upstream distinct TWICE — once per keyed copy), with
-    // the row count observed for adaptive loop partitioning; the two
-    // keyed copies are then cheap re-shuffles of the barrier.
-    val (dedup0, dObs) = barrierObserved(
-      directed.select($"src", $"dst").distinct(), count(lit(1)).as("n"))
-    val rows = dObs("n").asInstanceOf[Long]
-    if (rows == 0L) { // empty edge set → empty score table
-      release(dedup0)
-      return spark.emptyDataFrame
-        .select(lit(0L).as("id"), lit("hub").as("kind"), lit(0.0).as("score"))
-        .limit(0)
+    scopedBlocks(spark) {
+      // One materialization of the deduplicated edge table (the old code
+      // evaluated the upstream distinct TWICE — once per keyed copy), with
+      // the row count observed for adaptive loop partitioning; the two
+      // keyed copies are then cheap re-shuffles of the barrier.
+      val (dedup, dObs) = barrierObserved(
+        directed.select($"src", $"dst").distinct(), count(lit(1)).as("n"))
+      val rows = dObs("n").asInstanceOf[Long]
+      if (rows == 0L) // empty edge set → empty score table
+        spark.emptyDataFrame
+          .select(lit(0L).as("id"), lit("hub").as("kind"), lit(0.0).as("score"))
+          .limit(0)
+      else hitsLoop(dedup, Adaptive.forRows(spark, rows), maxIter)
     }
-    val p = Adaptive.forRows(spark, rows)
-    val eBySrc = barrier(dedup0.repartition(p, $"src"))
-    val eByDst = barrier(dedup0.repartition(p, $"dst"))
-    release(dedup0)
+  }
+
+  /** [[hits]] over its materialized, non-empty, deduplicated edge table
+    * at loop partition count `p`; frees `dedup` once keyed. */
+  private def hitsLoop(dedup: DataFrame, p: Int, maxIter: Int): DataFrame = {
+    val spark = dedup.sparkSession
+    import spark.implicits._
+    val eBySrc = barrier(dedup.repartition(p, $"src"))
+    val eByDst = barrier(dedup.repartition(p, $"dst"))
+    release(dedup) // the loop holds two edge copies, not three
     val hub0 = barrier(
       eBySrc.select($"src".as("id")).distinct()
         .select($"id", lit(1.0).as("v"))
@@ -417,20 +371,15 @@ object Centrality {
       (hub, _, obs) =>
         hubOf(authOf(hub, obs.get("mx").asInstanceOf[Double]))
     }
-    val hub = looped.state
     val (auth, obsA) = barrierObserved(
-      authOf(hub, looped.obs("mx").asInstanceOf[Double]), max($"v").as("mx"))
+      authOf(looped.state, looped.obs("mx").asInstanceOf[Double]), max($"v").as("mx"))
     val ma = obsA("mx").asInstanceOf[Double]
     val (hubT, obsH) = barrierObserved(hubOf(auth), max($"v").as("mx"))
-    release(hub)
     val mhT = obsH("mx").asInstanceOf[Double]
-    val out = barrier(
+    barrier(
       hubT.crossJoin(broadcast(Seq(mhT).toDF("m")))
         .select($"id", lit("hub").as("kind"), round($"v" / $"m", 6).as("score"))
         .union(auth.crossJoin(broadcast(Seq(ma).toDF("m")))
           .select($"id", lit("auth").as("kind"), round($"v" / $"m", 6).as("score"))))
-    release(hubT); release(auth)
-    release(eBySrc); release(eByDst)
-    out
   }
 }

@@ -122,11 +122,11 @@ object PageRank {
                              restart: Option[Dataset[Long]],
                              cfg: Config): Result = {
     import spark.implicits._
-    val verts = vertsRaw
+    // n is observed in the vertex set's own materialization job
+    val (verts, vObs) = barrierObserved(vertsRaw
       .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
-      .distinct()
-      .cutLineage()
-    val n = verts.count()
+      .distinct(), count(lit(1)).as("n"))
+    val n = vObs("n").asInstanceOf[Long]
     if (n == 0) // empty graph → empty rank table (not an error)
       return Result(verts.select($"id", lit(0.0).as("rank")), 0, 0.0)
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.GraftLineage
 import org.apache.spark.sql.GraftLineage._
 import org.apache.spark.sql.DataFrame
 import graft.plans.Adaptive
@@ -28,183 +27,176 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every step is an equi-join keyed by src/dst or id plus a
   * partial-agg'd max — the same join/agg loop machinery as PageRank/CC,
-  * with lineage barriers per iteration and eager release of the previous
-  * state. Rounds: ≤ #distinct-SCC-layers after trimming (one giant SCC +
-  * noise resolves in 1-2 rounds; the adversarial worst case — a long
-  * chain of nontrivial SCCs — costs a round per layer, the documented
-  * trade of the coloring family). */
+  * with lineage barriers per iteration. The color loop runs on
+  * `GraftLineage.iterate`, bounded by the remaining vertex count (a
+  * color travels at most that many edges); the mark loop is bounded the
+  * same way (each level marks at least one new vertex). Blocks live in
+  * one scope: each round frees the state it replaces, the scope frees
+  * the rest. Rounds: ≤ #distinct-SCC-layers after trimming (one giant
+  * SCC + noise resolves in 1-2 rounds; the adversarial worst case — a
+  * long chain of nontrivial SCCs — costs a round per layer, the
+  * documented trade of the coloring family); `maxRounds` bounds them and
+  * throws when vertices remain. */
 object StronglyConnected {
 
   def scc(directed: DataFrame, maxRounds: Int = 50,
           trimSweeps: Int = 3): DataFrame = {
     val spark = directed.sparkSession
     import spark.implicits._
-
-    // adaptive loop partitioning (guide §2; graft.plans.Adaptive): the
-    // edge count rides the input materialization as an observed metric
-    val (edges0, _, p) = Adaptive.loopTable(
-      directed.select($"src".cast("long"), $"dst".cast("long"))
-        .filter($"src" =!= $"dst").distinct(),
-      Seq($"src"))
-    var edges = edges0
-    // vertex count observed inside the materialization job itself — a
-    // separate count() is one more constant-time driver job per run
-    // (the strong-scaling serial floor is made of exactly such jobs)
-    val (rem0, remObs) = barrierObserved(
-      edges.select($"src".as("id")).union(edges.select($"dst".as("id")))
-        .distinct().repartition(p, $"id"),
-      count(lit(1)).as("n"))
-    var remaining = rem0
-    // accumulated (id, label) assignments; unioned at the end
-    var assigned = List.empty[DataFrame]
-    var nRemaining =
-      Option(remObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    var round = 0
-
-    while (nRemaining > 0 && round < maxRounds) {
-      // ---- 1. trim: no-in or no-out vertices are singleton SCCs ----
-      var sweep = 0
-      var trimmed = true
-      while (trimmed && sweep < trimSweeps && nRemaining > 0) {
-        val both = barrier(
-          edges.select($"src".as("id")).distinct()
-            .join(edges.select($"dst".as("id")).distinct(), "id")
-            .repartition(p, $"id"))
-        // singleton SCCs materialized directly as their (id, label)
-        // assignment, with the count folded into the same job
-        val (singles, sObs) = barrierObserved(
-          remaining.join(both, Seq("id"), "left_anti")
-            .select($"id", $"id".as("label")),
-          count(lit(1)).as("n"))
-        val nSingles =
-          Option(sObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (nSingles > 0) {
-          assigned ::= singles
-          GraftLineage.release(remaining)
-          remaining = both
-          nRemaining -= nSingles
-          val e2 = barrier(
-            edges.join(remaining.withColumnRenamed("id", "src"), "src")
-              .join(remaining.withColumnRenamed("id", "dst"), "dst")
-              .select($"src", $"dst").repartition(p, $"src"))
-          GraftLineage.release(edges)
-          edges = e2
-        } else {
-          GraftLineage.release(both)
-          GraftLineage.release(singles)
-          trimmed = false
-        }
-        sweep += 1
+    val n = (o: Map[String, Any]) =>
+      Option(o.values.head).map(_.asInstanceOf[Long]).getOrElse(0L)
+    scopedBlocks(spark) {
+      // adaptive loop partitioning (guide §2; graft.plans.Adaptive): the
+      // edge count rides the input materialization as an observed metric
+      val (edges0, _, p) = Adaptive.loopTable(
+        directed.select($"src".cast("long"), $"dst".cast("long"))
+          .filter($"src" =!= $"dst").distinct(),
+        Seq($"src"))
+      var edges = edges0
+      // vertex count observed inside the materialization job itself — a
+      // separate count() is one more constant-time driver job per run
+      // (the strong-scaling serial floor is made of exactly such jobs)
+      val (rem0, remObs) = barrierObserved(
+        edges.select($"src".as("id")).union(edges.select($"dst".as("id")))
+          .distinct().repartition(p, $"id"),
+        count(lit(1)).as("n"))
+      var remaining = rem0
+      var nRemaining = n(remObs)
+      // accumulated (id, label) assignments; unioned at the end
+      var assigned = List.empty[DataFrame]
+      // replace `remaining` and `edges` by the vertices `keep`, freeing both
+      def peelTo(keep: DataFrame): Unit = {
+        release(remaining); remaining = keep
+        val e2 = barrier(
+          edges.join(remaining.withColumnRenamed("id", "src"), "src")
+            .join(remaining.withColumnRenamed("id", "dst"), "dst")
+            .select($"src", $"dst").repartition(p, $"src"))
+        release(edges); edges = e2
       }
-      if (nRemaining == 0) { round += 1 }
-      else {
-        // ---- 2. color: forward max propagation to fixpoint ----
-        var colors = barrier(remaining.select($"id", $"id".as("c")))
-        var converged = false
-        while (!converged) {
-          val incoming = edges.as("e")
-            .join(colors.as("x"), $"e.src" === $"x.id")
-            .groupBy($"e.dst".as("id"))
-            .agg(max($"x.c").as("inc"))
-          // one job per color iteration (round-6 fold): the repartition
-          // rides the observed materialization; the unread chg column
-          // stays in the barrier (8 B/row) and is pruned at every read
-          val (next, obs) = barrierObserved(
+      var round = 0
+
+      while (nRemaining > 0 && round < maxRounds) {
+        // ---- 1. trim: no-in or no-out vertices are singleton SCCs ----
+        var sweep = 0
+        var trimmed = true
+        while (trimmed && sweep < trimSweeps && nRemaining > 0) {
+          val both = barrier(
+            edges.select($"src".as("id")).distinct()
+              .join(edges.select($"dst".as("id")).distinct(), "id")
+              .repartition(p, $"id"))
+          // singleton SCCs materialized directly as their (id, label)
+          // assignment, with the count folded into the same job
+          val (singles, sObs) = barrierObserved(
+            remaining.join(both, Seq("id"), "left_anti")
+              .select($"id", $"id".as("label")),
+            count(lit(1)).as("n"))
+          if (n(sObs) > 0) {
+            assigned ::= singles
+            nRemaining -= n(sObs)
+            peelTo(both)
+          } else {
+            release(both)
+            trimmed = false
+          }
+          sweep += 1
+        }
+        if (nRemaining > 0) {
+          // ---- 2. color: forward max propagation to fixpoint ----
+          // One job per color iteration: the repartition rides the
+          // observed materialization; the unread chg column stays in the
+          // barrier (8 B/row) and is pruned at every read.
+          val colored = iterate(barrier(remaining.select($"id", $"id".as("c"))), 0,
+              math.min(nRemaining, Int.MaxValue.toLong).toInt, chunk = 1,
+              metrics = Seq(sum($"chg").as("nchg")),
+              stop = (_, o) => n(o) == 0L) { (colors, _, _) =>
+            val incoming = edges.as("e")
+              .join(colors.as("x"), $"e.src" === $"x.id")
+              .groupBy($"e.dst".as("id"))
+              .agg(max($"x.c").as("inc"))
             colors.as("x")
               .join(incoming.as("i"), Seq("id"), "left")
               .select($"id",
                 greatest($"x.c", coalesce($"i.inc", $"x.c")).as("c"),
                 ($"i.inc".isNotNull && $"i.inc" > $"x.c").cast("long").as("chg"))
-              .repartition(p, $"id"),
-            sum($"chg").as("nchg"))
-          GraftLineage.release(colors)
-          colors = next
-          converged = obs("nchg") == null ||
-            obs("nchg").asInstanceOf[Long] == 0L
-        }
-        // ---- 3. backward mark from roots inside each color class ----
-        // ce: edges with both endpoint colors, kept only intra-class
-        val ce = barrier(
-          edges.as("e")
-            .join(colors.as("cs"), $"e.src" === $"cs.id")
-            .join(colors.as("cd"), $"e.dst" === $"cd.id")
-            .filter($"cs.c" === $"cd.c")
-            .select($"e.src", $"e.dst")
-            .repartition(p, $"dst"))
-        // Round-6 fold: `marked` is a LAZY union of the per-level
-        // barriers (the CC doneParts shape) instead of a consolidated
-        // re-barrier per level — the anti-join scans the same total
-        // rows either way, but the per-level union+repartition JOB (a
-        // full reshuffle of everything marked so far) disappears. One
-        // job per mark level remains: the newMarks materialization.
-        var markedParts =
-          List(barrier(colors.filter($"c" === $"id").select($"id", $"c")))
-        def markedAll: DataFrame = markedParts.reduce(_ union _)
-        var frontier = markedParts.head
-        var growing = true
-        while (growing) {
-          val (newMarks, obs) = barrierObserved(
-            ce.as("e")
-              .join(frontier.as("f"), $"e.dst" === $"f.id")
-              .select($"e.src".as("id"), $"f.c".as("c"))
-              .distinct()
-              .join(markedAll, Seq("id"), "left_anti")
-              .repartition(p, $"id"),
-            count(lit(1)).as("n"))
-          val n = if (obs("n") == null) 0L else obs("n").asInstanceOf[Long]
-          if (n == 0L) { GraftLineage.release(newMarks); growing = false }
-          else {
-            markedParts ::= newMarks
-            frontier = newMarks
-            // compact every 8 levels (the betweenness visitedParts rule):
-            // an uncompacted union grows the anti-join plan linearly in
-            // level count — O(depth²) driver re-analysis on deep regions.
-            // The current frontier stays its own barrier (the next join
-            // reads it directly).
-            if (markedParts.size >= 9) {
-              val rest = markedParts.filter(_ ne frontier)
-              val compacted =
-                barrier(rest.reduce(_ union _).repartition(p, $"id"))
-              rest.foreach(GraftLineage.release(_))
-              markedParts = List(frontier, compacted)
-            }
+              .repartition(p, $"id")
           }
+          check(colored.stopped, "color")
+          val colors = colored.state
+          // ---- 3. backward mark from roots inside each color class ----
+          // ce: edges with both endpoint colors, kept only intra-class
+          val ce = barrier(
+            edges.as("e")
+              .join(colors.as("cs"), $"e.src" === $"cs.id")
+              .join(colors.as("cd"), $"e.dst" === $"cd.id")
+              .filter($"cs.c" === $"cd.c")
+              .select($"e.src", $"e.dst")
+              .repartition(p, $"dst"))
+          // `marked` is a LAZY union of the per-level barriers (the CC
+          // doneParts shape) instead of a consolidated re-barrier per
+          // level: one job per mark level, the newMarks materialization.
+          // The mark loop runs on a directed graph, where a new mark may
+          // sit next to any earlier level, so the anti-join reads the
+          // whole marked set.
+          var markedParts =
+            List(barrier(colors.filter($"c" === $"id").select($"id", $"c")))
+          def markedAll: DataFrame = markedParts.reduce(_ union _)
+          var frontier = markedParts.head
+          var growing = true
+          var level = 0L
+          while (growing && level < nRemaining) {
+            val (newMarks, obs) = barrierObserved(
+              ce.as("e")
+                .join(frontier.as("f"), $"e.dst" === $"f.id")
+                .select($"e.src".as("id"), $"f.c".as("c"))
+                .distinct()
+                .join(markedAll, Seq("id"), "left_anti")
+                .repartition(p, $"id"),
+              count(lit(1)).as("n"))
+            growing = n(obs) > 0L
+            if (growing) {
+              markedParts ::= newMarks
+              frontier = newMarks
+              // compact every 8 levels: an uncompacted union grows the
+              // anti-join plan linearly in level count — O(depth²) driver
+              // re-analysis on deep regions. The current frontier stays
+              // its own barrier (the next join reads it directly).
+              if (markedParts.size >= 9) {
+                val rest = markedParts.tail
+                val compacted = barrier(rest.reduce(_ union _).repartition(p, $"id"))
+                rest.foreach(release(_))
+                markedParts = List(frontier, compacted)
+              }
+            }
+            level += 1
+          }
+          check(!growing, "mark")
+          val (asg, aObs) = barrierObserved(
+            markedAll.select($"id", $"c".as("label")), count(lit(1)).as("n"))
+          assigned ::= asg
+          nRemaining -= n(aObs)
+          // peel the assigned SCCs and iterate on the rest
+          peelTo(barrier(
+            remaining.join(asg.select($"id"), Seq("id"), "left_anti")
+              .repartition(p, $"id")))
+          (ce :: colors :: markedParts).foreach(release(_))
         }
-        val (asg, aObs) = barrierObserved(
-          markedAll.select($"id", $"c".as("label")), count(lit(1)).as("n"))
-        assigned ::= asg
-        val nAssigned =
-          Option(aObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        // peel the assigned SCCs and iterate on the rest
-        val r2 = barrier(
-          remaining.join(asg.select($"id"), Seq("id"), "left_anti")
-            .repartition(p, $"id"))
-        GraftLineage.release(remaining); remaining = r2
-        nRemaining -= nAssigned
-        val e2 = barrier(
-          edges.join(remaining.withColumnRenamed("id", "src"), "src")
-            .join(remaining.withColumnRenamed("id", "dst"), "dst")
-            .select($"src", $"dst").repartition(p, $"src"))
-        GraftLineage.release(edges); edges = e2
-        GraftLineage.release(colors); GraftLineage.release(ce)
-        markedParts.foreach(GraftLineage.release(_))
         round += 1
       }
+      if (nRemaining != 0)
+        throw new IllegalStateException(
+          s"scc: $nRemaining vertices unresolved after $maxRounds rounds")
+      if (assigned.isEmpty) // empty edge set → empty label table
+        spark.emptyDataFrame.select(lit(0L).as("id"), lit(0L).as("label")).limit(0)
+      else barrier(assigned.reduce(_ union _))
     }
-    if (nRemaining != 0) { // release before throwing (block hygiene)
-      (edges :: remaining :: assigned).foreach(GraftLineage.release(_))
-      throw new IllegalStateException(
-        s"scc: $nRemaining vertices unresolved after $maxRounds rounds")
-    }
-    if (assigned.isEmpty) { // empty edge set → empty label table
-      GraftLineage.release(edges); GraftLineage.release(remaining)
-      return spark.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0L).as("label")).limit(0)
-    }
-    val out = barrier(assigned.reduce(_ union _))
-    (edges :: remaining :: assigned).foreach(GraftLineage.release(_))
-    out
   }
+
+  /** Guards the bounded color and mark loops: reaching the vertex-count
+    * bound without a fixpoint would mean a broken invariant, never a
+    * slow input. */
+  private def check(done: Boolean, loop: String): Unit =
+    if (!done) throw new IllegalStateException(
+      s"scc: $loop loop exceeded its vertex-count bound")
 
   /** Condensation DAG: contract each SCC to its canonical label and keep
     * the distinct cross-SCC edges — acyclic by construction (a cycle of

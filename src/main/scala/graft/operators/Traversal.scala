@@ -11,91 +11,76 @@ import org.apache.spark.sql.functions._
   * CC/PageRank/LPA/triangles. No reference counterpart (the reference is
   * CC-only); semantics are the textbook level-synchronous BFS.
   *
-  * Scale design: one shuffle equi-join per hop (frontier ⋈ adjacency),
-  * a left-anti join against the visited set to keep the frontier
-  * minimal, and a lineage barrier per hop (same iterative-join rules as
-  * the CC loop: without the barrier the plan and its statistics double
-  * every hop). The visited set accumulates as a union of per-hop
-  * barriers and is compacted into one barrier every `compactEvery` hops
-  * so the anti-join probe side stays a short union. Frontier and
-  * adjacency joins are both key-partitioned — no broadcast inside the
-  * loop (pins blocks until convergence), no driver-side state.
+  * Scale design: one shuffle equi-join per hop (frontier ⋈ adjacency,
+  * the adjacency keyed once by [[Adaptive.loopTable]]), a left-anti
+  * join that keeps the frontier minimal, and a lineage barrier per hop
+  * (same iterative-join rules as the CC loop: without the barrier the
+  * plan and its statistics double every hop). On an undirected graph a
+  * neighbour of a vertex at distance t is at distance t−1, t or t+1, so
+  * the anti-join reads only the last two levels, never the whole
+  * visited set ([[levels]]). No broadcast inside the loop (pins blocks
+  * until convergence), no driver-side state.
   */
 object Traversal {
 
   /** Hop distance from `source` to every reachable vertex (undirected),
     * as (id, dist). `maxHops` bounds the loop (diameter guard); vertices
     * beyond it are omitted, like unreachable ones. */
-  def hopDistances(edges: Dataset[Edge], source: Long,
-                   maxHops: Int = 64, compactEvery: Int = 8): DataFrame =
-    multiSourceHopDistances(edges, Seq(source), maxHops, compactEvery)
-      .select(org.apache.spark.sql.functions.col("id"),
-        org.apache.spark.sql.functions.col("dist"))
+  def hopDistances(edges: Dataset[Edge], source: Long, maxHops: Int = 64): DataFrame =
+    multiSourceHopDistances(edges, Seq(source), maxHops).select(col("id"), col("dist"))
 
   /** Hop distances from EVERY vertex of `sources` simultaneously, as
     * (source, id, dist) — the level-synchronous multi-source BFS that
     * backs sampled centralities ([[Centrality.harmonic]]/[[Centrality.closeness]]).
     * One shuffle join per hop regardless of |sources|: the frontier
     * carries a source column, so k sources cost one traversal whose
-    * frontier is at most k× wider — not k traversals. The visited set is
-    * keyed by (source, id); everything else follows the single-source
-    * plan (per-hop lineage barriers, periodic visited-set compaction,
-    * no broadcast or driver state in the loop). */
+    * frontier is at most k× wider — not k traversals. Levels are keyed
+    * by (source, id); vertices past `maxHops` are omitted. A BFS of
+    * depth D runs D + 1 level jobs (the last one finds the empty level)
+    * plus the output barrier. */
   def multiSourceHopDistances(edges: Dataset[Edge], sources: Seq[Long],
-                              maxHops: Int = 64, compactEvery: Int = 8): DataFrame = {
+                              maxHops: Int = 64): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(sources.nonEmpty, "multiSourceHopDistances: empty source set")
     scopedBlocks(spark) {
-      // Small graphs: key the adjacency by the join side (v) ONCE at the
-      // adaptive partition count (graft.plans.Adaptive) so every hop's
-      // join and barrier run data-proportional task counts — on the
-      // sparse betweenness-class fixtures this removed the per-level
-      // session-partition task overhead. Large graphs keep the original
-      // shape (unkeyed barrier; AQE coalesces the per-hop shuffles),
-      // because pinning the adjacency at the session count would force
-      // every hop's frontier exchange to that width.
-      val (adj1, aObs) = barrierObserved(
-        GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("v", "nbr"),
-        count(lit(1)).as("n"))
-      val aRows = Option(aObs("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val pA = graft.plans.Adaptive.forRows(spark, aRows)
-      val adj =
-        if (pA * 4 <= spark.sessionState.conf.numShufflePartitions) {
-          val keyed = barrier(adj1.repartition(pA, $"v"))
-          release(adj1)
-          keyed
-        } else adj1
-      var frontier = spark.createDataset(sources.distinct).toDF("source")
+      val (adj, _, _) = Adaptive.loopTable(
+        GraphIO.bidirectional(GraphIO.canonical(edges)).toDF("v", "nbr"), Seq($"v"))
+      val level0 = spark.createDataset(sources.distinct).toDF("source")
         .select($"source", $"source".as("id"), lit(0L).as("dist"))
-      var visitedParts = List[DataFrame](frontier)
-      var hop = 0
-      var frontierSize = 1L
-      while (frontierSize > 0 && hop < maxHops) {
-        hop += 1
-        val visited = visitedParts.reduce(_ union _)
-        val (next, m) = barrierObserved(
-          frontier.join(adj, $"id" === $"v")
-            .select($"source", $"nbr".as("id"), lit(hop.toLong).as("dist"))
-            .distinct()
-            .join(visited.select($"source", $"id"), Seq("source", "id"), "left_anti"),
-          count(lit(1)).as("n"))
-        frontierSize = Option(m("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        frontier = next
-        visitedParts ::= next
-        if (hop % compactEvery == 0) {
-          // compact the visited union into ONE barrier (it contains the
-          // live frontier's rows too, but `next` itself stays untouched
-          // and remains the frontier); free the superseded hop barriers
-          val merged = barrier(visitedParts.reduce(_ union _))
-          visitedParts.foreach(d => if (!(d eq next)) release(d))
-          visitedParts = List(merged)
-        }
+      val (lv, _) = levels(level0, maxHops) { (frontier, hop, unseen) =>
+        unseen(frontier.join(adj, $"id" === $"v").select($"source", $"nbr".as("id")))
+          .distinct().select($"source", $"id", lit(hop.toLong).as("dist"))
       }
-      val out = barrier(visitedParts.reduce(_ union _))
-      adj.releaseLineage()
-      out
+      barrier(lv.reduce(_ union _))
     }
+  }
+
+  /** The level loop of a multi-source BFS on an UNDIRECTED graph, shared
+    * by [[multiSourceHopDistances]] and [[Centrality.betweenness]]'s
+    * forward pass. `step(frontier, hop, unseen)` builds level `hop`
+    * (rows keyed by (source, id)) from level `hop - 1`; it applies
+    * `unseen`, the left-anti join against levels `hop - 2` and
+    * `hop - 1`, to its candidates. Those two levels suffice: an
+    * undirected neighbour of a vertex at distance t is at distance t−1,
+    * t or t+1. Each level is one [[barrierObserved]] job that counts its
+    * rows. The loop stops on an empty level (dropped) or after level
+    * `maxHops`, and returns levels 0.. and whether an empty level was
+    * reached. Call it inside a [[scopedBlocks]] scope: the levels are
+    * the caller's to keep or leave to the scope. */
+  private[operators] def levels(level0: DataFrame, maxHops: Int)(
+      step: (DataFrame, Int, DataFrame => DataFrame) => DataFrame)
+      : (Vector[DataFrame], Boolean) = {
+    var lv = Vector(level0)
+    var converged = false
+    while (!converged && lv.size <= maxHops) {
+      val seen = lv.takeRight(2).map(_.select(col("source"), col("id"))).reduce(_ union _)
+      val (next, obs) = barrierObserved(
+        step(lv.last, lv.size, _.join(seen, Seq("source", "id"), "left_anti")),
+        count(lit(1)).as("n"))
+      if (obs("n") == 0L) converged = true else lv :+= next
+    }
+    (lv, converged)
   }
 
   /** DeepWalk-style walk corpus: `nWalks` walks of `steps` steps from
@@ -113,8 +98,9 @@ object Traversal {
     *
     * Scale: one equi-join (state ⋈ adjacency, both key-partitioned) +
     * one min-by hash agg per step — state is |V|·nWalks rows regardless
-    * of step count; per-step lineage barriers, superseded state
-    * released eagerly; the output is the union of per-step barriers. */
+    * of step count; per-step lineage barriers; the output is the union
+    * of per-step barriers, whose blocks the scope frees once it is
+    * materialized. */
   def deterministicWalks(edges: Dataset[Edge], nWalks: Int = 2,
                          steps: Int = 8): DataFrame = {
     val spark = edges.sparkSession
@@ -165,11 +151,8 @@ object Traversal {
         state = next.filter($"step" === t)
         parts ::= next
       }
-      val out = barrier(parts.reverse.reduce(_ union _)
+      barrier(parts.reverse.reduce(_ union _)
         .select($"seed", $"walk", $"step", $"vertex"))
-      parts.foreach(release(_))
-      adj.releaseLineage()
-      out
     }
   }
 
@@ -230,16 +213,15 @@ object Traversal {
     val spark = edges.sparkSession
     import spark.implicits._
     require(window >= 1, "walkSkipGramPairs: window >= 1")
-    val walks = deterministicWalks(edges, nWalks, steps)
-    val a = walks.select($"seed", $"walk", $"step".as("si"), $"vertex".as("center"))
-    val b = walks.select($"seed", $"walk", $"step".as("sj"), $"vertex".as("context"))
-    val out = a.join(b, Seq("seed", "walk"))
-      .filter(abs($"si" - $"sj").between(1, window) && $"center" =!= $"context")
-      .groupBy($"center", $"context")
-      .agg(count(lit(1)).as("n"))
-    val res = barrier(out)
-    release(walks)
-    res
+    scopedBlocks(spark) {
+      val walks = deterministicWalks(edges, nWalks, steps)
+      val a = walks.select($"seed", $"walk", $"step".as("si"), $"vertex".as("center"))
+      val b = walks.select($"seed", $"walk", $"step".as("sj"), $"vertex".as("context"))
+      barrier(a.join(b, Seq("seed", "walk"))
+        .filter(abs($"si" - $"sj").between(1, window) && $"center" =!= $"context")
+        .groupBy($"center", $"context")
+        .agg(count(lit(1)).as("n")))
+    }
   }
 
   /** Full core decomposition by h-index iteration (Lü, Zhou, Zhang,
@@ -414,20 +396,18 @@ object Traversal {
       return spark.emptyDataFrame
         .select(lit(0L).as("pairs"), lit(0L).as("diameter"),
           lit(0L).as("eff_d90")).limit(0)
-    val d = multiSourceHopDistances(edges, seeds, maxHops)
-    val byd = barrier(
-      d.filter($"dist" > 0).groupBy($"dist").agg(count(lit(1)).as("n")))
-    release(d)
-    val w = Window.orderBy($"dist")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = barrier(
-      byd.withColumn("cum", sum($"n").over(w))
-        .crossJoin(broadcast(byd.agg(sum($"n").as("t"))))
-        .agg(coalesce(max($"t"), lit(0L)).as("pairs"),
-          coalesce(max($"dist"), lit(0L)).as("diameter"),
-          coalesce(min(when($"cum" * 10 >= $"t" * 9, $"dist")), lit(0L))
-            .as("eff_d90")))
-    release(byd)
-    out
+    scopedBlocks(spark) {
+      val byd = barrier(multiSourceHopDistances(edges, seeds, maxHops)
+        .filter($"dist" > 0).groupBy($"dist").agg(count(lit(1)).as("n")))
+      val w = Window.orderBy($"dist")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      barrier(
+        byd.withColumn("cum", sum($"n").over(w))
+          .crossJoin(broadcast(byd.agg(sum($"n").as("t"))))
+          .agg(coalesce(max($"t"), lit(0L)).as("pairs"),
+            coalesce(max($"dist"), lit(0L)).as("diameter"),
+            coalesce(min(when($"cum" * 10 >= $"t" * 9, $"dist")), lit(0L))
+              .as("eff_d90")))
+    }
   }
 }

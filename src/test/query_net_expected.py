@@ -3,7 +3,8 @@
     python3 src/test/query_net_expected.py
 
 Runs `graft.QueryNet` (test scope, through sbt) once: it executes each
-loop-backed driver query on the sf0.001 and sf0.01 tables, writes every output as
+driver query in `QueryNet.queries` (those that run an iterative or BFS
+level loop) on the sf0.001 and sf0.01 tables, writes every output as
 parquet with its fingerprint `count:sum(xxhash64(row))`, and the queries'
 `SparkEntry.oracleSql`. Each output is then compared row for row with
 DuckDB running that SQL over the same parquet tables; the table is

@@ -173,4 +173,23 @@ class LoopDriverSpec extends SparkSpec {
       persisted shouldBe before
     }
   }
+
+  test("betweenness past maxHops throws and frees every block it made") {
+    val p21 = spark.createDataset((0L until 20L).map(i => Edge(i, i + 1)))
+    val before = persisted
+    val e = the[IllegalStateException] thrownBy
+      graft.operators.Centrality.betweenness(p21, (0L to 20L), maxHops = 3)
+    e.getMessage should include("not converged within maxHops")
+    persisted shouldBe before
+  }
+
+  test("scc past maxRounds throws and frees every block it made") {
+    // descending chain of 2-cycles: each round resolves one layer
+    val chain = Seq((9L, 8L), (8L, 9L), (8L, 7L), (7L, 6L), (6L, 7L),
+      (6L, 5L), (5L, 4L), (4L, 5L)).toDF("src", "dst")
+    val before = persisted
+    val e = the[IllegalStateException] thrownBy StronglyConnected.scc(chain, maxRounds = 1)
+    e.getMessage should include("unresolved after")
+    persisted shouldBe before
+  }
 }

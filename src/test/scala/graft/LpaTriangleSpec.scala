@@ -212,9 +212,9 @@ class LpaTriangleSpec extends SparkSpec {
     val d2 = Traversal.hopDistances(two, 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     d2 shouldBe Map(0L -> 0L, 1L -> 1L)
-    // compaction path: chain long enough to cross compactEvery
+    // a chain deeper than the two levels each hop's anti-join reads
     val chain20 = spark.createDataset((0L until 20L).map(i => Edge(i, i + 1)))
-    val d20 = Traversal.hopDistances(chain20, 0L, maxHops = 64, compactEvery = 4)
+    val d20 = Traversal.hopDistances(chain20, 0L, maxHops = 64)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     d20 shouldBe (0L until 21L).map(i => i -> i).toMap
     // maxHops truncation: vertices beyond the bound are omitted

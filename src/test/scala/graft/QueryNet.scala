@@ -7,10 +7,12 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-/** The driver queries that reach an iterative loop run by
-  * `GraftLineage.iterate`, and their output fingerprints on the sf0.001
-  * and sf0.01 tables (see TESTDATA.md). At sf0.001 most of these
-  * outputs are empty (the supplier co-occurrence graph has no edges),
+/** The driver queries that run an iterative loop — one driven by
+  * `GraftLineage.iterate`, a BFS level loop (hop distances, harmonic,
+  * closeness, diameter, betweenness), the walk loop, or SCC's color and
+  * mark loops — and their output fingerprints on the sf0.001 and sf0.01
+  * tables (see TESTDATA.md). At sf0.001 most of the graph outputs are
+  * empty (the supplier co-occurrence-by-nation graph has no edges),
   * which exercises the empty-input paths; sf0.01 runs every loop on a
   * non-empty graph.
   *

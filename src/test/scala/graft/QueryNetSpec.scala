@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.GraftLineage
 
-/** Executes the driver queries that reach an iterative loop (see
+/** Executes the driver queries that run an iterative loop (see
   * [[QueryNet]]) and compares each output's fingerprint with the
   * committed, DuckDB-verified table — once in the shared session's
   * layout and once with 7 shuffle partitions and AQE off, where a

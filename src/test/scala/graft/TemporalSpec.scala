@@ -122,6 +122,21 @@ class TemporalSpec extends SparkSpec {
     scc(Seq.empty[(Long, Long)].toDF("src", "dst")).count() shouldBe 0L
   }
 
+  test("SCC: a directed 20-cycle with tails in and out runs deep color and mark loops") {
+    import graft.operators.StronglyConnected.scc
+    // 100→101→102→0, cycle 0→1→…→19→0, 19→200→201→202: trim peels both
+    // tails; color 19 then travels 19 edges (20 color rounds) and the
+    // backward mark from root 19 takes 19 levels, past the every-8-levels
+    // compaction of its marked union
+    val tails = Seq((100L, 101L), (101L, 102L), (102L, 0L),
+      (19L, 200L), (200L, 201L), (201L, 202L))
+    val cyc = (0L until 20L).map(i => (i, (i + 1) % 20))
+    val got = scc((cyc ++ tails).toDF("src", "dst")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    got shouldBe (0L until 20L).map(_ -> 19L).toMap ++
+      Seq(100L, 101L, 102L, 200L, 201L, 202L).map(v => v -> v)
+  }
+
   test("SCC condensation: contracted cross-SCC edges, no self-edges, acyclic shape") {
     import graft.operators.StronglyConnected.{scc, condensation}
     val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), // SCC {0,1,2} → 2
