@@ -9,8 +9,9 @@ import java.nio.file.Files
 
 /** The driver queries that run an iterative loop — one driven by
   * `GraftLineage.iterate`, a BFS level loop (hop distances, harmonic,
-  * closeness, diameter, betweenness), the walk loop, or SCC's color and
-  * mark loops — and their output fingerprints on the sf0.001 and sf0.01
+  * closeness, diameter, betweenness), the walk loop, SCC's color and
+  * mark loops, or a connected-components round loop (every CC strategy
+  * and the incremental label maintainer) — and their output fingerprints on the sf0.001 and sf0.01
   * tables (see TESTDATA.md). At sf0.001 most of the graph outputs are
   * empty (the supplier co-occurrence-by-nation graph has no edges),
   * which exercises the empty-input paths; sf0.01 runs every loop on a
@@ -32,7 +33,10 @@ object QueryNet {
     "ktruss4", "condensation_levels", "community_conductance", "modularity",
     "pagerank", "pagerank_weighted", "ppr", "lpa", "lpa_weighted", "lpa_seeded",
     "bfs_hops", "harmonic_centrality", "closeness_centrality", "graph_diameter",
-    "betweenness", "random_walks", "walk_pairs", "scc_coactivity", "scc_condensation")
+    "betweenness", "random_walks", "walk_pairs", "scc_coactivity", "scc_condensation",
+    "cc_supplier", "cc_supplier_star", "cc_supplier_sampled", "cc_supplier_random",
+    "cc_incremental", "cc_nation", "cc_sizes", "cc_coactivity", "cc_dense_labels",
+    "cc_text_fixture")
 
   val expectedResource = "expected/query_net.tsv"
 
