@@ -341,7 +341,8 @@ object SparkEntry {
         GraphMetrics.degrees(EdgeDerivation.supplierCooccurrence(s, dir)),
         "id", "degree").orderBy("id")),
     // §2.5 dense relabel: component labels → dense ids [0, #components)
-    "cc_dense_labels" -> ((s, dir) => {
+    // (the scope frees the label barrier, which the output does not read)
+    "cc_dense_labels" -> ((s, dir) => scopedBlocks(s) {
       val labels = ConnectedComponents.run(
         EdgeDerivation.supplierCooccurrenceByNation(s, dir)).labels
       GraphMetrics.denseRelabel(labels.toDF()).orderBy("id")

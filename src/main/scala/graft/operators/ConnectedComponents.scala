@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.GraftLineage._
 import graft.graph.{Edge, GraphIO, SuperstepMetrics, UnionFind, VertexLabel}
 import graft.plans.CheckpointManager
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,8 +22,7 @@ import scala.collection.mutable.ArrayBuffer
   *    path doubling (`mpi_parallel_cc_utils.cpp:37-55`) over a
   *    frontier-split map (only unresolved rows are probed AND
   *    re-materialized per jump; resolved segments merge once at the
-  *    fixpoint), edge contraction = relabel join + cross-component filter
-  *    + normalize (`mpi_parallel_cc_utils.cpp:57-76`).
+  *    fixpoint), then contraction (`mpi_parallel_cc_utils.cpp:57-76`).
   *  - [[CCStrategy.AlternatingStar]] — small-star/large-star contraction
   *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
   *    SoCC 2014), the standard Dataset-join CC named by the north star.
@@ -34,6 +33,19 @@ import scala.collection.mutable.ArrayBuffer
   *  - [[CCStrategy.RandomizedHook]] — coin-toss child hooking
   *    (random-mate, `randomized_OPENMP_cc.cpp:164-201`): tails hook to a
   *    heads neighbor, a depth-1 forest with no pointer jumping.
+  *
+  * One step shape: each strategy is a round `(edges, mapping) =>
+  * (edges', mapping')` over the state every strategy checkpoints, with
+  * its counts observed on the round's own barriers. Three of them build
+  * a label function f and apply the shared [[contract]] (the reference's
+  * one step over its `vertex_map`, `SparseSampling.hpp:71,260-264`) and
+  * [[compose]]; the star strategy rewrites the edges in place and keeps
+  * the identity mapping. One round loop ([[rounds]], on
+  * `GraftLineage.iterateFrames`) runs the steps: it owns the `maxRounds`
+  * bound, the edge-free result, the round ledger (metrics rows and
+  * durable checkpoints) and every block a round leaves behind. Star and
+  * random representatives are arbitrary, so their labels finish with
+  * [[canonicalMax]].
   *
   * Scale design: relabel maps after round 1 are orders of magnitude smaller
   * than the edge set, so relabel joins broadcast once the map fits
@@ -136,12 +148,11 @@ object ConnectedComponents {
       driverFinishEdges: Long = 2L * 1000 * 1000)
 
   /** `components`: the distinct-label count, observed for free inside the
-    * FINAL mapping materialization when the strategy's labels are already
-    * canonical there (hook, sampled): canonical max labels mean
+    * job that materializes the labels: canonical max labels mean
     * `components = count(id == label)`, so the separate `countDistinct`
     * action [[componentCount]] would otherwise pay per run is folded into
-    * a job that already exists. `None` for strategies whose
-    * canonicalization is composed lazily after the loop (star, random). */
+    * a job that already exists (the hook and sampled strategies' last
+    * mapping, the star and random strategies' canonicalized labels). */
   final case class Result(labels: Dataset[VertexLabel], metrics: Seq[SuperstepMetrics],
                           components: Option[Long] = None)
 
@@ -151,15 +162,47 @@ object ConnectedComponents {
   private def rootsMetric =
     coalesce(sum(when(col("id") === col("label"), 1L)), lit(0L)).as("roots")
 
+  /** The metrics every edges barrier of `strategy` observes: the edge
+    * count `n`; the star strategy's set hash `h`, whose (n, h) pair is its
+    * convergence signature (both compared edge tables are deduplicated
+    * sets, so a 64-bit xxhash XOR-fold is an order-independent,
+    * overflow-free fingerprint); and the sampled strategy's vertex
+    * estimate `v`, the distinct count of src ∪ dst from one HLL sketch per
+    * column (±2 % typical). `v` only sizes the sample bound, which already
+    * carries (1+delta) = 1.2 headroom, and prefix CC is exact on ANY
+    * sample — sample size affects round count, never correctness. */
+  private def seenMetrics(strategy: CCStrategy): Seq[Column] =
+    count(lit(1)).as("n") +: (strategy match {
+      case CCStrategy.AlternatingStar =>
+        Seq(coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("h"))
+      case CCStrategy.SampledContraction =>
+        Seq(hll_sketch_estimate(
+          hll_union(hll_sketch_agg(col("src")), hll_sketch_agg(col("dst")))).as("v"))
+      case _ => Nil
+    })
+
+  private def long(m: Map[String, Any], key: String): Long =
+    m.get(key).flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
+
+  /** `df` materialized, with its root count observed in the same job. */
+  private def observed(df: DataFrame): (DataFrame, Option[Long]) = {
+    val (out, m) = barrierObserved(df, rootsMetric)
+    (out, Some(long(m, "roots")))
+  }
+
+  private def identity(ids: DataFrame): DataFrame =
+    ids.select(col("id"), col("id").as("label"))
+
   /** CC of `edges` (+ optional isolated vertices). Input edges may be
     * dirty: self-loops, duplicates, arbitrary orientation — loader
-    * semantics of the reference are applied here (P1/P3 + dedup). */
+    * semantics of the reference are applied here (P1/P3 + dedup). The
+    * caller's input and extra vertices are never freed. */
   def run(edges: Dataset[Edge],
           extraVertices: Option[Dataset[Long]] = None,
           cfg: Config = Config()): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-
+    val start = System.nanoTime()
     // Normalize + drop self-loops (P1/P3, narrow); duplicates are KEPT
     // here, exactly like the reference loaders — every strategy tolerates
     // them (hook pre-contraction and the per-step distinct()s dedup
@@ -167,24 +210,30 @@ object ConnectedComponents {
     // shuffle+materialization of the largest table in the whole job.
     val cleanedLazy = GraphIO.normalize(edges)
       .filter(col("src") =!= col("dst")).as[Edge]
-    cfg.strategy match {
-      // The hook path never materializes the cleaned input: round 0's
-      // pre-contraction reads it lazily, in its range layout, and counts
-      // it in the same job.
-      case CCStrategy.HookAndContract =>
-        hookAndContract(cleanedLazy, None, cfg, extraVertices = extraVertices)
-      case strategy =>
+    val extras = extraVertices.map(_.toDF("id"))
+    val retain = edges +: extraVertices.toSeq
+    scopedFrames(spark)((r: Result) => Seq(r.labels)) {
+      cfg.strategy match {
+        // The hook path never materializes the cleaned input: round 0's
+        // pre-contraction reads it lazily, in its range layout, and counts
+        // it in the same job. Its f covers every edge vertex, so the
+        // state's mapping holds only the extra vertices.
+        case CCStrategy.HookAndContract =>
+          val ranged = rangeLayout(cleanedLazy.toDF())
+          val obs = Observation()
+          val pre = preContract(ranged.observe(obs, count(lit(1)).as("n")), cfg)
+          val ids = extras.map(_.distinct()).getOrElse(spark.emptyDataset[Long].toDF("id"))
+          rounds(State(ranged, identity(ids), obs.get, pre = Some(pre)), cfg, start, retain,
+            extras = extras.isDefined)
         // Every other strategy starts from ONE materialization of the
-        // cleaned input, re-materializes it canonical and leaves this
-        // barrier to run().
-        val cleaned = barrier(cleanedLazy.toDF()).as[Edge]
-        val verts = GraphIO.vertices(cleaned).toDF("id")
-          .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
-          .distinct()
-        val out = from(strategy, GraphIO.canonical(cleaned),
-          verts.select($"id", $"id".as("label")), cfg, startRound = 0)
-        cleaned.releaseLineage()
-        out
+        // canonical input, which observes the strategy's edge metrics.
+        case strategy =>
+          val (canon, seen) = barrierObserved(GraphIO.canonical(cleanedLazy).toDF(),
+            seenMetrics(strategy): _*)
+          val verts = GraphIO.vertices(canon.as[Edge]).toDF("id")
+            .union(extras.getOrElse(spark.emptyDataset[Long].toDF("id"))).distinct()
+          rounds(State(canon, identity(verts), seen), cfg, start, retain)
+      }
     }
   }
 
@@ -196,49 +245,124 @@ object ConnectedComponents {
     * randomized strategy's per-round coin seed only needs rounds to be
     * distinct, not contiguous). */
   def resume(spark: SparkSession, checkpointDir: String, cfg: Config): Result = {
-    import spark.implicits._
+    val start = System.nanoTime()
     val ck = new CheckpointManager(spark, checkpointDir)
     val step = ck.latestStep().getOrElse(
       throw new IllegalStateException(s"no checkpoint under $checkpointDir"))
     val algo = ck.meta(step).getOrElse("algo", CCStrategy.HookAndContract.tag)
     val strategy = CCStrategy.all.find(_.tag == algo).getOrElse(
       throw new IllegalStateException(s"unknown checkpoint algo '$algo' under $checkpointDir"))
-    from(strategy, ck.load(step, "edges").as[Edge], ck.load(step, "mapping"),
-      cfg.copy(checkpointDir = Some(checkpointDir)), startRound = step + 1)
+    val loaded = ck.load(step, "edges")
+    scopedFrames(spark)((r: Result) => Seq(r.labels)) {
+      val layout = if (strategy == CCStrategy.HookAndContract) rangeLayout(loaded) else loaded
+      val (edges, seen) = barrierObserved(layout, seenMetrics(strategy): _*)
+      rounds(State(edges, ck.load(step, "mapping"), seen, round = step + 1),
+        cfg.copy(strategy = strategy, checkpointDir = Some(checkpointDir)), start, Nil)
+    }
   }
 
-  /** Runs `strategy` from an (edges, mapping) state: the canonical
-    * cleaned input and the identity mapping, or a checkpoint's. */
-  private def from(strategy: CCStrategy, edges: Dataset[Edge], mapping: DataFrame,
-                   cfg: Config, startRound: Int): Result = strategy match {
-    case CCStrategy.HookAndContract    => hookAndContract(edges, Some(mapping), cfg, startRound)
-    case CCStrategy.AlternatingStar    => alternatingStar(edges, mapping, cfg, startRound)
-    case CCStrategy.SampledContraction => sampledContraction(edges, mapping, cfg, startRound)
-    case CCStrategy.RandomizedHook     => randomizedHook(edges, mapping, cfg, startRound)
+  /** Range-partition the edge table by (src, dst) once (CSR-style
+    * adjacency layout, per the north star): graphs with id locality
+    * (chains, web graphs, co-occurrence ids) then contract well
+    * per-partition. The upstream dedup's hash shuffle scatters structure
+    * randomly — without this, round-0 pre-contraction finds only
+    * fragments and pointer jumping pays the full graph diameter
+    * (observed: 22 jumps vs 6). (src, dst), not src alone, so a
+    * single-hub star spreads across partitions instead of forming one
+    * straggler task. Sorted within partitions: pre-contraction chunks see
+    * contiguous segments. */
+  private def rangeLayout(edges: DataFrame): DataFrame = {
+    val p = edges.sparkSession.sessionState.conf.numShufflePartitions
+    edges.repartitionByRange(p, col("src"), col("dst"))
+      .sortWithinPartitions(col("src"), col("dst"))
   }
 
-  /** One run's round bookkeeping, shared by the four strategies: each
+  /** The state between rounds: the (edges, mapping) pair every strategy
+    * checkpoints, the [[seenMetrics]] observed on the edges, the root
+    * count of the mapping when a round observed it, the pre-contraction a
+    * fresh hook run's round 0 starts from, the round the state starts,
+    * whether the fixpoint is reached, and the metrics row of the round
+    * that produced it. */
+  private final case class State(edges: DataFrame, mapping: DataFrame, seen: Map[String, Any],
+                                 roots: Option[Long] = None, pre: Option[DataFrame] = None,
+                                 round: Int = 0, done: Boolean = false,
+                                 row: Option[SuperstepMetrics] = None)
+
+  /** What a strategy's step returns: the next edges with their observed
+    * [[seenMetrics]], the next mapping with its root count when the step
+    * observed it, and the round's active-vertex estimate and pointer
+    * jumps for its metrics row. */
+  private final case class Next(edges: DataFrame, mapping: DataFrame, seen: Map[String, Any],
+                                roots: Option[Long] = None, active: Long = -1L, jumps: Int = 0)
+
+  /** The round loop of all four strategies, on `iterateFrames`: runs
+    * `cfg.strategy`'s step from `s0` until the fixpoint or `maxRounds`,
+    * closing each round in the [[Ledger]], then finishes the labels.
+    * The loop frees a superseded (edges, mapping) once its successor has
+    * materialized and every barrier a step made for itself once the round
+    * is closed; frames in `retain` (the caller's input) are never freed.
+    * The labels are the last mapping with its root count when the last
+    * round observed one (hook, sampled); else (star, random, or no round
+    * ran: an edge-free input or a final checkpoint) they are materialized
+    * here with the count observed. The first round's time includes the
+    * start-up pass from `start`. */
+  private def rounds(s0: State, cfg: Config, start: Long, retain: Seq[Dataset[_]],
+                     extras: Boolean = false): Result = {
+    val strategy = cfg.strategy
+    val ledger = new Ledger(s0.edges.sparkSession, cfg)
+    val startRound = s0.round
+    val step: State => Next = strategy match {
+      case CCStrategy.HookAndContract    => hookStep(cfg, startRound, extras)
+      case CCStrategy.AlternatingStar    => starStep
+      case CCStrategy.SampledContraction => sampledStep(cfg)
+      case CCStrategy.RandomizedHook     => randomStep(cfg)
+    }
+    val last = iterateFrames[State](s0.copy(done = long(s0.seen, "n") == 0),
+        s => Seq(s.edges, s.mapping) ++ s.pre, retain, ledger.close)(
+        s => !s.done && s.round < cfg.maxRounds) { s =>
+      val t0 = if (s.round == startRound) start else System.nanoTime()
+      val next = step(s)
+      // the star fixpoint repeats its (n, h) signature; a contraction
+      // ends with no edge left
+      val done =
+        if (strategy == CCStrategy.AlternatingStar) next.seen == s.seen
+        else long(next.seen, "n") == 0
+      val row = SuperstepMetrics(cfg.runId, strategy.tag, s.round, long(s.seen, "n"),
+        long(next.seen, "n"), next.active, next.jumps, (System.nanoTime() - t0) / 1000000)
+      State(next.edges, next.mapping, next.seen, next.roots, None, s.round + 1, done, Some(row))
+    }
+    require(last.done, s"CC (${strategy.name}) did not converge in ${cfg.maxRounds} rounds " +
+      s"(${long(last.seen, "n")} edges left)")
+    val (labels, roots) = (strategy, last.roots) match {
+      case (_, Some(r)) => (last.mapping, Some(r))
+      // Fixpoint: every non-min vertex v has exactly the edge (min, v);
+      // a vertex with no star edge keeps its identity label.
+      case (CCStrategy.AlternatingStar, None) =>
+        val e = last.edges
+        observed(canonicalMax(compose(last.mapping,
+          e.select(col("dst").as("id"), col("src").as("label"))
+            .union(e.select(col("src").as("id"), col("src").as("label")).distinct()))))
+      case (CCStrategy.RandomizedHook, None) => observed(canonicalMax(last.mapping))
+      case (_, None) => observed(last.mapping)
+    }
+    ledger.result(labels, roots)
+  }
+
+  /** One run's round bookkeeping, the round loop's `onRound`: each
     * closed round's metrics row, kept for the [[Result]] and appended to
     * the durable metrics table (§4.5), and the (edges, mapping)
     * checkpoint every `checkpointEvery` rounds and after the last. */
-  private final class Ledger(spark: SparkSession, strategy: CCStrategy, cfg: Config) {
+  private final class Ledger(spark: SparkSession, cfg: Config) {
     private val metrics = ArrayBuffer.empty[SuperstepMetrics]
     private val ck = cfg.checkpointDir.map(new CheckpointManager(spark, _))
 
-    /** Closes `round`, begun at `t0` (`System.nanoTime`); `edges` and
-      * `mapping` are the state the next round starts from, `done` says
-      * the loop ends after this round. */
-    def close(round: Int, t0: Long, edgesIn: Long, edgesOut: Long,
-              edges: DataFrame, mapping: DataFrame, done: Boolean,
-              verticesActive: Long = -1L, pointerJumps: Int = 0): Unit = {
-      val m = SuperstepMetrics(cfg.runId, strategy.tag, round, edgesIn, edgesOut,
-        verticesActive, pointerJumps, (System.nanoTime() - t0) / 1000000)
+    def close(s: State): Unit = s.row.foreach { m =>
       metrics += m
       ck.foreach { c =>
         c.appendMetrics(Seq(m))
-        if ((round + 1) % cfg.checkpointEvery == 0 || done)
-          c.save(round + 1, Map("edges" -> edges, "mapping" -> mapping),
-            Map("algo" -> strategy.tag, "edgeCount" -> edgesOut.toString,
+        if (s.round % cfg.checkpointEvery == 0 || s.done)
+          c.save(s.round, Map("edges" -> s.edges, "mapping" -> s.mapping),
+            Map("algo" -> cfg.strategy.tag, "edgeCount" -> m.edgesOut.toString,
                 "runId" -> cfg.runId))
       }
     }
@@ -249,244 +373,170 @@ object ConnectedComponents {
     }
   }
 
+  /** The contraction step (G4, G9) the hook, sampled and random
+    * strategies share — the reference's one step over its `vertex_map`
+    * (`SparseSampling.hpp:71,260-264`): relabel both endpoints through
+    * the label function f (an (id, label) frame; an id f has no row for
+    * keeps itself), drop intra-component edges (P2), normalize (P3),
+    * dedup (safe for CC). Where f is total, as the hook's is, the left
+    * joins equal inner joins. */
+  private def contract(edges: DataFrame, f: DataFrame): DataFrame =
+    edges.as("e")
+      .join(f.as("fs"), col("e.src") === col("fs.id"), "left")
+      .join(f.as("fd"), col("e.dst") === col("fd.id"), "left")
+      .select(coalesce(col("fs.label"), col("e.src")).as("u"),
+              coalesce(col("fd.label"), col("e.dst")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("src"), greatest(col("u"), col("v")).as("dst"))
+      .distinct()
+
+  /** The mapping composition (G6, forward, no recursion stack) every
+    * strategy shares: each original id moves to f's label of its current
+    * label; a label f has no row for stays. */
+  private def compose(mapping: DataFrame, f: DataFrame): DataFrame =
+    mapping.as("m").join(f.as("f"), col("m.label") === col("f.id"), "left")
+      .select(col("m.id").as("id"), coalesce(col("f.label"), col("m.label")).as("label"))
+
+  /** Relabels every component by its max member, for the strategies whose
+    * representatives are arbitrary (star: the component min; random: a
+    * coin-toss winner). Every member, the representative included, has a
+    * row in `mapping`. */
+  private def canonicalMax(mapping: DataFrame): DataFrame = {
+    val rep = mapping.groupBy(col("label")).agg(max(col("id")).as("rep"))
+    mapping.as("m").join(rep.as("r"), col("m.label") === col("r.label"))
+      .select(col("m.id").as("id"), col("r.rep").as("label"))
+  }
+
   // ---------------------------------------------------------------------
   // Strategy 1: hook-to-max + pointer jumping + contraction (reference).
-  // Two entries:
-  //  - `mapping0 = None` (fresh run): `edges0` is the LAZY cleaned input.
-  //    Round 0's pre-contraction reads it once, in range layout, and
-  //    counts it in the same job. Its f covers every edge vertex with
-  //    canonical max labels, so f (∪ `extraVertices`) IS the first
-  //    mapping: no vertex-set distinct, no composition join. The input
-  //    plan may reach the caller's own barriers (a release walks every
-  //    checkpointed RDD in a plan), so the loop never releases it.
-  //  - `mapping0 = Some(m)` (resume): the loop consumes `edges0`, a
-  //    barrier released once round 0 has read it, and every round
-  //    composes the mapping with its label function f. `m` stays the
-  //    caller's, so the loop never releases it.
+  // A fresh run's round 0 starts from the pre-contraction `run` made of
+  // its lazy input: its f covers every edge vertex with canonical max
+  // labels, so f (grouped with the extra vertices, if any) IS the first
+  // mapping — no vertex-set distinct, no composition join. Every other
+  // round composes the mapping with its f.
   // ---------------------------------------------------------------------
-  private def hookAndContract(
-      edges0: Dataset[Edge], mapping0: Option[DataFrame], cfg: Config,
-      startRound: Int = 0, extraVertices: Option[Dataset[Long]] = None): Result = {
-    val spark = edges0.sparkSession
+  private def hookStep(cfg: Config, startRound: Int, extras: Boolean)(s: State): Next =
+    if (s.round > startRound && cfg.driverFinishEdges > 0 &&
+        long(s.seen, "n") <= cfg.driverFinishEdges) driverFinish(s, cfg)
+    else hookRound(s, cfg, extras)
+
+  /** Driver tail finish (G8): collect the small contracted remainder,
+    * union-find it locally, compose the mapping in one broadcast join.
+    * A distributed tail round costs ~6 constant-time driver jobs for a
+    * vanishing amount of data; this costs three. */
+  private def driverFinish(s: State, cfg: Config): Next = {
+    val spark = s.edges.sparkSession
     import spark.implicits._
-    val ledger = new Ledger(spark, CCStrategy.HookAndContract, cfg)
-    val fresh = mapping0.isEmpty
-    val start = System.nanoTime()
+    val pairs = s.edges.select($"src", $"dst").as[(Long, Long)].collect()
+    val mapRows = UnionFind.components(pairs.iterator).iterator
+      .filter { case (v, r) => v != r }.toSeq
+    // the relabel map can approach 2×driverFinishEdges rows; only
+    // force-broadcast it when it is inside the configured broadcast
+    // class — past that, fall back to a shuffle join rather than
+    // bypassing autoBroadcastJoinThreshold with a ~100 MB relation
+    val f = bcIfSmall(spark.createDataset(mapRows).toDF("id", "label"),
+      mapRows.size.toLong, cfg)
+    val (mapping, roots) = observed(compose(s.mapping, f))
+    Next(spark.emptyDataset[Edge].toDF(), mapping, Map("n" -> 0L), roots)
+  }
 
-    // Range-partition the edge table by (src, dst) once (CSR-style
-    // adjacency layout, per the north star): graphs with id locality
-    // (chains, web graphs, co-occurrence ids) then contract well
-    // per-partition. The upstream dedup's hash shuffle scatters structure
-    // randomly — without this, round-0 pre-contraction finds only
-    // fragments and pointer jumping pays the full graph diameter
-    // (observed: 22 jumps vs 6). (src, dst), not src alone, so a
-    // single-hub star spreads across partitions instead of forming one
-    // straggler task. A fresh run leaves the ranged input lazy: round 0's
-    // pre-contraction is its only reader, and materializing it would cost
-    // one more full pass over the largest table in the job.
+  private def hookRound(s: State, cfg: Config, extras: Boolean): Next = {
+    val spark = s.edges.sparkSession
+    import spark.implicits._
     val p = spark.sessionState.conf.numShufflePartitions
-    val ranged = edges0.toDF().repartitionByRange(p, $"src", $"dst")
-      .sortWithinPartitions($"src", $"dst") // CSR layout: chunks see contiguous segments
-    var edges = if (fresh) ranged else ranged.cutLineage()
-    var mapping = mapping0
-    var round = startRound
-    // A fresh run counts its input edges under the pre-contraction kernel,
-    // inside round 0's pre-contraction job.
-    var preContracted: Option[DataFrame] = None
-    var edgeCount =
-      if (!fresh) edges.count()
-      else {
-        val obs = Observation()
-        preContracted = Some(preContract(edges.observe(obs, count(lit(1)).as("n")), cfg))
-        obs.get("n").asInstanceOf[Long]
-      }
-    // roots observed in each round's mapping materialization; at loop
-    // exit the last value IS the component count (labels final there)
-    var lastRoots: Option[Long] = None
+    val hookInput = s.pre.getOrElse(preContract(s.edges, cfg))
 
-    while (edgeCount > 0 && round < cfg.maxRounds) {
-      // Driver tail finish (G8): collect the small contracted remainder,
-      // union-find it locally, compose the mapping in one broadcast
-      // join. A distributed tail round costs ~6 constant-time driver
-      // jobs for a vanishing amount of data; this costs two.
-      if (round > startRound && cfg.driverFinishEdges > 0 &&
-          edgeCount <= cfg.driverFinishEdges) {
-        val t0 = System.nanoTime()
-        val pairs = edges.select($"src", $"dst").as[(Long, Long)].collect()
-        val cc = UnionFind.components(pairs.iterator)
-        val mapRows = cc.iterator.filter { case (v, r) => v != r }.toSeq
-        // the relabel map can approach 2×driverFinishEdges rows; only
-        // force-broadcast it when it is inside the configured broadcast
-        // class — past that, fall back to a shuffle join rather than
-        // bypassing autoBroadcastJoinThreshold with a ~100 MB relation
-        val mapDf = bcIfSmall(
-          spark.createDataset(mapRows).toDF("old", "new"), mapRows.size.toLong, cfg)
-        val prevMapping = mapping.get // round 0 has built it by now
-        val newMapping = prevMapping.as("m")
-          .join(mapDf.as("f"), $"m.label" === $"f.old", "left")
-          .select($"m.id".as("id"), coalesce($"f.new", $"m.label").as("label"))
-        val (mappedDf, mm) = barrierObserved(newMapping, rootsMetric)
-        mapping = Some(mappedDf)
-        lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
-        prevMapping.releaseLineage(); edges.releaseLineage()
-        edges = spark.emptyDataset[Edge].toDF()
-        ledger.close(round, t0, edgeCount, 0L, edges, mappedDf, done = true)
-        edgeCount = 0
-        round += 1
-      } else {
-      // a fresh run's round 0 also times its input pass
-      val t0 = if (round == startRound) start else System.nanoTime()
-
-      val hookInput = preContracted.getOrElse(preContract(edges, cfg))
-      preContracted = None
-
-      // G2 hook-to-max: each src hooks to its largest (normalized) neighbor.
-      // Partial+final hash aggregation reproduces local-hook + MPI_MAX
-      // reduce; no salting needed (map-side combine absorbs src skew).
-      // f has a row for EVERY vertex of the round and a root is an
-      // identity row: pre-contraction emits (rep, rep) for each chunk max.
-      // Row and root counts ride the same job: |f| = |hooked| (each row
-      // resolves exactly once) and f's roots are hooked's identity rows
-      // (labels only grow along a path).
-      val (hooked, hm) = barrierObserved(
-        hookInput.groupBy($"src".as("id")).agg(max($"dst").as("label")),
-        count(lit(1)).as("n"), rootsMetric)
-      val fRows = Option(hm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val fRoots = Option(hm("roots")).map(_.asInstanceOf[Long]).getOrElse(0L)
-
-      // G3 pointer jumping with path doubling: f := f ∘ f until fixpoint.
-      // Hard-won rules in this loop:
-      //  - cutLineage (not persist) per jump: the self-join doubles the
-      //    LOGICAL plan (and the size-estimation BigInts) every jump —
-      //    persist caches data but keeps lineage, and Catalyst's stats /
-      //    plan-string work alone OOMs by jump ~19.
-      //  - never broadcast all of f (each broadcast pins its copy until
-      //    round end) and never route a jump through the driver: a
-      //    collected frontier re-enters as a LocalRelation whose rows
-      //    every later plan's optimizer rules walk again. Each jump is
-      //    one Catalyst join materialized by its barrier — broadcast
-      //    when the frontier is at most `broadcastRefsRows` rows
-      //    (build side = the frontier), shuffle-hash above.
-      //  - frontier split: a row is `done` once its label is a root (an
-      //    identity row) or points at a done row. Each jump probes AND
-      //    materializes only the shrinking undone frontier; resolved rows
-      //    stay behind in their jump's barrier (per-jump checkpoint
-      //    volume tracks the frontier, not |f| — measured 13M vs 30M rows
-      //    across a 16M-edge round 0).
-      //    The lookup side must remain ALL of f (frontier labels can
-      //    point at any row): a union of the done segments + frontier.
-      var frontier = hooked.filter($"label" =!= $"id")
-      var doneParts = List(hooked.filter($"label" === $"id")) // the roots
-      val jumpBarriers = scala.collection.mutable.ArrayBuffer[DataFrame](hooked)
-      var jumps = 0
-      var undone = fRows - fRoots
-      while (undone > 0) {
-        val lookup = (doneParts.map(_.withColumn("done", lit(true))) :+
-            frontier.select($"id", $"label", lit(false).as("done")))
-          .reduce(_ union _)
-        // f has a row for every label, so each frontier row finds exactly
-        // one lookup row (inner join). Small frontiers are the broadcast
-        // build side and the lookup streams past them — one broadcast per
-        // jump; coalesce keeps the growing union of done segments at ≤ p
-        // partitions. Large frontiers take a shuffle-hash join.
-        val (a, b) =
-          if (undone <= cfg.broadcastRefsRows) (broadcast(frontier), lookup.coalesce(p))
-          else (frontier, lookup.hint("shuffle_hash"))
-        val joined = a.as("a").join(b.as("b"), $"a.label" === $"b.id")
-          .select($"a.id".as("id"), $"b.label".as("label"), $"b.done".as("done"))
-        val (next, m) = barrierObserved(joined,
-          sum(when(!$"done", 1L).otherwise(0L)).as("undone"))
-        undone = Option(m("undone")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        // next holds every frontier row (resolved + still-undone); the
-        // barriers of earlier jumps still back doneParts until the merge
-        jumpBarriers += next
-        doneParts ::= next.filter($"done").select($"id", $"label")
-        frontier = next.filter(!$"done").select($"id", $"label")
-        jumps += 1
-      }
-      // fixpoint: frontier is empty (the round has edges, so at least one
-      // jump ran); f = disjoint union of the roots and the resolved
-      // segments, materialized ONCE into a compact barrier — contraction
-      // and mapping each scan f twice, and joining against the lazy
-      // union-of-filters was measured 3× slower than against one barrier.
-      // Every per-jump barrier is superseded by it — free their blocks
-      // NOW, before the contraction joins need the memory (keeping them
-      // pinned through the sort-merge was a measured 2× contraction
-      // slowdown on the 8g heap); blocking: the point is that the memory
-      // is back before the join starts. coalesce: the union has a
-      // partition set per jump segment, and a fresh run's f becomes the
-      // mapping every later round (and checkpoint) inherits.
-      val f = barrier(doneParts.reduce(_ union _).coalesce(p))
-      jumpBarriers.foreach(_.releaseLineage(blocking = true))
-
-      // G4 contraction: relabel endpoints through f, drop intra-component
-      // edges (P2), normalize (P3), dedup (safe for CC). Contracts the
-      // (connectivity-equivalent, ≤min(m,n)-edge) pre-contracted forest,
-      // not the full edge set — same components, O(n) relabel volume.
-      // f has a row for both endpoints of every edge: inner joins.
-      val fB = bcIfSmall(f, fRows, cfg)
-      val contracted = hookInput.filter($"src" =!= $"dst").as("e")
-        .join(fB.as("fs"), $"e.src" === $"fs.id")
-        .join(fB.as("fd"), $"e.dst" === $"fd.id")
-        .select($"fs.label".as("u"), $"fd.label".as("v"))
-        .filter($"u" =!= $"v")
-        .select(least($"u", $"v").as("src"), greatest($"u", $"v").as("dst"))
-        .distinct()
-      val (newEdges, cm) = barrierObserved(contracted, count(lit(1)).as("n"))
-
-      val prevMapping = mapping
-      val (newMapping, roots) = (mapping, extraVertices) match {
-        // G6 forward map composition (no recursion stack): orig → new rep.
-        case (Some(m), _) =>
-          val (md, mm) = barrierObserved(m.as("m")
-            .join(fB.as("f"), $"m.label" === $"f.id", "left")
-            .select($"m.id".as("id"), coalesce($"f.label", $"m.label").as("label")),
-            rootsMetric)
-          (md, Option(mm("roots")).map(_.asInstanceOf[Long]))
-        // fresh round 0: f already maps every edge vertex to its
-        // component max among this round's edges — the first mapping
-        case (None, None) => (f, Some(fRoots))
-        // an extra vertex keeps its edge label if it has one (labels are
-        // maxima, so max picks it), else it labels itself
-        case (None, Some(x)) =>
-          val (md, mm) = barrierObserved(
-            f.union(x.toDF("id").select($"id", $"id".as("label")))
-              .groupBy($"id").agg(max($"label").as("label")),
-            rootsMetric)
-          (md, Option(mm("roots")).map(_.asInstanceOf[Long]))
-      }
-      val prevEdges = edges
-      edges = newEdges
-      val newCount = Option(cm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      mapping = Some(newMapping)
-      lastRoots = roots
-      if (!(newMapping eq f)) f.releaseLineage()
-      if (!fresh || round > startRound) prevEdges.releaseLineage()
-      if (round > startRound) prevMapping.foreach(_.releaseLineage())
-      hookInput.releaseLineage() // last read: contraction join
-
-      ledger.close(round, t0, edgeCount, newCount, edges, newMapping,
-        done = newCount == 0, pointerJumps = jumps)
-      edgeCount = newCount
-      round += 1
-      } // end distributed round (vs driver tail finish)
+    // G2 hook-to-max: each src hooks to its largest (normalized) neighbor.
+    // Partial+final hash aggregation reproduces local-hook + MPI_MAX
+    // reduce; no salting needed (map-side combine absorbs src skew).
+    // f has a row for EVERY vertex of the round and a root is an
+    // identity row: pre-contraction emits (rep, rep) for each chunk max.
+    // Row and root counts ride the same job: |f| = |hooked| (each row
+    // resolves exactly once) and f's roots are hooked's identity rows
+    // (labels only grow along a path).
+    val (hooked, hm) = barrierObserved(
+      hookInput.groupBy($"src".as("id")).agg(max($"dst").as("label")),
+      count(lit(1)).as("n"), rootsMetric)
+    val fRows = long(hm, "n")
+    val fRoots = long(hm, "roots")
+    // G3 pointer jumping with path doubling: f := f ∘ f until fixpoint.
+    // Hard-won rules in this loop:
+    //  - cutLineage (not persist) per jump: the self-join doubles the
+    //    LOGICAL plan (and the size-estimation BigInts) every jump —
+    //    persist caches data but keeps lineage, and Catalyst's stats /
+    //    plan-string work alone OOMs by jump ~19.
+    //  - never broadcast all of f (each broadcast pins its copy until
+    //    round end) and never route a jump through the driver: a
+    //    collected frontier re-enters as a LocalRelation whose rows
+    //    every later plan's optimizer rules walk again. Each jump is
+    //    one Catalyst join materialized by its barrier — broadcast
+    //    when the frontier is at most `broadcastRefsRows` rows
+    //    (build side = the frontier), shuffle-hash above.
+    //  - frontier split: a row is `done` once its label is a root (an
+    //    identity row) or points at a done row. Each jump probes AND
+    //    materializes only the shrinking undone frontier; resolved rows
+    //    stay behind in their jump's barrier (per-jump checkpoint
+    //    volume tracks the frontier, not |f| — measured 13M vs 30M rows
+    //    across a 16M-edge round 0).
+    //    The lookup side must remain ALL of f (frontier labels can
+    //    point at any row): a union of the done segments + frontier.
+    var frontier = hooked.filter($"label" =!= $"id")
+    var doneParts = List(hooked.filter($"label" === $"id")) // the roots
+    val jumpBarriers = scala.collection.mutable.ArrayBuffer[DataFrame](hooked)
+    var jumps = 0
+    var undone = fRows - fRoots
+    while (undone > 0) {
+      val lookup = (doneParts.map(_.withColumn("done", lit(true))) :+
+          frontier.select($"id", $"label", lit(false).as("done")))
+        .reduce(_ union _)
+      // f has a row for every label, so each frontier row finds exactly
+      // one lookup row (inner join). Small frontiers are the broadcast
+      // build side and the lookup streams past them — one broadcast per
+      // jump; coalesce keeps the growing union of done segments at ≤ p
+      // partitions. Large frontiers take a shuffle-hash join.
+      val (a, b) =
+        if (undone <= cfg.broadcastRefsRows) (broadcast(frontier), lookup.coalesce(p))
+        else (frontier, lookup.hint("shuffle_hash"))
+      val joined = a.as("a").join(b.as("b"), $"a.label" === $"b.id")
+        .select($"a.id".as("id"), $"b.label".as("label"), $"b.done".as("done"))
+      val (next, m) = barrierObserved(joined,
+        sum(when(!$"done", 1L).otherwise(0L)).as("undone"))
+      undone = long(m, "undone")
+      // next holds every frontier row (resolved + still-undone); the
+      // barriers of earlier jumps still back doneParts until the merge
+      jumpBarriers += next
+      doneParts ::= next.filter($"done").select($"id", $"label")
+      frontier = next.filter(!$"done").select($"id", $"label")
+      jumps += 1
     }
-    require(edgeCount == 0,
-      s"CC did not converge in ${cfg.maxRounds} rounds ($edgeCount edges left)")
-    // Edge-free input: the loop never ran, every vertex is its own
-    // component. The mapping is the identity over the vertex set — still
-    // LAZY, so materialize it now — then free the round-0 input.
-    val finalMapping = mapping match {
-      case Some(m) if round > startRound => m
-      case _ =>
-        val identity = mapping.getOrElse(extraVertices.map(_.toDF("id").distinct())
-          .getOrElse(spark.emptyDataset[Long].toDF("id")).select($"id", $"id".as("label")))
-        val (md, mm) = barrierObserved(identity, rootsMetric)
-        lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
-        if (fresh) preContracted.foreach(_.releaseLineage()) else edges.releaseLineage()
-        md
-    }
-    ledger.result(finalMapping, lastRoots)
+    // fixpoint: frontier is empty (the round has edges, so at least one
+    // jump ran); f = disjoint union of the roots and the resolved
+    // segments, materialized ONCE into a compact barrier — contraction
+    // and mapping each scan f twice, and joining against the lazy
+    // union-of-filters was measured 3× slower than against one barrier.
+    // Every per-jump barrier is superseded by it — free their blocks
+    // NOW, before the contraction joins need the memory (keeping them
+    // pinned through the sort-merge was a measured 2× contraction
+    // slowdown on the 8g heap); blocking: the point is that the memory
+    // is back before the join starts. coalesce: the union has a
+    // partition set per jump segment, and a fresh run's f becomes the
+    // mapping every later round (and checkpoint) inherits.
+    val f = barrier(doneParts.reduce(_ union _).coalesce(p))
+    jumpBarriers.foreach(_.releaseLineage(blocking = true))
+
+    // G4 contraction of the (connectivity-equivalent, ≤min(m,n)-edge)
+    // pre-contracted forest, not the full edge set — same components,
+    // O(n) relabel volume.
+    val fB = bcIfSmall(f, fRows, cfg)
+    val (edges, seen) = barrierObserved(contract(hookInput.filter($"src" =!= $"dst"), fB),
+      seenMetrics(CCStrategy.HookAndContract): _*)
+    val (mapping, roots) =
+      if (s.pre.isEmpty) observed(compose(s.mapping, fB))
+      // an extra vertex keeps its edge label if it has one (labels are
+      // maxima, so max picks it), else it labels itself
+      else if (extras) observed(f.union(s.mapping).groupBy($"id").agg(max($"label").as("label")))
+      else (f, Some(fRoots))
+    Next(edges, mapping, seen, roots, jumps = jumps)
   }
 
   /** Per-partition union-find pre-contraction (reference analogue:
@@ -522,252 +572,103 @@ object ConnectedComponents {
   }
 
   // ---------------------------------------------------------------------
-  // Strategy 2: alternating small-star / large-star (SoCC 2014).
+  // Strategy 2: alternating small-star / large-star (SoCC 2014). Edges
+  // stay canonical (src < dst) between steps; the mapping stays the
+  // identity, so the checkpoint shape matches the other strategies'.
   // ---------------------------------------------------------------------
-  private def alternatingStar(
-      edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
-      startRound: Int = 0): Result = {
-    val spark = edges0.sparkSession
-    import spark.implicits._
-    val ledger = new Ledger(spark, CCStrategy.AlternatingStar, cfg)
+  private def starStep(s: State): Next = {
+    val edges = s.edges
+    import edges.sparkSession.implicits._
+    // Large-star: each u attaches its larger neighbors to
+    // m(u) = min(N(u) ∪ {u}).
+    val bidir = edges.union(edges.select($"dst".as("src"), $"src".as("dst")))
+    val minN = bidir.groupBy($"src").agg(min($"dst").as("mn"))
+      .select($"src".as("u"), least($"src", $"mn").as("m"))
+    val ls = bidir.as("e")
+      .join(minN.as("s"), $"e.src" === $"s.u")
+      .filter($"e.dst" > $"e.src")
+      .select($"s.m".as("src"), $"e.dst".as("dst"))
+      .filter($"src" =!= $"dst")
+      .distinct()
+      .cutLineage()
 
-    // Edges kept canonical (src < dst) between steps. The loop state is
-    // (edges, vertsAll); vertsAll never changes, so the checkpoint shape
-    // matches the other strategies' (edges, mapping) and resume() can
-    // reload it as mapping0.
-    var edges = edges0.toDF().cutLineage()
-    val vertsAll = mapping0.cutLineage()
-    var sig = signature(edges)
-    var round = startRound
-    var converged = edges.isEmpty
-
-    while (!converged && round < cfg.maxRounds) {
-      val t0 = System.nanoTime()
-      val cntIn = sig._1
-
-      // Large-star: each u attaches its larger neighbors to
-      // m(u) = min(N(u) ∪ {u}).
-      val bidir = edges.union(edges.select($"dst".as("src"), $"src".as("dst")))
-      val minN = bidir.groupBy($"src").agg(min($"dst").as("mn"))
-        .select($"src".as("u"), least($"src", $"mn").as("m"))
-      val ls = bidir.as("e")
-        .join(minN.as("s"), $"e.src" === $"s.u")
-        .filter($"e.dst" > $"e.src")
-        .select($"s.m".as("src"), $"e.dst".as("dst"))
+    // Small-star: on (v < u) pairs keyed by u, attach N(u) ∪ {u} to
+    // m(u) = min(N(u)) (all neighbors here are < u). The convergence
+    // signature rides the materialization job.
+    val minS = ls.groupBy($"dst".as("u")).agg(min($"src").as("m"))
+    val (ss, seen) = barrierObserved(
+      ls.as("e")
+        .join(minS.as("s"), $"e.dst" === $"s.u")
+        .select($"s.m".as("src"), $"e.src".as("dst"))
+        .union(minS.select($"m".as("src"), $"u".as("dst")))
         .filter($"src" =!= $"dst")
-        .distinct()
-        .cutLineage()
-
-      // Small-star: on (v < u) pairs keyed by u, attach N(u) ∪ {u} to
-      // m(u) = min(N(u)) (all neighbors here are < u).
-      val minS = ls.groupBy($"dst".as("u")).agg(min($"src").as("m"))
-      // convergence signature observed INSIDE the materialization job —
-      // the separate signature() agg was one extra full scan per round
-      val (ss, sm) = barrierObserved(
-        ls.as("e")
-          .join(minS.as("s"), $"e.dst" === $"s.u")
-          .select($"s.m".as("src"), $"e.src".as("dst"))
-          .union(minS.select($"m".as("src"), $"u".as("dst")))
-          .filter($"src" =!= $"dst")
-          .distinct(),
-        count(lit(1)).as("c"),
-        coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("h"))
-
-      val newSig = (sm("c").asInstanceOf[Long], sm("h").asInstanceOf[Long])
-      converged = newSig == sig
-      edges.releaseLineage(); ls.releaseLineage()
-      edges = ss
-      sig = newSig
-      ledger.close(round, t0, cntIn, newSig._1, edges, vertsAll, done = converged)
-      round += 1
-    }
-    require(converged, s"alternating-star did not converge in ${cfg.maxRounds} rounds")
-
-    // Fixpoint: every non-min vertex v has exactly the edge (min, v).
-    // Map to canonical component-max labels.
-    val starLabels = edges.select($"dst".as("id"), $"src".as("label"))
-      .union(edges.select($"src".as("id"), $"src".as("label")).distinct())
-    // vertices isolated from the star set (singletons) come from mapping0
-    val full = vertsAll.as("m")
-      .join(starLabels.as("s"), $"m.id" === $"s.id", "left")
-      .select($"m.id".as("id"), coalesce($"s.label", $"m.id").as("label"))
-    val rep = full.groupBy($"label").agg(max($"id").as("rep"))
-    val out = full.as("l").join(rep.as("r"), $"l.label" === $"r.label")
-      .select($"l.id".as("id"), $"r.rep".as("label"))
-    ledger.result(out, None)
-  }
-
-  /** Cheap set signature for convergence detection: (count, hash-xor).
-    * Both compared edge tables are deduplicated sets, so a 64-bit
-    * xxhash XOR-fold is an order-independent, overflow-free fingerprint. */
-  private def signature(edges: DataFrame): (Long, Long) = {
-    val row = edges.agg(
-      count(lit(1)).as("c"),
-      coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("h")).collect()(0)
-    (row.getLong(0), row.getLong(1))
+        .distinct(),
+      seenMetrics(CCStrategy.AlternatingStar): _*)
+    Next(ss, s.mapping, seen)
   }
 
   // ---------------------------------------------------------------------
-  // Strategy 3: PPoPP-2018-style sampled contraction.
+  // Strategy 3: PPoPP-2018-style sampled contraction. The round's edge
+  // count and vertex estimate were observed on the barrier its edges
+  // came from.
   // ---------------------------------------------------------------------
-  private def sampledContraction(
-      edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
-      startRound: Int = 0): Result = {
-    val spark = edges0.sparkSession
+  private def sampledStep(cfg: Config)(s: State): Next = {
+    val spark = s.edges.sparkSession
     import spark.implicits._
-    val ledger = new Ledger(spark, CCStrategy.SampledContraction, cfg)
+    val edges = s.edges
+    val edgeCount = long(s.seen, "n")
+    val nEst = long(s.seen, "v")
+    // Bound: n^(1+eps/2) * (1+delta) — `SparseSampling.hpp:117` with
+    // eps=.09, delta=.2 (`SparseSampling.hpp:34-35`) — under a hard cap
+    // so the driver collect stays bounded regardless of input.
+    val bound = math.min(cfg.sampleHardCap.toDouble,
+      math.pow(nEst.toDouble.max(2.0), 1.0 + cfg.sampleEps / 2.0) * (1.0 + cfg.sampleDelta))
+    val k = math.max(1L, math.min(edgeCount, bound.toLong))
+    def take(df: DataFrame): Array[(Long, Long)] =
+      df.limit(k.toInt).select($"src", $"dst").as[(Long, Long)].collect()
+    // the Bernoulli pre-sample is often empty at small k; prefix CC is
+    // exact on any sample, so fall back to the first k edges rather
+    // than spend a superstep contracting nothing
+    val sampled: Array[(Long, Long)] =
+      if (k >= edgeCount) edges.select($"src", $"dst").as[(Long, Long)].collect()
+      else Some(take(edges.sample(withReplacement = false,
+          math.min(1.0, k.toDouble * 1.2 / edgeCount), cfg.seed + s.round)))
+        .filter(_.nonEmpty).getOrElse(take(edges))
 
-    // Round-6 fold: the edge count AND the round's active-vertex estimate
-    // ride the edge materialization job itself as observed metrics —
-    // round 5 paid one extra countDistinct aggregation (a full edge scan)
-    // plus one count() action per round on top of it. nEst is the
-    // distinct count of src ∪ dst: one HLL sketch per column, unioned, so
-    // a vertex seen in both columns counts once (±2% typical). It only
-    // sizes the sample bound, which already carries (1+delta)=1.2
-    // headroom, and prefix CC is exact on ANY sample — sample size
-    // affects round count, never correctness.
-    val vertEst = hll_sketch_estimate(
-      hll_union(hll_sketch_agg($"src"), hll_sketch_agg($"dst"))).as("n")
-    val (edges00, m0) = barrierObserved(edges0.toDF(),
-      count(lit(1)).as("c"), vertEst)
-    var edges = edges00
-    var mapping = mapping0.cutLineage()
-    var round = startRound
-    var edgeCount = Option(m0("c")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    var nEst = Option(m0("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    var lastRoots: Option[Long] = None
-
-    while (edgeCount > 0 && round < cfg.maxRounds) {
-      val t0 = System.nanoTime()
-      // Bound: n^(1+eps/2) * (1+delta) — `SparseSampling.hpp:117` with
-      // eps=.09, delta=.2 (`SparseSampling.hpp:34-35`) — under a hard cap
-      // so the driver collect stays bounded regardless of input.
-      val bound = math.min(cfg.sampleHardCap.toDouble,
-        math.pow(nEst.toDouble.max(2.0), 1.0 + cfg.sampleEps / 2.0) * (1.0 + cfg.sampleDelta))
-      val k = math.max(1L, math.min(edgeCount, bound.toLong))
-      def take(df: org.apache.spark.sql.DataFrame): Array[(Long, Long)] =
-        df.limit(k.toInt).select($"src", $"dst").as[(Long, Long)].collect()
-      // the Bernoulli pre-sample is often empty at small k; prefix CC is
-      // exact on any sample, so fall back to the first k edges rather
-      // than spend a superstep contracting nothing
-      val sampled: Array[(Long, Long)] =
-        if (k >= edgeCount) edges.select($"src", $"dst").as[(Long, Long)].collect()
-        else Some(take(edges.sample(withReplacement = false,
-            math.min(1.0, k.toDouble * 1.2 / edgeCount), cfg.seed + round)))
-          .filter(_.nonEmpty).getOrElse(take(edges))
-
-      // Driver-local prefix CC (≙ master-only union-find,
-      // SparseSampling.hpp:275-313), canonical max labels.
-      val cc = UnionFind.components(sampled.iterator)
-      val mapRows = cc.iterator.filter { case (v, r) => v != r }
-        .map { case (v, r) => (v, r) }.toSeq
-      val mapDf = broadcast(spark.createDataset(mapRows).toDF("old", "new"))
-
-      // G9: broadcast map, relabel, drop intra-component edges.
-      val contracted = edges.as("e")
-        .join(mapDf.as("ms"), $"e.src" === $"ms.old", "left")
-        .join(mapDf.as("md"), $"e.dst" === $"md.old", "left")
-        .select(coalesce($"ms.new", $"e.src").as("u"),
-                coalesce($"md.new", $"e.dst").as("v"))
-        .filter($"u" =!= $"v")
-        .select(least($"u", $"v").as("src"), greatest($"u", $"v").as("dst"))
-        .distinct()
-
-      val newMapping = mapping.as("m")
-        .join(mapDf.as("f"), $"m.label" === $"f.old", "left")
-        .select($"m.id".as("id"), coalesce($"f.new", $"m.label").as("label"))
-
-      val prevEdges = edges; val prevMapping = mapping
-      // next round's count + vertex estimate observed in THIS round's
-      // contraction materialization — no separate count()/agg jobs
-      val (contractedB, cm) = barrierObserved(contracted,
-        count(lit(1)).as("c"), vertEst)
-      edges = contractedB
-      val (mappedDf, mm) = barrierObserved(newMapping, rootsMetric)
-      mapping = mappedDf
-      lastRoots = Option(mm("roots")).map(_.asInstanceOf[Long])
-      val newCount = Option(cm("c")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      prevEdges.releaseLineage(); prevMapping.releaseLineage()
-
-      ledger.close(round, t0, edgeCount, newCount, edges, mapping,
-        done = newCount == 0, verticesActive = nEst)
-      edgeCount = newCount
-      nEst = Option(cm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      round += 1
-    }
-    require(edgeCount == 0,
-      s"sampled CC did not converge in ${cfg.maxRounds} rounds")
-    // edge-free input: the loop never ran — mapping is the identity,
-    // every vertex its own component
-    if (round == startRound) lastRoots = Some(mapping.count())
-    ledger.result(mapping, lastRoots)
+    // Driver-local prefix CC (≙ master-only union-find,
+    // SparseSampling.hpp:275-313), canonical max labels, broadcast.
+    val mapRows = UnionFind.components(sampled.iterator).iterator
+      .filter { case (v, r) => v != r }.toSeq
+    val f = broadcast(spark.createDataset(mapRows).toDF("id", "label"))
+    val (next, seen) = barrierObserved(contract(edges, f),
+      seenMetrics(CCStrategy.SampledContraction): _*)
+    val (mapping, roots) = observed(compose(s.mapping, f))
+    Next(next, mapping, seen, roots, active = nEst)
   }
 
   // ---------------------------------------------------------------------
   // Strategy 4: G5 randomized coin-toss hooking (random-mate), seeded.
   // ---------------------------------------------------------------------
-  private def randomizedHook(
-      edges0: Dataset[Edge], mapping0: DataFrame, cfg: Config,
-      startRound: Int = 0): Result = {
-    val spark = edges0.sparkSession
-    import spark.implicits._
-    val ledger = new Ledger(spark, CCStrategy.RandomizedHook, cfg)
-
-    var edges = edges0.toDF().cutLineage()
-    var mapping = mapping0.cutLineage()
-    var round = startRound
-    var edgeCount = edges.count()
-
-    while (edgeCount > 0 && round < cfg.maxRounds) {
-      val t0 = System.nanoTime()
-      // Deterministic per-round coin: heads(v) ⟺ hash is even.
-      def heads(c: org.apache.spark.sql.Column) =
-        pmod(xxhash64(lit(cfg.seed), lit(round), c), lit(2)) === 0
-      // Tails hook to a heads-neighbor (max for determinism); the hook
-      // forest has depth 1 by construction (a head never hooks), so no
-      // pointer jumping is needed — the reference resolves the same
-      // races with atomics + later root finding.
-      val bidir = edges.select(explode(array(
-          struct($"src".as("a"), $"dst".as("b")),
-          struct($"dst".as("a"), $"src".as("b")))).as("e"))
-        .select($"e.a".as("a"), $"e.b".as("b"))
-      val f = bidir.filter(!heads($"a") && heads($"b"))
-        .groupBy($"a".as("id")).agg(max($"b").as("label"))
-        .cutLineage()
-
-      val fB = bcIfSmall(f, 2 * edgeCount, cfg)
-      val contracted = edges.as("e")
-        .join(fB.as("fs"), $"e.src" === $"fs.id", "left")
-        .join(fB.as("fd"), $"e.dst" === $"fd.id", "left")
-        .select(coalesce($"fs.label", $"e.src").as("u"),
-                coalesce($"fd.label", $"e.dst").as("v"))
-        .filter($"u" =!= $"v")
-        .select(least($"u", $"v").as("src"), greatest($"u", $"v").as("dst"))
-        .distinct()
-      val newMapping = mapping.as("m")
-        .join(fB.as("f"), $"m.label" === $"f.id", "left")
-        .select($"m.id".as("id"), coalesce($"f.label", $"m.label").as("label"))
-
-      val prevEdges = edges; val prevMapping = mapping
-      val (newEdges, cm) = barrierObserved(contracted, count(lit(1)).as("n"))
-      edges = newEdges
-      mapping = newMapping.cutLineage()
-      val newCount = Option(cm("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      f.releaseLineage(); prevEdges.releaseLineage(); prevMapping.releaseLineage()
-      ledger.close(round, t0, edgeCount, newCount, edges, mapping, done = newCount == 0)
-      edgeCount = newCount
-      round += 1
-    }
-    require(edgeCount == 0,
-      s"randomized CC did not converge in ${cfg.maxRounds} rounds " +
-        "(reference analogue: stall detector, randomized_OPENMP_cc.cpp:143-150)")
-
-    // Representatives are arbitrary (coin tosses) — canonicalize to the
-    // component max (every member, incl. the rep, is present in mapping).
-    val rep = mapping.groupBy($"label").agg(max($"id").as("rep"))
-    val out = mapping.as("m").join(rep.as("r"), $"m.label" === $"r.label")
-      .select($"m.id".as("id"), $"r.rep".as("label"))
-    ledger.result(out, None)
+  private def randomStep(cfg: Config)(s: State): Next = {
+    val edges = s.edges
+    import edges.sparkSession.implicits._
+    // Deterministic per-round coin: heads(v) ⟺ hash is even.
+    def heads(c: Column) = pmod(xxhash64(lit(cfg.seed), lit(s.round), c), lit(2)) === 0
+    // Tails hook to a heads-neighbor (max for determinism); the hook
+    // forest has depth 1 by construction (a head never hooks), so no
+    // pointer jumping is needed — the reference resolves the same
+    // races with atomics + later root finding.
+    val bidir = edges.select(explode(array(
+        struct($"src".as("a"), $"dst".as("b")),
+        struct($"dst".as("a"), $"src".as("b")))).as("e"))
+      .select($"e.a".as("a"), $"e.b".as("b"))
+    val f = bidir.filter(!heads($"a") && heads($"b"))
+      .groupBy($"a".as("id")).agg(max($"b").as("label"))
+      .cutLineage()
+    val fB = bcIfSmall(f, 2 * long(s.seen, "n"), cfg)
+    val (next, seen) = barrierObserved(contract(edges, fB),
+      seenMetrics(CCStrategy.RandomizedHook): _*)
+    Next(next, compose(s.mapping, fB).cutLineage(), seen)
   }
 
   /** Broadcast hint for relabel maps once they are known-small. `rows` is

@@ -162,19 +162,41 @@ object GraftLineage {
     * result is handed to the parent scope, which releases it in turn.
     * When `body` throws, every barrier it created is released: a
     * top-level scope has no parent that could free them later. */
-  def scopedBlocks[T](spark: SparkSession)(body: => Dataset[T]): Dataset[T] = {
+  def scopedBlocks[T](spark: SparkSession)(body: => Dataset[T]): Dataset[T] =
+    scopedFrames[Dataset[T]](spark)(Seq(_))(body)
+
+  /** [[scopedBlocks]] for a result that holds several frames: the
+    * barriers backing `frames(result)` are kept and handed to the parent
+    * scope, every other barrier `body` created is released. */
+  def scopedFrames[R](spark: SparkSession)(frames: R => Seq[Dataset[_]])(body: => R): R =
+    inScope[R](spark.sparkContext, Set.empty, r => frames(r).flatMap(plannedRddIds).toSet,
+      () => Set.empty)(_ => body)
+
+  /** The one block scope both [[scopedFrames]] and [[iterateFrames]] run
+    * in. `body` gets the scope's set, into which [[barrier]] registers
+    * every RDD it checkpoints on this thread. On return, the scope's ids
+    * outside `live(out)` are freed and `live(out)` is handed to the
+    * parent scope; on a throw, the scope's ids and `owned()` are freed.
+    * Ids in `retained` are never freed nor handed on. */
+  private def inScope[R](sc: org.apache.spark.SparkContext, retained: Set[Int],
+                         live: R => Set[Int], owned: () => Set[Int])(
+      body: scala.collection.mutable.Set[Int] => R): R = {
     val scope = scala.collection.mutable.Set.empty[Int]
     scopeStack.set(scope :: scopeStack.get())
-    var keep = Set.empty[Int]
+    var keep: Option[Set[Int]] = None
     try {
-      val out = body
-      keep = plannedRddIds(out)
+      val out = body(scope)
+      keep = Some(live(out) -- retained)
       out
     } finally {
-      unpersistIds(spark.sparkContext, scope.toSet -- keep)
       val rest = scopeStack.get().tail
       scopeStack.set(rest)
-      rest.headOption.foreach(_ ++= keep)
+      keep match {
+        case Some(k) =>
+          unpersistIds(sc, scope.toSet -- k -- retained)
+          rest.headOption.foreach(_ ++= k)
+        case None => unpersistIds(sc, (scope.toSet ++ owned()) -- retained)
+      }
     }
   }
 
@@ -193,7 +215,8 @@ object GraftLineage {
                          stopped: Boolean, continues: Boolean, ms: Long)
 
   /** The fixpoint loop every iterative operator runs, with its block
-    * lifecycle owned here instead of hand-placed at each call site.
+    * lifecycle owned by [[iterateFrames]] instead of hand-placed at each
+    * call site.
     *
     * Each round composes `min(chunk, maxIter - iter)` calls of `step`
     * into one plan and materializes it with ONE [[barrierObserved]] job
@@ -205,13 +228,10 @@ object GraftLineage {
     * the same chunk, whose input is the previous step's unmaterialized
     * plan. After a round `stop(previous obs, obs)` may end the loop.
     *
-    * Lifecycle: the loop owns `state0`. A superseded state is freed only
-    * once its successor has materialized; barriers a step makes for
-    * itself live for its round; frames in `retain` (static tables a
-    * step reads) are never freed. When `step`, `stop` or `onRound`
-    * throws, every barrier the loop holds is freed before the throw
-    * propagates. The returned state is the caller's to release (inside
-    * a [[scopedBlocks]] scope it is handed to that scope). Returns the
+    * Lifecycle ([[iterateFrames]] with the state barrier as the one
+    * frame): the loop owns `state0`, frames in `retain` are never freed,
+    * and the returned state is the caller's to release (inside a
+    * [[scopedBlocks]] scope it is handed to that scope). Returns the
     * last round (`state0` as round `startIter` when none ran).
     *
     * Checkpointed runs pass `chunk = 1`: a durable snapshot needs every
@@ -224,44 +244,62 @@ object GraftLineage {
               onRound: Round => Unit = _ => ())(
       step: (DataFrame, Int, Option[Map[String, Any]]) => DataFrame): Round = {
     require(chunk >= 1, s"iterate: chunk must be >= 1, got $chunk")
-    val sc = state0.sparkSession.sparkContext
+    val first = Round(state0, startIter, obs0, stopped = false, continues = false, 0L)
+    iterateFrames[Round](first, r => Seq(r.state), retain, onRound)(
+        r => !r.stopped && r.iter < maxIter) { prev =>
+      val t0 = System.nanoTime()
+      val steps = math.min(chunk, maxIter - prev.iter)
+      var cur = step(prev.state, prev.iter, Some(prev.obs))
+      for (s <- 1 until steps) cur = step(cur, prev.iter + s, None)
+      val (next, obs) =
+        if (metrics.isEmpty) (barrier(cur), Map.empty[String, Any])
+        else barrierObserved(cur, metrics: _*)
+      val ms = (System.nanoTime() - t0) / 1000000
+      val iter = prev.iter + steps
+      val stopped = stop(prev.obs, obs)
+      Round(next, iter, obs, stopped, continues = !stopped && iter < maxIter, ms)
+    }
+  }
+
+  /** The round loop under [[iterate]] and connected components, over a
+    * state `S` of several frames (`frames(s)`; the first one's session
+    * runs the loop). While `continues(state)`, `step` computes the next
+    * state, which must be materialized when it returns, and `onRound`
+    * sees it.
+    *
+    * The block lifecycle every round loop shares, written once:
+    *  - the loop owns the frames of `state0`; a superseded state's
+    *    blocks are freed only once its successor has materialized, and
+    *    before `onRound`;
+    *  - the barriers a step makes for itself live for its round: those
+    *    that back no frame of the new state are freed after `onRound`;
+    *  - the blocks of frames in `retain` (the caller's input and static
+    *    tables) are never freed;
+    *  - when `step`, `continues` or `onRound` throws, every barrier the
+    *    loop holds is freed before the throw propagates;
+    *  - the returned state's blocks are the caller's to release (inside
+    *    a [[scopedBlocks]]/[[scopedFrames]] scope they are handed to that
+    *    scope).
+    * Returns the last state (`state0` when no round ran). */
+  def iterateFrames[S](state0: S, frames: S => Seq[Dataset[_]], retain: Seq[Dataset[_]] = Nil,
+                       onRound: S => Unit = (_: S) => ())(continues: S => Boolean)(
+      step: S => S): S = {
+    val sc = frames(state0).head.sparkSession.sparkContext
     val retained = retain.flatMap(plannedRddIds).toSet
-    def free(ids: Iterable[Int]): Unit = unpersistIds(sc, ids.toSet -- retained)
-    // barriers made on this thread during a round (the state barrier and
-    // whatever a step materializes for itself)
-    val made = scala.collection.mutable.Set.empty[Int]
-    scopeStack.set(made :: scopeStack.get())
-    var last = Round(state0, startIter, obs0, stopped = false, continues = false, 0L)
-    var ok = false
-    try {
-      while (!last.stopped && last.iter < maxIter) {
-        val t0 = System.nanoTime()
-        val steps = math.min(chunk, maxIter - last.iter)
-        var cur = step(last.state, last.iter, Some(last.obs))
-        for (s <- 1 until steps) cur = step(cur, last.iter + s, None)
-        val (next, obs) =
-          if (metrics.isEmpty) (barrier(cur), Map.empty[String, Any])
-          else barrierObserved(cur, metrics: _*)
+    def live(s: S): Set[Int] = frames(s).flatMap(plannedRddIds).toSet
+    def free(ids: Set[Int]): Unit = unpersistIds(sc, ids -- retained)
+    var last = state0
+    inScope[S](sc, retained, live, () => live(last)) { made =>
+      while (continues(last)) {
         val prev = last
-        last = prev.copy(state = next, iter = prev.iter + steps)
-        val live = plannedRddIds(next)
-        free(plannedRddIds(prev.state) -- live)
-        val ms = (System.nanoTime() - t0) / 1000000
-        val stopped = stop(prev.obs, obs)
-        last = last.copy(obs = obs, stopped = stopped,
-          continues = !stopped && last.iter < maxIter, ms = ms)
+        last = step(prev)
+        val keep = live(last)
+        free(live(prev) -- keep)
         onRound(last)
-        free(made -- live)
+        free(made.toSet -- keep)
         made.clear()
       }
-      ok = true
       last
-    } finally {
-      val rest = scopeStack.get().tail
-      scopeStack.set(rest)
-      val live = plannedRddIds(last.state)
-      if (ok) rest.headOption.foreach(_ ++= live -- retained)
-      else free(made ++ live)
     }
   }
 

@@ -109,10 +109,13 @@ class CCPropertySpec extends SparkSpec {
       broadcastRows = 0L))
   }
 
-  // A fresh pre-contracted run builds its first mapping from round 0's
-  // label function, grouped with the extra vertices, and counts its input
-  // inside the pre-contraction job; an edge-free input never enters the
-  // loop and labels every extra vertex with itself.
+  // A fresh pre-contracted hook run builds its first mapping from round
+  // 0's label function, grouped with the extra vertices, and counts its
+  // input inside the pre-contraction job; the other strategies count the
+  // canonical (deduplicated) input in their one start-up barrier. Every
+  // strategy runs as one more input dimension: an edge-free input never
+  // enters the round loop, whose shared edge-free path labels every
+  // extra vertex with itself and observes the component count.
   test("hook strategy with extra vertices and edge-free inputs matches the union-find oracle") {
     val dirty = samples(3)(2) ++ Seq((7L, 7L), (3L, 9L), (9L, 3L), (3L, 9L))
     val inputs = Seq[(String, Seq[(Long, Long)], Seq[Long])](
@@ -120,19 +123,24 @@ class CCPropertySpec extends SparkSpec {
       ("isolated extra vertices", dirty, Seq(1000L, 1001L, 1001L, 1002L)),
       ("edge-free input with extra vertices", Seq((4L, 4L)), Seq(4L, 5L, 5L, 6L)),
       ("edge-free input without extra vertices", Seq((4L, 4L)), Nil))
-    for ((name, edges, extras) <- inputs) withClue(s"$name: ") {
-      val cleaned = edges.filter { case (u, v) => u != v } // duplicates kept
-      val oracle = UnionFind.components(cleaned, extras).toMap
-      val res = ConnectedComponents.run(
-        spark.createDataset(edges.map(e => Edge(e._1, e._2))),
-        if (extras.isEmpty) None else Some(spark.createDataset(extras)), Config())
-      val labels = res.labels.collect()
-      labels.length shouldBe oracle.size // one row per vertex
-      labels.map(l => l.id -> l.label).toMap shouldBe oracle
-      res.components shouldBe Some(oracle.values.toSet.size.toLong)
-      if (cleaned.isEmpty) res.metrics shouldBe empty
-      else res.metrics.head.edgesIn shouldBe cleaned.size.toLong
-    }
+    for ((name, edges, extras) <- inputs; strategy <- CCStrategy.all)
+      withClue(s"$name, ${strategy.name}: ") {
+        val cleaned = edges.filter { case (u, v) => u != v } // duplicates kept
+        val oracle = UnionFind.components(cleaned, extras).toMap
+        val res = ConnectedComponents.run(
+          spark.createDataset(edges.map(e => Edge(e._1, e._2))),
+          if (extras.isEmpty) None else Some(spark.createDataset(extras)),
+          Config(strategy = strategy))
+        val labels = res.labels.collect()
+        labels.length shouldBe oracle.size // one row per vertex
+        labels.map(l => l.id -> l.label).toMap shouldBe oracle
+        res.components shouldBe Some(oracle.values.toSet.size.toLong)
+        val edgesIn =
+          if (strategy == CCStrategy.HookAndContract) cleaned.size
+          else cleaned.map { case (u, v) => (u min v, u max v) }.distinct.size
+        if (cleaned.isEmpty) res.metrics shouldBe empty
+        else res.metrics.head.edgesIn shouldBe edgesIn.toLong
+      }
   }
 
   // Samples 0-3 already run these strategies in "strategies agree". The

@@ -91,6 +91,37 @@ class ResumeSpec extends SparkSpec {
     }
   }
 
+  // `checkpoints/cc-<strategy>` hold the step-1 checkpoint (manifest,
+  // edges and mapping parquet; `_LATEST` rewound to 1) of a
+  // `checkpointEvery = 1` run on this graph, written by the per-strategy
+  // loops that preceded the shared round loop (hook with default
+  // settings, sampled with `sampleHardCap = 60`); every one is mid-run.
+  // They pin the checkpoint format: resuming each must reach the
+  // one-shot labels.
+  test("committed step-1 checkpoints of all four strategies resume to the one-shot labels") {
+    import graft.operators.ConnectedComponents.CCStrategy
+    val edges = Generators.random(spark, 400, 500, seed = 7L)
+    val expect = ConnectedComponents.run(edges).labels.collect()
+      .map(l => l.id -> l.label).toMap
+    for (strategy <- CCStrategy.all) withClue(s"${strategy.name}: ") {
+      // resume appends metrics and checkpoints: work on a copy
+      val from = java.nio.file.Paths.get(resourcePath(s"checkpoints/${strategy.tag}"))
+      val dir = Files.createTempDirectory(s"graft-old-${strategy.name}")
+      val walk = Files.walk(from)
+      try walk.forEach { f =>
+        val to = dir.resolve(from.relativize(f).toString)
+        if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+      } finally walk.close()
+      val ck = new CheckpointManager(spark, dir.toString)
+      ck.latestStep() shouldBe Some(1)
+      ck.meta(1)("algo") shouldBe strategy.tag
+      ck.meta(1)("edgeCount").toLong should be > 0L
+      val resumed = ConnectedComponents.resume(spark, dir.toString, Config(runId = "old"))
+      resumed.labels.collect().map(l => l.id -> l.label).toMap shouldBe expect
+      resumed.metrics.head.superstep shouldBe 2
+    }
+  }
+
   test("CC resume fails loudly without a checkpoint or with an unknown algo tag") {
     val empty = Files.createTempDirectory("graft-ckpt-none").toString
     val none = the[IllegalStateException] thrownBy

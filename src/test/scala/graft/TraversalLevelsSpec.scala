@@ -110,4 +110,22 @@ class TraversalLevelsSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
   }
+
+  // Where every reached vertex has one seed at distance 1 and no other,
+  // harmonic (Σ 1/d) equals closeness (count / Σ d), so a swapped
+  // formula passes there. On the path 0-1-2 with seeds {0, 2}, vertex 1
+  // is one hop from both seeds: harmonic 1 + 1 = 2.0, closeness
+  // 2 / (1 + 1) = 1.0; each end is two hops from the other seed.
+  test("harmonic and closeness centrality differ where a vertex has two seeds at distance 1") {
+    val p3 = spark.createDataset(path(3).map { case (u, v) => Edge(u, v) })
+    def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] = {
+      val out = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      GraftLineage.release(df)
+      out
+    }
+    val harmonic = scores(Centrality.harmonic(p3, Seq(0L, 2L)))
+    val closeness = scores(Centrality.closeness(p3, Seq(0L, 2L)))
+    harmonic shouldBe Map(0L -> 0.5, 1L -> 2.0, 2L -> 0.5)
+    closeness shouldBe Map(0L -> 0.5, 1L -> 1.0, 2L -> 0.5)
+  }
 }
