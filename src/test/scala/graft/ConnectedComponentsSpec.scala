@@ -242,8 +242,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     //     endpoint join) and the mapping after one;
     // and for star and random the canonicalized labels, whose job
     // observes the component count. No separate input, vertex-set,
-    // signature, emptiness or count job: the per-strategy loops ran
-    // 13, 8 and 76 jobs on this input (4, 1 and 12 rounds).
+    // signature, emptiness or count job.
     val budgets = Seq[(Config, Int => Int)](
       Config(strategy = CCStrategy.AlternatingStar) -> (r => 2 + 2 * r),
       Config(strategy = CCStrategy.SampledContraction, sampleEps = 10.0) -> (r => 1 + 5 * r),
