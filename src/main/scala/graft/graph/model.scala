@@ -5,8 +5,9 @@ package graft.graph
   * The reference engine's single data structure is a flat undirected edge
   * list of `(from, to)` pairs (`Serial/utils/Edge.hpp:10-13`, a POD of two
   * `uint32_t`). We widen ids to `Long`: the north-rule scale (10^12 files)
-  * overflows 32 bits, and Tungsten packs two longs per UnsafeRow just as
-  * compactly as the reference's 8-byte struct packs two uints.
+  * overflows 32 bits. Tungsten packs an `Edge` into a 24 B UnsafeRow (an
+  * 8 B null bitset and two longs); a barrier stores it as those 24 B plus
+  * a 4 B length prefix, 28 B per edge in the block store.
   */
 final case class Edge(src: Long, dst: Long)
 

@@ -52,8 +52,8 @@ import scala.collection.mutable.ArrayBuffer
   * (`broadcastRows` threshold); before that they are shuffle joins under
   * AQE skew handling. The hook aggregation needs no salting: Spark's
   * partial (map-side) aggregation already collapses hot src keys per
-  * partition before the shuffle. Lineage is cut every round with eager
-  * `localCheckpoint`; durable parquet checkpoints + manifest every
+  * partition before the shuffle. Lineage is cut every round with a
+  * `GraftLineage.barrier`; durable parquet checkpoints + manifest every
   * `checkpointEvery` rounds make runs resumable mid-iteration.
   */
 object ConnectedComponents {

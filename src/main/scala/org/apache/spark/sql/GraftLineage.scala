@@ -1,45 +1,63 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression}
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.Platform
 
 /** Lineage barrier for iterative Dataset algorithms.
   *
-  * `Dataset.localCheckpoint(eager = true)` truncates the RDD lineage and
-  * the logical plan, BUT the resulting `LogicalRDD` carries *origin
-  * statistics* computed from the checkpointed plan. In an iterative
-  * self-join loop those statistics multiply: Catalyst's size-only
+  * A barrier materializes a frame once and hands back a frame whose plan
+  * is a single `LogicalRDD` leaf: RDD lineage, logical plan AND statistics
+  * lineage are cut. The statistics matter: a `LogicalRDD` that carries
+  * *origin statistics* (as a Dataset's own local checkpoint does)
+  * multiplies them in an iterative self-join loop. Catalyst's size-only
   * estimation computes `sizeInBytes(join) = Π sizeInBytes(children)`, so
   * the BigInt doubles in bit-length every iteration — after ~20
   * iterations the driver spends minutes in `BigInteger.multiply` inside
   * `SizeInBytesOnlyStatsPlanVisitor` (observed: 157 s for a 2k-edge
-  * superstep). This helper materializes via localCheckpoint and then
-  * rewraps the checkpointed internal RDD in a fresh `LogicalRDD` with
-  * default statistics, resetting the estimate chain each superstep.
+  * superstep). The barrier's leaf keeps default statistics.
   *
-  * Block hygiene: localCheckpoint pins its partitions as storage blocks
-  * of the *inner* checkpointed RDD. Calling `.unpersist()` on the
-  * returned DataFrame is a NO-OP for those blocks (the Dataset cache
-  * manager knows nothing about them), so long benches / many-superstep
-  * runs would accumulate stale blocks until driver GC eventually
-  * collects the RDD handle — block-manager eviction + GC churn in the
-  * meantime. Use [[release]] (or `ds.releaseLineage()`) once a barrier'd
-  * frame's data is no longer needed; it unpersists the underlying
-  * checkpointed RDD immediately.
+  * Block hygiene: a barrier stores each partition's `UnsafeRow`s as
+  * packed pages — `byte[]`s of about 1 MiB, each row a 4-byte length
+  * followed by its bytes (a row larger than a page gets a page of its
+  * own). An (id, label) or `Edge` row is 24 B, so a row costs 28 B in
+  * the block store, where one Java `UnsafeRow` per row plus its own
+  * `byte[]` cost 84 B. Only that page RDD is `localCheckpoint`ed:
+  * it holds the storage blocks. The leaf's `LogicalRDD.rdd` is a reader
+  * that points one reused `UnsafeRow` at each record in turn; it reads
+  * the pages but does not hold them, so never unpersist it directly.
+  * Calling `.unpersist()` on the returned DataFrame is a NO-OP for the
+  * pages too (the Dataset cache manager knows nothing about them), so
+  * long benches and many-superstep runs would accumulate stale blocks
+  * until driver GC collected the page RDD. Use [[release]] (or
+  * `ds.releaseLineage()`) once a barrier'd frame's data is no longer
+  * needed, [[plannedRddIds]] to name its blocks, or let a
+  * [[scopedBlocks]] scope or the [[iterate]] loop free them.
   *
   * Lives in `org.apache.spark.sql` to reach the `private[sql]`
-  * `Dataset.ofRows`. Public Spark API only, no behavior patching.
+  * `Dataset.ofRows` and the `private[spark]` RDD calls that Spark's
+  * own Dataset checkpoint makes. No behavior patching.
   */
 object GraftLineage {
   // Per-thread stack of open [[scopedBlocks]] scopes; [[barrier]]
-  // registers each checkpointed RDD id into the innermost scope of ITS
-  // OWN thread, so concurrent library calls on one SparkSession can
-  // never release each other's in-flight blocks (a global
-  // getPersistentRDDs diff could).
+  // registers each page RDD id into the innermost scope of ITS OWN
+  // thread, so concurrent library calls on one SparkSession can never
+  // release each other's in-flight blocks (a global getPersistentRDDs
+  // diff could).
   private val scopeStack = new ThreadLocal[List[scala.collection.mutable.Set[Int]]] {
     override def initialValue(): List[scala.collection.mutable.Set[Int]] = Nil
   }
+
+  /** Target size of a barrier page in bytes. A page starts at 1/256 of
+    * it and doubles while it fills, so a partition of a few rows does
+    * not allocate a whole page. */
+  private val PageBytes = 1 << 20
 
   /** The members of a partitioning claim, a `PartitioningCollection`
     * flattened (a projected alias makes one: `select(id, id as label)`
@@ -49,84 +67,137 @@ object GraftLineage {
     case other => Seq(other)
   }
 
-  /** Eagerly materialize `df`, truncating RDD lineage, logical plan AND
-    * statistics lineage. The returned frame's plan wraps the actual
-    * checkpointed RDD so [[release]] can free its blocks later.
-    *
-    * Physical properties are PRESERVED: the rewrapped `LogicalRDD` keeps
-    * the checkpointed plan's `outputPartitioning` and `outputOrdering`
-    * (exactly what plain `localCheckpoint` keeps) and drops only the
-    * origin statistics/constraints — the part whose size estimates
-    * explode in iterative self-joins. Rewrapping via
-    * `internalCreateDataFrame` instead (as earlier rounds did) builds a
-    * `LogicalRDD` with `UnknownPartitioning`, so a "partition once, join
-    * every iteration" loop silently re-shuffles its barrier'd table on
-    * EVERY iteration — a full edge-table shuffle × ~100 iterations of
-    * waste for converged PageRank at the 100 TB scale. */
-  def barrier(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val spark = cp.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // The checkpointed RDD (the one holding the storage blocks) sits in
-    // cp's LogicalRDD; rewrap THAT node, not a derived toRdd, so release()
-    // on the new frame reaches the real blocks.
-    cp.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        scopeStack.get() match {
-          case head :: _ => head += l.rdd.id
-          case Nil       => ()
+  /** A partition's rows as pages: each row a 4-byte length and its
+    * `UnsafeRow` bytes, up to [[PageBytes]] per page (a larger row fills
+    * a page of its own); each page is trimmed to its records. Rows that
+    * are not `UnsafeRow`s are projected to one first. */
+  private[sql] def pack(rows: Iterator[InternalRow], types: Array[DataType]): Iterator[Array[Byte]] =
+    new Iterator[Array[Byte]] {
+      private lazy val toUnsafe = UnsafeProjection.create(types)
+      private var pending: UnsafeRow = null // read, but did not fit the last page
+      private def take(): UnsafeRow =
+        if (!rows.hasNext) null
+        else rows.next() match {
+          case u: UnsafeRow => u
+          case r            => toUnsafe(r)
         }
-        // Under AQE the checkpoint's own LogicalRDD captured
-        // UnknownPartitioning: `AdaptiveSparkPlanExec` is a LEAF node
-        // that never exposes its final plan's properties, and
-        // `LogicalRDD.fromDataset` reads `executedPlan.outputPartitioning`
-        // off that leaf. The checkpoint action has already finalized the
-        // adaptive plan, so recover the REAL partitioning/ordering from
-        // `a.executedPlan` — the physical plan whose output rows the
-        // checkpointed RDD holds verbatim.
-        // The finalized plan may name an output column by another exprId
-        // than the checkpoint's output (the optimizer drops the alias of
-        // `toDF("id")`), so its claims are renamed by output position.
-        val (part0, order0, rename) = l.outputPartitioning match {
-          case _: UnknownPartitioning =>
-            val dfC = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-            dfC.queryExecution.executedPlan match {
-              case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-                val fp = a.executedPlan
-                (fp.outputPartitioning, fp.outputOrdering, AttributeMap(fp.output.zip(l.output)))
-              case _ => (l.outputPartitioning, l.outputOrdering, AttributeMap.empty[Attribute])
-            }
-          case _ => (l.outputPartitioning, l.outputOrdering, AttributeMap.empty[Attribute])
+      def hasNext: Boolean = pending != null || rows.hasNext
+      def next(): Array[Byte] = {
+        var row = if (pending != null) pending else take()
+        if (row == null) throw new NoSuchElementException("no rows left to pack")
+        pending = null
+        var page = new Array[Byte](math.max(PageBytes >> 8, 4 + row.getSizeInBytes))
+        var used = 0
+        while (row != null) {
+          val need = used + 4 + row.getSizeInBytes
+          if (need > page.length && need <= PageBytes)
+            page = java.util.Arrays.copyOf(page, math.min(PageBytes, math.max(need, 2 * page.length)))
+          if (need > page.length) { pending = row; row = null }
+          else {
+            Platform.putInt(page, Platform.BYTE_ARRAY_OFFSET + used, row.getSizeInBytes)
+            row.writeToMemory(page, Platform.BYTE_ARRAY_OFFSET + used + 4)
+            used = need
+            row = take()
+          }
         }
-        def onOutput[E <: Expression](e: E): E =
-          e.transform { case a: Attribute => rename.getOrElse(a, a) }.asInstanceOf[E]
-        // Claims must be expressed over the rewrapped output attributes;
-        // keep every member of a collection that is, drop the rest.
-        val outSet = AttributeSet(l.output)
-        val kept = members(part0).map {
-          case e: Expression => onOutput(e).asInstanceOf[Partitioning]
-          case p => p
-        }.filter {
-          case e: Expression => e.references.subsetOf(outSet)
-          case _ => true
-        }
-        val part = kept match {
-          case Seq()    => l.outputPartitioning
-          case Seq(one) => one
-          case many     => PartitioningCollection(many)
-        }
-        val order = order0.map(onOutput(_)).takeWhile(_.references.subsetOf(outSet))
-        // Same output attrs/rdd; recovered partitioning/ordering; fresh
-        // default stats (conf.defaultSizeInBytes), no inherited constraints.
-        val fresh = l.copy(outputPartitioning = part, outputOrdering = order)(
-          spark, originStats = None, originConstraints = None)
-        org.apache.spark.sql.classic.Dataset.ofRows(spark, fresh)
-      case other =>
-        // localCheckpoint always yields a bare LogicalRDD; anything else
-        // has no block-holding RDD that release() could reach
-        throw new IllegalStateException(
-          s"localCheckpoint produced ${other.nodeName}, expected LogicalRDD")
+        if (used == page.length) page else java.util.Arrays.copyOf(page, used)
+      }
     }
+
+  /** The records of one page, in order, each read through `row`, which
+    * is pointed at it (the same object every time). */
+  private[sql] def records(page: Array[Byte], row: UnsafeRow): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private var at = 0
+      def hasNext: Boolean = at < page.length
+      def next(): InternalRow = {
+        val len = Platform.getInt(page, Platform.BYTE_ARRAY_OFFSET + at)
+        row.pointTo(page, Platform.BYTE_ARRAY_OFFSET + at + 4, len)
+        at += 4 + len
+        row
+      }
+    }
+
+  /** The rows of a barrier's page RDD, read in place through one
+    * `UnsafeRow` per task. `pages` holds the storage blocks; this RDD
+    * holds none. */
+  private final class PagedRows(val pages: RDD[Array[Byte]], numFields: Int)
+      extends RDD[InternalRow](pages) {
+    override protected def getPartitions: Array[Partition] = pages.partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      val row = new UnsafeRow(numFields)
+      pages.iterator(split, context).flatMap(records(_, row))
+    }
+  }
+
+  /** Eagerly materialize `df` as packed pages (see the header), in ONE
+    * job: `df`'s own `QueryExecution` runs under a new SQL execution
+    * named `localCheckpoint`, as Spark's own Dataset checkpoint runs
+    * it, so an `Observation` on `df` fires and no row is copied on its
+    * own. Returns a frame over a `LogicalRDD` leaf that reads the pages;
+    * its page RDD is registered with the innermost [[scopedBlocks]]
+    * scope of this thread, and [[release]] frees it.
+    *
+    * Physical properties are PRESERVED: the leaf claims the final
+    * physical plan's `outputPartitioning` and `outputOrdering` (under AQE
+    * the finalized adaptive plan, whose properties the adaptive leaf
+    * hides), renamed by position to the frame's analyzed output (the
+    * optimizer may drop an alias such as `toDF("id")`). A leaf with
+    * `UnknownPartitioning` would make a "partition once, join every
+    * iteration" loop re-shuffle its barrier'd table on EVERY iteration —
+    * a full edge-table shuffle × ~100 iterations for converged PageRank.
+    * Statistics are the default (`conf.defaultSizeInBytes`), with no
+    * inherited constraints. */
+  def barrier(df: DataFrame): DataFrame = {
+    val dfC = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val spark = dfC.sparkSession
+    val qe = dfC.queryExecution
+    val output = qe.analyzed.output
+    val (pages, plan) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      qe.executedPlan.resetMetrics()
+      val rows = qe.executedPlan.execute()
+      // read after execute: only then is an adaptive plan final
+      val plan = qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val types = plan.output.map(_.dataType).toArray
+      val pages = rows.mapPartitionsInternal(pack(_, types))
+      pages.localCheckpoint()
+      // registered before its job, so a scope also frees a failed one's blocks
+      scopeStack.get().headOption.foreach(_ += pages.id)
+      pages.doCheckpoint()
+      (pages, plan)
+    }
+    val rename = AttributeMap(plan.output.zip(output))
+    def onOutput[E <: Expression](e: E): E =
+      e.transform { case a: Attribute => rename.getOrElse(a, a) }.asInstanceOf[E]
+    // Claims must be expressed over the leaf's output attributes; keep
+    // every member of a collection that is, drop the rest.
+    val outSet = AttributeSet(output)
+    val kept = members(plan.outputPartitioning).map {
+      case e: Expression => onOutput(e).asInstanceOf[Partitioning]
+      case p => p
+    }.filter {
+      case e: Expression => e.references.subsetOf(outSet)
+      case _ => true
+    }
+    val part = kept match {
+      case Seq()    => UnknownPartitioning(pages.getNumPartitions)
+      case Seq(one) => one
+      case many     => PartitioningCollection(many)
+    }
+    val order = plan.outputOrdering.map(onOutput(_)).takeWhile(_.references.subsetOf(outSet))
+    val leaf = LogicalRDD(output, new PagedRows(pages, output.length), part, order,
+      df.isStreaming)(spark, originStats = None, originConstraints = None)
+    org.apache.spark.sql.classic.Dataset.ofRows(spark, leaf)
+  }
+
+  /** The RDD holding a leaf's storage blocks: a barrier's page RDD, or
+    * the leaf's own RDD for any other `LogicalRDD`. */
+  private def blocks(l: LogicalRDD): RDD[_] = l.rdd match {
+    case p: PagedRows => p.pages
+    case other        => other
   }
 
   /** Free the storage blocks of every barrier'd/checkpointed RDD in this
@@ -138,16 +209,17 @@ object GraftLineage {
   def release(ds: Dataset[_], blocking: Boolean = false): Unit = {
     val dsC = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     dsC.queryExecution.analyzed.foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking)
+      case l: LogicalRDD => blocks(l).unpersist(blocking)
       case _             => ()
     }
   }
 
-  /** RDD ids of the checkpointed RDDs inside this frame's plan — lets a
-    * caller sweep the block store while protecting long-lived inputs. */
+  /** RDD ids of the block-holding RDDs inside this frame's plan (a
+    * barrier's page RDD) — lets a caller sweep the block store while
+    * protecting long-lived inputs. */
   def plannedRddIds(ds: Dataset[_]): Set[Int] = {
     val dsC = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    dsC.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
+    dsC.queryExecution.analyzed.collect { case l: LogicalRDD => blocks(l).id }.toSet
   }
 
   /** Library-call block hygiene: run `body` (which must EAGERLY

@@ -10,7 +10,13 @@ import scala.jdk.CollectionConverters._
   * `src/main/scala` reads an environment variable or keeps a
   * process-wide mutable switch (an object-level `@volatile var`). A knob
   * belongs in a `Config` field or a parameter, where tests and callers
-  * can see and set it. */
+  * can see and set it.
+  *
+  * Materialized state has one path: no code under `src/main/scala`
+  * outside `GraftLineage.scala` calls `localCheckpoint(` or names a
+  * `LogicalRDD`. A barrier's blocks are its page RDD, which only
+  * `GraftLineage` (`barrier`, `release`, `plannedRddIds`, the scopes)
+  * knows how to reach. */
 class LibraryArgumentsSpec extends AnyFunSuite with Matchers {
 
   /** `src/main/scala` of the checkout these tests were built from: the
@@ -51,14 +57,16 @@ class LibraryArgumentsSpec extends AnyFunSuite with Matchers {
       .exists(l => template.findFirstMatchIn(l).exists(_.group(1) == "object"))
   }
 
-  /** "path:line: text" for every offending line of library code. */
-  private def offenders(matches: (IndexedSeq[String], Int) => Boolean): Seq[String] = {
+  /** "path:line: text" for every offending line of code under
+    * `src/main/scala` outside `exempt` (paths, or prefixes ending in `/`). */
+  private def offenders(matches: (IndexedSeq[String], Int) => Boolean,
+                        exempt: Seq[String] = entryPoints): Seq[String] = {
     val files = Files.walk(mainSources).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq.sorted
     for {
       f <- files
       rel = mainSources.relativize(f).toString.replace('\\', '/')
-      if !entryPoints.exists(e => if (e.endsWith("/")) rel.startsWith(e) else rel == e)
+      if !exempt.exists(e => if (e.endsWith("/")) rel.startsWith(e) else rel == e)
       lines = Files.readAllLines(f).asScala.toIndexedSeq
       i <- lines.indices
       if !isComment(lines(i)) && matches(lines, i)
@@ -72,5 +80,11 @@ class LibraryArgumentsSpec extends AnyFunSuite with Matchers {
   test("library code keeps no object-level @volatile var switches") {
     offenders((lines, i) =>
       volatileVar.findFirstIn(lines(i)).isDefined && inObjectBody(lines, i)) shouldBe empty
+  }
+
+  test("only GraftLineage materializes state: no localCheckpoint or LogicalRDD elsewhere") {
+    val oneWay = """localCheckpoint\(|\bLogicalRDD\b""".r
+    offenders((lines, i) => oneWay.findFirstIn(lines(i)).isDefined,
+      exempt = Seq("org/apache/spark/sql/GraftLineage.scala")) shouldBe empty
   }
 }
