@@ -53,7 +53,7 @@ object SparkEntry {
     // incremental CC: fold the SAME edge set in three batches through
     // the streaming label maintainer (star-edge merges) — must equal
     // the one-shot labels, so it shares cc_supplier's oracle
-    "cc_incremental" -> ((s, dir) => {
+    "cc_incremental" -> ((s, dir) => scopedBlocks(s) {
       import s.implicits._
       // materialize the co-occurrence derivation ONCE — each batch is a
       // filter of the barrier, not a re-run of the lineitem self-join
@@ -63,7 +63,6 @@ object SparkEntry {
       (0 until 3).foreach(i =>
         m.ingest(edges.filter(pmod(xxhash64($"src", $"dst"), lit(3L)) === i)
           .as[graft.graph.Edge]))
-      org.apache.spark.sql.GraftLineage.release(edges)
       m.labels.orderBy("id")
     }),
     // multi-component CC (same-nation restriction)
@@ -546,7 +545,7 @@ object SparkEntry {
     // under-merge transitive near-dups A~B~C). Composition of two
     // hard-gated operators, itself gated by a recursive-CTE
     // reachability oracle over the exact all-pairs ground truth.
-    "dedup_clusters" -> ((s, dir) => {
+    "dedup_clusters" -> ((s, dir) => scopedBlocks(s) {
       import s.implicits._
       val pairs = graft.functions.Dedup.nearDuplicates(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
@@ -768,7 +767,7 @@ object SparkEntry {
     * non-max member of a near-dup reachability cluster; full document
     * rows of the survivors. Shared by `dedup_survivors` and the
     * composed `corpus_filtered`. */
-  private def survivorDocs(s: SparkSession, dir: String): DataFrame = {
+  private def survivorDocs(s: SparkSession, dir: String): DataFrame = scopedBlocks(s) {
     import s.implicits._
     val docs = s.read.parquet(s"$dir/documents.parquet")
     val pairs = graft.functions.Dedup.nearDuplicates(

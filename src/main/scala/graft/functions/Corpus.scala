@@ -91,13 +91,10 @@ object Corpus {
       // one output row per distinct corpus id: fewer rows than corpus
       // rows means ids repeated
       val dupIds = gramsObs("corpus_rows").asInstanceOf[Long] - outObs("rows").asInstanceOf[Long]
-      if (nullIds > 0 || dupIds != 0) {
-        org.apache.spark.sql.GraftLineage.release(out)
-        org.apache.spark.sql.GraftLineage.release(grams)
+      if (nullIds > 0 || dupIds != 0)
         throw new IllegalArgumentException(
           s"contamination: doc ids must be unique and non-null; saw $nullIds null " +
             s"and $dupIds duplicate ids")
-      }
       out
     }
 

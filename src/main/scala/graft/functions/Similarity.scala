@@ -355,47 +355,48 @@ object Similarity {
     require(k >= 1 && iters >= 1, s"kMeans needs k >= 1, iters >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = org.apache.spark.sql.GraftLineage.barrier(
-      corpus.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("emb")))
-    // init: embeddings of the k smallest ids (deterministic, no RNG)
-    var centroids: Array[(Int, Seq[Double])] = c.orderBy("vec_id").limit(k)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }
-    def centDf() = spark.createDataset(
-        centroids.map { case (i, v) => (i, v) }.toSeq)
-      .toDF("cluster", "cent")
-    def assign() = {
-      val dist = aggregate(zip_with(col("emb"), col("cent"),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-      c.crossJoin(broadcast(centDf()))
-        .select(col("vec_id"), col("emb"), col("cluster"), dist.as("d2"))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("cluster"), col("emb")),
-          struct(col("d2"), col("cluster"))).as("m"))
-        .select(col("vec_id"), col("m.cluster").as("cluster"),
-          col("m.emb").as("emb"))
+    org.apache.spark.sql.GraftLineage.scopedFrames(spark)(
+        (r: (DataFrame, Array[(Int, Seq[Double])])) => Seq(r._1)) {
+      val c = org.apache.spark.sql.GraftLineage.barrier(
+        corpus.select(col("vec_id"),
+          transform(col("embedding"), x => x.cast("double")).as("emb")))
+      // init: embeddings of the k smallest ids (deterministic, no RNG)
+      var centroids: Array[(Int, Seq[Double])] = c.orderBy("vec_id").limit(k)
+        .collect().zipWithIndex
+        .map { case (r, i) => (i, r.getSeq[Double](1)) }
+      def centDf() = spark.createDataset(
+          centroids.map { case (i, v) => (i, v) }.toSeq)
+        .toDF("cluster", "cent")
+      def assign() = {
+        val dist = aggregate(zip_with(col("emb"), col("cent"),
+            (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
+        c.crossJoin(broadcast(centDf()))
+          .select(col("vec_id"), col("emb"), col("cluster"), dist.as("d2"))
+          .groupBy(col("vec_id"))
+          .agg(min_by(struct(col("cluster"), col("emb")),
+            struct(col("d2"), col("cluster"))).as("m"))
+          .select(col("vec_id"), col("m.cluster").as("cluster"),
+            col("m.emb").as("emb"))
+      }
+      var it = 0
+      while (it < iters) {
+        // update: per-(cluster, dim) mean — k×dim cells, collected to the
+        // driver (bounded); empty clusters keep their previous centroid
+        val means = assign()
+          .select(col("cluster"), posexplode(col("emb")))
+          .groupBy(col("cluster"), col("pos"))
+          .agg(avg(col("col")).as("m"))
+          .collect().groupBy(_.getInt(0))
+          .map { case (cl, rows) =>
+            cl -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
+          }
+        centroids = centroids.map { case (i, old) => (i, means.getOrElse(i, old)) }
+        it += 1
+      }
+      (org.apache.spark.sql.GraftLineage.barrier(
+        assign().select(col("vec_id"), col("cluster").cast("long").as("cluster"))
+          .orderBy("vec_id")), centroids)
     }
-    var it = 0
-    while (it < iters) {
-      // update: per-(cluster, dim) mean — k×dim cells, collected to the
-      // driver (bounded); empty clusters keep their previous centroid
-      val means = assign()
-        .select(col("cluster"), posexplode(col("emb")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(avg(col("col")).as("m"))
-        .collect().groupBy(_.getInt(0))
-        .map { case (cl, rows) =>
-          cl -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        }
-      centroids = centroids.map { case (i, old) => (i, means.getOrElse(i, old)) }
-      it += 1
-    }
-    val out = org.apache.spark.sql.GraftLineage.barrier(
-      assign().select(col("vec_id"), col("cluster").cast("long").as("cluster"))
-        .orderBy("vec_id"))
-    org.apache.spark.sql.GraftLineage.release(c)
-    (out, centroids)
   }
 
   /** Product-quantization codes (Jégou, Douze, Schmid, "Product
@@ -436,61 +437,62 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val sub = dim / m
-    val c = org.apache.spark.sql.GraftLineage.barrier(
-      corpus.select(col("vec_id"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(slice(col("embedding"), j * lit(sub) + 1, lit(sub)),
-            x => x.cast("double"))))))
-      .toDF("vec_id", "j", "emb")
-    // init per subspace: the k smallest ids' subvectors (same rule as
-    // kMeans — one bounded collect for all m subspaces)
-    val initRows = c.filter(col("j") === 0).orderBy("vec_id").limit(k)
-      .select(col("vec_id")).as[Long].collect()
-    val initEmb = c.join(broadcast(initRows.toSeq.toDF("vec_id")), "vec_id")
-      .orderBy("vec_id", "j").collect()
-    var cents: IndexedSeq[Array[(Int, Seq[Double])]] =
-      (0 until m).map { j =>
-        initRows.indices.map { i =>
-          val row = initEmb(i * m + j)
-          (i, row.getSeq[Double](2))
-        }.toArray
-      }
-    def centDf() = broadcast(spark.createDataset(
-        for { j <- 0 until m; (cl, v) <- cents(j) } yield (j, cl, v))
-      .toDF("j", "cluster", "cent"))
-    def assign() = {
-      val dist = aggregate(zip_with(col("emb"), col("cent"),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-      c.join(centDf(), Seq("j"))
-        .select(col("vec_id"), col("j"), col("emb"), col("cluster"), dist.as("d2"))
-        .groupBy(col("vec_id"), col("j"))
-        .agg(min_by(struct(col("cluster"), col("emb")),
-          struct(col("d2"), col("cluster"))).as("mm"))
-        .select(col("vec_id"), col("j"), col("mm.cluster").as("cluster"),
-          col("mm.emb").as("emb"))
-    }
-    var it = 0
-    while (it < iters) {
-      val means = assign()
-        .select(col("j"), col("cluster"), posexplode(col("emb")))
-        .groupBy(col("j"), col("cluster"), col("pos"))
-        .agg(avg(col("col")).as("mv"))
-        .collect().groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (key, rows) =>
-          key -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq
+    org.apache.spark.sql.GraftLineage.scopedFrames(spark)(
+        (r: (DataFrame, IndexedSeq[Array[(Int, Seq[Double])]])) => Seq(r._1)) {
+      val c = org.apache.spark.sql.GraftLineage.barrier(
+        corpus.select(col("vec_id"),
+          posexplode(transform(sequence(lit(0), lit(m - 1)), j =>
+            transform(slice(col("embedding"), j * lit(sub) + 1, lit(sub)),
+              x => x.cast("double"))))))
+        .toDF("vec_id", "j", "emb")
+      // init per subspace: the k smallest ids' subvectors (same rule as
+      // kMeans — one bounded collect for all m subspaces)
+      val initRows = c.filter(col("j") === 0).orderBy("vec_id").limit(k)
+        .select(col("vec_id")).as[Long].collect()
+      val initEmb = c.join(broadcast(initRows.toSeq.toDF("vec_id")), "vec_id")
+        .orderBy("vec_id", "j").collect()
+      var cents: IndexedSeq[Array[(Int, Seq[Double])]] =
+        (0 until m).map { j =>
+          initRows.indices.map { i =>
+            val row = initEmb(i * m + j)
+            (i, row.getSeq[Double](2))
+          }.toArray
         }
-      cents = (0 until m).map { j =>
-        cents(j).map { case (cl, old) => (cl, means.getOrElse((j, cl), old)) }
+      def centDf() = broadcast(spark.createDataset(
+          for { j <- 0 until m; (cl, v) <- cents(j) } yield (j, cl, v))
+        .toDF("j", "cluster", "cent"))
+      def assign() = {
+        val dist = aggregate(zip_with(col("emb"), col("cent"),
+            (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
+        c.join(centDf(), Seq("j"))
+          .select(col("vec_id"), col("j"), col("emb"), col("cluster"), dist.as("d2"))
+          .groupBy(col("vec_id"), col("j"))
+          .agg(min_by(struct(col("cluster"), col("emb")),
+            struct(col("d2"), col("cluster"))).as("mm"))
+          .select(col("vec_id"), col("j"), col("mm.cluster").as("cluster"),
+            col("mm.emb").as("emb"))
       }
-      it += 1
+      var it = 0
+      while (it < iters) {
+        val means = assign()
+          .select(col("j"), col("cluster"), posexplode(col("emb")))
+          .groupBy(col("j"), col("cluster"), col("pos"))
+          .agg(avg(col("col")).as("mv"))
+          .collect().groupBy(r => (r.getInt(0), r.getInt(1)))
+          .map { case (key, rows) =>
+            key -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq
+          }
+        cents = (0 until m).map { j =>
+          cents(j).map { case (cl, old) => (cl, means.getOrElse((j, cl), old)) }
+        }
+        it += 1
+      }
+      val codeCols = (0 until m).map(j =>
+        max(when(col("j") === j, col("cluster"))).cast("long").as(s"code_$j"))
+      (org.apache.spark.sql.GraftLineage.barrier(
+        assign().groupBy(col("vec_id"))
+          .agg(codeCols.head, codeCols.tail: _*)), cents)
     }
-    val codeCols = (0 until m).map(j =>
-      max(when(col("j") === j, col("cluster"))).cast("long").as(s"code_$j"))
-    val codes = org.apache.spark.sql.GraftLineage.barrier(
-      assign().groupBy(col("vec_id"))
-        .agg(codeCols.head, codeCols.tail: _*))
-    org.apache.spark.sql.GraftLineage.release(c)
-    (codes, cents)
   }
 
   /** IVF-PQ approximate nearest-neighbor SEARCH (Jégou et al., TPAMI

@@ -318,26 +318,30 @@ object Centrality {
       // One materialization of the deduplicated edge table (the old code
       // evaluated the upstream distinct TWICE — once per keyed copy), with
       // the row count observed for adaptive loop partitioning; the two
-      // keyed copies are then cheap re-shuffles of the barrier.
-      val (dedup, dObs) = barrierObserved(
-        directed.select($"src", $"dst").distinct(), count(lit(1)).as("n"))
-      val rows = dObs("n").asInstanceOf[Long]
-      if (rows == 0L) // empty edge set → empty score table
+      // keyed copies (by src, by dst) are then cheap re-shuffles of the
+      // barrier, made in a nested scope that frees it: the loop holds two
+      // edge copies, not three.
+      val (p, keyed) = scopedFrames(spark)((k: (Int, Seq[DataFrame])) => k._2) {
+        val (dedup, dObs) = barrierObserved(
+          directed.select($"src", $"dst").distinct(), count(lit(1)).as("n"))
+        val rows = dObs("n").asInstanceOf[Long]
+        val p = Adaptive.forRows(spark, rows)
+        (p, if (rows == 0L) Nil else Seq($"src", $"dst").map(k => barrier(dedup.repartition(p, k))))
+      }
+      if (keyed.isEmpty) // empty edge set → empty score table
         spark.emptyDataFrame
           .select(lit(0L).as("id"), lit("hub").as("kind"), lit(0.0).as("score"))
           .limit(0)
-      else hitsLoop(dedup, Adaptive.forRows(spark, rows), maxIter)
+      else hitsLoop(keyed(0), keyed(1), p, maxIter)
     }
   }
 
-  /** [[hits]] over its materialized, non-empty, deduplicated edge table
-    * at loop partition count `p`; frees `dedup` once keyed. */
-  private def hitsLoop(dedup: DataFrame, p: Int, maxIter: Int): DataFrame = {
-    val spark = dedup.sparkSession
+  /** [[hits]] over the non-empty, deduplicated edge table keyed by src
+    * and by dst at loop partition count `p`. */
+  private def hitsLoop(eBySrc: DataFrame, eByDst: DataFrame, p: Int,
+                       maxIter: Int): DataFrame = {
+    val spark = eBySrc.sparkSession
     import spark.implicits._
-    val eBySrc = barrier(dedup.repartition(p, $"src"))
-    val eByDst = barrier(dedup.repartition(p, $"dst"))
-    release(dedup) // the loop holds two edge copies, not three
     val hub0 = barrier(
       eBySrc.select($"src".as("id")).distinct()
         .select($"id", lit(1.0).as("v"))

@@ -117,31 +117,31 @@ object GraphMetrics {
   def prefixSum(df: DataFrame, orderCol: String, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
-    val ranged = org.apache.spark.sql.GraftLineage.barrier(
-      df.repartitionByRange(p, col(orderCol)))
-    val partSums = ranged.groupBy(spark_partition_id().as("pid"))
-      .agg(sum(col(valueCol)).as("s")).collect()
-      .map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap
-    val offsets = (0 until p).scanLeft(0L)((acc, i) => acc + partSums.getOrElse(i, 0L))
-    // per-range-partition scan: the partitionBy keeps p-way parallelism
-    // (partition ids are stable — `ranged` is a materialized barrier).
-    // Contract: `orderCol` values are unique (vertex ids here) — ties
-    // under a ROWS frame would make per-row prefixes order-dependent.
-    // NULL `valueCol` rows contribute 0 to the running sum (coalesce),
-    // matching the all-null partition guard in pass 1 above.
-    val w = Window.partitionBy(col("_pid")).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val out = org.apache.spark.sql.GraftLineage.barrier(
-      ranged.withColumn("_pid", spark_partition_id())
-        .withColumn("prefix_sum",
-          coalesce(sum(col(valueCol)).over(w), lit(0L)) +
-            element_at(lit(offsets.toArray), col("_pid") + 1))
-        .drop("_pid"))
-    // pass-2 consumed the range barrier — free it now (library hygiene:
-    // the caller only ever has to release `out` itself)
-    org.apache.spark.sql.GraftLineage.release(ranged)
-    out
+    // the scope frees the range barrier: the caller only ever has to
+    // release the result itself
+    org.apache.spark.sql.GraftLineage.scopedBlocks(spark) {
+      val p = spark.sessionState.conf.numShufflePartitions
+      val ranged = org.apache.spark.sql.GraftLineage.barrier(
+        df.repartitionByRange(p, col(orderCol)))
+      val partSums = ranged.groupBy(spark_partition_id().as("pid"))
+        .agg(sum(col(valueCol)).as("s")).collect()
+        .map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap
+      val offsets = (0 until p).scanLeft(0L)((acc, i) => acc + partSums.getOrElse(i, 0L))
+      // per-range-partition scan: the partitionBy keeps p-way parallelism
+      // (partition ids are stable — `ranged` is a materialized barrier).
+      // Contract: `orderCol` values are unique (vertex ids here) — ties
+      // under a ROWS frame would make per-row prefixes order-dependent.
+      // NULL `valueCol` rows contribute 0 to the running sum (coalesce),
+      // matching the all-null partition guard in pass 1 above.
+      val w = Window.partitionBy(col("_pid")).orderBy(col(orderCol))
+        .rowsBetween(Window.unboundedPreceding, 0)
+      org.apache.spark.sql.GraftLineage.barrier(
+        ranged.withColumn("_pid", spark_partition_id())
+          .withColumn("prefix_sum",
+            coalesce(sum(col(valueCol)).over(w), lit(0L)) +
+              element_at(lit(offsets.toArray), col("_pid") + 1))
+          .drop("_pid"))
+    }
   }
 
   /** Exact distributed order statistics: the row value at each requested

@@ -48,15 +48,13 @@ object LabelPropagation {
           extraVertices: Option[Dataset[Long]] = None,
           cfg: Config = Config()): Result = {
     val spark = edges.sparkSession
-    import spark.implicits._
-    // canonical edges materialized once — the adjacency and the vertex
-    // set each re-evaluated the full upstream derivation before
-    val canon = GraphIO.canonical(edges).cutLineage()
-    val res = propagate(
-      GraphIO.bidirectional(canon).toDF().withColumn("weight", lit(1L)),
-      GraphIO.vertices(canon).toDF("id"), extraVertices, cfg)
-    canon.releaseLineage()
-    res
+    start(spark, cfg, cfg.checkpointDir.map(checkpoint(spark, _, "lpa", cfg)), seeded = false) {
+      // canonical edges materialized once — the adjacency and the vertex
+      // set each re-evaluated the full upstream derivation before
+      val canon = GraphIO.canonical(edges).cutLineage()
+      (0, GraphIO.bidirectional(canon).toDF().withColumn("weight", lit(1L)),
+        ownLabels(GraphIO.vertices(canon).toDF("id"), extraVertices))
+    }
   }
 
   /** LPA over a WEIGHTED undirected graph (rows (src, dst, weight),
@@ -69,43 +67,52 @@ object LabelPropagation {
                        cfg: Config = Config()): Result = {
     val spark = weighted.sparkSession
     import spark.implicits._
-    // materialized once — the adjacency and vertex-set consumers each
-    // re-ran the weighted derivation before
-    val bidirW = GraftLineage.barrier(GraphIO.bidirectionalWeighted(weighted))
-    val res = propagate(bidirW, bidirW.select($"src".as("id")).distinct(),
-      extraVertices, cfg)
-    GraftLineage.release(bidirW)
-    res
+    start(spark, cfg, cfg.checkpointDir.map(checkpoint(spark, _, "lpa", cfg)), seeded = false) {
+      // materialized once — the adjacency and vertex-set consumers each
+      // re-ran the weighted derivation before
+      val bidirW = GraftLineage.barrier(GraphIO.bidirectionalWeighted(weighted))
+      (0, bidirW, ownLabels(bidirW.select($"src".as("id")).distinct(), extraVertices))
+    }
   }
 
-  private def propagate(bidir: DataFrame, vertsRaw: DataFrame,
-                        extraVertices: Option[Dataset[Long]],
-                        cfg: Config): Result = {
-    val spark = bidir.sparkSession
+  /** Every vertex of `vertsRaw` and `extraVertices` labeled by its own
+    * id, materialized once: the self rows and the keyed state both read it. */
+  private def ownLabels(vertsRaw: DataFrame, extraVertices: Option[Dataset[Long]]): DataFrame = {
+    val spark = vertsRaw.sparkSession
     import spark.implicits._
-    val verts = vertsRaw
+    vertsRaw
       .union(extraVertices.map(_.toDF("id")).getOrElse(spark.emptyDataset[Long].toDF("id")))
       .distinct()
       .cutLineage()
-    val (adj, labels0, p) = loopTables(bidir, verts.select($"id", $"id".as("label")))
-    release(verts)
-    loop(adj, labels0, p, startIter = 0, cfg,
-      cfg.checkpointDir.map(checkpoint(spark, _, "lpa", cfg)), seeded = false)
+      .select($"id", $"id".as("label"))
   }
 
-  /** The loop's two tables at one partition count p: the adjacency
-    * (src, dst, weight) plus one `(v, v, 0)` self row per vertex of
-    * `state`, keyed by src (adaptive count, see
-    * [[graft.plans.Adaptive.loopTable]]), and `state` keyed by id. `bidir`
-    * has no self loops, so a row is a vote exactly when src ≠ dst. */
-  private def loopTables(bidir: DataFrame, state: DataFrame): (DataFrame, DataFrame, Int) = {
-    val spark = bidir.sparkSession
+  /** Run [[loop]] from what `inputs` builds: the start iteration, the
+    * adjacency (src, dst, weight) without self rows, and the label state.
+    * The loop's two tables share one partition count p: the adjacency
+    * plus one `(v, v, 0)` self row per vertex of the state, keyed by src
+    * (adaptive count, see [[graft.plans.Adaptive.loopTable]]), and the
+    * state keyed by id. The adjacency has no self loops, so a row is a
+    * vote exactly when src ≠ dst. The call is one block scope that keeps
+    * only the result's blocks; `inputs` and the two tables run in a
+    * nested one, so the barriers `inputs` makes (the canonical edges, a
+    * snapshot) are freed before the first round. */
+  private def start(spark: org.apache.spark.sql.SparkSession, cfg: Config,
+                    ck: Option[LoopCheckpoint], seeded: Boolean)(
+      inputs: => (Int, DataFrame, DataFrame)): Result = {
     import spark.implicits._
-    val selfRows = state.select($"id".as("src"), $"id".as("dst"),
-      lit(0).cast(bidir.schema("weight").dataType).as("weight"))
-    val (adj, _, p) = Adaptive.loopTable(
-      bidir.select($"src", $"dst", $"weight").union(selfRows), Seq($"src"))
-    (adj, barrier(state.repartition(p, $"id")), p)
+    scopedFrames(spark)((r: Result) => Seq(r.labels)) {
+      val (iter, adj, labels0, p) =
+        scopedFrames(spark)((t: (Int, DataFrame, DataFrame, Int)) => Seq(t._2, t._3)) {
+          val (iter, bidir, state) = inputs
+          val selfRows = state.select($"id".as("src"), $"id".as("dst"),
+            lit(0).cast(bidir.schema("weight").dataType).as("weight"))
+          val (adj, _, p) = Adaptive.loopTable(
+            bidir.select($"src", $"dst", $"weight").union(selfRows), Seq($"src"))
+          (iter, adj, barrier(state.repartition(p, $"id")), p)
+        }
+      loop(adj, labels0, p, iter, cfg, ck, seeded)
+    }
   }
 
   private def checkpoint(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -127,10 +134,10 @@ object LabelPropagation {
   private def reopen(spark: org.apache.spark.sql.SparkSession, ck: LoopCheckpoint,
                      cfg: Config, seeded: Boolean): Result = {
     import spark.implicits._
-    val (meta, bidir, labels) = ck.open(Seq($"src"), Seq($"id"))
-    val (adj, state, p) = loopTables(bidir.filter($"src" =!= $"dst"), labels)
-    release(bidir); release(labels)
-    loop(adj, state, p, meta("iter").toInt, cfg, Some(ck), seeded)
+    start(spark, cfg, Some(ck), seeded) {
+      val (meta, bidir, labels) = ck.open(Seq($"src"), Seq($"id"))
+      (meta("iter").toInt, bidir.filter($"src" =!= $"dst"), labels)
+    }
   }
 
   /** SEEDED (semi-supervised) label propagation: a small labeled seed
@@ -151,25 +158,23 @@ object LabelPropagation {
                 cfg: Config = Config()): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // canonical edges materialized once (adjacency + vertex set both
-    // consume it)
-    val canon = GraphIO.canonical(edges).cutLineage()
-    // duplicate seed rows would fan the vertex state out through the
-    // left join — collapse to one deterministic label per id (smallest,
-    // matching the tie rule); seeds not in the vertex set are ignored
-    // (the graph defines the propagation domain)
-    val seeds1 = seeds.groupBy($"id").agg(min($"label").as("seed_label"))
-    // materialized once: the self rows and the keyed state both read it
-    val labels = GraphIO.vertices(canon).toDF("id")
-      .join(seeds1, Seq("id"), "left")
-      .select($"id", $"seed_label".as("label"), $"seed_label".isNotNull.as("seed"))
-      .cutLineage()
-    val (adj, labels0, p) = loopTables(
-      GraphIO.bidirectional(canon).toDF().withColumn("weight", lit(1L)), labels)
-    release(labels)
-    canon.releaseLineage() // both consumers materialized above
-    loop(adj, labels0, p, startIter = 0, cfg,
-      cfg.checkpointDir.map(checkpoint(spark, _, "lpa_seeded", cfg)), seeded = true)
+    start(spark, cfg, cfg.checkpointDir.map(checkpoint(spark, _, "lpa_seeded", cfg)),
+        seeded = true) {
+      // canonical edges materialized once (adjacency + vertex set both
+      // consume it)
+      val canon = GraphIO.canonical(edges).cutLineage()
+      // duplicate seed rows would fan the vertex state out through the
+      // left join — collapse to one deterministic label per id (smallest,
+      // matching the tie rule); seeds not in the vertex set are ignored
+      // (the graph defines the propagation domain)
+      val seeds1 = seeds.groupBy($"id").agg(min($"label").as("seed_label"))
+      // materialized once: the self rows and the keyed state both read it
+      val labels = GraphIO.vertices(canon).toDF("id")
+        .join(seeds1, Seq("id"), "left")
+        .select($"id", $"seed_label".as("label"), $"seed_label".isNotNull.as("seed"))
+        .cutLineage()
+      (0, GraphIO.bidirectional(canon).toDF().withColumn("weight", lit(1L)), labels)
+    }
   }
 
   /** Continue a [[runSeeded]] run from durable state written by
@@ -244,7 +249,6 @@ object LabelPropagation {
           verticesActive = r.obs("changed").asInstanceOf[Long]))) {
       (state, _, _) => step(labelsOf(state))
     }
-    release(adj)
     val labels = labelsOf(out.state)
     Result(if (seeded) labels.filter($"label".isNotNull).select($"id", $"label") else labels,
       out.iter, out.stopped)

@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   * iteration's dangling mass are observed on the rank barrier
   * (`Dataset.observe`), so there is no separate aggregation action;
   * under AQE each shuffle stage still runs as its own Spark job.
-  * Superseded rank snapshots release their checkpoint blocks eagerly.
+  * Each entry point is one block scope: the loop frees superseded ranks,
+  * the scope everything else but the result's blocks, on a throw too.
   */
 object PageRank {
 
@@ -79,17 +80,17 @@ object PageRank {
                        cfg: Config = Config()): Result = {
     val spark = weighted.sparkSession
     import spark.implicits._
-    // materialized once — three consumers below (strength, the weighted
-    // join, the vertex set) each re-ran the whole weighted derivation
-    val bidirW = GraftLineage.barrier(GraphIO.bidirectionalWeighted(weighted))
-    val strength = bidirW.groupBy($"src").agg(sum($"weight").as("st"))
-    val wEdgesRaw = bidirW.join(strength, "src")
-      .select($"src", $"dst",
-        ($"weight".cast("double") / $"st".cast("double")).as("w"))
-    val vertsRaw = bidirW.select($"src".as("id")).distinct()
-    val res = powerIteration(spark, vertsRaw, wEdgesRaw, extraVertices, sources, cfg)
-    GraftLineage.release(bidirW)
-    res
+    scopedFrames(spark)((r: Result) => Seq(r.ranks)) {
+      // materialized once — three consumers below (strength, the weighted
+      // join, the vertex set) each re-ran the whole weighted derivation
+      val bidirW = GraftLineage.barrier(GraphIO.bidirectionalWeighted(weighted))
+      val strength = bidirW.groupBy($"src").agg(sum($"weight").as("st"))
+      val wEdgesRaw = bidirW.join(strength, "src")
+        .select($"src", $"dst",
+          ($"weight".cast("double") / $"st".cast("double")).as("w"))
+      val vertsRaw = bidirW.select($"src".as("id")).distinct()
+      powerIteration(spark, vertsRaw, wEdgesRaw, extraVertices, sources, cfg)
+    }
   }
 
   private def runWeighted(edges: Dataset[Edge],
@@ -98,19 +99,19 @@ object PageRank {
                           cfg: Config): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // canonical edges materialized ONCE: the lazy plan was re-evaluated
-    // by every consumer below (bidirectional ×2 through the outdeg join,
-    // vertices once more) — for derived co-occurrence inputs each
-    // re-evaluation is the full upstream self-join (guide §1.2)
-    val canon = GraphIO.canonical(edges).cutLineage()
-    val directed = GraphIO.bidirectional(canon)
-    val outDegPre = directed.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    val wEdgesRaw = directed.join(outDegPre, "src")
-      .select($"src", $"dst", (lit(1.0) / $"outdeg").as("w"))
-    val res = powerIteration(spark, GraphIO.vertices(canon).toDF("id"), wEdgesRaw,
-      extraVertices, restart, cfg)
-    canon.releaseLineage()
-    res
+    scopedFrames(spark)((r: Result) => Seq(r.ranks)) {
+      // canonical edges materialized ONCE: the lazy plan was re-evaluated
+      // by every consumer below (bidirectional ×2 through the outdeg join,
+      // vertices once more) — for derived co-occurrence inputs each
+      // re-evaluation is the full upstream self-join (guide §1.2)
+      val canon = GraphIO.canonical(edges).cutLineage()
+      val directed = GraphIO.bidirectional(canon)
+      val outDegPre = directed.groupBy($"src").agg(count(lit(1)).as("outdeg"))
+      val wEdgesRaw = directed.join(outDegPre, "src")
+        .select($"src", $"dst", (lit(1.0) / $"outdeg").as("w"))
+      powerIteration(spark, GraphIO.vertices(canon).toDF("id"), wEdgesRaw,
+        extraVertices, restart, cfg)
+    }
   }
 
   /** Shared power-iteration core over a prepared transition table
@@ -176,7 +177,6 @@ object PageRank {
         .repartition(p, $"id"),
       coalesce(sum(when($"dangling", $"rank")), lit(0.0)).as("dmass"),
       coalesce(sum(when($"dangling", 1L)), lit(0L)).as("dangn"))
-    release(verts) // ranks0 is materialized; verts is done
     val dangN = Option(m0("dangn")).map(_.asInstanceOf[Long]).getOrElse(0L)
     // Pinned-iteration fast path (guide §1.2: cut the pass count): with
     // tol = 0 there is no convergence read, and with ZERO dangling
@@ -207,18 +207,20 @@ object PageRank {
              checkpointDir: String, cfg: Config = Config()): Result = {
     import spark.implicits._
     val ck = checkpoint(spark, checkpointDir, cfg)
-    val (meta, wEdges, ranks) = ck.open(Seq($"src"), Seq($"id"))
-    // Double.toString round-trips exactly, so the resumed STATE is
-    // bit-identical; final ranks may differ from an uninterrupted run
-    // in the last ulp because the parquet round-trip can permute rows
-    // within partitions and per-vertex neighbor sums are
-    // order-sensitive — the same noise the 1e-6 oracle contract (and
-    // the 6 dp rounds elsewhere) absorb. CC's resume is exact because
-    // max over longs is order-independent.
-    val rwLit = meta.get("rw").filter(_.nonEmpty).map(_.toDouble)
-    loop(wEdges, ranks, spark.sessionState.conf.numShufflePartitions,
-      Map("dmass" -> meta("dmass").toDouble), rwLit,
-      startIter = meta("iter").toInt, cfg, Some(ck), pinned = false)
+    scopedFrames(spark)((r: Result) => Seq(r.ranks)) {
+      val (meta, wEdges, ranks) = ck.open(Seq($"src"), Seq($"id"))
+      // Double.toString round-trips exactly, so the resumed STATE is
+      // bit-identical; final ranks may differ from an uninterrupted run
+      // in the last ulp because the parquet round-trip can permute rows
+      // within partitions and per-vertex neighbor sums are
+      // order-sensitive — the same noise the 1e-6 oracle contract (and
+      // the 6 dp rounds elsewhere) absorb. CC's resume is exact because
+      // max over longs is order-independent.
+      val rwLit = meta.get("rw").filter(_.nonEmpty).map(_.toDouble)
+      loop(wEdges, ranks, spark.sessionState.conf.numShufflePartitions,
+        Map("dmass" -> meta("dmass").toDouble), rwLit,
+        startIter = meta("iter").toInt, cfg, Some(ck), pinned = false)
+    }
   }
 
   /** The power-iteration loop proper, resumable at any iteration
@@ -250,7 +252,8 @@ object PageRank {
         .select($"e.dst".as("id"), ($"e.w" * $"r.rank").as("c")), p, "contrib")
     // personalized pinned runs rebuild the (1-d)·rw term from the static
     // restart-weight table each iteration — a co-partitioned id join
-    // against the ranks0 barrier, which therefore stays alive to the end
+    // against the ranks0 barrier, which the loop therefore retains (the
+    // caller's scope frees it)
     val vertsRw: DataFrame =
       if (pinned && personalized) ranks0.select($"id", $"rw") else null
     val out =
@@ -299,8 +302,6 @@ object PageRank {
                 (coalesce($"contrib", lit(0.0)) + $"dmass" * rw)).as("rank"),
               $"r.rank".as("prev")) ++ rwCols :+ $"dangling": _*)
         }
-    if (vertsRw != null && !(out.state eq ranks0)) release(ranks0)
-    release(wEdges)
     Result(out.state.select($"id", $"rank"), out.iter,
       if (pinned) Double.NaN
       else out.obs.get("delta").map(_.asInstanceOf[Double]).getOrElse(Double.MaxValue))

@@ -30,14 +30,26 @@ import org.apache.spark.sql.functions._
   * with lineage barriers per iteration. The color loop runs on
   * `GraftLineage.iterate`, bounded by the remaining vertex count (a
   * color travels at most that many edges); the mark loop is bounded the
-  * same way (each level marks at least one new vertex). Blocks live in
-  * one scope: each round frees the state it replaces, the scope frees
-  * the rest. Rounds: ≤ #distinct-SCC-layers after trimming (one giant
-  * SCC + noise resolves in 1-2 rounds; the adversarial worst case — a
-  * long chain of nontrivial SCCs — costs a round per layer, the
-  * documented trade of the coloring family); `maxRounds` bounds them and
-  * throws when vertices remain. */
+  * same way (each level marks at least one new vertex). The outer round
+  * loop, its trim sweeps and the mark loop run on
+  * `GraftLineage.iterateFrames`: each frees the state it supersedes
+  * (edges, remaining vertices, marked parts) once its successor has
+  * materialized, and a round's own tables (colors, intra-class edges)
+  * when the round ends; the call's scope frees the rest. Rounds:
+  * ≤ #distinct-SCC-layers after trimming (one giant SCC + noise resolves
+  * in 1-2 rounds; the adversarial worst case — a long chain of
+  * nontrivial SCCs — costs a round per layer, the documented trade of
+  * the coloring family); `maxRounds` bounds them and throws when
+  * vertices remain. */
 object StronglyConnected {
+
+  /** The outer round loop's state: the remaining edges and vertices,
+    * how many vertices remain, the (id, label) assignments so far and
+    * the round. */
+  private final case class Outer(edges: DataFrame, remaining: DataFrame, n: Long,
+                                 assigned: List[DataFrame], round: Int) {
+    def frames: Seq[DataFrame] = edges +: remaining +: assigned
+  }
 
   def scc(directed: DataFrame, maxRounds: Int = 50,
           trimSweeps: Int = 3): DataFrame = {
@@ -52,64 +64,52 @@ object StronglyConnected {
         directed.select($"src".cast("long"), $"dst".cast("long"))
           .filter($"src" =!= $"dst").distinct(),
         Seq($"src"))
-      var edges = edges0
       // vertex count observed inside the materialization job itself — a
       // separate count() is one more constant-time driver job per run
       // (the strong-scaling serial floor is made of exactly such jobs)
       val (rem0, remObs) = barrierObserved(
-        edges.select($"src".as("id")).union(edges.select($"dst".as("id")))
+        edges0.select($"src".as("id")).union(edges0.select($"dst".as("id")))
           .distinct().repartition(p, $"id"),
         count(lit(1)).as("n"))
-      var remaining = rem0
-      var nRemaining = n(remObs)
-      // accumulated (id, label) assignments; unioned at the end
-      var assigned = List.empty[DataFrame]
-      // replace `remaining` and `edges` by the vertices `keep`, freeing both
-      def peelTo(keep: DataFrame): Unit = {
-        release(remaining); remaining = keep
-        val e2 = barrier(
-          edges.join(remaining.withColumnRenamed("id", "src"), "src")
-            .join(remaining.withColumnRenamed("id", "dst"), "dst")
-            .select($"src", $"dst").repartition(p, $"src"))
-        release(edges); edges = e2
-      }
-      var round = 0
+      // `s` with the vertices `keep` left and the `done` ones, counted
+      // `k`, assigned; the edges between two kept vertices stay
+      def peel(s: Outer, keep: DataFrame, done: DataFrame, k: Long): Outer =
+        s.copy(edges = barrier(
+          s.edges.join(keep.withColumnRenamed("id", "src"), "src")
+            .join(keep.withColumnRenamed("id", "dst"), "dst")
+            .select($"src", $"dst").repartition(p, $"src")),
+          remaining = keep, n = s.n - k, assigned = done :: s.assigned)
 
-      while (nRemaining > 0 && round < maxRounds) {
+      val last = iterateFrames[Outer](Outer(edges0, rem0, n(remObs), Nil, 0), _.frames)(
+          s => s.n > 0 && s.round < maxRounds) { s0 =>
         // ---- 1. trim: no-in or no-out vertices are singleton SCCs ----
-        var sweep = 0
-        var trimmed = true
-        while (trimmed && sweep < trimSweeps && nRemaining > 0) {
+        // (state, sweeps run; a sweep that peels nothing ends the trim)
+        val (s, _) = iterateFrames[(Outer, Int)]((s0, 0), t => t._1.frames)(
+            t => t._2 < trimSweeps && t._1.n > 0) { case (s, sweep) =>
           val both = barrier(
-            edges.select($"src".as("id")).distinct()
-              .join(edges.select($"dst".as("id")).distinct(), "id")
+            s.edges.select($"src".as("id")).distinct()
+              .join(s.edges.select($"dst".as("id")).distinct(), "id")
               .repartition(p, $"id"))
           // singleton SCCs materialized directly as their (id, label)
           // assignment, with the count folded into the same job
           val (singles, sObs) = barrierObserved(
-            remaining.join(both, Seq("id"), "left_anti")
+            s.remaining.join(both, Seq("id"), "left_anti")
               .select($"id", $"id".as("label")),
             count(lit(1)).as("n"))
-          if (n(sObs) > 0) {
-            assigned ::= singles
-            nRemaining -= n(sObs)
-            peelTo(both)
-          } else {
-            release(both)
-            trimmed = false
-          }
-          sweep += 1
+          if (n(sObs) > 0) (peel(s, both, singles, n(sObs)), sweep + 1)
+          else (s, trimSweeps)
         }
-        if (nRemaining > 0) {
+        if (s.n == 0) s.copy(round = s.round + 1)
+        else {
           // ---- 2. color: forward max propagation to fixpoint ----
           // One job per color iteration: the repartition rides the
           // observed materialization; the unread chg column stays in the
           // barrier (8 B/row) and is pruned at every read.
-          val colored = iterate(barrier(remaining.select($"id", $"id".as("c"))), 0,
-              math.min(nRemaining, Int.MaxValue.toLong).toInt, chunk = 1,
+          val colored = iterate(barrier(s.remaining.select($"id", $"id".as("c"))), 0,
+              math.min(s.n, Int.MaxValue.toLong).toInt, chunk = 1,
               metrics = Seq(sum($"chg").as("nchg")),
               stop = (_, o) => n(o) == 0L) { (colors, _, _) =>
-            val incoming = edges.as("e")
+            val incoming = s.edges.as("e")
               .join(colors.as("x"), $"e.src" === $"x.id")
               .groupBy($"e.dst".as("id"))
               .agg(max($"x.c").as("inc"))
@@ -125,69 +125,56 @@ object StronglyConnected {
           // ---- 3. backward mark from roots inside each color class ----
           // ce: edges with both endpoint colors, kept only intra-class
           val ce = barrier(
-            edges.as("e")
+            s.edges.as("e")
               .join(colors.as("cs"), $"e.src" === $"cs.id")
               .join(colors.as("cd"), $"e.dst" === $"cd.id")
               .filter($"cs.c" === $"cd.c")
               .select($"e.src", $"e.dst")
               .repartition(p, $"dst"))
-          // `marked` is a LAZY union of the per-level barriers (the CC
-          // doneParts shape) instead of a consolidated re-barrier per
-          // level: one job per mark level, the newMarks materialization.
-          // The mark loop runs on a directed graph, where a new mark may
-          // sit next to any earlier level, so the anti-join reads the
-          // whole marked set.
-          var markedParts =
-            List(barrier(colors.filter($"c" === $"id").select($"id", $"c")))
-          def markedAll: DataFrame = markedParts.reduce(_ union _)
-          var frontier = markedParts.head
-          var growing = true
-          var level = 0L
-          while (growing && level < nRemaining) {
+          // The marked set is a LAZY union of the per-level barriers (the
+          // CC doneParts shape), newest first, instead of a consolidated
+          // re-barrier per level: one job per mark level, the newMarks
+          // materialization. The mark loop runs on a directed graph, where
+          // a new mark may sit next to any earlier level, so the anti-join
+          // reads the whole marked set. State: (parts, whether the last
+          // level marked any vertex, levels run); the frontier is the
+          // newest part.
+          val (parts, growing, _) = iterateFrames[(List[DataFrame], Boolean, Long)](
+              (List(barrier(colors.filter($"c" === $"id").select($"id", $"c"))), true, 0L),
+              _._1)(m => m._2 && m._3 < s.n) { case (parts, _, level) =>
             val (newMarks, obs) = barrierObserved(
               ce.as("e")
-                .join(frontier.as("f"), $"e.dst" === $"f.id")
+                .join(parts.head.as("f"), $"e.dst" === $"f.id")
                 .select($"e.src".as("id"), $"f.c".as("c"))
                 .distinct()
-                .join(markedAll, Seq("id"), "left_anti")
+                .join(parts.reduce(_ union _), Seq("id"), "left_anti")
                 .repartition(p, $"id"),
               count(lit(1)).as("n"))
-            growing = n(obs) > 0L
-            if (growing) {
-              markedParts ::= newMarks
-              frontier = newMarks
-              // compact every 8 levels: an uncompacted union grows the
-              // anti-join plan linearly in level count — O(depth²) driver
-              // re-analysis on deep regions. The current frontier stays
-              // its own barrier (the next join reads it directly).
-              if (markedParts.size >= 9) {
-                val rest = markedParts.tail
-                val compacted = barrier(rest.reduce(_ union _).repartition(p, $"id"))
-                rest.foreach(release(_))
-                markedParts = List(frontier, compacted)
-              }
-            }
-            level += 1
+            if (n(obs) == 0L) (parts, false, level + 1)
+            // compact every 8 levels: an uncompacted union grows the
+            // anti-join plan linearly in level count — O(depth²) driver
+            // re-analysis on deep regions. The new frontier stays its own
+            // barrier (the next join reads it directly).
+            else if (parts.size >= 8)
+              (List(newMarks, barrier(parts.reduce(_ union _).repartition(p, $"id"))),
+                true, level + 1)
+            else (newMarks :: parts, true, level + 1)
           }
           check(!growing, "mark")
           val (asg, aObs) = barrierObserved(
-            markedAll.select($"id", $"c".as("label")), count(lit(1)).as("n"))
-          assigned ::= asg
-          nRemaining -= n(aObs)
+            parts.reduce(_ union _).select($"id", $"c".as("label")), count(lit(1)).as("n"))
           // peel the assigned SCCs and iterate on the rest
-          peelTo(barrier(
-            remaining.join(asg.select($"id"), Seq("id"), "left_anti")
-              .repartition(p, $"id")))
-          (ce :: colors :: markedParts).foreach(release(_))
+          peel(s, barrier(
+            s.remaining.join(asg.select($"id"), Seq("id"), "left_anti")
+              .repartition(p, $"id")), asg, n(aObs)).copy(round = s.round + 1)
         }
-        round += 1
       }
-      if (nRemaining != 0)
+      if (last.n != 0)
         throw new IllegalStateException(
-          s"scc: $nRemaining vertices unresolved after $maxRounds rounds")
-      if (assigned.isEmpty) // empty edge set → empty label table
+          s"scc: ${last.n} vertices unresolved after $maxRounds rounds")
+      if (last.assigned.isEmpty) // empty edge set → empty label table
         spark.emptyDataFrame.select(lit(0L).as("id"), lit(0L).as("label")).limit(0)
-      else barrier(assigned.reduce(_ union _))
+      else barrier(last.assigned.reduce(_ union _))
     }
   }
 

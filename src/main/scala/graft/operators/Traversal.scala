@@ -280,8 +280,8 @@ object Traversal {
     *
     * Scale: one key-partitioned join (state ⋈ adjacency) + one
     * map-side-combined min agg per round; state is |seeds|·|reached|
-    * rows; superseded state released eagerly. Rounds ≤ the longest
-    * hop-count of any optimal path (≪ V in real link graphs). */
+    * rows, freed by the round loop and the call's scope. Rounds ≤ the
+    * longest hop-count of any optimal path (≪ V in real link graphs). */
   def weightedDistances(wedges: DataFrame, seeds: Seq[Long],
                         maxIter: Int = 64,
                         checkpointDir: Option[String] = None,
@@ -293,20 +293,22 @@ object Traversal {
       return spark.emptyDataFrame
         .select(lit(0L).as("source"), lit(0L).as("id"), lit(0L).as("dist"))
         .limit(0)
-    // weights must be nonnegative (no up-front scan — a negative cycle
-    // cannot reach the (count, Σ) fixpoint, so the maxIter guard fires)
-    val dir = wedges.select($"src".cast("long"), $"dst".cast("long"),
-      $"weight".cast("long"))
-    // adaptive loop partitioning (guide §2; graft.plans.Adaptive)
-    val (adj, _, p) = Adaptive.loopTable(
-      dir.union(dir.select($"dst".as("src"), $"src".as("dst"), $"weight")),
-      Seq($"src"))
-    val state0 = barrier(
-      spark.createDataset(seeds.distinct).toDF("source")
-        .select($"source", $"source".as("id"), lit(0L).as("dist"))
-        .repartition(p, $"source", $"id"))
-    ssspLoop(adj, state0, rows0 = -1L, total0 = -1L, startIter = 0, maxIter,
-      checkpointDir.map(ssspCheckpoint(spark, _, runId, checkpointEvery)))
+    scopedBlocks(spark) {
+      // weights must be nonnegative (no up-front scan — a negative cycle
+      // cannot reach the (count, Σ) fixpoint, so the maxIter guard fires)
+      val dir = wedges.select($"src".cast("long"), $"dst".cast("long"),
+        $"weight".cast("long"))
+      // adaptive loop partitioning (guide §2; graft.plans.Adaptive)
+      val (adj, _, p) = Adaptive.loopTable(
+        dir.union(dir.select($"dst".as("src"), $"src".as("dst"), $"weight")),
+        Seq($"src"))
+      val state0 = barrier(
+        spark.createDataset(seeds.distinct).toDF("source")
+          .select($"source", $"source".as("id"), lit(0L).as("dist"))
+          .repartition(p, $"source", $"id"))
+      ssspLoop(adj, state0, rows0 = -1L, total0 = -1L, startIter = 0, maxIter,
+        checkpointDir.map(ssspCheckpoint(spark, _, runId, checkpointEvery)))
+    }
   }
 
   private def ssspCheckpoint(spark: org.apache.spark.sql.SparkSession,
@@ -326,9 +328,11 @@ object Traversal {
                               runId: String = "sssp-resume"): DataFrame = {
     import spark.implicits._
     val ck = ssspCheckpoint(spark, checkpointDir, runId, checkpointEvery)
-    val (meta, adj, state) = ck.open(Seq($"src"), Seq($"source", $"id"))
-    ssspLoop(adj, state, meta("rows").toLong, meta("total").toLong,
-      meta("iter").toInt, maxIter, Some(ck))
+    scopedBlocks(spark) {
+      val (meta, adj, state) = ck.open(Seq($"src"), Seq($"source", $"id"))
+      ssspLoop(adj, state, meta("rows").toLong, meta("total").toLong,
+        meta("iter").toInt, maxIter, Some(ck))
+    }
   }
 
   private def ssspLoop(adj: DataFrame, state0: DataFrame,
@@ -367,13 +371,10 @@ object Traversal {
         .groupBy($"source", $"id")
         .agg(min($"dist").as("dist"))
     }
-    adj.releaseLineage()
-    if (!out.stopped) { // release before throwing — a failed query must
-      release(out.state) // not pin checkpoint blocks for the rest of the JVM
+    if (!out.stopped)
       throw new IllegalStateException(
         s"weightedDistances: no fixpoint in $maxIter rounds " +
           "(negative weights, or raise maxIter)")
-    }
     out.state
   }
 

@@ -50,24 +50,25 @@ object Adaptive {
     * count the loop should use for its state tables and its exchanges.
     * A table [[forRows]] would put in one partition is re-keyed to 2,
     * so the state, the adjacency and a step's message exchange share one
-    * hash partitioning. */
+    * hash partitioning. Runs in its own block scope, so a re-keyed
+    * table's session-count copy is freed before this returns. */
   def loopTable(df: DataFrame, keys: Seq[Column]): (DataFrame, Long, Int) = {
     val spark = df.sparkSession
     val conf = spark.sessionState.conf.numShufflePartitions
-    val (table, obs) = GraftLineage.barrierObserved(
-      df.repartition(conf, keys: _*), count(lit(1)).as("n"))
-    val rows = obs("n").asInstanceOf[Long]
-    val want = forRows(spark, rows)
-    // re-keying costs one extra pass over the table — only worth it when
-    // the task-count reduction is substantial (≥4×); marginal shrinks
-    // (e.g. 32 → 10 on a loop that converges in 3 rounds) measured as a
-    // net loss on the bench host
-    if (want * 4 > conf) (table, rows, conf)
-    else {
-      val p = math.max(2, want)
-      val re = GraftLineage.barrier(table.repartition(p, keys: _*))
-      GraftLineage.release(table)
-      (re, rows, p)
+    GraftLineage.scopedFrames(spark)((t: (DataFrame, Long, Int)) => Seq(t._1)) {
+      val (table, obs) = GraftLineage.barrierObserved(
+        df.repartition(conf, keys: _*), count(lit(1)).as("n"))
+      val rows = obs("n").asInstanceOf[Long]
+      val want = forRows(spark, rows)
+      // re-keying costs one extra pass over the table — only worth it when
+      // the task-count reduction is substantial (≥4×); marginal shrinks
+      // (e.g. 32 → 10 on a loop that converges in 3 rounds) measured as a
+      // net loss on the bench host
+      if (want * 4 > conf) (table, rows, conf)
+      else {
+        val p = math.max(2, want)
+        (GraftLineage.barrier(table.repartition(p, keys: _*)), rows, p)
+      }
     }
   }
 }

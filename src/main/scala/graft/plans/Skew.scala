@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Explicit skew handling (north rule: salted, hot-vertex-split,
   * two-phase broadcast+shuffle joins). AQE's skew-join covers sort-merge
@@ -28,14 +27,16 @@ object Skew {
     *   - hot keys (frequency > hotThreshold in `big`): broadcast the
     *     matching slice of `small` — hot rows never shuffle;
     *   - cold remainder: ordinary shuffle join (AQE-managed).
-    * Union of the two legs ≡ the plain inner join. */
+    * Union of the two legs ≡ the plain inner join. The hot keys are
+    * collected once (the tiny power-law head, by contract) into a local
+    * relation both legs broadcast: nothing is cached, so nothing is left
+    * to free. */
   def twoPhaseJoin(big: DataFrame, small: DataFrame,
                    bigKey: String, smallKey: String,
                    hotThreshold: Long = 1000000L): DataFrame = {
     val hot = hotKeys(big, col(bigKey), hotThreshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    hot.count() // materialize once; reused by both legs
-    val hotB = broadcast(hot)
+    val hotB = broadcast(big.sparkSession.createDataFrame(
+      java.util.Arrays.asList(hot.collect(): _*), hot.schema))
     val bigHot = big.join(hotB, big(bigKey) === hotB("k"), "left_semi")
     val bigCold = big.join(hotB, big(bigKey) === hotB("k"), "left_anti")
     val smallHot = broadcast(

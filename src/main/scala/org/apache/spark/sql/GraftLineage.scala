@@ -35,10 +35,10 @@ import org.apache.spark.unsafe.Platform
   * Calling `.unpersist()` on the returned DataFrame is a NO-OP for the
   * pages too (the Dataset cache manager knows nothing about them), so
   * long benches and many-superstep runs would accumulate stale blocks
-  * until driver GC collected the page RDD. Use [[release]] (or
-  * `ds.releaseLineage()`) once a barrier'd frame's data is no longer
-  * needed, [[plannedRddIds]] to name its blocks, or let a
-  * [[scopedBlocks]] scope or the [[iterate]] loop free them.
+  * until driver GC collected the page RDD. Library code frees blocks by
+  * scope ([[scopedBlocks]], [[scopedFrames]], the [[iterateFrames]]
+  * loop), on a throw too; [[release]] (`ds.releaseLineage()`) is for a
+  * caller done with a result, and [[plannedRddIds]] names its blocks.
   *
   * Lives in `org.apache.spark.sql` to reach the `private[sql]`
   * `Dataset.ofRows` and the `private[spark]` RDD calls that Spark's
@@ -201,7 +201,8 @@ object GraftLineage {
   }
 
   /** Free the storage blocks of every barrier'd/checkpointed RDD in this
-    * frame's plan. Only call once the frame's data has been consumed —
+    * frame's plan — for a caller done with a result; library code frees
+    * by scope instead. Only call once the frame's data has been consumed —
     * a localCheckpoint'd RDD cannot be recomputed after unpersist.
     * Pass `blocking = true` when the very next operation needs the
     * memory back (bulk releases right before a heavy join); the default

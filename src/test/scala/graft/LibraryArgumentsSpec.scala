@@ -16,7 +16,9 @@ import scala.jdk.CollectionConverters._
   * outside `GraftLineage.scala` calls `localCheckpoint(` or names a
   * `LogicalRDD`. A barrier's blocks are its page RDD, which only
   * `GraftLineage` (`barrier`, `release`, `plannedRddIds`, the scopes)
-  * knows how to reach. */
+  * knows how to reach. Library code frees those blocks by scope (a
+  * `scopedBlocks`/`scopedFrames` scope or a round loop): outside the
+  * entry points and `GraftLineage.scala` only three named frees remain. */
 class LibraryArgumentsSpec extends AnyFunSuite with Matchers {
 
   /** `src/main/scala` of the checkout these tests were built from: the
@@ -86,5 +88,23 @@ class LibraryArgumentsSpec extends AnyFunSuite with Matchers {
     val oneWay = """localCheckpoint\(|\bLogicalRDD\b""".r
     offenders((lines, i) => oneWay.findFirstIn(lines(i)).isDefined,
       exempt = Seq("org/apache/spark/sql/GraftLineage.scala")) shouldBe empty
+  }
+
+  test("library code frees blocks by scope") {
+    val free = """\brelease\(|releaseLineage\(|\.unpersist\(""".r
+    // The frees no scope owns, as (file, line): CC's jump barriers, which
+    // must go blocking before the next jump; the label table a
+    // LabelMaintainer holds across calls; the Spark cache (not a barrier)
+    // of withTriangleBase.
+    val kept = Seq(
+      "graft/operators/ConnectedComponents.scala" ->
+        "jumpBarriers.foreach(_.releaseLineage(blocking = true))",
+      "graft/streaming/IncrementalCC.scala" -> "GraftLineage.release(prev)",
+      "graft/operators/TriangleCount.scala" ->
+        "finally { oriented.unpersist(); canon.unpersist() }")
+    offenders((lines, i) => free.findFirstIn(lines(i)).isDefined,
+      exempt = entryPoints :+ "org/apache/spark/sql/GraftLineage.scala")
+      .filterNot(o => kept.exists { case (file, line) =>
+        o.startsWith(s"$file:") && o.endsWith(s": $line") }) shouldBe empty
   }
 }

@@ -1,15 +1,18 @@
 package graft
 
 import graft.graph.Edge
-import graft.operators.{LabelPropagation, StronglyConnected, Traversal, TriangleCount}
+import graft.operators.{Centrality, GraphMetrics, LabelPropagation, PageRank, StronglyConnected,
+  Traversal, TriangleCount}
 import graft.plans.{CheckpointManager, LoopCheckpoint}
 import org.apache.spark.sql.{DataFrame, GraftLineage}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** The contract of the loop driver `GraftLineage.iterate`, the
-  * checkpoint helper `LoopCheckpoint`, and the failure cleanup of
-  * `GraftLineage.scopedBlocks`. */
+  * checkpoint helper `LoopCheckpoint`, the failure cleanup of
+  * `GraftLineage.scopedBlocks`, and the block contract of the operators
+  * that free by scope: a call leaves behind exactly the blocks of its
+  * result, and nothing when it throws. */
 class LoopDriverSpec extends SparkSpec {
   import spark.implicits._
 
@@ -191,5 +194,90 @@ class LoopDriverSpec extends SparkSpec {
     val e = the[IllegalStateException] thrownBy StronglyConnected.scc(chain, maxRounds = 1)
     e.getMessage should include("unresolved after")
     persisted shouldBe before
+  }
+
+  test("operators that throw free every block they made") {
+    val edges = graft.graph.Generators.random(spark, 40, 60, seed = 5L)
+    val chain = spark.createDataset((0L until 11L).map(i => (i, i + 1, 1L)))
+      .toDF("src", "dst", "weight")
+    val docs = Seq((0L, "a b c d e f g"), (1L, "a b c d e f g h"), (2L, "p q r s t u"))
+      .toDF("doc_id", "text")
+    val calls = Seq[(String, () => Any)](
+      "PageRank.personalized, no source in the graph" -> (() =>
+        PageRank.personalized(edges, spark.createDataset(Seq(1000L, 1001L)))),
+      "Traversal.weightedDistances past maxIter" -> (() =>
+        Traversal.weightedDistances(chain, Seq(0L), maxIter = 3)),
+      "Corpus.contamination on duplicate ids" -> (() =>
+        graft.functions.Corpus.contamination(docs.union(docs.filter($"doc_id" === 2L)),
+          $"doc_id", $"text", $"doc_id" === 0L, k = 5)))
+    for ((name, call) <- calls) withClue(name) {
+      val before = persisted
+      a[RuntimeException] should be thrownBy call()
+      persisted shouldBe before
+    }
+  }
+
+  test("entry points that free by scope leave exactly their result's blocks") {
+    val edges = graft.graph.Generators.random(spark, 60, 90, seed = 7L)
+    val weighted = edges.toDF().withColumn("weight", $"src" % 3L + 1L)
+    val seeds = Seq((0L, 1L), (5L, 2L)).toDF("id", "label")
+    val directed = edges.toDF().union(Seq((1L, 0L), (2L, 1L)).toDF("src", "dst"))
+    val vectors = spark.createDataset((0L until 24L).map(i =>
+      i -> Seq.tabulate(8)(j => ((i * 7 + j * 3) % 11).toDouble))).toDF("vec_id", "embedding")
+    // checkpoint directories the resumes read, written before any call is measured
+    def ckDir(run: String => Any): String = {
+      val dir = Files.createTempDirectory("graft-scope-ckpt").toString
+      run(dir) match {
+        case r: LabelPropagation.Result => GraftLineage.release(r.labels)
+        case r: PageRank.Result => GraftLineage.release(r.ranks)
+        case _ => ()
+      }
+      dir
+    }
+    def lpaCfg(dir: String) =
+      LabelPropagation.Config(maxIter = 2, checkpointEvery = 1, checkpointDir = Some(dir))
+    val lpaDir = ckDir(d => LabelPropagation.run(edges, cfg = lpaCfg(d)))
+    val seededDir = ckDir(d => LabelPropagation.runSeeded(edges, seeds, lpaCfg(d)))
+    val prDir = ckDir(d => PageRank.run(edges,
+      cfg = PageRank.Config(maxIter = 2, checkpointEvery = 1, checkpointDir = Some(d))))
+    // a weighted chain needs a round per hop, so maxIter = 3 throws after two snapshots
+    val chain = spark.createDataset((0L until 11L).map(i => (i, i + 1, i + 1)))
+      .toDF("src", "dst", "weight")
+    val ssspDir = ckDir(d => intercept[IllegalStateException](Traversal.weightedDistances(
+      chain, Seq(0L), maxIter = 3, checkpointDir = Some(d), checkpointEvery = 1)))
+    val lpa = LabelPropagation.Config(maxIter = 6)
+    val calls = Seq[(String, () => DataFrame)](
+      "LabelPropagation.run" -> (() => LabelPropagation.run(edges, cfg = lpa).labels),
+      "LabelPropagation.runWeightedGraph" -> (() =>
+        LabelPropagation.runWeightedGraph(weighted, cfg = lpa).labels),
+      "LabelPropagation.runSeeded" -> (() =>
+        LabelPropagation.runSeeded(edges, seeds, lpa).labels),
+      "LabelPropagation.resume" -> (() => LabelPropagation.resume(spark, lpaDir, lpa).labels),
+      "LabelPropagation.resumeSeeded" -> (() =>
+        LabelPropagation.resumeSeeded(spark, seededDir, lpa).labels),
+      "PageRank.run" -> (() => PageRank.run(edges).ranks),
+      "PageRank.personalized" -> (() =>
+        PageRank.personalized(edges, spark.createDataset(Seq(0L, 5L)),
+          cfg = PageRank.Config(maxIter = 6, tol = 0.0)).ranks),
+      "PageRank.runWeightedGraph" -> (() => PageRank.runWeightedGraph(weighted).ranks),
+      "PageRank.resume" -> (() => PageRank.resume(spark, prDir, PageRank.Config(maxIter = 6)).ranks),
+      "Traversal.weightedDistances" -> (() => Traversal.weightedDistances(weighted, Seq(0L, 5L))),
+      "Traversal.resumeWeightedDistances" -> (() =>
+        Traversal.resumeWeightedDistances(spark, ssspDir)),
+      "StronglyConnected.scc" -> (() => StronglyConnected.scc(directed)),
+      "GraphMetrics.prefixSum" -> (() =>
+        GraphMetrics.prefixSum(spark.range(50).select($"id", ($"id" % 7).as("v")), "id", "v")),
+      "Similarity.kMeansModel" -> (() =>
+        graft.functions.Similarity.kMeansModel(vectors, k = 3, dim = 8, iters = 2)._1),
+      "Similarity.pqCodes" -> (() =>
+        graft.functions.Similarity.pqCodes(vectors, m = 2, k = 3, dim = 8, iters = 2)),
+      "Centrality.hits" -> (() => Centrality.hits(directed, maxIter = 3)))
+    for ((name, call) <- calls) withClue(name) {
+      val before = persisted
+      val out = call()
+      (persisted -- before) shouldBe GraftLineage.plannedRddIds(out)
+      GraftLineage.release(out, blocking = true)
+      persisted shouldBe before
+    }
   }
 }

@@ -167,6 +167,15 @@ class StreamingSkewSpec extends SparkSpec {
     two shouldBe plain
   }
 
+  test("skew: a consumed two-phase join leaves no persisted RDD behind") {
+    val big = spark.range(0, 2000).select(
+      when($"id" % 10 === 0, lit(3L)).otherwise($"id" % 50).as("k1"), $"id".as("payload"))
+    val small = spark.range(0, 50).select($"id".as("k2"), ($"id" * 10).as("v"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Skew.twoPhaseJoin(big, small, "k1", "k2", hotThreshold = 100).count() shouldBe 2000L
+    spark.sparkContext.getPersistentRDDs.keySet.toSet shouldBe before
+  }
+
   test("skew: salted max agg equals plain max") {
     val df = spark.range(0, 20000).select(
       ($"id" % 3).as("k"), ($"id" * 37 % 9999).as("v"))
