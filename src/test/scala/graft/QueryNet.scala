@@ -11,8 +11,10 @@ import java.nio.file.Files
   * `GraftLineage.iterate`, a BFS level loop (hop distances, harmonic,
   * closeness, diameter, betweenness), the walk loop, SCC's color and
   * mark loops, or a connected-components round loop (every CC strategy
-  * and the incremental label maintainer) — and their output fingerprints on the sf0.001 and sf0.01
-  * tables (see TESTDATA.md). At sf0.001 most of the graph outputs are
+  * and the incremental label maintainer) — plus the dedup and ANN
+  * queries (MinHash bands and bucket pairs, k-NN, Lloyd's k-means,
+  * product quantization, IVF), and their output fingerprints on the
+  * sf0.001 and sf0.01 tables (see TESTDATA.md). At sf0.001 most of the graph outputs are
   * empty (the supplier co-occurrence-by-nation graph has no edges),
   * which exercises the empty-input paths; sf0.01 runs every loop on a
   * non-empty graph.
@@ -36,7 +38,10 @@ object QueryNet {
     "betweenness", "random_walks", "walk_pairs", "scc_coactivity", "scc_condensation",
     "cc_supplier", "cc_supplier_star", "cc_supplier_sampled", "cc_supplier_random",
     "cc_incremental", "cc_nation", "cc_sizes", "cc_coactivity", "cc_dense_labels",
-    "cc_text_fixture")
+    "cc_text_fixture",
+    "dedup_minhash_bands", "dedup_near_pairs", "dedup_clusters", "dedup_survivors",
+    "corpus_filtered", "corpus_final", "split_leakage", "knn_all", "kmeans_assign",
+    "pq_codes", "ivf_search")
 
   val expectedResource = "expected/query_net.tsv"
 
