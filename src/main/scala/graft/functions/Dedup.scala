@@ -33,17 +33,18 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i + 1, lit(k)))))
   }
 
-  /** MinHash signature: numHashes independent 64-bit min-hashes over the
-    * shingle set. Each shingle STRING is hashed exactly once; the
-    * numHashes-member hash family is derived by re-hashing that 64-bit
-    * value with the family index (`h_i = xxhash64(i, h)`) — a fixed
-    * 12-byte hash instead of numHashes variable-length string hashes per
-    * shingle (the dominant cost of the whole dedup pipeline before).
+  /** MinHash signature: numHashes independent 64-bit min-hashes over a
+    * shingle-set column (e.g. `array_distinct(shingles(text, k))`). Each
+    * shingle STRING is hashed exactly once; the numHashes-member hash
+    * family is derived by re-hashing that 64-bit value with the family
+    * index (`h_i = xxhash64(i, h)`) — a fixed 12-byte hash instead of
+    * numHashes variable-length string hashes per shingle (the dominant
+    * cost of the whole dedup pipeline before).
     * ANSI mode rules out the classic `a_i*h + b_i` wraparound family
     * (64-bit multiply overflow throws); a seeded re-hash is one
     * expression node and just as uniform. */
-  def minhashSignature(text: Column, k: Int, numHashes: Int): Column = {
-    val h1 = transform(array_distinct(shingles(text, k)), s => xxhash64(s))
+  def minhashSignature(shingleSet: Column, numHashes: Int): Column = {
+    val h1 = transform(shingleSet, s => xxhash64(s))
     val idx = sequence(lit(0), lit(numHashes - 1)) // foldable → constant array
     // SINGLE fold over the shingle hashes, updating all numHashes mins per
     // element. The naive `transform(idx, i => array_min(transform(h1, ..)))`
@@ -64,17 +65,35 @@ object Dedup {
     *    split, and this is heavy interpreted per-row compute that must
     *    spread across cores. */
   def bandedSignatures(df: DataFrame, id: Column, text: Column,
-                       k: Int = 3, bands: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
+                       k: Int = 3, bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
+    banded(df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions),
+      id, array_distinct(shingles(text, k)), bands, rowsPerBand)
+
+  /** The banding [[bandedSignatures]] and [[nearDuplicates]] share:
+    * (id, band, bucket) from the signature barrier of the shingle-set
+    * column `shingleSet` of `rows`, each bucket the hash of its band's
+    * `rowsPerBand` min-hashes. */
+  private def banded(rows: DataFrame, id: Column, shingleSet: Column,
+                     bands: Int, rowsPerBand: Int): DataFrame = {
     val sig = org.apache.spark.sql.GraftLineage.barrier(
-      df.repartition(p).select(id.as("id"),
-        minhashSignature(text, k, bands * rowsPerBand).as("sig")))
+      rows.select(id.as("id"), minhashSignature(shingleSet, bands * rowsPerBand).as("sig")))
     sig.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         b => aggregate(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
           xxhash64(b), (acc, h) => xxhash64(acc, h)))))
       .toDF("id", "band", "bucket")
+  }
+
+  /** Same-bucket pairs of banded signatures: (id_a, id_b) with id_a <
+    * id_b, distinct, each (band, bucket) capped at `maxBucket` members. */
+  private def bucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val capped = graft.plans.Skew.capGroups(banded,
+      Seq(col("band"), col("bucket")), col("id"), maxBucket)
+    capped.as("a").join(capped.as("b"),
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+          col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
   }
 
   /** LSH candidate pairs from banded MinHash signatures: docs sharing any
@@ -85,16 +104,8 @@ object Dedup {
     * [[exactDedup]] first so those floods never reach this stage). */
   def minhashCandidates(df: DataFrame, id: Column, text: Column,
                         k: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-                        maxBucket: Int = 2000): DataFrame = {
-    val banded = graft.plans.Skew.capGroups(
-      bandedSignatures(df, id, text, k, bands, rowsPerBand),
-      Seq(col("band"), col("bucket")), col("id"), maxBucket)
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
+                        maxBucket: Int = 2000): DataFrame =
+    bucketPairs(bandedSignatures(df, id, text, k, bands, rowsPerBand), maxBucket)
 
   /** Exact n-gram Jaccard similarity between two shingle-set columns. */
   def jaccard(aShingles: Column, bShingles: Column): Column = {
@@ -103,35 +114,12 @@ object Dedup {
     when(union === 0, lit(1.0)).otherwise(inter / union)
   }
 
-  /** [[bandedSignatures]]' banding computed from an ALREADY-shingled
-    * (id, sh) barrier instead of raw text: `h_i` is the same
-    * `xxhash64(i, xxhash64(shingle))` family over the same distinct
-    * shingle set, so buckets are identical — but the tokenize+shingle
-    * pass (the dominant cost of the dedup pipeline) is not repeated
-    * when the caller already materialized the shingle table for the
-    * verify stage (guide §1.2: don't compute things twice). */
-  private def bandedFromShingles(base: DataFrame, bands: Int,
-                                 rowsPerBand: Int): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val h1 = transform(col("sh"), s => xxhash64(s))
-    val idx = sequence(lit(0), lit(numHashes - 1))
-    val sig = org.apache.spark.sql.GraftLineage.barrier(
-      base.select(col("id"),
-        aggregate(h1, array_repeat(lit(Long.MaxValue), numHashes),
-          (acc, h) => zip_with(acc, idx, (m, i) => least(m, xxhash64(i, h))))
-          .as("sig")))
-    sig.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => aggregate(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
-          xxhash64(b), (acc, h) => xxhash64(acc, h)))))
-      .toDF("id", "band", "bucket")
-  }
-
   /** MinHash-LSH near-duplicate pairs, verified by exact n-gram Jaccard ≥
     * threshold. Standard shingle→minhash→band→bucket-join→verify
     * pipeline; the shingle table is materialized ONCE and feeds both the
-    * signature/banding stage and the verify joins (the banding used to
-    * re-tokenize and re-shingle every document from raw text). EAGER:
+    * signature/banding stage and the verify joins, so the banding (the
+    * same [[banded]] as [[bandedSignatures]], buckets identical) does not
+    * repeat the tokenize+shingle pass. EAGER:
     * the result is materialized inside the call so the intermediate
     * shingle cache and signature barriers can be released immediately
     * (repeated library calls hold no stale blocks); release the
@@ -146,14 +134,8 @@ object Dedup {
         .repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
         .select(col(idCol).as("id"),
           array_distinct(shingles(col(textCol), k)).as("sh")))
-      val banded = graft.plans.Skew.capGroups(
-        bandedFromShingles(base, bands, rowsPerBand),
-        Seq(col("band"), col("bucket")), col("id"), maxBucket)
-      val cands = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
+      val cands = bucketPairs(banded(base, col("id"), col("sh"), bands, rowsPerBand),
+        maxBucket)
       org.apache.spark.sql.GraftLineage.barrier(cands
         .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")

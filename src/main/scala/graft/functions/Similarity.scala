@@ -84,6 +84,15 @@ object Similarity {
         when(proj >= 0, lit(1L)).otherwise(lit(0L)), p))
     })
 
+  /** The LSH bands of an SRP signature, as a `posexplode` generator of
+    * (band, bucket): `bands` consecutive `bandBits`-bit slices of `sig`.
+    * [[lshTopK]], [[knnAll]]'s LSH path and [[cosineNearDuplicates]]
+    * bucket on it. */
+  private def srpBands(sig: Column, bands: Int, bandBits: Int): Column =
+    posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+      call_function("shiftrightunsigned", sig, b * bandBits)
+        .bitwiseAND(lit((1L << bandBits) - 1))))
+
   /** LSH-bucketed ANN top-k: candidates share at least one band of the
     * SRP signature (bands of `bandBits` bits each); exact cosine + top-k
     * within candidates. Recall < 1 by construction; the trade is no
@@ -129,10 +138,7 @@ object Similarity {
     def banded(df: DataFrame, idName: String, embName: String): DataFrame =
       df.select(col("vec_id").as(idName), col("embedding").as(embName),
           srpSignature(col("embedding"), planes, dim).as("sig"))
-        .select(col(idName), col(embName),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-            call_function("shiftrightunsigned", col("sig"), b * bb)
-              .bitwiseAND(lit((1L << bb) - 1)))))
+        .select(col(idName), col(embName), srpBands(col("sig"), bands, bb))
         .toDF(idName, embName, "band", "bucket")
     // barrier (not persist): tracked by the enclosing scopedBlocks
     val c = org.apache.spark.sql.GraftLineage.barrier(
@@ -290,10 +296,7 @@ object Similarity {
           c.select(col("vec_id").as("id"), col("embedding").as("emb"),
               col("nrm"),
               srpSignature(col("embedding"), planes, dim).as("sig"))
-            .select(col("id"), col("emb"), col("nrm"),
-              posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-                call_function("shiftrightunsigned", col("sig"), b * bb)
-                  .bitwiseAND(lit((1L << bb) - 1)))))
+            .select(col("id"), col("emb"), col("nrm"), srpBands(col("sig"), bands, bb))
             .toDF("id", "emb", "nrm", "band", "bucket"),
           Seq(col("band"), col("bucket")), col("id"), maxBucket)
         sig.as("a").join(sig.as("b"),
@@ -335,14 +338,7 @@ object Similarity {
     * relative); assignments only flip if two centroids are equidistant
     * to ~1e-13, which real embeddings never are — the INTEGER
     * (vec_id, cluster) table is the gated output, not the centroids.
-    *
-    * Scale design: centroids live on the DRIVER between iterations
-    * (k × dim doubles — trivially bounded) and enter each iteration as a
-    * BROADCAST k-row table, so each iteration is one broadcast join +
-    * one `min_by` hash agg (assignment) + one posexplode/mean hash agg
-    * (update) over the corpus — no corpus shuffle at all; the plan (and
-    * its codegen) is identical every iteration, the lesson of the
-    * PageRank dangling-mass fix. */
+    * It is [[lloyd]]'s one-subspace case. */
   def kMeans(corpus: DataFrame, k: Int, dim: Int, iters: Int = 5): DataFrame =
     kMeansModel(corpus, k, dim, iters)._1
 
@@ -352,51 +348,9 @@ object Similarity {
     * with (post-update iteration `iters`). */
   def kMeansModel(corpus: DataFrame, k: Int, dim: Int,
                   iters: Int = 5): (DataFrame, Array[(Int, Seq[Double])]) = {
-    require(k >= 1 && iters >= 1, s"kMeans needs k >= 1, iters >= 1")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    org.apache.spark.sql.GraftLineage.scopedFrames(spark)(
-        (r: (DataFrame, Array[(Int, Seq[Double])])) => Seq(r._1)) {
-      val c = org.apache.spark.sql.GraftLineage.barrier(
-        corpus.select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("emb")))
-      // init: embeddings of the k smallest ids (deterministic, no RNG)
-      var centroids: Array[(Int, Seq[Double])] = c.orderBy("vec_id").limit(k)
-        .collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Double](1)) }
-      def centDf() = spark.createDataset(
-          centroids.map { case (i, v) => (i, v) }.toSeq)
-        .toDF("cluster", "cent")
-      def assign() = {
-        val dist = aggregate(zip_with(col("emb"), col("cent"),
-            (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-        c.crossJoin(broadcast(centDf()))
-          .select(col("vec_id"), col("emb"), col("cluster"), dist.as("d2"))
-          .groupBy(col("vec_id"))
-          .agg(min_by(struct(col("cluster"), col("emb")),
-            struct(col("d2"), col("cluster"))).as("m"))
-          .select(col("vec_id"), col("m.cluster").as("cluster"),
-            col("m.emb").as("emb"))
-      }
-      var it = 0
-      while (it < iters) {
-        // update: per-(cluster, dim) mean — k×dim cells, collected to the
-        // driver (bounded); empty clusters keep their previous centroid
-        val means = assign()
-          .select(col("cluster"), posexplode(col("emb")))
-          .groupBy(col("cluster"), col("pos"))
-          .agg(avg(col("col")).as("m"))
-          .collect().groupBy(_.getInt(0))
-          .map { case (cl, rows) =>
-            cl -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-          }
-        centroids = centroids.map { case (i, old) => (i, means.getOrElse(i, old)) }
-        it += 1
-      }
-      (org.apache.spark.sql.GraftLineage.barrier(
-        assign().select(col("vec_id"), col("cluster").cast("long").as("cluster"))
-          .orderBy("vec_id")), centroids)
-    }
+    val (assigned, cents) = lloyd(corpus, 1, k, dim, iters)(
+      _.select(col("vec_id"), col("cluster").cast("long").as("cluster")).orderBy("vec_id"))
+    (assigned, cents.head)
   }
 
   /** Product-quantization codes (Jégou, Douze, Schmid, "Product
@@ -407,33 +361,44 @@ object Similarity {
     * — kᵐ implicit cells from only m·k stored centroids, the compressed
     * representation IVF-PQ indexes store per vector (m bytes at k ≤
     * 256) instead of 4·dim. Fully deterministic, so the INTEGER codes
-    * are oracle-gateable like `kmeans_assign`.
-    *
-    * Scale: the m subspace clusterings are independent single passes
-    * over a dim/m-wide projection (same broadcast-centroid iteration as
-    * [[kMeans]] — no corpus shuffle); the final code table is m
-    * id-keyed joins of (id, small-int) pairs. */
+    * are oracle-gateable like `kmeans_assign`. */
   def pqCodes(corpus: DataFrame, m: Int, k: Int, dim: Int,
               iters: Int = 4): DataFrame =
     subspaceModels(corpus, m, k, dim, iters)._1
 
-  /** The m independent subspace clusterings of [[pqCodes]] advanced in
-    * LOCKSTEP over one exploded (vec_id, subspace, subvector) table:
-    * each Lloyd iteration is ONE broadcast join + min_by assignment +
-    * per-(subspace, cluster, dim) mean collect for ALL m subspaces —
-    * m×iters iteration jobs collapse to iters (guide §1.2: cut the pass
-    * count; the subspaces never needed separate passes, only separate
-    * GROUP KEYS). Per-subspace arithmetic is the [[kMeans]] spec
-    * unchanged (same init, distance, tie rule, empty-cluster keep);
-    * only the double-sum order inside each mean differs — the same
-    * ~1e-13 robustness class as the cross-engine oracle contract.
-    * Returns the (vec_id, code_0..code_{m-1}) table plus each
-    * subspace's final (cluster, centroid) model. */
+  /** The m subspace clusterings of [[pqCodes]] ([[lloyd]] over m
+    * subspaces): the (vec_id, code_0..code_{m-1}) table, one pivot of
+    * the assignment, plus each subspace's final (cluster, centroid)
+    * model. */
   private[graft] def subspaceModels(corpus: DataFrame, m: Int, k: Int, dim: Int,
                                     iters: Int)
       : (DataFrame, IndexedSeq[Array[(Int, Seq[Double])]]) = {
+    val codeCols = (0 until m).map(j =>
+      max(when(col("j") === j, col("cluster"))).cast("long").as(s"code_$j"))
+    lloyd(corpus, m, k, dim, iters)(
+      _.groupBy(col("vec_id")).agg(codeCols.head, codeCols.tail: _*))
+  }
+
+  /** Lloyd's iterations of m independent k-means clusterings, one per
+    * contiguous `dim/m`-wide subspace j, advanced in LOCKSTEP over one
+    * exploded (vec_id, j, emb) table: each iteration is ONE broadcast
+    * join + `min_by` assignment + per-(j, cluster, dim) mean collect for
+    * ALL m subspaces (guide §1.2: the subspaces need separate GROUP
+    * KEYS, not separate passes). Init per subspace: the k smallest ids'
+    * subvectors, one bounded collect of k·m rows; an empty cluster keeps
+    * its previous centroid.
+    *
+    * Scale design: centroids live on the DRIVER between iterations
+    * (m·k × dim/m doubles — trivially bounded) and enter each iteration
+    * as a BROADCAST table, so an iteration shuffles no corpus row; the
+    * plan (and its codegen) is identical every iteration, the lesson of
+    * the PageRank dangling-mass fix. Returns `shape` of the final
+    * (vec_id, j, cluster) assignment, materialized, and each subspace's
+    * (cluster, centroid) model. */
+  private def lloyd(corpus: DataFrame, m: Int, k: Int, dim: Int, iters: Int)(
+      shape: DataFrame => DataFrame): (DataFrame, IndexedSeq[Array[(Int, Seq[Double])]]) = {
     require(m >= 1 && dim % m == 0, s"dim=$dim must divide into m=$m subvectors")
-    require(k >= 1 && iters >= 1, s"pq k-means needs k >= 1, iters >= 1")
+    require(k >= 1 && iters >= 1, s"k-means needs k >= 1, iters >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
     val sub = dim / m
@@ -445,19 +410,10 @@ object Similarity {
             transform(slice(col("embedding"), j * lit(sub) + 1, lit(sub)),
               x => x.cast("double"))))))
         .toDF("vec_id", "j", "emb")
-      // init per subspace: the k smallest ids' subvectors (same rule as
-      // kMeans — one bounded collect for all m subspaces)
-      val initRows = c.filter(col("j") === 0).orderBy("vec_id").limit(k)
-        .select(col("vec_id")).as[Long].collect()
-      val initEmb = c.join(broadcast(initRows.toSeq.toDF("vec_id")), "vec_id")
-        .orderBy("vec_id", "j").collect()
-      var cents: IndexedSeq[Array[(Int, Seq[Double])]] =
-        (0 until m).map { j =>
-          initRows.indices.map { i =>
-            val row = initEmb(i * m + j)
-            (i, row.getSeq[Double](2))
-          }.toArray
-        }
+      val init = c.orderBy("vec_id", "j").limit(k * m).collect()
+      var cents: IndexedSeq[Array[(Int, Seq[Double])]] = (0 until m).map { j =>
+        (0 until init.length / m).map(i => (i, init(i * m + j).getSeq[Double](2))).toArray
+      }
       def centDf() = broadcast(spark.createDataset(
           for { j <- 0 until m; (cl, v) <- cents(j) } yield (j, cl, v))
         .toDF("j", "cluster", "cent"))
@@ -487,11 +443,8 @@ object Similarity {
         }
         it += 1
       }
-      val codeCols = (0 until m).map(j =>
-        max(when(col("j") === j, col("cluster"))).cast("long").as(s"code_$j"))
       (org.apache.spark.sql.GraftLineage.barrier(
-        assign().groupBy(col("vec_id"))
-          .agg(codeCols.head, codeCols.tail: _*)), cents)
+        shape(assign().select(col("vec_id"), col("j"), col("cluster")))), cents)
     }
   }
 
@@ -511,7 +464,7 @@ object Similarity {
     *
     * Scale design: the index is ONE table (vec_id, cell, code_0..m-1)
     * built by m+1 broadcast-centroid passes (no corpus shuffle, see
-    * [[kMeans]]); a search touches corpus rows only via (a) one
+    * [[lloyd]]); a search touches corpus rows only via (a) one
     * broadcast probe-table join on `cell` (scans the index, shuffles
     * nothing) and (b) m broadcast ADC-table joins + one windowed top-k
     * over candidates — per-query cost tracks the probed cells' sizes,
@@ -621,10 +574,7 @@ object Similarity {
     val sig = graft.plans.Skew.capGroups(
       corpus.select(col("vec_id").as("id"), col("embedding").as("emb"),
           srpSignature(col("embedding"), planes, dim).as("sig"))
-        .select(col("id"), col("emb"),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-            call_function("shiftrightunsigned", col("sig"), b * bandBits)
-              .bitwiseAND(lit((1L << bandBits) - 1)))))
+        .select(col("id"), col("emb"), srpBands(col("sig"), bands, bandBits))
         .toDF("id", "emb", "band", "bucket"),
       Seq(col("band"), col("bucket")), col("id"), maxBucket)
     org.apache.spark.sql.GraftLineage.barrier(

@@ -29,7 +29,7 @@ import scala.collection.mutable.ArrayBuffer
   *  - [[CCStrategy.SampledContraction]] — communication-avoiding sampled
   *    contraction (PPoPP 2018 semantics, `SparseSampling.hpp:53-93`):
   *    per round sample a bounded edge subset, union-find it on the driver,
-  *    broadcast the contraction map.
+  *    contract by the resulting map.
   *  - [[CCStrategy.RandomizedHook]] — coin-toss child hooking
   *    (random-mate, `randomized_OPENMP_cc.cpp:164-201`): tails hook to a
   *    heads neighbor, a depth-1 forest with no pointer jumping.
@@ -40,7 +40,10 @@ import scala.collection.mutable.ArrayBuffer
   * a label function f and apply the shared [[contract]] (the reference's
   * one step over its `vertex_map`, `SparseSampling.hpp:71,260-264`) and
   * [[compose]]; the star strategy rewrites the edges in place and keeps
-  * the identity mapping. One round loop ([[rounds]], on
+  * the identity mapping. The sampled strategy and the hook strategy's
+  * tail finish share one [[driverRound]]: the reference's sampling round
+  * and master-local prefix union-find (`SparseSampling.hpp:275-313`) as
+  * one step. One round loop ([[rounds]], on
   * `GraftLineage.iterateFrames`) runs the steps: it owns the `maxRounds`
   * bound, the edge-free result, the round ledger (metrics rows and
   * durable checkpoints) and every block a round leaves behind. Star and
@@ -79,6 +82,10 @@ object ConnectedComponents {
     def named(name: String): Option[CCStrategy] = all.find(_.name == name)
   }
 
+  /** A run's settings. The sampled strategy's rounds and the hook's tail
+    * finish run the same [[driverRound]]: `sampleHardCap` bounds its
+    * sample, `driverFinishEdges` admits the hook's tail to it and
+    * `broadcastRows` decides whether its map is broadcast. */
   final case class Config(
       strategy: CCStrategy = CCStrategy.HookAndContract,
       maxRounds: Int = 200,
@@ -88,11 +95,9 @@ object ConnectedComponents {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5,
       runId: String = "cc",
-      /** PPoPP sampling params: sample ≤ n^(1+eps/2) * (1+delta), hard cap. */
-      sampleEps: Double = 0.09,
-      sampleDelta: Double = 0.2,
+      /** Hard cap on the sampled strategy's per-round sample, under the
+        * PPoPP bound n^(1+eps/2) * (1+delta) ([[SampleEps]], [[SampleDelta]]). */
       sampleHardCap: Long = 5L * 1000 * 1000,
-      seed: Long = 17L,
       /** Per-partition union-find pre-contraction before each hook round
         * (reference analogue: master-local prefix CC,
         * `SparseSampling.hpp:275-313`, distributed to every partition)
@@ -134,11 +139,10 @@ object ConnectedComponents {
         * near the threshold (ADVICE r06). */
       broadcastRefsRows: Long = 3000000L,
       /** Tail rounds at or below this edge count finish on the driver:
-        * collect the contracted edges, union-find them locally
-        * (reference analogue: master-local prefix CC,
-        * `SparseSampling.hpp:275-313` — the same bounded-collect shape
-        * as the sampled strategy), compose the mapping with ONE
-        * broadcast join. After round 0 the edge set typically shrinks
+        * collect the contracted edges and run the [[driverRound]] the
+        * sampled strategy runs on its sample (reference analogue:
+        * master-local prefix CC, `SparseSampling.hpp:275-313`): ONE
+        * mapping join. After round 0 the edge set typically shrinks
         * 2-3 orders of magnitude, but a distributed tail round still
         * costs the same ~6 constant-time driver jobs as a full round —
         * the measured serial floor of the strong-scaling gate. Never
@@ -146,6 +150,14 @@ object ConnectedComponents {
         * heavy lifting; also keeps small-graph tests exercising the
         * full machinery). 0 disables. */
       driverFinishEdges: Long = 2L * 1000 * 1000)
+
+  /** The PPoPP sampling parameters, `SparseSampling.hpp:34-35`: a round
+    * samples at most n^(1+eps/2) * (1+delta) edges. */
+  private val SampleEps = 0.09
+  private val SampleDelta = 0.2
+  /** Seeds the sampled strategy's per-round sample and the randomized
+    * strategy's per-round coin. */
+  private val Seed = 17L
 
   /** `components`: the distinct-label count, observed for free inside the
     * job that materializes the labels: canonical max labels mean
@@ -415,29 +427,44 @@ object ConnectedComponents {
   // mapping — no vertex-set distinct, no composition join. Every other
   // round composes the mapping with its f.
   // ---------------------------------------------------------------------
+  // A tail round finishes on the driver (G8): a distributed tail round
+  // costs ~6 constant-time driver jobs for a vanishing amount of data;
+  // the driver round over the whole remainder costs three.
   private def hookStep(cfg: Config, startRound: Int, extras: Boolean)(s: State): Next =
     if (s.round > startRound && cfg.driverFinishEdges > 0 &&
-        long(s.seen, "n") <= cfg.driverFinishEdges) driverFinish(s, cfg)
+        long(s.seen, "n") <= cfg.driverFinishEdges)
+      driverRound(s, collectPairs(s.edges), whole = true, cfg)
     else hookRound(s, cfg, extras)
 
-  /** Driver tail finish (G8): collect the small contracted remainder,
-    * union-find it locally, compose the mapping in one broadcast join.
-    * A distributed tail round costs ~6 constant-time driver jobs for a
-    * vanishing amount of data; this costs three. */
-  private def driverFinish(s: State, cfg: Config): Next = {
+  /** The (src, dst) pairs of `edges`, collected to the driver. */
+  private def collectPairs(edges: DataFrame): Array[(Long, Long)] = {
+    import edges.sparkSession.implicits._
+    edges.select($"src", $"dst").as[(Long, Long)].collect()
+  }
+
+  /** The driver round the sampled strategy and the hook's tail finish
+    * share — the reference's sampling round and master-local prefix CC
+    * (`SparseSampling.hpp:71,260-264,275-313`) as one step over one
+    * vertex map: union-find the collected `pairs` on the driver into the
+    * (id, label) map f with canonical max labels, compose the mapping
+    * with f and observe its roots. When `pairs` is every edge of the
+    * round (`whole`) no edge is left; when it is a sample, the edges are
+    * contracted by f. f is a local relation of up to 2·|pairs| rows, so
+    * it is broadcast only inside the `broadcastRows` class — never a
+    * forced broadcast of a map that large. */
+  private def driverRound(s: State, pairs: Array[(Long, Long)], whole: Boolean, cfg: Config,
+                          active: Long = -1L): Next = {
     val spark = s.edges.sparkSession
     import spark.implicits._
-    val pairs = s.edges.select($"src", $"dst").as[(Long, Long)].collect()
     val mapRows = UnionFind.components(pairs.iterator).iterator
       .filter { case (v, r) => v != r }.toSeq
-    // the relabel map can approach 2×driverFinishEdges rows; only
-    // force-broadcast it when it is inside the configured broadcast
-    // class — past that, fall back to a shuffle join rather than
-    // bypassing autoBroadcastJoinThreshold with a ~100 MB relation
     val f = bcIfSmall(spark.createDataset(mapRows).toDF("id", "label"),
       mapRows.size.toLong, cfg)
+    val (edges, seen) =
+      if (whole) (spark.emptyDataset[Edge].toDF(), Map[String, Any]("n" -> 0L))
+      else barrierObserved(contract(s.edges, f), seenMetrics(CCStrategy.SampledContraction): _*)
     val (mapping, roots) = observed(compose(s.mapping, f))
-    Next(spark.emptyDataset[Edge].toDF(), mapping, Map("n" -> 0L), roots)
+    Next(edges, mapping, seen, roots, active)
   }
 
   private def hookRound(s: State, cfg: Config, extras: Boolean): Next = {
@@ -613,37 +640,25 @@ object ConnectedComponents {
   // came from.
   // ---------------------------------------------------------------------
   private def sampledStep(cfg: Config)(s: State): Next = {
-    val spark = s.edges.sparkSession
-    import spark.implicits._
     val edges = s.edges
     val edgeCount = long(s.seen, "n")
     val nEst = long(s.seen, "v")
-    // Bound: n^(1+eps/2) * (1+delta) — `SparseSampling.hpp:117` with
-    // eps=.09, delta=.2 (`SparseSampling.hpp:34-35`) — under a hard cap
-    // so the driver collect stays bounded regardless of input.
+    // Bound: n^(1+eps/2) * (1+delta) — `SparseSampling.hpp:117` — under
+    // a hard cap so the driver collect stays bounded regardless of input.
     val bound = math.min(cfg.sampleHardCap.toDouble,
-      math.pow(nEst.toDouble.max(2.0), 1.0 + cfg.sampleEps / 2.0) * (1.0 + cfg.sampleDelta))
+      math.pow(nEst.toDouble.max(2.0), 1.0 + SampleEps / 2.0) * (1.0 + SampleDelta))
     val k = math.max(1L, math.min(edgeCount, bound.toLong))
-    def take(df: DataFrame): Array[(Long, Long)] =
-      df.limit(k.toInt).select($"src", $"dst").as[(Long, Long)].collect()
+    val whole = k >= edgeCount
+    def take(df: DataFrame): Array[(Long, Long)] = collectPairs(df.limit(k.toInt))
     // the Bernoulli pre-sample is often empty at small k; prefix CC is
     // exact on any sample, so fall back to the first k edges rather
     // than spend a superstep contracting nothing
     val sampled: Array[(Long, Long)] =
-      if (k >= edgeCount) edges.select($"src", $"dst").as[(Long, Long)].collect()
+      if (whole) collectPairs(edges)
       else Some(take(edges.sample(withReplacement = false,
-          math.min(1.0, k.toDouble * 1.2 / edgeCount), cfg.seed + s.round)))
+          math.min(1.0, k.toDouble * 1.2 / edgeCount), Seed + s.round)))
         .filter(_.nonEmpty).getOrElse(take(edges))
-
-    // Driver-local prefix CC (≙ master-only union-find,
-    // SparseSampling.hpp:275-313), canonical max labels, broadcast.
-    val mapRows = UnionFind.components(sampled.iterator).iterator
-      .filter { case (v, r) => v != r }.toSeq
-    val f = broadcast(spark.createDataset(mapRows).toDF("id", "label"))
-    val (next, seen) = barrierObserved(contract(edges, f),
-      seenMetrics(CCStrategy.SampledContraction): _*)
-    val (mapping, roots) = observed(compose(s.mapping, f))
-    Next(next, mapping, seen, roots, active = nEst)
+    driverRound(s, sampled, whole, cfg, active = nEst)
   }
 
   // ---------------------------------------------------------------------
@@ -653,7 +668,7 @@ object ConnectedComponents {
     val edges = s.edges
     import edges.sparkSession.implicits._
     // Deterministic per-round coin: heads(v) ⟺ hash is even.
-    def heads(c: Column) = pmod(xxhash64(lit(cfg.seed), lit(s.round), c), lit(2)) === 0
+    def heads(c: Column) = pmod(xxhash64(lit(Seed), lit(s.round), c), lit(2)) === 0
     // Tails hook to a heads-neighbor (max for determinism); the hook
     // forest has depth 1 by construction (a head never hooks), so no
     // pointer jumping is needed — the reference resolves the same
@@ -674,7 +689,7 @@ object ConnectedComponents {
   /** Broadcast hint for relabel maps once they are known-small. `rows` is
     * the map's row count or a bound on it: the hook loop passes f's
     * observed count (a row per vertex of the round, up to 2·edgeCount),
-    * the driver finish its collected map's size, and the randomized
+    * the driver round its collected map's size, and the randomized
     * strategy 2·edgeCount (at most one row per edge endpoint). */
   private def bcIfSmall(df: DataFrame, rows: Long, cfg: Config): DataFrame =
     if (rows <= cfg.broadcastRows) broadcast(df) else df

@@ -161,6 +161,31 @@ class CCPropertySpec extends SparkSpec {
       }
   }
 
+  // The 10k graphs under the other three strategies. On the chain and
+  // the star (9,999 edges, under the sample bound of ≈ 18 k) the sampled
+  // strategy takes the whole edge set in one superstep; on the forest
+  // (~20 k edges over ~10 k vertices) it contracts a sample first and
+  // finishes with a whole-set superstep, so both kinds of driver round run.
+  test("star, sampled and randomized strategies on the 10k graphs match the union-find oracle") {
+    val strategies =
+      Seq(CCStrategy.AlternatingStar, CCStrategy.SampledContraction, CCStrategy.RandomizedHook)
+    for ((graph, edges) <- generated10k; strategy <- strategies)
+      withClue(s"$graph, ${strategy.name}: ") {
+        val res = ConnectedComponents.run(
+          spark.createDataset(edges.map(e => Edge(e._1, e._2))), None, Config(strategy = strategy))
+        res.labels.collect().map(l => l.id -> l.label).toMap shouldBe
+          UnionFind.components(edges).toMap
+        if (strategy == CCStrategy.SampledContraction) {
+          val out = res.metrics.map(_.edgesOut)
+          if (graph.startsWith("forest")) {
+            out.head should be > 0L
+            out.last shouldBe 0L
+          } else res.metrics.map(m => (m.edgesIn, m.edgesOut)) shouldBe
+            Seq((edges.size.toLong, 0L))
+        }
+      }
+  }
+
   // One sampled edge per round: on a forest each round contracts at most
   // that edge (a forest stays duplicate-free under contraction), so the
   // run takes at least one superstep per edge. The graph stays well under
@@ -181,14 +206,13 @@ class CCPropertySpec extends SparkSpec {
   }
 
   // A sample bound n^(1 + eps/2) * (1 + delta) at or above the edge count
-  // collects the whole edge set: one superstep. Ten 10-cliques in a row,
-  // joined by 9 bridges, have 459 edges; the default eps bounds the sample
-  // at ≈ 148 of them (n estimated as the 100 distinct endpoints), which
-  // misses some bridge, so a second superstep follows.
+  // collects the whole edge set: one superstep, a driver round that
+  // leaves no edge. eps and delta are constants, so the input sits inside
+  // the bound: ten 10-vertex paths (a forest, 90 edges over 100
+  // vertices, bound ≈ 148). The same forest with the sample capped under
+  // its edge count takes a second superstep.
   test("sampled strategy, large sampleEps: the whole edge set in one superstep") {
-    val cliques = for (c <- 0L until 10L; u <- 0L until 10L; v <- (u + 1) until 10L)
-      yield (10 * c + u, 10 * c + v)
-    val edges = cliques ++ (0L until 9L).map(c => (10 * c + 9, 10 * c + 10))
+    val edges = for (c <- 0L until 10L; u <- 0L until 9L) yield (10 * c + u, 10 * c + u + 1)
     val oracle = UnionFind.components(edges).toMap
     def metrics(cfg: Config): Seq[(Long, Long)] = {
       val res = ConnectedComponents.run(
@@ -197,8 +221,8 @@ class CCPropertySpec extends SparkSpec {
       res.metrics.map(m => (m.edgesIn, m.edgesOut))
     }
     val sampled = Config(strategy = CCStrategy.SampledContraction)
-    metrics(sampled).size should be >= 2
-    metrics(sampled.copy(sampleEps = 10.0)) shouldBe Seq((edges.size.toLong, 0L))
+    metrics(sampled.copy(sampleHardCap = 60L)).size should be >= 2
+    metrics(sampled) shouldBe Seq((edges.size.toLong, 0L))
   }
 
   // The sample bound's n is the number of distinct endpoints: a chain's

@@ -235,28 +235,32 @@ class ConnectedComponentsSpec extends SparkSpec {
     // observing the edge count (and the star hash or the sampled vertex
     // estimate), then per round
     //   star: the large-star barrier and the small-star barrier;
-    //   sampled (a sample bound above the edge count): the edge collect,
-    //     the contraction and the mapping, each after a broadcast of the
-    //     driver-built map;
+    //   sampled (300 edges over ~310 vertices, under the sample bound of
+    //     ≈ 480): one whole-set driver round — the edge collect and the
+    //     mapping after a broadcast of the driver-built map, no
+    //     contraction;
     //   random: f, the contraction after two broadcasts of f (one per
     //     endpoint join) and the mapping after one;
     // and for star and random the canonicalized labels, whose job
     // observes the component count. No separate input, vertex-set,
     // signature, emptiness or count job.
-    val budgets = Seq[(Config, Int => Int)](
-      Config(strategy = CCStrategy.AlternatingStar) -> (r => 2 + 2 * r),
-      Config(strategy = CCStrategy.SampledContraction, sampleEps = 10.0) -> (r => 1 + 5 * r),
-      Config(strategy = CCStrategy.RandomizedHook) -> (r => 2 + 6 * r))
+    val sparse400 = Generators.random(spark, 400, 300, seed = 5L)
+      .collect().map(e => (e.src, e.dst)).toSeq
+    val budgets = Seq[(Config, Seq[(Long, Long)], Int => Int)](
+      (Config(strategy = CCStrategy.AlternatingStar), random200, r => 2 + 2 * r),
+      (Config(strategy = CCStrategy.SampledContraction), sparse400, r => 1 + 3 * r),
+      (Config(strategy = CCStrategy.RandomizedHook), random200, r => 2 + 6 * r))
     withJobCounter { settled =>
-      for ((cfg, budget) <- budgets) withClue(s"${cfg.strategy}: ") {
-        val ds = spark.createDataset(random200.map { case (u, v) => Edge(u, v) })
+      for ((cfg, edges, budget) <- budgets) withClue(s"${cfg.strategy}: ") {
+        val ds = spark.createDataset(edges.map { case (u, v) => Edge(u, v) })
         val before = settled()
         val res = ConnectedComponents.run(ds, None, cfg)
         val jobs = settled() - before
         info(s"${cfg.strategy.name}: $jobs jobs, ${res.metrics.size} rounds")
         jobs should be <= budget(res.metrics.size)
-        res.labels.collect().map(l => l.id -> l.label).toMap shouldBe oracleOf(random200)
-        res.components shouldBe Some(oracleOf(random200).values.toSet.size.toLong)
+        if (cfg.strategy == CCStrategy.SampledContraction) res.metrics.size shouldBe 1
+        res.labels.collect().map(l => l.id -> l.label).toMap shouldBe oracleOf(edges)
+        res.components shouldBe Some(oracleOf(edges).values.toSet.size.toLong)
       }
     }
   }
